@@ -114,10 +114,5 @@ def bech32_convert_to_valoper(addrs: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(StringType())
-def bech32_convert_to_account(addrs: pd.Series) -> pd.Series:
-    return addrs.map(lambda a: convert_prefix(a, "terra") if a else None)
-
-
-@F.pandas_udf(StringType())
 def bech32_to_hex(addrs: pd.Series) -> pd.Series:
     return addrs.map(lambda a: to_hex(a) if a else None)

@@ -79,33 +79,6 @@ def duck_word_shingles(text_expr: str = "text", n: int = 3) -> str:
 SLICE_HEX = 4
 
 
-def minhash_sig(shingles: Column, num_hashes: int = 16) -> Column:
-    """Array of `num_hashes` minima; hash family k(s) = 4-hex-char slice k
-    of concat(md5('0:'||s) || md5('1:'||s)).  Fixed-width hex strings
-    compare like integers, so element k is min over the k-th family — a
-    full MinHash signature with zero UDFs and zero engine-specific
-    hashing.  Cost: 2 md5 calls per shingle (one inner transform), not
-    `num_hashes`; the 16 minima then slice the precomputed 64-hex string.
-    """
-    n_md5 = (num_hashes * SLICE_HEX + 31) // 32
-    hs = F.transform(
-        shingles,
-        lambda s: F.concat(
-            *[F.md5(F.concat(F.lit(f"{k}:"), s)) for k in range(n_md5)]
-        ),
-    )
-
-    # NB: the slice lambda must take exactly ONE parameter — F.transform
-    # treats a two-parameter callable as (element, index), so the usual
-    # `lambda h, k=k:` closure idiom silently binds k to the array index
-    # column and every hash family degenerates to the same value.
-    def _slice(k: int):
-        return lambda h: F.substring(h, k * SLICE_HEX + 1, SLICE_HEX)
-
-    minima = [F.array_min(F.transform(hs, _slice(k))) for k in range(num_hashes)]
-    return F.array(*minima)
-
-
 def duck_shingle_hashes(shingles_expr: str, num_hashes: int = 16) -> str:
     """DuckDB expression: per-shingle concatenated hash string (bind it in
     a CTE so the minima below don't recompute the md5s)."""
@@ -120,22 +93,6 @@ def duck_minhash_from_hashes(hs_expr: str, num_hashes: int = 16) -> str:
         for k in range(num_hashes)
     ]
     return "[" + ", ".join(minima) + "]"
-
-
-
-def band_hashes(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """array of (band_idx, band_hash) structs: md5 over the band's slice
-    of the signature — the LSH bucketing key."""
-    entries = []
-    for b in range(bands):
-        sl = F.slice(sig, b * rows_per_band + 1, rows_per_band)
-        entries.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", sl)).alias("bh"),
-            )
-        )
-    return F.array(*entries)
 
 
 def minhash_sig_table(

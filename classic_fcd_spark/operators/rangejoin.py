@@ -73,13 +73,3 @@ def interval_join(
         unmatched = unmatched.withColumn(c, F.lit(None))
     return joined.unionByName(unmatched)
 
-
-def duck_interval_join_sql(
-    events_sql: str, ts: str, intervals_sql: str, start: str, end: str
-) -> str:
-    """DuckDB oracle: the naive (but exact) predicate join — fine at test
-    scale, and DuckDB plans BETWEEN joins as IEJoin natively."""
-    return (
-        f"SELECT * FROM ({events_sql}) e JOIN ({intervals_sql}) i "
-        f"ON e.{ts} >= i.{start} AND e.{ts} < i.{end}"
-    )

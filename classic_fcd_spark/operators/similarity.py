@@ -61,73 +61,6 @@ def floor_e6(c: Column) -> Column:
     return F.floor(c * F.lit(1000000.0)).cast("bigint")
 
 
-def arrow_cosine_verify(joined: DataFrame, threshold: float) -> DataFrame:
-    """Vectorized exact-cosine verify (guide §4.2): consumes candidate
-    rows (i, j, ea, eb, na2, nb2) and emits the surviving
-    (i, j, cos_e6) — the mapInArrow twin of the SQL-fold verify in
-    embedding_similar_pairs, engaged only above a candidate-volume
-    threshold (the r15 negative result measured the Arrow boundary
-    LOSING at 1.8 M candidates x 130 doubles; the numpy kernel itself
-    is the win, so it pays off only where the per-candidate fold cost
-    dominates the per-candidate serialization cost).
-
-    Bit-exactness: the column-wise `acc = acc + a[:,k] * b[:,k]` loop
-    reproduces the SQL fold's left-to-right IEEE association per
-    element (r15 micro-verification: 0 differing bits over 1.98 M
-    pairs), `cos = acc / (sqrt(na2) * sqrt(nb2))` and
-    `floor(cos * 1e6)` are the same scalar IEEE ops, and a zero norm
-    raises (the SQL side's ANSI division throws DIVIDE_BY_ZERO on the
-    same input — neither arm silently emits)."""
-    import numpy as np
-
-    def fn(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            # embeddings are float32 on disk; the SQL fold CASTs each
-            # element to DOUBLE before the multiply — float32 -> float64
-            # is exact, so astype reproduces the cast bit-for-bit
-            ea = (
-                np.asarray(batch.column("ea").flatten())
-                .reshape(n, -1)
-                .astype(np.float64)
-            )
-            eb = (
-                np.asarray(batch.column("eb").flatten())
-                .reshape(n, -1)
-                .astype(np.float64)
-            )
-            na2 = np.asarray(batch.column("na2"))
-            nb2 = np.asarray(batch.column("nb2"))
-            if not (na2.all() and nb2.all()):
-                raise ArithmeticError(
-                    "zero-norm embedding in cosine verify (the SQL arm "
-                    "raises DIVIDE_BY_ZERO under ANSI on this input)"
-                )
-            acc = np.zeros(n, dtype=np.float64)
-            for k in range(ea.shape[1]):
-                acc = acc + ea[:, k] * eb[:, k]
-            cos = acc / (np.sqrt(na2) * np.sqrt(nb2))
-            mask = cos >= threshold
-            if not mask.any():
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.asarray(batch.column("i"))[mask]),
-                    pa.array(np.asarray(batch.column("j"))[mask]),
-                    pa.array(
-                        np.floor(cos[mask] * 1000000.0).astype(np.int64)
-                    ),
-                ],
-                names=["i", "j", "cos_e6"],
-            )
-
-    return joined.mapInArrow(fn, "i bigint, j bigint, cos_e6 bigint")
-
-
 # ---------------------------------------------------------------------------
 # Random-hyperplane LSH with deterministic md5-derived planes.
 # ---------------------------------------------------------------------------

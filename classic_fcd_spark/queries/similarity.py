@@ -218,36 +218,6 @@ _N_BANDS = 8
 _PAIR_BANDS = [_PAIR_PLANES[i * 2 : (i + 1) * 2] for i in range(_N_BANDS)]
 _PAIR_THRESHOLD = 0.45
 
-# Candidate volume above which embedding_similar_pairs verifies through
-# the numpy mapInArrow kernel instead of the SQL HOF fold.  Calibrated
-# by measurement (r16): at 1.8 M candidates (sf0.1) the Arrow boundary
-# loses (r15 negative result 2); see OPTIMIZATION_r16.md for the sf1
-# variety-lane A/B that sets this value.
-_ARROW_VERIFY_MIN_CANDIDATES = 10_000_000
-
-
-def _emb_candidate_volume(spark, sf_dir: str, reps, bands) -> int:
-    """Exact number of band-collision candidate rows the verify will
-    see — sum over (band, signature) buckets of C(c, 2) — memoized per
-    (session, corpus): a pure function of the corpus (reps are its
-    distinct vectors), same statistics class as embedding_stats."""
-    from classic_fcd_spark.session import session_memo
-
-    def build():
-        tagged = reps.select(F.explode(bands).alias("bd")).select(
-            F.col("bd.b").alias("b"), F.col("bd.v").alias("v")
-        )
-        row = (
-            tagged.groupBy("b", "v")
-            .agg(F.count("*").alias("c"))
-            .agg(F.sum(F.expr("c * (c - 1) div 2")))
-            .first()
-        )
-        return int(row[0] or 0)
-
-    return session_memo(spark, f"embpairs_cand_volume|{sf_dir}", build)
-
-
 def _duck_band_arm(band: str) -> str:
     cos = duck_cosine_sql("a.embedding", "b.embedding", DIM)
     return f"""
@@ -389,28 +359,11 @@ def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cos = F.expr(dot_sql("ea", "eb")) / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2")))
     joined = cands.join(F.broadcast(pa), "i").join(F.broadcast(pb), "j")
-    # r16 (VERDICT r15 item 5): the numpy mapInArrow verify beats the
-    # interpreted HOF fold per candidate, but the Arrow boundary ships
-    # ~130 doubles per candidate — a fixed per-row tax that LOST at
-    # sf0.1's 1.8 M candidates (r15 negative result 2) and wins where
-    # the verify dominates.  Dispatch on the exact band-collision count
-    # (one memoized aggregate per corpus, the same statistics class as
-    # embedding_stats); both arms emit bit-identical rows (operator
-    # docstring + tests/test_embedding_verify_kernel.py).
-    cand_volume = _emb_candidate_volume(spark, sf_dir, reps, bands)
-    if cand_volume >= _ARROW_VERIFY_MIN_CANDIDATES:
-        from classic_fcd_spark.operators.similarity import arrow_cosine_verify
-
-        rep_pairs = arrow_cosine_verify(
-            joined.select("i", "j", "ea", "eb", "na2", "nb2"),
-            _PAIR_THRESHOLD,
-        ).distinct()
-    else:
-        rep_pairs = (
-            joined.filter(cos >= _PAIR_THRESHOLD)
-            .select("i", "j", floor_e6(cos).alias("cos_e6"))
-            .distinct()
-        )
+    rep_pairs = (
+        joined.filter(cos >= _PAIR_THRESHOLD)
+        .select("i", "j", floor_e6(cos).alias("cos_e6"))
+        .distinct()
+    )
     # duplicate-free corpus: reps ARE the vectors, so rep_pairs IS the
     # answer — the expansion joins below only exist for max_m >= 2
     # (r15: the decision now rides the cached corpus stats; the per-call

@@ -45,6 +45,7 @@ from classic_fcd_spark.sources.promote import (
     heal_table,
     promote_partitions,
 )
+from classic_fcd_spark.streaming.drain import drain, file_stream
 
 KB = "kb"  # bucket partition column
 
@@ -252,9 +253,6 @@ def run_extract_maintenance_available_now(
     files not yet merged."""
     from classic_fcd_spark.pipeline.medallion import account_tx_silver
 
-    schema = spark.read.parquet(txs_dir).schema
-    stream = spark.readStream.schema(schema).parquet(txs_dir)
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.cache()
         try:
@@ -265,13 +263,7 @@ def run_extract_maintenance_available_now(
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, txs_dir, None), sink, checkpoint_dir)
 
 
 # (application id, path) -> DataFrame: a serving tier holds the

@@ -23,7 +23,7 @@ stages)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -43,6 +43,3 @@ def write_bucketed(
         w = w.sortBy(*bucket_cols)
     w.saveAsTable(table)
 
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -127,28 +127,28 @@ def compact_time_layout(
     if not fragmented:
         return []
     spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        touched = read_time_layout(spark, out_dir).filter(
-            F.col(DAY_COL).isin(fragmented)
+    touched = read_time_layout(spark, out_dir).filter(
+        F.col(DAY_COL).isin(fragmented)
+    )
+    if max_files_per_day == 1:
+        # hash on the day: EXACTLY one task (one file) per day —
+        # the deterministic full-compaction contract
+        touched = touched.repartition(len(fragmented), F.col(DAY_COL))
+    else:
+        # >1 target: range partitioning splits each day into
+        # contiguous slices (same reasoning as the writer)
+        touched = touched.repartitionByRange(
+            len(fragmented) * max_files_per_day,
+            F.col(DAY_COL),
+            F.col(ts_col),
         )
-        if max_files_per_day == 1:
-            # hash on the day: EXACTLY one task (one file) per day —
-            # the deterministic full-compaction contract
-            touched = touched.repartition(len(fragmented), F.col(DAY_COL))
-        else:
-            # >1 target: range partitioning splits each day into
-            # contiguous slices (same reasoning as the writer)
-            touched = touched.repartitionByRange(
-                len(fragmented) * max_files_per_day,
-                F.col(DAY_COL),
-                F.col(ts_col),
-            )
-        touched = touched.sortWithinPartitions(DAY_COL, *sort_cols)
-        touched.write.mode("overwrite").partitionBy(DAY_COL).parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    touched = touched.sortWithinPartitions(DAY_COL, *sort_cols)
+    (
+        touched.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(DAY_COL)
+        .parquet(out_dir)
+    )
     return fragmented
 
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classic_fcd_spark.streaming.drain import drain_collect, events_stream
+
 
 def attribution_stream(
     spark: SparkSession,
@@ -38,15 +40,7 @@ def attribution_stream(
     """(user_id, view_id, purchase_id, view_ts, purchase_ts, lag_secs):
     every (view, purchase) pair of one user with the purchase inside
     [view_ts, view_ts + horizon) — unbound plan, caller attaches sink."""
-    from classic_fcd_spark.session import normalize_event_time
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_dir).schema
-    src = normalize_event_time(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
+    src = events_stream(spark, events_dir, max_files_per_trigger=1)
     views = (
         src.filter(F.col("event_type") == "view")
         .select(
@@ -134,17 +128,4 @@ def run_attribution_available_now(
     un-matchable rows is evicted once the watermark passes their
     retention bound."""
     plan = attribution_stream(spark, events_dir, horizon_seconds, watermark)
-    sink: list = []
-
-    def collect(batch_df: DataFrame, batch_id: int) -> None:
-        sink.extend(batch_df.collect())
-
-    q = (
-        plan.writeStream.foreachBatch(collect)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink
+    return drain_collect(plan, checkpoint_dir)

@@ -91,6 +91,7 @@ from classic_fcd_spark.serving.extract import (
     merge_account_page_extract,
     merge_tx_lookup_extract,
 )
+from classic_fcd_spark.streaming.drain import drain, file_stream
 from classic_fcd_spark.streaming.minute_pipeline import merge_upsert
 
 BRONZE = "txs_bronze"
@@ -493,11 +494,6 @@ def run_block_ingest_available_now(
     sustained bench drive.  proposals_dim is the LCD stand-in the
     proposal sink refreshes from (None disables sink 7, e.g. for feeds
     with no governance surface)."""
-    schema = spark.read.parquet(txs_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(txs_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         ingest_block_batch(
@@ -507,13 +503,7 @@ def run_block_ingest_available_now(
         if on_batch is not None:  # bench/test observation hook
             on_batch(batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, txs_dir, max_files_per_trigger), sink, checkpoint_dir)
 
 
 def reward_scoped_bronze(

@@ -18,6 +18,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from classic_fcd_spark.streaming.drain import drain, file_stream
+
 
 def dim_refresh_sink(
     address_col: str, refresh: Callable[[list[str]], None]
@@ -49,19 +51,15 @@ def run_dim_refresh(
     """Attach the refresh sink to a file stream.  `trigger_interval`
     ('5 seconds' to mirror the reference) applies in live mode; tests use
     availableNow (None)."""
-    batch = spark.read.parquet(events_dir)
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    writer = src.writeStream.foreachBatch(
-        dim_refresh_sink(address_col, refresh)
-    ).option("checkpointLocation", checkpoint_dir)
+    src = file_stream(spark, events_dir)
+    sink = dim_refresh_sink(address_col, refresh)
     if trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-        q = writer.start()
-        return q  # caller manages lifecycle
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+        # live mode: the caller manages the query's lifecycle
+        return (
+            src.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(processingTime=trigger_interval)
+            .start()
+        )
+    drain(src, sink, checkpoint_dir)
     return None

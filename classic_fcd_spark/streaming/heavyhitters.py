@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from classic_fcd_spark.streaming.drain import drain, file_stream
+
 OUTPUT_SCHEMA = (
     "bucket int, item string, mg_count bigint, err_bound bigint, n_bucket bigint"
 )
@@ -123,13 +125,9 @@ def run_available_now(
     return the FINAL summary per bucket: {bucket: {"n": .., "d": ..,
     "counters": {item: mg_count}}} — the latest emission wins, exactly
     how an update-mode consumer reads this stream."""
-    batch = spark.read.parquet(items_dir)
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(items_dir)
+    out = streaming_top_items(
+        file_stream(spark, items_dir), item_col, capacity, num_buckets
     )
-    out = streaming_top_items(src, item_col, capacity, num_buckets)
     latest: dict[int, dict] = {}
 
     def collect(batch_df: DataFrame, batch_id: int) -> None:
@@ -142,12 +140,5 @@ def run_available_now(
                 cur["counters"][r["item"]] = r["mg_count"]
                 cur["n"], cur["d"], cur["seq"] = r["n_bucket"], r["err_bound"], batch_id
 
-    q = (
-        out.writeStream.foreachBatch(collect)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(out, collect, checkpoint_dir, "update")
     return {b: {k: v for k, v in d.items() if k != "seq"} for b, d in latest.items()}

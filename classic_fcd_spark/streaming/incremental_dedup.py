@@ -40,6 +40,7 @@ from classic_fcd_spark.operators.dedup import (
     word_shingles,
     ws_tokens,
 )
+from classic_fcd_spark.streaming.drain import drain, file_stream
 
 _MIN_TOKENS = 3
 
@@ -67,20 +68,12 @@ def run_streaming_dedup_available_now(
     duplicate copy — the index cannot grow unboundedly under crash
     loops."""
     from classic_fcd_spark.streaming.index_store import (
-        configure_index_writes,
         index_exists,
         read_index_excluding,
         write_index_batch,
     )
 
-    batch_schema = spark.read.parquet(docs_dir).schema
-    src = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
     sink: list = []
-    configure_index_writes(spark)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         new_sh = _shingled(batch_df, id_col, text_col)
@@ -104,11 +97,5 @@ def run_streaming_dedup_available_now(
             sink.extend(pairs.collect())
         write_index_batch(new_banded, index_dir, batch_id)
 
-    q = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, docs_dir), process, checkpoint_dir)
     return sink

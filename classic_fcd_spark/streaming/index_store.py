@@ -26,19 +26,13 @@ def index_exists(spark: SparkSession, index_dir: str) -> bool:
     return bool(fs.exists(path))
 
 
-def configure_index_writes(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
-
-
 def write_index_batch(df: DataFrame, index_dir: str, batch_id: int) -> None:
     """Append this batch's index rows as their own batch_pt partition
     (idempotent under replay — the partition is overwritten)."""
     (
         df.withColumn(BATCH_COL, F.lit(str(batch_id)))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(BATCH_COL)
         .parquet(index_dir)
     )
@@ -51,6 +45,9 @@ def read_index_excluding(
     processed.  A replay (crash after the index write, before the
     checkpoint commit) would otherwise probe the batch against its own
     just-written rows and emit self-pairs a clean run never produces."""
+    spark.conf.set(
+        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
+    )
     return (
         spark.read.parquet(index_dir)
         .filter(F.col(BATCH_COL) != str(batch_id))

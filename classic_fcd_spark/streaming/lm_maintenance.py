@@ -49,6 +49,7 @@ from classic_fcd_spark.operators.lm import (
     _pair_structs,
     _triple_structs,
 )
+from classic_fcd_spark.streaming.drain import drain, file_stream
 
 TABLES = ("uni", "pair", "tri")
 _EPOCH_MANIFEST = "_epoch.json"
@@ -192,12 +193,6 @@ def run_lm_maintenance_available_now(
     anywhere in the write→compact→checkpoint-commit sequence converges:
     a replayed batch whose partition was already folded is a no-op (see
     write_lm_delta_batch), an unfolded one overwrites idempotently."""
-    batch = spark.read.parquet(docs_dir)
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
     run = _run_token(checkpoint_dir)
 
     def sink(bdf: DataFrame, batch_id: int) -> None:
@@ -209,13 +204,7 @@ def run_lm_maintenance_available_now(
         if on_batch is not None:
             on_batch(batch_id)
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, docs_dir), sink, checkpoint_dir)
 
 
 def load_trigram_model_incremental(

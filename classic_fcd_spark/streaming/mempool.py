@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from classic_fcd_spark.streaming.drain import drain_collect, file_stream
+
 OBSERVATION_SCHEMA = "ts timestamp, txhash string, kind string"
 EVICTION_SCHEMA = (
     "txhash string, first_seen timestamp, last_seen timestamp, reason string"
@@ -129,29 +131,10 @@ def run_mempool_available_now(
     ingestion) and return the collected eviction rows."""
     from classic_fcd_spark.session import normalize_event_time
 
-    batch = spark.read.parquet(obs_dir)
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(obs_dir)
-    )
-    # Same load-boundary canonicalization as load_tables/_events_stream:
+    # Same load-boundary canonicalization as load_tables/events_stream:
     # withWatermark rejects TIMESTAMP_NTZ, and observation files written by
     # a pyarrow writer without an explicit tz arrive exactly that way.
     out = mempool_eviction_stream(
-        normalize_event_time(src), ttl_seconds=ttl_seconds
+        normalize_event_time(file_stream(spark, obs_dir)), ttl_seconds=ttl_seconds
     )
-    sink: list = []
-
-    def collect(batch_df: DataFrame, batch_id: int) -> None:
-        sink.extend(batch_df.collect())
-
-    q = (
-        out.writeStream.foreachBatch(collect)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink
+    return drain_collect(out, checkpoint_dir, "update")

@@ -26,28 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classic_fcd_spark.sources.promote import heal_table, promote_partitions
-
-
-def _events_stream(
-    spark: SparkSession,
-    events_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-source stream with the same event-time normalization as
-    classic_fcd_spark.session.load_tables — withWatermark below requires
-    plain TIMESTAMP, so every physical ts encoding (bigint nanos, NTZ µs,
-    UTC µs) is canonicalized at this boundary.  `max_files_per_trigger`
-    throttles availableNow drains into per-file micro-batches (the
-    catch-up pacing knob, and what the phase bench uses to measure
-    per-batch latency)."""
-    from classic_fcd_spark.session import normalize_event_time
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch = spark.read.parquet(events_dir)
-    reader = spark.readStream.schema(batch.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return normalize_event_time(reader.parquet(events_dir))
+from classic_fcd_spark.streaming.drain import drain, events_stream
 
 
 def minute_rollup_stream(
@@ -61,7 +40,7 @@ def minute_rollup_stream(
     is not incrementally computable under streaming update mode; the
     serving-side query computes it from the bronze table (A12).
     """
-    src = _events_stream(spark, events_dir, max_files_per_trigger)
+    src = events_stream(spark, events_dir, max_files_per_trigger)
     return (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 minute").alias("w"), F.col("event_type"))
@@ -162,14 +141,7 @@ def run_minute_rollup_available_now(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_upsert(spark, batch_df, out_dir, ["minute", "event_type"])
 
-    q = (
-        plan.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(plan, sink, checkpoint_dir, "update")
     spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     heal_table(out_dir)
     return spark.read.parquet(out_dir).drop(PARTITION_COL)

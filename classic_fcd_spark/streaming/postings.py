@@ -28,6 +28,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 from classic_fcd_spark.operators.bm25 import bm25_postings
+from classic_fcd_spark.streaming.drain import drain, file_stream
 
 
 def run_postings_available_now(
@@ -40,23 +41,11 @@ def run_postings_available_now(
 ) -> None:
     """Drain all available document files (one per micro-batch) and
     append each batch's postings to `postings_dir`."""
-    batch = spark.read.parquet(docs_dir)
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
 
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         write_postings_batch(bdf, batch_id, postings_dir, id_col, text_col)
 
-    q = (
-        src.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, docs_dir), write_batch, checkpoint_dir)
 
 
 def write_postings_batch(
@@ -72,18 +61,14 @@ def write_postings_batch(
 
     spark = bdf.sparkSession
     spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            bm25_postings(bdf, id_col, text_col)
-            .withColumn("batch_pt", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("batch_pt")
-            .parquet(postings_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        bm25_postings(bdf, id_col, text_col)
+        .withColumn("batch_pt", F.lit(str(batch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_pt")
+        .parquet(postings_dir)
+    )
 
 
 def read_postings(spark: Any, postings_dir: str) -> DataFrame:

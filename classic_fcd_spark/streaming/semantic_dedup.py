@@ -32,6 +32,7 @@ from classic_fcd_spark.operators.similarity import (
     assign_cells,
     incremental_semantic_pairs,
 )
+from classic_fcd_spark.streaming.drain import drain, file_stream
 
 
 def run_streaming_semantic_dedup_available_now(
@@ -48,20 +49,12 @@ def run_streaming_semantic_dedup_available_now(
     probing and growing the assignment index; returns the emitted
     (new_id, dup_of, cos_e6) rows."""
     from classic_fcd_spark.streaming.index_store import (
-        configure_index_writes,
         index_exists,
         read_index_excluding,
         write_index_batch,
     )
 
-    batch_schema = spark.read.parquet(emb_dir).schema
-    src = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_dir)
-    )
     sink: list = []
-    configure_index_writes(spark)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         assigned = assign_cells(batch_df, centroids, vec_col, id_col)
@@ -77,11 +70,5 @@ def run_streaming_semantic_dedup_available_now(
             assigned.select(id_col, vec_col, "vnorm", "cell"), index_dir, batch_id
         )
 
-    q = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, emb_dir), process, checkpoint_dir)
     return sink

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classic_fcd_spark.streaming.drain import drain_collect, events_stream
+
 
 def session_stats_stream(
     spark: SparkSession,
@@ -33,15 +35,7 @@ def session_stats_stream(
     row is emitted once, when the watermark passes its end — so the sink
     sees each session exactly once, closed.  One file per micro-batch so
     the watermark advances between files like live ingestion."""
-    from classic_fcd_spark.session import normalize_event_time
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch = spark.read.parquet(events_dir)
-    src = normalize_event_time(
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
+    src = events_stream(spark, events_dir, max_files_per_trigger=1)
     return (
         src.withWatermark(ts_col, watermark)
         .groupBy(
@@ -93,19 +87,7 @@ def run_session_stats_available_now(
     plan = session_stats_stream(
         spark, events_dir, key_cols, ts_col, gap_seconds
     )
-    sink: list = []
-
-    def collect(batch_df: DataFrame, batch_id: int) -> None:
-        sink.extend(batch_df.collect())
-
-    q = (
-        plan.writeStream.foreachBatch(collect)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink = drain_collect(plan, checkpoint_dir)
     if not flush:
         return sink
 

@@ -109,18 +109,16 @@ def test_all_ntz_columns_normalized(spark, tmp_path):
 
 @pytest.mark.parametrize("enc", sorted(ENCODINGS))
 def test_stream_source_normalizes_ts(spark, tmp_path, enc):
-    """_events_stream must yield watermark-compatible TIMESTAMP for every
+    """events_stream must yield watermark-compatible TIMESTAMP for every
     encoding — withWatermark raises on TIMESTAMP_NTZ at analysis time, so
     constructing the full rollup plan is the regression check."""
-    from classic_fcd_spark.streaming.minute_pipeline import (
-        _events_stream,
-        minute_rollup_stream,
-    )
+    from classic_fcd_spark.streaming.drain import events_stream
+    from classic_fcd_spark.streaming.minute_pipeline import minute_rollup_stream
 
     events_dir = tmp_path / "events_dir"
     events_dir.mkdir()
     _write_events(str(events_dir / "part-0.parquet"), ENCODINGS[enc]())
-    src = _events_stream(spark, str(events_dir))
+    src = events_stream(spark, str(events_dir))
     assert dict(src.dtypes)["ts"] == "timestamp", enc
     # Analysis of the watermarked plan is what failed in r3; building it
     # (schema resolution) is sufficient — no query start needed.
