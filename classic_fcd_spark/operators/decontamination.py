@@ -101,7 +101,7 @@ def semantic_contamination_report(
     cosines per vector with the corpus vector's norm hoisted to ONE
     column (cost n·b folds, linear in the corpus for a fixed
     benchmark).  For benchmark sets too big to broadcast, the banded
-    hyperplane-LSH candidate machinery (embedding_similar_pairs)
+    hyperplane-LSH candidate machinery (ann_lsh_search's table probe)
     replaces the cross — same recall dial as the dedup family."""
     from classic_fcd_spark.operators.similarity import dot_sql, floor_e6
 

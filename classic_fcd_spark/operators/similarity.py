@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -96,6 +96,128 @@ def bucket_sql(vec: str, weights: list[list[int]], fold: str) -> str:
             )
         terms.append(f"(CASE WHEN {dot} > 0 THEN {2**j} ELSE 0 END)")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
+
+
+# ---------------------------------------------------------------------------
+# Blocked Gram kernel: exact all-pairs cosine, one Gram block per tile pair.
+# ---------------------------------------------------------------------------
+# Vectors per tile: a 1024 x 1024 float64 Gram block is 8 MB per task.
+TILE = 1024
+# Gram rows per strip: a 64 x 1024 float64 strip (512 KB) stays in cache.
+_STRIP = 64
+
+
+def blocked_cosine_pairs(
+    vecs: DataFrame,
+    n: int,
+    bands: list[list[list[int]]],
+    threshold: float,
+    self_pairs: bool = False,
+) -> DataFrame:
+    """(i, j, cos_e6) for every pair of `vecs` (vec_id, embedding) whose
+    cosine is >= `threshold` and which agrees on at least one LSH band
+    id (`bucket_sql` over each plane set in `bands`); i < j.  With
+    `self_pairs`, each vector's self-cosine row (i == j) is emitted too.
+    `n` is the row count of `vecs`, known to the caller; it sets the
+    tile count.
+
+    Vectors are split into ceil(n / TILE) tiles by vec_id and each one
+    is replicated to every tile pair it belongs to; one grouped-map task
+    per tile pair computes the whole Gram block, so every pair is scored
+    exactly once and no candidate pair ever leaves its task.  When the
+    bands prune little (low-bit bands at a weak threshold), this is
+    cheaper than joining candidates and verifying each one.
+
+    Exactness: the dot products are a left-to-right loop over the
+    dimension of float64 products, the order of the SQL `aggregate`
+    fold (`dot_sql`, and DuckDB's `list_sum`); float32 -> float64 is
+    exact, and cos = dot / (sqrt(na) * sqrt(nb)) and floor(cos * 1e6)
+    are the same scalar IEEE operations.  A BLAS matmul reorders the
+    sum and is not bit-exact.  A zero vector gives 0/0 = NaN, which
+    fails the threshold, so it is in no pair (DuckDB's 0/0 is NULL,
+    which fails it as well)."""
+    import numpy as np
+    import pandas as pd
+
+    n_tiles = max(1, -(-n // TILE))
+    band_ids = F.array(*[F.expr(bucket_sql("embedding", w, "spark")) for w in bands])
+    tagged = vecs.select(
+        "vec_id",
+        "embedding",
+        band_ids.alias("bands"),
+        F.pmod("vec_id", F.lit(n_tiles)).alias("tile"),
+    )
+    # each vector goes to the n_tiles pairs (min(tile, o), max(tile, o)),
+    # numbered p = tj * (tj + 1) / 2 + ti in [0, n_pairs)
+    other = F.explode(F.sequence(F.lit(0), F.lit(n_tiles - 1))).alias("o")
+    pairs = (
+        tagged.select("*", other)
+        .select(
+            "vec_id",
+            "embedding",
+            "bands",
+            "tile",
+            F.least("tile", "o").alias("ti"),
+            F.greatest("tile", "o").alias("tj"),
+        )
+        .withColumn("p", F.expr("CAST(tj * (tj + 1) div 2 + ti AS INT)"))
+    )
+    n_pairs = n_tiles * (n_tiles + 1) // 2
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        ti, tj = int(pdf["ti"].iat[0]), int(pdf["tj"].iat[0])
+        a = pdf[pdf["tile"] == ti]
+        b = a if ti == tj else pdf[pdf["tile"] == tj]
+        if a.empty or b.empty:  # a tile no vec_id falls in
+            return pd.DataFrame({"i": [], "j": [], "cos_e6": []}, dtype=np.int64)
+        # dimension-major copies: each k step reads contiguous memory
+        at = np.stack(a["embedding"].to_numpy()).astype(np.float64).T.copy()
+        bt = np.stack(b["embedding"].to_numpy()).astype(np.float64).T.copy()
+        na = np.zeros(at.shape[1])
+        nb = np.zeros(bt.shape[1])
+        for k in range(len(at)):
+            na += at[k] * at[k]
+            nb += bt[k] * bt[k]
+        gram = np.zeros((at.shape[1], bt.shape[1]))
+        prod = np.empty((_STRIP, bt.shape[1]))
+        # the k loop runs per strip of rows, so the strip stays in cache
+        for r in range(0, len(gram), _STRIP):
+            g = gram[r : r + _STRIP]
+            pr = prod[: len(g)]
+            for k in range(len(at)):
+                np.multiply(at[k, r : r + _STRIP, None], bt[k], out=pr)
+                g += pr
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = gram / (np.sqrt(na)[:, None] * np.sqrt(nb)[None, :])
+            keep = cos >= threshold
+        ba = np.stack(a["bands"].to_numpy())
+        bb = np.stack(b["bands"].to_numpy())
+        keep &= (ba[:, None, :] == bb[None, :, :]).any(axis=2)
+        ia = a["vec_id"].to_numpy()
+        ib = b["vec_id"].to_numpy()
+        if ti == tj:
+            # a diagonal block is symmetric: keep one order.  An
+            # off-diagonal block holds each pair once, in either order.
+            upper = ia[:, None] < ib[None, :]
+            if self_pairs:
+                upper |= ia[:, None] == ib[None, :]
+            keep &= upper
+        r, c = np.nonzero(keep)
+        return pd.DataFrame(
+            {
+                "i": np.minimum(ia[r], ib[c]),
+                "j": np.maximum(ia[r], ib[c]),
+                "cos_e6": np.floor(cos[r, c] * 1000000.0).astype(np.int64),
+            }
+        )
+
+    # one task per tile pair: a hash-partitioned groupBy lets adaptive
+    # execution coalesce the small shuffle into one serial task
+    return (
+        pairs.repartitionById(n_pairs, "p")
+        .groupBy("p")
+        .applyInPandas(kernel, "i bigint, j bigint, cos_e6 bigint")
+    )
 
 
 # ---------------------------------------------------------------------------

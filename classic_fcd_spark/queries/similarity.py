@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from classic_fcd_spark.operators.similarity import (
+    blocked_cosine_pairs,
     bucket_sql,
     cosine,
     duck_cosine_sql,
@@ -204,15 +205,18 @@ def ann_lsh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Threshold pair search (embedding near-dup shape) over banded LSH
-# candidates — no all-pairs cross join anywhere in the plan.
+# Threshold pair search (embedding near-dup shape): banded hyperplane-LSH
+# pair semantics, scored exactly by the blocked Gram kernel.
 # ---------------------------------------------------------------------------
 # 8 bands x 2 planes from 16 independent hyperplanes.  Recall at a given
 # cosine threshold c: per-plane agreement p = 1 - arccos(c)/pi, candidate
 # probability 1 - (1 - p^2)^8.  At the weak 0.45 threshold this measures
 # 100% recall at sf0.01 / 98.6% at sf0.1; at genuine near-dup thresholds
-# (0.9+) it is ~1.  Band width is the recall/cost dial — at 100 TB use
-# wider bands (higher bits) so per-bucket candidate sets stay bounded.
+# (0.9+) it is ~1.  Two-plane bands prune little: for near-orthogonal
+# vectors 1 - (3/4)^8 ~ 90% of all pairs are candidates, so the query
+# scores every pair in tiles (operators.similarity.blocked_cosine_pairs)
+# and applies the band test as a filter; its cost is quadratic in the
+# distinct vectors (SCALE.md).
 _PAIR_PLANES = hyperplane_weights(16, DIM)
 _N_BANDS = 8
 _PAIR_BANDS = [_PAIR_PLANES[i * 2 : (i + 1) * 2] for i in range(_N_BANDS)]
@@ -228,11 +232,8 @@ def _duck_band_arm(band: str) -> str:
     """
 
 
-# Oracle retained for the in-test DuckDB gate (tests/test_text_queries.py):
-# r7 rotated the driver slot to quality_logit_scores — the banded
-# hyperplane-LSH pair discipline stays driver-gated via ann_search (the
-# same LSH arm) and the MinHash banding family (minhash_lsh_near_dups /
-# near_dup_groups).
+# The query's DuckDB oracle, checked in tests/test_text_queries.py,
+# tests/test_embedding_pairs.py and the analytics_batch benchmark.
 EMBEDDING_SIMILAR_PAIRS_ORACLE_SQL = (
     "WITH t AS (\n        SELECT vec_id, embedding,\n"
     + ",\n".join(
@@ -245,165 +246,59 @@ EMBEDDING_SIMILAR_PAIRS_ORACLE_SQL = (
 
 
 def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (threshold 0.45) over banded
-    hyperplane-LSH candidates: a pair is a candidate iff it agrees on
-    every sign of at least one 2-plane band (MinHash-LSH banding applied
-    to hyperplane LSH), then exact-cosine verified; UNION dedups pairs
-    caught by several bands.  Every band is a shuffle-partitioned
-    equi-join on its band id — no BroadcastNestedLoopJoin, no broadcast
-    of the corpus (asserted in tests).  Driver-gated r2-r6 (green
-    throughout); since r7 gated by the in-test oracle
-    (EMBEDDING_SIMILAR_PAIRS_ORACLE_SQL).
+    """Embedding-cosine near-dup pairs: (i, j, floor(cos * 1e6)) for
+    i < j with cosine >= 0.45 that agree on every sign of at least one
+    2-plane band (MinHash-LSH banding applied to hyperplane LSH), the
+    same set as EMBEDDING_SIMILAR_PAIRS_ORACLE_SQL.
 
-    r8: DUPLICATE-COLLAPSED (the semantic_dedup fingerprint-collapse
-    pattern, r7).  Byte-identical vectors share every band signature and
-    every pairwise cosine, so the band join and the cosine verify run
-    once per DISTINCT vector (groupBy the array itself — exact, no hash
-    fingerprint to collide) and the result expands back to member pairs:
-    cross-group pairs via a members join, intra-group pairs via the
-    self-cosine (the same IEEE expression on the same bytes the oracle
-    evaluates on two copies).  On a duplicate-heavy corpus the pair
-    compute is multiplicity-independent — the sf1 10x-clone sweep
-    measured 101 s -> the output-expansion cost only — while the emitted
-    pair set is provably identical to the uncollapsed oracle's."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    # 1) candidate (i, j) id pairs: all 8 band signatures are computed in
-    #    ONE projection pass and exploded to (band_idx, band_val) rows, so
-    #    candidate generation is a SINGLE equi-join on the composite band
-    #    key — not 8 separate join/shuffle arms (the r2 shape) unioned
-    #    after the fact; distinct() still collapses pairs caught by
-    #    multiple bands BEFORE any cosine work.  The candidate set is
-    #    identical to the oracle's 8-arm UNION by construction.
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("b"),
-                F.expr(bucket_sql("embedding", w, "spark")).alias("v"),
-            )
-            for i, w in enumerate(_PAIR_BANDS)
-        ]
-    )
+    Pairs are scored once per DISTINCT vector.  Byte-identical vectors
+    share every band id and every pairwise cosine, so on a corpus with
+    duplicates the kernel runs over one representative per vector
+    (grouped by the array itself: exact, no hash to collide) and the
+    rep pairs expand back to member pairs.  A duplicate-free corpus
+    (max multiplicity 1 in the cached embedding_stats) skips the
+    collapse; its vectors are the reps.
+
+    A zero vector is in no pair: its cosine is 0/0, NaN in the kernel
+    and NULL in DuckDB, and neither passes the threshold (SCALE.md)."""
     from classic_fcd_spark.session import embedding_stats, scoped_persist
 
-    # 0) duplicate collapse: one representative per DISTINCT vector, with
-    #    the sorted member list carried for the expansion step.  The
-    #    groupBy's own hash shuffle both collapses AND spreads the reps
-    #    across cores for the band/norm folds downstream — no separate
-    #    repartition needed.
-    #
-    #    r15 dispatch: (n, n_distinct, max_m) come from the per-corpus
-    #    cached fingerprint aggregate (session.embedding_stats) — the
-    #    same duplicate-mass pattern as the minhash family.  On a
-    #    duplicate-FREE corpus the vectors ARE the reps, so the collapse
-    #    groupBy (a full shuffle of the 64-double arrays), its persist,
-    #    and the per-call max(m) probe job are all skipped; the emitted
-    #    pair set is identical by construction (the max_m == 1 early
-    #    return below already encoded that).  A fingerprint collision
-    #    can only force the exact array-keyed collapse unnecessarily —
-    #    never skip it when duplicates exist.
-    n_vecs, n_distinct_vecs, max_m = embedding_stats(spark, sf_dir)
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    _, n_distinct, max_m = embedding_stats(spark, sf_dir)
     if max_m == 1:
-        groups = None
-        # the collapse groupBy also SPREAD the vectors across cores and
-        # persisted them for the three downstream consumers (band
-        # explode, both broadcast verify sides); keep those two effects
-        # — a narrow repartition + persist — while skipping the
-        # collect_list aggregation and the probe (measured: dropping
-        # them too left the 16-plane folds on the fixture's single scan
-        # partition, 3.7 s -> 5.1 s; with this, 3.7 s -> 2.9 s)
-        par = spark.sparkContext.defaultParallelism
-        reps = scoped_persist(
-            emb.repartition(par, "vec_id").select("vec_id", "embedding"),
-            "embpairs:reps",
+        return blocked_cosine_pairs(
+            emb.select("vec_id", "embedding"), n_distinct, _PAIR_BANDS, _PAIR_THRESHOLD
         )
-    else:
-        groups = scoped_persist(
-            emb.groupBy("embedding").agg(
-                F.min("vec_id").alias("rid"),
-                F.sort_array(F.collect_list("vec_id")).alias("members"),
-            ),
-            "embpairs:groups",
-        )
-        reps = groups.select(F.col("rid").alias("vec_id"), "embedding")
-    tagged = (
-        reps.select("vec_id", F.explode(bands).alias("bd"))
-        .select("vec_id", F.col("bd.b").alias("b"), F.col("bd.v").alias("v"))
+    groups = scoped_persist(
+        emb.groupBy("embedding").agg(
+            F.min("vec_id").alias("rid"),
+            F.sort_array(F.collect_list("vec_id")).alias("members"),
+        ),
+        "embpairs:groups",
     )
-    a = tagged.select("b", "v", F.col("vec_id").alias("i"))
-    b = tagged.select("b", "v", F.col("vec_id").alias("j"))
-    # r15: NO pre-verify distinct — deduping 1.8M candidate (i, j) rows
-    # cost a full candidate-sized exchange (measured 1.4 s of the 2.3 s
-    # plan at sf0.1); instead every band collision is verified map-side
-    # (the verify is a broadcast join + filter) and the distinct runs on
-    # the SURVIVORS (output-sized, 142 rows here).  Identical result:
-    # duplicate candidates produce byte-identical (i, j, cos_e6) rows —
-    # the cosine is deterministic — so distinct-after = distinct-before;
-    # extra fold work is bounded by the band count (≤ 8x, map-side),
-    # while the dedupe shuffle drops from candidate volume to output
-    # volume at every scale.
-    cands = a.join(b, ["b", "v"]).filter(F.col("i") < F.col("j")).select("i", "j")
-    # 2) exact-cosine verify ONCE per unique REP pair, with per-vector
-    #    squared norms hoisted out of the pair loop (the naive form
-    #    recomputes dot(a,a)/dot(b,b) per candidate — 3x the fold work);
-    #    same float expression shape as the oracle: dot/(sqrt*sqrt)
-    from classic_fcd_spark.operators.similarity import dot_sql
-
-    normed = reps.select(
-        "vec_id", "embedding", F.expr(dot_sql("embedding", "embedding")).alias("n2")
+    reps = groups.select(F.col("rid").alias("vec_id"), "embedding")
+    # the rep self-pairs (i == j) carry each group's self-cosine, the
+    # value the oracle computes for two byte-identical copies
+    rep_pairs = blocked_cosine_pairs(
+        reps, n_distinct, _PAIR_BANDS, _PAIR_THRESHOLD, self_pairs=True
     )
-    pa = normed.select(
-        F.col("vec_id").alias("i"), F.col("embedding").alias("ea"), F.col("n2").alias("na2")
-    )
-    pb = normed.select(
-        F.col("vec_id").alias("j"), F.col("embedding").alias("eb"), F.col("n2").alias("nb2")
-    )
-    cos = F.expr(dot_sql("ea", "eb")) / (F.sqrt(F.col("na2")) * F.sqrt(F.col("nb2")))
-    joined = cands.join(F.broadcast(pa), "i").join(F.broadcast(pb), "j")
-    rep_pairs = (
-        joined.filter(cos >= _PAIR_THRESHOLD)
-        .select("i", "j", floor_e6(cos).alias("cos_e6"))
-        .distinct()
-    )
-    # duplicate-free corpus: reps ARE the vectors, so rep_pairs IS the
-    # answer — the expansion joins below only exist for max_m >= 2
-    # (r15: the decision now rides the cached corpus stats; the per-call
-    # groups.agg(max(size(members))) probe job is gone)
-    if max_m == 1:
-        return rep_pairs
-    # 3) expand back to member pairs.  Cross-group: every (a in g_i,
-    #    b in g_j) inherits the rep cosine (identical bytes -> identical
-    #    IEEE value); least/greatest restores the i<j contract.
+    # every (a in g_i, b in g_j) inherits the rep pair's cosine; within
+    # one group (i == j) each member pair comes out in both orders, so
+    # one order is dropped
     mi = groups.select(F.col("rid").alias("i"), F.col("members").alias("mi"))
     mj = groups.select(F.col("rid").alias("j"), F.col("members").alias("mj"))
-    cross = (
+    return (
         rep_pairs.join(mi, "i")
         .join(mj, "j")
-        .select("cos_e6", F.explode("mi").alias("a"), "mj")
-        .select("cos_e6", "a", F.explode("mj").alias("bb"))
+        .select("i", "j", "cos_e6", F.explode("mi").alias("a"), "mj")
+        .select("i", "j", "cos_e6", "a", F.explode("mj").alias("b"))
+        .filter((F.col("i") != F.col("j")) | (F.col("a") < F.col("b")))
         .select(
-            F.least("a", "bb").alias("i"),
-            F.greatest("a", "bb").alias("j"),
+            F.least("a", "b").alias("i"),
+            F.greatest("a", "b").alias("j"),
             "cos_e6",
         )
     )
-    # Intra-group: copies share every band, so each C(m,2) pair is an
-    # oracle pair with the self-cosine — the SAME expression the oracle
-    # evaluates on the two byte-identical copies (NaN-safe: a zero
-    # vector fails the >= filter on both engines)
-    self_cos = F.expr(dot_sql("embedding", "embedding")) / (
-        F.sqrt(F.expr(dot_sql("embedding", "embedding")))
-        * F.sqrt(F.expr(dot_sql("embedding", "embedding")))
-    )
-    intra = (
-        groups.filter(F.size("members") >= 2)
-        .filter(self_cos >= _PAIR_THRESHOLD)
-        .select(floor_e6(self_cos).alias("cos_e6"), "members")
-        .select("cos_e6", F.explode("members").alias("i"), "members")
-        .select("cos_e6", "i", F.explode("members").alias("j"))
-        .filter(F.col("i") < F.col("j"))
-        .select("i", "j", "cos_e6")
-    )
-    return cross.unionByName(intra)
 
 
 # ---------------------------------------------------------------------------
