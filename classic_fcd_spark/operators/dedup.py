@@ -289,12 +289,9 @@ def adaptive_band_self_join(
             or 0
         )
 
-    if memo_key is None:
-        max_bucket = _probe()
-    else:
-        from classic_fcd_spark.session import session_memo
+    from classic_fcd_spark.session import session_memo
 
-        max_bucket = session_memo(banded.sparkSession, memo_key, _probe)
+    max_bucket = session_memo(banded.sparkSession, memo_key, _probe)
     if max_bucket <= max_group:
         left = banded.alias("l")
         right = banded.alias("r")
@@ -755,10 +752,9 @@ def simhash_component_labels(
         f"simhash_component_labels:rep_edges|{memo_key}",
     )
     spark = sh.sparkSession
-    if memo_key is None:
-        n_rep = rep_edges.count()
-    else:
-        n_rep = session_memo(spark, f"starcc:n_rep|{memo_key}", rep_edges.count)
+    n_rep = session_memo(
+        spark, None if memo_key is None else f"starcc:n_rep|{memo_key}", rep_edges.count
+    )
     rep_lab = scoped_persist(
         connected_components(
             rep_edges, memo_key=None if memo_key is None else f"{memo_key}:reps"
@@ -882,12 +878,11 @@ def connected_components(
     from classic_fcd_spark.session import scoped_persist, session_memo
 
     edges = scoped_persist(edges, "connected_components:edges")
-    if memo_key is None:
-        n_edges = edges.count()
-    else:
-        n_edges = session_memo(
-            pairs.sparkSession, f"cc:n_edges|{memo_key}", edges.count
-        )
+    n_edges = session_memo(
+        pairs.sparkSession,
+        None if memo_key is None else f"cc:n_edges|{memo_key}",
+        edges.count,
+    )
     # Two regimes, picked off the edge count the partitioning needs
     # anyway.  The near-dup graph is orders smaller than the corpus
     # (banding + fingerprint collapse), so it routinely fits ONE task:

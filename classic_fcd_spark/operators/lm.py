@@ -73,12 +73,11 @@ def unigram_nll_scores(
     def _fit():
         return unigram_model_e6(model_docs.repartition(par), text_col, buckets)
 
-    if memo_key is None:
-        nll = _fit()
-    else:
-        from classic_fcd_spark.session import session_memo
+    from classic_fcd_spark.session import session_memo
 
-        nll = session_memo(spark, f"ccnet:model_e6|{memo_key}", _fit)
+    nll = session_memo(
+        spark, None if memo_key is None else f"ccnet:model_e6|{memo_key}", _fit
+    )
     model = spark.createDataFrame(
         list(enumerate(nll)), "b bigint, nll_e6 bigint"
     )

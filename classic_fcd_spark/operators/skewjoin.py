@@ -128,16 +128,14 @@ def auto_salted_join(
         ]
         return [int(h) for h in found] if kt in int_types else found
 
-    if memo_key is None:
-        hot = _detect()
-    else:
-        from classic_fcd_spark.session import session_memo
+    from classic_fcd_spark.session import session_memo
 
-        hot = session_memo(
-            fact.sparkSession,
-            f"skewjoin:hot|{key}|{min_share}|{capacity}|{memo_key}",
-            _detect,
-        )
+    hot = session_memo(
+        fact.sparkSession,
+        None if memo_key is None
+        else f"skewjoin:hot|{key}|{min_share}|{capacity}|{memo_key}",
+        _detect,
+    )
     if not hot:
         return fact.join(dim, key, how)
     return salted_join(fact, dim, key, hot, salts=salts, how=how)

@@ -33,10 +33,6 @@ MULTISEND_SCHEMA = (
     "inputs array<struct<address:string, coins:array<struct<denom:string, amount:string>>>>, "
     "outputs array<struct<address:string, coins:array<struct<denom:string, amount:string>>>>"
 )
-DELEGATE_SCHEMA = (
-    "delegator_address string, validator_address string, "
-    "amount struct<denom:string, amount:string>"
-)
 SWAP_SCHEMA = (
     "trader string, offer_coin struct<denom:string, amount:string>, ask_denom string"
 )

@@ -1246,30 +1246,31 @@ import hashlib as _hashlib  # noqa: E402
 import os as _os  # noqa: E402
 import tempfile as _tempfile  # noqa: E402
 
+from classic_fcd_spark.session import _lookup  # noqa: E402
 from classic_fcd_spark.sources.files import read_richlist_csv, read_vesting_json  # noqa: E402
 from classic_fcd_spark.sources.fixtures import ISSUANCES, valaddr_str  # noqa: E402
 
 _N_RICH = 200
-_FILES_DIR: list[str] = []
 
 
-def _fixture_files_dir() -> str:
+def _fixture_files_dir(spark: SparkSession) -> str:
     """Deterministic richlist CSV + vesting JSON staged once per session
     (the reference's /tmp/tracking-* and /tmp/vesting-* drops)."""
-    if _FILES_DIR:
-        return _FILES_DIR[0]
-    d = _tempfile.mkdtemp(prefix="fcd_files_")
-    with open(_os.path.join(d, "tracking-uluna.csv"), "w") as f:
-        for r in range(_N_RICH):
-            f.write(f"{addr_str(r)},{r * 977 % 100000 + 1000}\n")
-    with open(_os.path.join(d, "vesting.json"), "w") as f:
-        coins = ",".join(
-            f'{{"denom":"{d_}","amount":"{(i + 1) * 12345}"}}'
-            for i, d_ in enumerate(["ukrw", "uluna", "usdr", "uusd"])
-        )
-        f.write(f'{{"datetime":"2021-01-01T00:00:00.000Z","coins":[{coins}]}}\n')
-    _FILES_DIR.append(d)
-    return d
+
+    def stage() -> str:
+        d = _tempfile.mkdtemp(prefix="fcd_files_")
+        with open(_os.path.join(d, "tracking-uluna.csv"), "w") as f:
+            for r in range(_N_RICH):
+                f.write(f"{addr_str(r)},{r * 977 % 100000 + 1000}\n")
+        with open(_os.path.join(d, "vesting.json"), "w") as f:
+            coins = ",".join(
+                f'{{"denom":"{d_}","amount":"{(i + 1) * 12345}"}}'
+                for i, d_ in enumerate(["ukrw", "uluna", "usdr", "uusd"])
+            )
+            f.write(f'{{"datetime":"2021-01-01T00:00:00.000Z","coins":[{coins}]}}\n')
+        return d
+
+    return _lookup(spark, ("files_dir",), stage)
 
 
 @register(
@@ -1291,7 +1292,7 @@ def _fixture_files_dir() -> str:
     "temp dir exactly like the reference's /tmp/tracking-* files.",
 )
 def fcd_richlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _os.path.join(_fixture_files_dir(), "tracking-uluna.csv")
+    path = _os.path.join(_fixture_files_dir(spark), "tracking-uluna.csv")
     df = read_richlist_csv(spark, path, "uluna")
     supply = ISSUANCES["uluna"]
     return (
@@ -1322,7 +1323,7 @@ def fcd_richlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exploded to one unvested row per denom.",
 )
 def fcd_unvested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _os.path.join(_fixture_files_dir(), "vesting.json")
+    path = _os.path.join(_fixture_files_dir(spark), "vesting.json")
     return read_vesting_json(spark, path).select(
         "denom", F.col("amount").cast("bigint").alias("amount")
     )

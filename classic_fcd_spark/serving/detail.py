@@ -43,12 +43,12 @@ from __future__ import annotations
 
 import json
 import re
-from collections import OrderedDict
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from classic_fcd_spark import session
 from classic_fcd_spark.serving.endpoints import (
     _dashboard_days,
     _day_ms,
@@ -244,45 +244,29 @@ def _txs_with_id(txs: DataFrame) -> DataFrame:
     return txs.withColumn("id", F.row_number().over(w))
 
 
-# (application id, scope) -> persisted id-stamped frame: a cursor WALK
-# re-requested the global id-stamping sort on every page (r7 advice —
-# the exact serving soft spot the extract exists to avoid); pages of the
-# same filter chain now share one persisted stamped frame.  Small LRU
-# (true least-recently-USED: hits move to the back, eviction pops the
-# front — plain dict.popitem() would evict the newest and pin the 31
-# oldest forever, ADVICE r8): scopes are per-operator/account strings,
-# capped so a long-lived serving session cannot accumulate executor
-# storage.  The memo assumes an immutable fixture source for the
-# session's lifetime (the test corpus contract); a mutating tx source
-# must call _stamped_invalidate() after each write.
-_STAMPED: OrderedDict[tuple[str, str], DataFrame] = OrderedDict()
+# Pages of one filter chain share one persisted id-stamped frame, so a
+# cursor walk does not re-run the global id-stamping sort per page (the
+# serving soft spot the extract exists to avoid).  Entries live in the
+# session registry under ("stamped", scope); scopes are per-operator or
+# per-account strings, so at most _STAMPED_CAP of them are kept and a
+# miss at the cap drops the least recently used one, keeping a
+# long-lived serving session's executor storage bounded.  The memo
+# assumes a tx source that is immutable for the session's lifetime.
 _STAMPED_CAP = 32
-
-
-def _stamped_invalidate() -> None:
-    while _STAMPED:
-        _, old = _STAMPED.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:  # noqa: BLE001 — session may be gone
-            pass
 
 
 def _stamped_for(scope: str | None, filtered: DataFrame) -> DataFrame:
     if scope is None:
         return _txs_with_id(filtered)
-    key = (filtered.sparkSession.sparkContext.applicationId, scope)
-    if key in _STAMPED:
-        _STAMPED.move_to_end(key)
-        return _STAMPED[key]
-    while len(_STAMPED) >= _STAMPED_CAP:
-        _, old = _STAMPED.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:  # noqa: BLE001 — session may be gone
-            pass
-    _STAMPED[key] = _txs_with_id(filtered).persist()
-    return _STAMPED[key]
+
+    def build():
+        # the registry keeps recency order, so the first is the LRU one
+        stamped = [k for k in session._SESSION_MEMO if k[1][:1] == ("stamped",)]
+        if len(stamped) >= _STAMPED_CAP:
+            session._evict(stamped[0].__eq__)
+        return _txs_with_id(filtered).persist()
+
+    return session._lookup(filtered.sparkSession, ("stamped", scope), build)
 
 
 def _keyset_page(
@@ -738,7 +722,7 @@ def get_rich_list(
     from classic_fcd_spark.queries.fcd import _fixture_files_dir
     from classic_fcd_spark.sources.files import read_richlist_csv
 
-    path = _os.path.join(_fixture_files_dir(), f"tracking-{denom}.csv")
+    path = _os.path.join(_fixture_files_dir(spark), f"tracking-{denom}.csv")
     if not _os.path.exists(path):
         return []
     rows = (
@@ -787,7 +771,7 @@ def get_circulating_supply(spark: SparkSession, inp: str) -> str:
     denom = _resolve_denom(inp)
     rows = gen_issuances(spark).filter(F.col("denom") == denom).collect()
     supply = Decimal(int(rows[0]["issuance"])) if rows else Decimal(0)
-    path = _os.path.join(_fixture_files_dir(), "vesting.json")
+    path = _os.path.join(_fixture_files_dir(spark), "vesting.json")
     unvested = (
         read_vesting_json(spark, path)
         .filter(F.col("denom") == denom)

@@ -39,6 +39,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from classic_fcd_spark import session
 from classic_fcd_spark.sources.promote import (
     MANIFEST as _MANIFEST,
     OLD_SUFFIX as _OLD_SUFFIX,
@@ -266,31 +267,26 @@ def run_extract_maintenance_available_now(
     drain(file_stream(spark, txs_dir, None), sink, checkpoint_dir)
 
 
-# (application id, path) -> DataFrame: a serving tier holds the
-# extract's relation open across requests — re-running partition
-# discovery + schema inference per lookup costs more than the lookup
-# itself (measured: 112 ms vs 33 ms p50 at sf0.1).  Keyed by
-# applicationId, not id(spark): a garbage-collected session's id() can
-# be reused by a new session and hand out a dead-session relation (r7
-# advice).  Every write_*/merge_* below invalidates its path's entries,
+# A serving tier holds an extract's relation open across requests:
+# re-running partition discovery and schema inference per lookup costs
+# more than the lookup itself (measured: 112 ms vs 33 ms p50 at sf0.1).
+# The relations live in the session registry under ("extract", path),
+# and every write_*/merge_* above drops the entries under its out_dir,
 # so callers never serve deleted-file errors off a stale handle.
-_OPEN: dict[tuple[str, str], DataFrame] = {}
-
-
 def _invalidate_open(out_dir: str) -> None:
-    for k in [k for k in _OPEN if k[1].startswith(out_dir.rstrip("/"))]:
-        del _OPEN[k]
+    prefix = out_dir.rstrip("/")
+    session._evict(lambda k: k[1][:1] == ("extract",) and k[1][1].startswith(prefix))
 
 
 def open_extract(spark: SparkSession, path: str, refresh: bool = False) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    if refresh or key not in _OPEN:
+    def build():
         # finish any promotion that crashed mid-swap BEFORE the reader
         # lists partitions — a parked kb=N__old dir would otherwise leak
         # into partition discovery as a bogus kb value
         heal_extract(path)
-        _OPEN[key] = spark.read.parquet(path)
-    return _OPEN[key]
+        return spark.read.parquet(path)
+
+    return session._lookup(spark, ("extract", path), build, fresh=refresh)
 
 
 def lookup_tx(

@@ -113,28 +113,87 @@ TABLES = (
 )
 
 
-_TABLE_CACHE: dict[tuple[int, str], dict] = {}
+# The engine's one cache (see session_memo for the contract): every
+# memoized table, silver, statistic, bronze fixture, open extract and
+# scoped persist, keyed (session UUID, key), oldest use first.
+# perfbench/layers.py counts entries through len() of _SHINGLE_CACHE,
+# _SHINGLE_STATS and sources.fixtures._BRONZE_CACHE, so those names stay
+# bound to this dict.
+_SESSION_MEMO: dict[tuple[str, object], object] = {}
+_SHINGLE_CACHE = _SHINGLE_STATS = _SESSION_MEMO
+_MISSING = object()
 
-_SCOPED_PERSISTS: dict[str, list] = {}
+
+def _evict(drop) -> None:
+    """Remove every entry whose full key satisfies ``drop``, unpersisting
+    the persisted DataFrames among them."""
+    for k in [k for k in _SESSION_MEMO if drop(k)]:
+        old = _SESSION_MEMO.pop(k, None)
+        if getattr(old, "is_cached", False):
+            try:
+                old.unpersist()
+            except Exception:  # noqa: BLE001 — its session may be gone
+                pass
+
+
+def _lookup(spark, key, build, fresh: bool = False):
+    """The registry lookup behind session_memo.  The engine's own users
+    (tables, bronze fixtures, extracts, stamped pages, scoped persists)
+    call it directly with tuple keys ``(kind, ...)``, so a tracer that
+    wraps session_memo sees silver calls only.  ``fresh`` drops the
+    entry first, so ``build`` always runs."""
+    k = (spark._jsparkSession.sessionUUID(), key)
+    if fresh:
+        _evict(k.__eq__)
+    value = _SESSION_MEMO.pop(k, _MISSING)
+    if value is _MISSING:
+        _evict(lambda e: e[0] != k[0])
+        value = build()
+    _SESSION_MEMO[k] = value
+    return value
+
+
+def session_memo(spark, key: str | None, build):
+    """Return ``build()``, computed once per (session, ``key``).
+
+    This is the engine's only cache.  It holds plan-decision state
+    (scalar probe statistics, tiny collected codebooks, loaded model
+    handles), persisted silvers, and, through the same store, loaded
+    tables, bronze fixtures, open serving extracts and scoped persists.
+    Query results are never memoized.
+
+    - Key: ``(spark._jsparkSession.sessionUUID(), key)``.  The UUID is
+      distinct for every ``newSession()`` (temp views and runtime conf
+      are per session) and new after a restart; unlike a Python object
+      id it is never reused after garbage collection.
+    - Corpus identity is the caller's key: callers embed the corpus path
+      (``sf_dir``) in ``key``, and the registry never looks at files.  A
+      corpus regenerated at a new path (how every scale lane and
+      benchmark run builds one) never hits a stale entry; rewriting
+      parquet in place within one live session is out of contract.  A
+      content signature in the key would cost an ``os.stat`` walk on
+      every lookup.
+    - ``key=None`` returns ``build()`` unmemoized, so a caller without
+      a corpus identity needs no second code path.
+    - Eviction, rule 1: a miss drops every entry of other sessions.
+    - Eviction, rule 2: owners drop their own entries.  scoped_persist
+      replaces its scope's previous generation, an extract write drops
+      the relations under its directory, and stamped pages keep at most
+      32 scopes by dropping the least recently used one (a hit moves its
+      entry to the back, so the store is in recency order).
+    - Every dropped persisted DataFrame is unpersisted.
+    """
+    if key is None:
+        return build()
+    return _lookup(spark, key, build)
 
 
 def scoped_persist(df, scope: str):
-    """Persist ``df``, unpersisting whatever the same ``scope`` persisted
-    on a previous invocation.  Query functions in a long-lived engine
-    session would otherwise accumulate persisted intermediates in
-    executor storage memory forever (round-1 finding); with a scope per
-    query the session holds at most one live generation each."""
-    for old in _SCOPED_PERSISTS.pop(scope, []):
-        try:
-            old.unpersist()
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    df = df.persist()
-    _SCOPED_PERSISTS.setdefault(scope, []).append(df)
-    return df
-
-
-_SHINGLE_CACHE: dict[tuple[int, str], object] = {}
+    """Persist ``df``, unpersisting what the same ``scope`` persisted on
+    the previous call.  A long-lived session thus holds at most one live
+    generation per query scope instead of accumulating persisted
+    intermediates in executor storage memory."""
+    return _lookup(df.sparkSession, ("scoped", scope), df.persist, fresh=True)
 
 
 def shingle_table(spark, sf_dir: str):
@@ -145,61 +204,28 @@ def shingle_table(spark, sf_dir: str):
     long-lived engine computes it once per corpus generation, not once
     per query.  Docs with < 3 tokens are excluded (no shingles), matching
     every consumer's filter."""
-    key = (id(spark), sf_dir)
-    if key in _SHINGLE_CACHE:
-        return _SHINGLE_CACHE[key]
-    from classic_fcd_spark.operators.dedup import word_shingles, ws_tokens
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    par = spark.sparkContext.defaultParallelism
-    df = (
-        docs.repartition(par, "doc_id")
-        .filter(F.size(ws_tokens("text")) >= 3)
-        .select("doc_id", word_shingles("text").alias("shingles"))
-        .withColumn("n", F.size("shingles"))
-        .persist()
-    )
-    _SHINGLE_CACHE[key] = df
-    return df
+    def build():
+        from classic_fcd_spark.operators.dedup import word_shingles, ws_tokens
 
+        docs = load_tables(spark, sf_dir)["documents"]
+        par = spark.sparkContext.defaultParallelism
+        return (
+            docs.repartition(par, "doc_id")
+            .filter(F.size(ws_tokens("text")) >= 3)
+            .select("doc_id", word_shingles("text").alias("shingles"))
+            .withColumn("n", F.size("shingles"))
+            .persist()
+        )
 
-_SESSION_MEMO: dict[tuple[int, str], object] = {}
-
-
-def session_memo(spark, key: str, build):
-    """Session-scoped memo for PLAN-DECISION state computed once per
-    corpus generation: scalar probe statistics (max bucket size, max
-    duplicate multiplicity, split ids), tiny collected codebooks, and
-    loaded model handles — the same class as AQE's runtime statistics
-    and the `shingle_table` / `_SHINGLE_STATS` precedents (r15
-    optimization round, guide §1.2: these per-call driver round-trips
-    were a measured 1-3 jobs PER QUERY INVOCATION at sf0.1 while being
-    pure functions of the corpus).  Callers embed the corpus identity
-    (sf_dir) in `key`, matching shingle_table's (session, sf_dir)
-    staleness contract: a regenerated corpus at a NEW path (how every
-    scale lane builds one) never hits a stale entry; rewriting parquet
-    in place within one live session is out of contract, as it already
-    was for every cached silver.  Query RESULTS are never memoized —
-    only statistics/handles that decide plan shape."""
-    k = (id(spark), key)
-    if k not in _SESSION_MEMO:
-        # evict entries of dead/replaced sessions (same hygiene as the
-        # bronze fixture cache)
-        for stale in [s for s in _SESSION_MEMO if s[0] != id(spark)]:
-            del _SESSION_MEMO[stale]
-        _SESSION_MEMO[k] = build()
-    return _SESSION_MEMO[k]
-
-
-_SHINGLE_STATS: dict[tuple[int, str], tuple[int, int, int]] = {}
+    return session_memo(spark, f"shingle_table|{sf_dir}", build)
 
 
 def shingle_stats(spark, sf_dir: str) -> tuple[int, int, int]:
     """(n_docs, n_distinct_sets, max_multiplicity) of the shingle silver —
     ONE cached aggregate per (session, corpus generation), shared by every
-    dedup-family query (r15, VERDICT r14 item 3: the per-query collapse +
-    max(m) probes cost 2.73x on minhash at sf0.1; this pass replaces all
-    of them and is paid once per corpus, not once per query).
+    dedup-family query: it replaces the per-query collapse and max(m)
+    probes and is paid once per corpus, not once per query.
 
     The aggregate groups on md5(shingle array), so the shuffle moves
     16-byte fingerprints, never the arrays themselves.  Collision
@@ -208,29 +234,28 @@ def shingle_stats(spark, sf_dir: str) -> tuple[int, int, int]:
     toward running the exact array-keyed collapse unnecessarily — it can
     never report "no duplicates" when duplicates exist (distinct
     fingerprints imply distinct arrays)."""
-    key = (id(spark), sf_dir)
-    if key in _SHINGLE_STATS:
-        return _SHINGLE_STATS[key]
-    sh = shingle_table(spark, sf_dir)
-    fp = F.md5(F.concat_ws("\x1f", "shingles"))
-    row = (
-        sh.groupBy(fp.alias("fp"))
-        .agg(F.count("*").alias("c"))
-        .agg(
-            F.sum("c").alias("n"),
-            F.count("*").alias("d"),
-            F.max("c").alias("m"),
+
+    def build():
+        sh = shingle_table(spark, sf_dir)
+        fp = F.md5(F.concat_ws("\x1f", "shingles"))
+        row = (
+            sh.groupBy(fp.alias("fp"))
+            .agg(F.count("*").alias("c"))
+            .agg(
+                F.sum("c").alias("n"),
+                F.count("*").alias("d"),
+                F.max("c").alias("m"),
+            )
+            .first()
         )
-        .first()
-    )
-    stats = (int(row[0] or 0), int(row[1] or 0), int(row[2] or 1))
-    _SHINGLE_STATS[key] = stats
-    return stats
+        return (int(row[0] or 0), int(row[1] or 0), int(row[2] or 1))
+
+    return session_memo(spark, f"shingle_stats|{sf_dir}", build)
 
 
 def embedding_stats(spark, sf_dir: str) -> tuple[int, int, int]:
     """(n_vecs, n_distinct_vectors, max_multiplicity) of `embeddings` —
-    the shingle_stats twin for the vector family (r15): ONE cached
+    the shingle_stats twin for the vector family: ONE cached
     fingerprint aggregate per corpus generation replaces
     embedding_similar_pairs' per-call max(m) probe AND lets a
     duplicate-free corpus skip the collapse groupBy outright.  The
@@ -260,7 +285,7 @@ def embedding_stats(spark, sf_dir: str) -> tuple[int, int, int]:
 def embedding_codebook(spark, sf_dir: str, k: int) -> list:
     """First-k corpus vectors ordered by vec_id — the pinned
     deterministic codebook shared by the ann_ivf / ann_pq arms and
-    semantic_dedup (r15): collected ONCE per (session, corpus, k)
+    semantic_dedup: collected ONCE per (session, corpus, k)
     instead of one k-row collect job per query invocation."""
 
     def build():
@@ -279,11 +304,10 @@ def banded_minhash_table(spark, sf_dir: str):
     docstring this is 'the thing a production corpus STORES at ingest
     time' (operators/dedup.banded_signatures): ~bands rows x ~50 bytes
     per doc, sufficient for both batch self-dedup and incremental
-    probes.  r15: minhash_lsh_near_dups' direct path and BOTH sides of
-    incremental_dedup's split previously re-derived the full signature
-    table per invocation; banding is per-doc (independent of the rest of
-    the corpus), so a doc_id filter of this table IS the banded table of
-    the filtered corpus."""
+    probes.  minhash_lsh_near_dups' direct path and BOTH sides of
+    incremental_dedup's split read it; banding is per-doc (independent
+    of the rest of the corpus), so a doc_id filter of this table IS the
+    banded table of the filtered corpus."""
 
     def build():
         from classic_fcd_spark.operators.dedup import banded_signatures
@@ -297,10 +321,9 @@ def banded_minhash_table(spark, sf_dir: str):
 def simhash_silver(spark, sf_dir: str):
     """(doc_id, simhash) over the shingle silver, persisted once per
     (session, corpus) — the fingerprint table simhash_near_dups,
-    near_dup_groups and the simhash_docs bench workload all previously
-    re-derived (explode + 32-bit-majority groupBy) per invocation, each
-    under its own per-call persist scope.  Fingerprinting is per-doc:
-    one stored table serves every consumer."""
+    near_dup_groups and the simhash_docs bench workload share instead of
+    re-deriving it (explode + 32-bit-majority groupBy) per invocation.
+    Fingerprinting is per-doc: one stored table serves every consumer."""
 
     def build():
         from classic_fcd_spark.operators.dedup import simhash32_table
@@ -314,11 +337,10 @@ def simhash_silver(spark, sf_dir: str):
 def simhash_grp_table(spark, sf_dir: str):
     """(simhash, rep, m) — the rep-election aggregate over the
     fingerprint silver (rep = min doc_id of the identical-fingerprint
-    clique, m = clique size), persisted once per (session, corpus)
-    (r16).  simhash_near_dups ran this groupBy TWICE per invocation
-    (once per side of the band self-join — the broadcast build side
-    cannot reuse the probe side's exchange) and near_dup_groups once
-    more; like the fingerprint table itself, the rep election is
+    clique, m = clique size), persisted once per (session, corpus).
+    simhash_near_dups needs it on both sides of the band self-join (the
+    broadcast build side cannot reuse the probe side's exchange) and
+    near_dup_groups once more; like the fingerprint table itself, the rep election is
     per-corpus state a production engine stores at ingest."""
 
     def build():
@@ -336,10 +358,8 @@ def bm25_postings_table(spark, sf_dir: str):
     """The (doc_id, dl, term, tf) inverted-index silver over `documents`,
     persisted once per (session, corpus) — the medallion pattern
     shingle_table applies to the dedup family, applied to the lexical
-    family (the operator docstring has called postings 'the reusable
-    inverted-index silver ... like session.shingle_table' since r6; r15
-    actually shares it): bm25_search and hybrid_rrf_search's lexical arm
-    previously each rebuilt + re-persisted it per invocation."""
+    family: bm25_search and hybrid_rrf_search's lexical arm share it
+    instead of rebuilding and re-persisting it per invocation."""
 
     def build():
         from classic_fcd_spark.operators.bm25 import bm25_postings
@@ -417,31 +437,31 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict:
     B-tree/GIN index tuning (sql/customIndex.sql:1-15) — see SURVEY §4.
     Memoized per (session, dir): the inventory queries each call this, and
     re-deriving 10 lazy readers + temp views per query is pure overhead.
+    Temp views are per session, hence the session-keyed registry.
     """
-    key = (id(spark), sf_dir)
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    # Set at runtime too so the driver's own session (which may not use our
-    # factory) can still read the ns-timestamp events table.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Read naive parquet timestamps (timestamp[us] without tz) directly as
-    # TIMESTAMP instead of TIMESTAMP_NTZ: identical semantics to the
-    # normalize_timestamps NTZ→TIMESTAMP cast under the UTC session tz
-    # (wall-clock reinterpreted as UTC), but done AT THE SCAN — the cast
-    # projection the r4 fix added on every table cost a measured ~25-30%
-    # on sub-second queries (r5 bisection, BENCH_NOTES).  The cast leg of
-    # normalize_timestamps stays as a no-op safety net for sessions where
-    # this conf is absent or pre-set.
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:  # noqa: BLE001 — older sessions without the conf
-        pass
-    dfs = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = normalize_timestamps(spark.read.parquet(path))
-            df.createOrReplaceTempView(name)
-            dfs[name] = df
-    _TABLE_CACHE[key] = dfs
-    return dfs
+
+    def build():
+        # Set at runtime too so the driver's own session (which may not use
+        # our factory) can still read the ns-timestamp events table.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Read naive parquet timestamps (timestamp[us] without tz) directly
+        # as TIMESTAMP instead of TIMESTAMP_NTZ: identical semantics to the
+        # normalize_timestamps NTZ→TIMESTAMP cast under the UTC session tz
+        # (wall-clock reinterpreted as UTC), but done AT THE SCAN — a cast
+        # projection on every table costs ~25-30% on sub-second queries
+        # (BENCH_NOTES).  The cast leg of normalize_timestamps stays as a
+        # no-op safety net for sessions where this conf is absent or pre-set.
+        try:
+            spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        except Exception:  # noqa: BLE001 — older sessions without the conf
+            pass
+        dfs = {}
+        for name in TABLES:
+            path = os.path.join(sf_dir, f"{name}.parquet")
+            if os.path.exists(path):
+                df = normalize_timestamps(spark.read.parquet(path))
+                df.createOrReplaceTempView(name)
+                dfs[name] = df
+        return dfs
+
+    return _lookup(spark, ("tables", sf_dir), build)

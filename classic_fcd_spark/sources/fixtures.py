@@ -19,10 +19,13 @@ Shapes follow the reference (citations):
 
 from __future__ import annotations
 
+import functools
 import os as _os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from classic_fcd_spark import session as _session
 
 # Scale knob for the fcd fixture family: every row count (and every DUCK_*
 # oracle CTE, which embeds the same constants at import) multiplies by
@@ -37,32 +40,19 @@ FIXTURE_SCALE = max(1, int(_os.environ.get("SPARK_GRAFT_FIXTURE_SCALE", "1")))
 # session and every query reads the persisted table — regenerating the
 # JSON-building projection per query would charge the bronze derivation
 # to every downstream read (the reference's queries read Postgres tables,
-# not the LCD decode).  Keyed by (session, generator, args); tiny per
-# entry (≤ a few MB at scale 1), evicted when a new session appears.
+# not the LCD decode).  Entries live in the session registry keyed by
+# (generator, args); each is tiny (≤ a few MB at scale 1).
 # ---------------------------------------------------------------------------
-_BRONZE_CACHE: dict = {}
+_BRONZE_CACHE = _session._SESSION_MEMO  # read by perfbench/layers.py
 
 
 def bronze_table(fn):
-    import functools
-
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, *args, **kwargs):
-        key = (
-            spark.sparkContext.applicationId,
-            fn.__name__,
-            args,
-            tuple(sorted(kwargs.items())),
+        key = ("bronze", fn.__name__, args, tuple(sorted(kwargs.items())))
+        return _session._lookup(
+            spark, key, lambda: fn(spark, *args, **kwargs).persist()
         )
-        df = _BRONZE_CACHE.get(key)
-        if df is None:
-            # a dead/replaced session leaves stale persisted handles —
-            # drop every entry not belonging to the current app
-            for k in [k for k in _BRONZE_CACHE if k[0] != key[0]]:
-                del _BRONZE_CACHE[k]
-            df = fn(spark, *args, **kwargs).persist()
-            _BRONZE_CACHE[key] = df
-        return df
 
     return wrapped
 
@@ -286,18 +276,6 @@ def gen_txs(spark: SparkSession, n: int = FIXTURE_N_BLOCKS) -> DataFrame:
         ).alias("fee"),
         logs_json.alias("logs_json"),
     )
-
-
-# DuckDB CTE regenerating the tx index space (h, k, i) — prefix for the
-# fcd oracle queries.
-DUCK_TX_BASE = f"""
-    txbase AS (
-        SELECT h, k, h * 3 + k AS i
-        FROM (SELECT unnest(range(1, {{n}} + 1)) AS h),
-             (SELECT unnest(range(0, 3)) AS k)
-        WHERE k < h % 3
-    )
-"""
 
 
 # ---------------------------------------------------------------------------

@@ -7,6 +7,9 @@
   a writer that needs dynamic partition overwrite passes it per write
   (`.option("partitionOverwriteMode", "dynamic")`), so one operator
   cannot change how a later, unrelated `mode("overwrite")` behaves.
+- Every cache is keyed through the session registry in session.py, on
+  the session UUID: nothing keys on `id(spark)` (reusable after GC) or
+  on `applicationId` (shared by every `newSession()` of one context).
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ import re
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "classic_fcd_spark"
 DRAIN = PKG / "streaming" / "drain.py"
+SESSION = PKG / "session.py"
 
 
 def _hits(pattern: str, skip: tuple[pathlib.Path, ...] = ()) -> list[str]:
@@ -48,3 +52,24 @@ class TestConfGuard:
     def test_no_session_wide_partition_overwrite_mode(self):
         pattern = r"conf\.set\(\s*[\"']spark\.sql\.sources\.partitionOverwriteMode"
         assert _hits(pattern) == []
+
+
+class TestCacheGuard:
+    ID_SPARK = r"\bid\(\s*spark\s*\)"
+    APP_ID = r"\bapplicationId\b"
+
+    def test_no_cache_keyed_on_spark_object_id(self):
+        assert _hits(self.ID_SPARK) == []
+
+    def test_no_cache_keyed_on_application_id(self):
+        assert _hits(self.APP_ID) == []
+
+    def test_session_uuid_only_in_session_registry(self):
+        assert _hits(r"sessionUUID", skip=(SESSION,)) == []
+
+    def test_scan_sees_the_registry(self):
+        # guards the guard: the patterns match the forms they forbid, and
+        # the scan reaches the one place the session UUID is read
+        assert re.search(self.ID_SPARK, "key = (id(spark), sf_dir)")
+        assert re.search(self.APP_ID, "spark.sparkContext.applicationId")
+        assert _hits(r"sessionUUID")
