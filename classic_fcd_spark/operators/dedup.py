@@ -827,7 +827,7 @@ def _single_task_cc(edges: DataFrame) -> DataFrame:
     out_schema = StructType(
         [StructField("node", node_type), StructField("label", node_type)]
     )
-    # coalesce, not repartition (r15): the caller hands a PERSISTED edge
+    # coalesce, not repartition: the caller hands a PERSISTED edge
     # list, so the 1-task read is a narrow fetch of the cached blocks —
     # repartition(1) paid a full shuffle round (map job + fetch) for the
     # same single-task layout
@@ -866,12 +866,12 @@ def connected_components(
     # then right-size partitioning to the GRAPH (≈500k edges/partition),
     # not the session default — iteration cost is dominated by per-stage
     # overhead when the dup graph is orders smaller than the corpus.
-    # persist + count, not localCheckpoint(eager) + count (r15): the
+    # persist + count, not localCheckpoint(eager) + count: the
     # eager checkpoint is its own job, so sizing the graph cost TWO jobs
     # before any CC work; the count now materializes the persist in one.
     # Lineage truncation is only needed by the ITERATIVE branch (plans
     # double per round), which re-checkpoints below.
-    # `memo_key` (r15) additionally memoizes the edge COUNT per corpus
+    # `memo_key` additionally memoizes the edge COUNT per corpus
     # generation — it only picks the regime and the partition sizing, so
     # a steady-state call skips the sizing job and the first real
     # consumer materializes the persisted edges instead.
@@ -904,40 +904,34 @@ def connected_components(
         .agg(F.min("b").alias("nb"))
         .select("node", F.least(F.col("node"), F.col("nb")).alias("label"))
     )
-    spark = pairs.sparkSession
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
     changed = 0
-    try:
-        for _ in range(max_iter):
-            # 1) neighbor-min: each node offers its label to its neighbors
-            neigh = (
-                labels.join(edges, labels.node == edges.a)
-                .groupBy(F.col("b").alias("node"))
-                .agg(F.min("label").alias("nl"))
-            )
-            cand = labels.join(neigh, "node", "left").select(
-                "node",
-                F.col("label").alias("old"),
-                F.least(F.col("label"), F.coalesce("nl", F.col("label"))).alias("mid"),
-            )
-            # 2) pointer jump: label := label(label) — path compression
-            lab2 = cand.select(F.col("node").alias("l_node"), F.col("mid").alias("l_mid"))
-            jumped = F.least(F.col("mid"), F.coalesce("l_mid", F.col("mid")))
-            # the did-it-shrink flag rides the same select, so convergence
-            # is a trivial filter over the checkpointed result — not a
-            # second labels join per round
-            new_labels = (
-                cand.join(lab2, cand.mid == lab2.l_node, "left")
-                .select("node", jumped.alias("label"), (jumped < F.col("old")).alias("chg"))
-                .localCheckpoint(eager=True)
-            )
-            changed = new_labels.filter("chg").count()
-            labels = new_labels.drop("chg")
-            if changed == 0:
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
+    for _ in range(max_iter):
+        # 1) neighbor-min: each node offers its label to its neighbors
+        neigh = (
+            labels.join(edges, labels.node == edges.a)
+            .groupBy(F.col("b").alias("node"))
+            .agg(F.min("label").alias("nl"))
+        )
+        cand = labels.join(neigh, "node", "left").select(
+            "node",
+            F.col("label").alias("old"),
+            F.least(F.col("label"), F.coalesce("nl", F.col("label"))).alias("mid"),
+        )
+        # 2) pointer jump: label := label(label) — path compression
+        lab2 = cand.select(F.col("node").alias("l_node"), F.col("mid").alias("l_mid"))
+        jumped = F.least(F.col("mid"), F.coalesce("l_mid", F.col("mid")))
+        # the did-it-shrink flag rides the same select, so convergence
+        # is a trivial filter over the checkpointed result — not a
+        # second labels join per round
+        new_labels = (
+            cand.join(lab2, cand.mid == lab2.l_node, "left")
+            .select("node", jumped.alias("label"), (jumped < F.col("old")).alias("chg"))
+            .localCheckpoint(eager=True)
+        )
+        changed = new_labels.filter("chg").count()
+        labels = new_labels.drop("chg")
+        if changed == 0:
+            break
     if changed != 0:
         # partially-propagated labels would silently split one component
         # into several keepers (chain-shaped graphs with diameter >

@@ -29,7 +29,6 @@ side is the pruned day partitions of bronze, never the table.
 
 from __future__ import annotations
 
-import contextlib
 import datetime
 import os
 
@@ -37,31 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classic_fcd_spark.streaming.minute_pipeline import PARTITION_COL, merge_upsert
-
-_INFER_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
-
-
-@contextlib.contextmanager
-def _string_partitions(spark: SparkSession):
-    """Read/write `day_pt=` dirs as strings without permanently
-    mutating the shared session (ADVICE r11: the per-call conf.set was
-    a session-wide side effect).  Partition discovery is eager at
-    spark.read.parquet, so restoring afterwards is safe.
-
-    NOT re-entrant across jobs (ADVICE r12): the toggle is a
-    session-global conf, so a CONCURRENT job on the same SparkSession
-    would see inference disabled during this window (and interleaved
-    enters/exits could restore out of order).  Acceptable under the
-    gold layer's documented single-writer contract — the daily pass is
-    the cron singleton (collector.ts runs one scheduler) — but callers
-    embedding run_daily_gold in a multi-tenant session should serialize
-    around it."""
-    prev = spark.conf.get(_INFER_KEY, "true")
-    spark.conf.set(_INFER_KEY, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(_INFER_KEY, prev)
 
 DASHBOARD = "dashboard_gold"
 VALIDATOR_RETURNS = "validator_returns_gold"
@@ -97,14 +71,13 @@ def _existing_days(spark: SparkSession, path: str) -> set[str]:
         f.startswith(f"{PARTITION_COL}=") for f in os.listdir(path)
     ):
         return set()
-    with _string_partitions(spark):
-        return {
-            r[0]
-            for r in spark.read.parquet(path)
-            .select(PARTITION_COL)
-            .distinct()
-            .collect()
-        }
+    return {
+        r[0]
+        for r in spark.read.parquet(path)
+        .select(PARTITION_COL)
+        .distinct()
+        .collect()
+    }
 
 
 def _merge_window(
@@ -197,13 +170,12 @@ def _replace_day_partition(
     heal_table(table_dir)
     tmp = table_dir.rstrip("/") + "__tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    with _string_partitions(spark):
-        (
-            snap.withColumn(PARTITION_COL, F.col("day"))
-            .write.mode("overwrite")
-            .partitionBy(PARTITION_COL)
-            .parquet(tmp)
-        )
+    (
+        snap.withColumn(PARTITION_COL, F.col("day"))
+        .write.mode("overwrite")
+        .partitionBy(PARTITION_COL)
+        .parquet(tmp)
+    )
     promote_partitions(tmp, table_dir, PARTITION_COL, [asof_day])
 
 
@@ -265,5 +237,4 @@ def read_gold(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
 
     path = os.path.join(out_dir, table)
     heal_table(path)
-    with _string_partitions(spark):
-        return spark.read.parquet(path).drop(PARTITION_COL)
+    return spark.read.parquet(path).drop(PARTITION_COL)

@@ -46,7 +46,6 @@ def write_time_layout(
     sort_cols = sort_cols or [ts_col]
     day = F.date_format(F.col(ts_col), "yyyy-MM-dd")
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     # RANGE-partition on (day, ts) — not repartition(files_per_day, day),
     # which caps the whole write at files_per_day tasks and still lands
     # each day wholly in one of them (hashing the day alone cannot split
@@ -72,9 +71,8 @@ def write_time_layout(
 
 
 def read_time_layout(spark, out_dir: str) -> DataFrame:
-    """Read a write_time_layout table (keeps the partition column opaque
-    string, same convention as streaming.minute_pipeline)."""
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+    """Read a write_time_layout table; its day partition column is an
+    opaque string (session._READ_CONF)."""
     return spark.read.parquet(out_dir)
 
 
@@ -126,7 +124,6 @@ def compact_time_layout(
             fragmented.append(name.split("=", 1)[1])
     if not fragmented:
         return []
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     touched = read_time_layout(spark, out_dir).filter(
         F.col(DAY_COL).isin(fragmented)
     )
@@ -199,8 +196,6 @@ def write_training_shards(
     from classic_fcd_spark.operators.dedup import ws_tokens
     from classic_fcd_spark.operators.packing import pack_concat_and_cut
 
-    spark = docs.sparkSession
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     toks = docs.select(
         id_col, source_col, text_col, F.size(ws_tokens(text_col)).cast("long").alias("n_tokens")
     )
@@ -247,5 +242,4 @@ def write_training_shards(
 
 
 def read_training_shards(spark, out_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     return spark.read.parquet(out_dir)

@@ -19,6 +19,9 @@ query.
   the next run, which is why every sink is idempotent per batch id.
 - Output mode is the caller's choice: `append` by default, `update` for
   the stateful aggregations that re-emit changed rows.
+- `events_stream` applies `session.apply_read_conf`, so the registered
+  streaming query reads the same types under a session the engine did
+  not build.
 """
 
 from classic_fcd_spark.streaming.minute_pipeline import (  # noqa: F401

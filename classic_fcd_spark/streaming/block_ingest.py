@@ -528,9 +528,6 @@ def rollup_scoped_bronze(
     (plan-asserted in tests), so the recompute reads only the touched
     days' files however large bronze grows — and the minute predicate
     prunes row groups within the day."""
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
     days = sorted({m[:10] for m in minutes})
     bronze = spark.read.parquet(os.path.join(out_dir, BRONZE))
     return bronze.filter(
@@ -540,9 +537,6 @@ def rollup_scoped_bronze(
 
 def read_bronze(spark: SparkSession, out_dir: str) -> DataFrame:
     """The bronze tx table (all ingested batches)."""
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
     return spark.read.parquet(os.path.join(out_dir, BRONZE)).drop(
         BATCH_COL, DAY_COL
     )
@@ -558,9 +552,6 @@ def read_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
 
     path = os.path.join(out_dir, ROLLUP)
     heal_table(path)
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
     return spark.read.parquet(path).drop(PARTITION_COL)
 
 
@@ -573,9 +564,6 @@ def read_rewards_bronze(
 ) -> DataFrame:
     """The blockreward bronze table; raw=True keeps the day_pt column
     (the rollup recompute filters on it for the partition prune)."""
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
     df = spark.read.parquet(os.path.join(out_dir, REWARDS))
     return df.drop(BATCH_COL) if raw else df.drop(BATCH_COL, DAY_COL)
 
@@ -586,9 +574,6 @@ def read_reward_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
 
     path = os.path.join(out_dir, REWARD_ROLLUP)
     heal_table(path)
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
     return spark.read.parquet(path).drop(PARTITION_COL)
 
 
@@ -598,7 +583,4 @@ def read_proposals(spark: SparkSession, out_dir: str) -> DataFrame:
 
     path = os.path.join(out_dir, PROPOSALS)
     heal_table(path)
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
     return spark.read.parquet(path).drop(PARTITION_COL)

@@ -36,12 +36,12 @@ def events_stream(
     """Event file stream with the same event-time normalization as
     classic_fcd_spark.session.load_tables: withWatermark requires plain
     TIMESTAMP, so every physical ts encoding (bigint nanos, NTZ µs, UTC
-    µs) is canonicalized here.  The nanos flag is set at runtime because
-    the registered streaming query also runs under sessions this package
-    did not configure."""
-    from classic_fcd_spark.session import normalize_event_time
+    µs) is canonicalized here.  Applies the session read conf because the
+    registered streaming query also runs under sessions this package did
+    not configure (see session.apply_read_conf)."""
+    from classic_fcd_spark.session import apply_read_conf, normalize_event_time
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    apply_read_conf(spark)
     return normalize_event_time(
         file_stream(spark, events_dir, max_files_per_trigger)
     )

@@ -45,9 +45,6 @@ def read_index_excluding(
     processed.  A replay (crash after the index write, before the
     checkpoint commit) would otherwise probe the batch against its own
     just-written rows and emit self-pairs a clean run never produces."""
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
     return (
         spark.read.parquet(index_dir)
         .filter(F.col(BATCH_COL) != str(batch_id))

@@ -72,7 +72,7 @@ def _live_partitions(df: DataFrame, covered: list[str], epoch: str | None) -> Da
     (a compaction that crashed before its manifest rename) is excluded
     by the epoch- prefix rule, so a crashed compaction is invisible and
     its overwrite-retry is idempotent."""
-    c = F.col("batch_pt").cast("string")
+    c = F.col("batch_pt")
     keep = ~c.isin(covered) if covered else F.lit(True)
     not_epoch = ~c.startswith("epoch-")
     if epoch is not None:
@@ -287,7 +287,7 @@ def compact_lm_deltas(spark: SparkSession, model_dir: str) -> str | None:
         ("tri", ["c1", "c2", "w"], "tcnt"),
     ):
         df = spark.read.parquet(f"{model_dir}/{name}_delta").filter(
-            F.col("batch_pt").cast("string").isin(live)
+            F.col("batch_pt").isin(live)
         )
         (
             df.groupBy(*keys)

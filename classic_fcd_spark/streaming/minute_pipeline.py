@@ -99,9 +99,6 @@ def merge_upsert(
     merge or read."""
     if partition_expr is None:
         partition_expr = F.substring(keys[0], 1, 10)  # minute -> day prefix
-    # keep partition values opaque strings; date/number inference would
-    # flip the column type between first write and later reads
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     updates = updates.withColumn(PARTITION_COL, partition_expr).cache()
     try:
         heal_table(out_dir)
@@ -142,6 +139,5 @@ def run_minute_rollup_available_now(
         merge_upsert(spark, batch_df, out_dir, ["minute", "event_type"])
 
     drain(plan, sink, checkpoint_dir, "update")
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     heal_table(out_dir)
     return spark.read.parquet(out_dir).drop(PARTITION_COL)

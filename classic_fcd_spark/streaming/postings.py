@@ -59,8 +59,6 @@ def write_postings_batch(
     batch's own partition, so a replay cannot double-append."""
     from pyspark.sql import functions as F
 
-    spark = bdf.sparkSession
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     (
         bm25_postings(bdf, id_col, text_col)
         .withColumn("batch_pt", F.lit(str(batch_id)))
@@ -72,5 +70,4 @@ def write_postings_batch(
 
 
 def read_postings(spark: Any, postings_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     return spark.read.parquet(postings_dir).drop("batch_pt")

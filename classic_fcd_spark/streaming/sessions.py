@@ -94,7 +94,6 @@ def run_session_stats_available_now(
     from classic_fcd_spark.operators.windows import session_stats
     from classic_fcd_spark.session import normalize_event_time
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     events = normalize_event_time(spark.read.parquet(events_dir))
     all_sessions = session_stats(events, key_cols, ts_col, gap_seconds).collect()
     emitted = {

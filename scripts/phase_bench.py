@@ -85,7 +85,6 @@ def main() -> None:
 
     work = tempfile.mkdtemp(prefix="phase_bench_")
     events_dir = os.path.join(work, "events")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = normalize_event_time(spark.read.parquet(os.path.join(SF_DIR, "events.parquet")))
     n_events = ev.count()
     # chunked by time so each micro-batch advances the watermark like

@@ -73,7 +73,6 @@ def main() -> None:
     out: dict = {"sf_dir": SF_DIR}
 
     # --- 1) minute rollup, 200 time-ordered micro-batches -------------------
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = normalize_event_time(
         spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
     )

@@ -3,10 +3,11 @@
 - Every availableNow drain goes through streaming/drain.py, so the
   streaming query lifecycle (trigger, checkpoint, awaitTermination)
   lives in one place and entry points only supply a source and a sink.
-- No code flips `spark.sql.sources.partitionOverwriteMode` session-wide:
-  a writer that needs dynamic partition overwrite passes it per write
-  (`.option("partitionOverwriteMode", "dynamic")`), so one operator
-  cannot change how a later, unrelated `mode("overwrite")` behaves.
+- Session conf is set in one place, session.py: no reader, writer or
+  operator changes the shared session's conf as a side effect, so what a
+  query reads and how a write overwrites cannot depend on what ran
+  before it.  A writer that needs dynamic partition overwrite passes it
+  per write (`.option("partitionOverwriteMode", "dynamic")`).
 - Every cache is keyed through the session registry in session.py, on
   the session UUID: nothing keys on `id(spark)` (reusable after GC) or
   on `applicationId` (shared by every `newSession()` of one context).
@@ -49,9 +50,20 @@ class TestDrainGuard:
 
 
 class TestConfGuard:
+    CONF_SET = r"\.conf\.set\("
+
     def test_no_session_wide_partition_overwrite_mode(self):
         pattern = r"conf\.set\(\s*[\"']spark\.sql\.sources\.partitionOverwriteMode"
         assert _hits(pattern) == []
+
+    def test_conf_set_only_in_session(self):
+        assert _hits(self.CONF_SET, skip=(SESSION,)) == []
+
+    def test_scan_sees_the_conf_set(self):
+        # guards the guard: the pattern matches the form it forbids, and
+        # the scan reaches the one place session conf is set
+        assert re.search(self.CONF_SET, 'spark.conf.set("k", "v")')
+        assert _hits(self.CONF_SET)
 
 
 class TestCacheGuard:
