@@ -21,10 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Headline set: one per operator family, weighted toward the heavy plans
 # (multi-way join, high-cardinality groupBy, unpartitioned windows excluded).
-# r3 renames (inventory fitted to the driver's 50-row gate): minute_rollup
-# -> the streaming path's batch twin is gone, text_quality+lang_id ->
-# text_features, simhash_docs/ann_lsh_buckets -> unregistered workloads
-# benched via EXTRA below, fcd_rewards_usd -> fcd_rewards_converted.
+# Names resolve through the query registry first, then _extra_workloads().
 HEADLINE = [
     "pricing_summary",
     "account_growth",
@@ -50,7 +47,7 @@ HEADLINE = [
     "ann_ivf_search",
     "ann_pq_search",
     "embedding_similar_pairs",
-    # r14: top-k-capped neighbor pairs — linear output on any corpus
+    # top-k-capped neighbor pairs — linear output on any corpus
     "embedding_topk_pairs",
     # fcd domain pipeline (fixture-driven, scale-independent)
     "fcd_undelegation_schedule",
@@ -62,32 +59,22 @@ HEADLINE = [
     "fcd_swap_volume",
     "fcd_rewards_converted",
     "fcd_proposals",
-    # registered in r5/r6 (driver-gated slot rotation)
     "incremental_dedup",
     "interval_joined_events",
     "sessionized_events",
     "semantic_dedup",
     "dsir_select",
     "bm25_search",
-    # registered in r7 (driver-gated slot rotation)
     "trigram_lm_scores",
     "quality_logit_scores",
-    # registered in r8 (now the full bucketing query, driver-gated)
     "ccnet_perplexity",
-    # registered in r9 (driver-gated slot rotation: pricing_summary /
-    # fcd_validator_annual_return rotated to extras)
     "scd2_order_history",
     "approx_top_tokens",
-    # registered in r11 (driver-gated slot rotation: duplicated_spans
-    # rotated to extras, same workload shapes either way)
     "repetition_signals",
-    # registered in r12 (driver-gated slot rotation: bm25_search rotated
-    # to extras — the hybrid's lexical arm runs the identical bm25_topk)
     "hybrid_rrf_search",
-    # registered in r13 (driver-gated slot rotation: fcd_tx_by_hash
-    # rotated to extras): the MG-gated salted account-dim enrichment —
-    # the salt ENGAGES on this fixture's planted exchange wallet, so the
-    # timing includes the detection pass + the salted shuffle
+    # the MG-gated salted account-dim enrichment: the salt ENGAGES on
+    # this fixture's planted exchange wallet, so the timing includes the
+    # detection pass + the salted shuffle
     "fcd_account_txs_enriched",
     "fcd_tx_by_hash",
     # unregistered bench-only workloads (resolved via _extra_workloads)
@@ -100,19 +87,17 @@ HEADLINE = [
 
 # Batch-training workloads: per-corpus jobs, not per-query costs — timed
 # only when SPARK_GRAFT_BENCH_TRAIN=1 so the headline total stays a
-# query-latency number (trained-IVF ≈ 6.3 s at sf0.1, see BENCH_NOTES.md).
+# query-latency number.
 TRAIN_WORKLOADS = [
-    "ann_ivf_search_trained",
-    "ann_pq_search_trained",
-    "ann_ivfpq_search_trained",
     "bpe_train_50",
 ]
 
 
 def _extra_workloads():
-    """Heavy plans kept outside the driver-gated registry (pattern-twins
-    folded in r3) but still benched: the multi-way TPC-H join and the
-    signature/bucket projections."""
+    """Plans kept outside the gated registry but still benched
+    (and plan-audited by `scripts/plan_audit.py --extras`): the
+    multi-way TPC-H join, the signature/bucket projections, and the
+    standalone twins of registered rows, each with an in-test oracle."""
     from classic_fcd_spark.queries.core import pricing_summary, revenue_by_nation
     from classic_fcd_spark.queries.fcd import (
         fcd_avg_staking_daily,
@@ -120,11 +105,6 @@ def _extra_workloads():
         fcd_tx_by_hash,
         fcd_validator_annual_return,
     )
-
-    # r7 slot rotation: token_stats_by_source / embedding_similar_pairs
-    # left the driver window (slots -> trigram_lm_scores /
-    # quality_logit_scores) but keep their bench timings here so the
-    # per-round workload set stays comparable
     from classic_fcd_spark.queries.similarity import (
         embedding_similar_pairs,
         embedding_topk_pairs,
@@ -134,15 +114,6 @@ def _extra_workloads():
         text_features,
         token_stats_by_source,
     )
-
-    # r5 slot rotation: incremental_dedup / interval_joined_events /
-    # sessionized_events are now REGISTERED (driver-gated) queries —
-    # resolved via query_fn_map like the rest.  The individual
-    # ann_lsh_search / ann_ivf_search rotated the other way (driver
-    # slots -> in-test oracles / merged `ann_search` row) but keep
-    # their per-workload bench timings here.  r10: simhash_near_dups
-    # was re-promoted to the driver window (resolved via query_fn_map
-    # now); text_features and fcd_staking_view took the in-test path.
     from classic_fcd_spark.queries.dedup import (
         duplicated_spans_q,
         ngram_jaccard_pairs,
@@ -151,39 +122,13 @@ def _extra_workloads():
     from classic_fcd_spark.queries.fcd import fcd_staking_view
     from classic_fcd_spark.queries.similarity import (
         ann_ivf_search,
-        ann_ivf_search_trained,
         ann_lsh_buckets,
         ann_lsh_search,
         ann_pq_search,
-        ann_pq_search_trained,
         ann_topk_bruteforce,
     )
 
-    # semantic_dedup / dsir_select left this table late in r5, and
-    # duplicated_spans / bm25_search in r6: all are now REGISTERED
-    # driver-gated queries (same workload shapes) resolved via
-    # query_fn_map.
-
-    def ann_ivfpq_search_trained(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from classic_fcd_spark.operators.similarity import (
-            ivfpq_search,
-            kmeans_train,
-            pq_train,
-        )
-        from classic_fcd_spark.session import load_tables
-
-        emb = load_tables(spark, sf_dir)["embeddings"]
-        cents, _ = kmeans_train(emb, k=16, n_iter=3)
-        books, _ = pq_train(emb, m=8, ks=16, n_iter=3)
-        return ivfpq_search(
-            emb.filter(F.col("vec_id") < 10), emb, cents, books, nprobe=4
-        )
-
     def bpe_train_50(spark, sf_dir):
-        from pyspark.sql import functions as F
-
         from classic_fcd_spark.operators.bpe import bpe_train
         from classic_fcd_spark.session import load_tables
 
@@ -212,77 +157,39 @@ def _extra_workloads():
     return {
         "revenue_by_nation": revenue_by_nation,
         "simhash_docs": simhash_docs,
-        # r10 rotation: slots went to simhash_near_dups /
-        # fcd_undelegation_schedule; these two keep their bench slots
-        # (text_features stays in HEADLINE) + in-test oracle gates +
-        # plan audits here
         "text_features": text_features,
         "fcd_staking_view": fcd_staking_view,
-        # r11 rotation: repetition_signals is now a REGISTERED
-        # driver-gated query (resolved via query_fn_map); the slot it
-        # took — duplicated_spans — keeps its bench timing + in-test
-        # oracle (tests/test_spans.py) here
         "duplicated_spans": duplicated_spans_q,
-        # r12 rotation: driver slot went to hybrid_rrf_search (whose
-        # lexical arm runs the identical bm25_topk plan); standalone
-        # bm25_search keeps its bench timing + in-test oracle
-        # (tests/test_bm25.py::TestBM25SearchOracle) here
         "bm25_search": bm25_search,
-        # r13 rotation: driver slot went to fcd_account_txs_enriched
-        # (the salted enrichment workload); the point lookup keeps its
-        # bench timing + in-test oracle
-        # (tests/test_fcd_pipeline.py::TestTxByHashOracle) here
         "fcd_tx_by_hash": fcd_tx_by_hash,
-        # r6 rotation: driver slot went to duplicated_spans; the PPJoin
-        # plan keeps its bench timing + in-test oracle here
         "ngram_jaccard_pairs": ngram_jaccard_pairs,
-        # r6 rotation twin: slot went to bm25_search; kept here so
-        # `plan_audit --extras` still audits its window plan (its ALLOW
-        # entry documents the per-day-rollup cumsum) — not in HEADLINE,
-        # so it adds no bench time
+        # not in HEADLINE: kept so `plan_audit --extras` audits its
+        # window plan (its ALLOW entry documents the per-day cumsum)
         "fcd_cumulative_rewards": fcd_cumulative_rewards,
         "approx_top_ngrams": approx_top_ngrams,
-        # r8 rotation: ccnet_perplexity is now a REGISTERED driver-gated
-        # query (bucketing included) resolved via query_fn_map — the raw
-        # NLL-score extra it replaces would shadow the gated row here.
-        # fcd_avg_staking_daily rotated the other way (slot ->
-        # ccnet_perplexity); kept here so plan_audit --extras still
-        # audits its window plan and the bench set stays comparable.
         "fcd_avg_staking_daily": fcd_avg_staking_daily,
-        # r9 rotation: slots went to scd2_order_history /
-        # approx_top_tokens; pricing_summary keeps its bench slot (it is
-        # still the flagship entry() query) and both keep in-test oracle
-        # gates + plan audits here
+        # still the flagship entry() query
         "pricing_summary": pricing_summary,
         "fcd_validator_annual_return": fcd_validator_annual_return,
-        "ann_ivfpq_search_trained": ann_ivfpq_search_trained,
         "bpe_train_50": bpe_train_50,
         "ann_lsh_buckets": ann_lsh_buckets,
-        # r14: the top-k-capped neighbor workload — the similarity scale
-        # story whose OUTPUT is linear by construction (the weak-0.45
-        # embedding_similar_pairs row stays as the documented recall
-        # stress); in-test oracle at tests/test_embedding_topk.py
         "embedding_topk_pairs": embedding_topk_pairs,
         "ann_lsh_search": ann_lsh_search,
         "ann_ivf_search": ann_ivf_search,
-        # r8: the pq arm of the merged ann_search row, benched per-arm
-        # like its lsh/ivf siblings
+        # the pq arm of the merged ann_search row, benched per arm like
+        # its lsh/ivf siblings
         "ann_pq_search": ann_pq_search,
         "ann_topk_bruteforce": ann_topk_bruteforce,
-        "ann_ivf_search_trained": ann_ivf_search_trained,
-        "ann_pq_search_trained": ann_pq_search_trained,
         "token_stats_by_source": token_stats_by_source,
         "embedding_similar_pairs": embedding_similar_pairs,
     }
 
 
 def _run_conditions(sf_dir: str) -> dict:
-    """Isolation stanza (VERDICT r13 item 5): the r13 sf1 clone-lane
-    artifact drifted ~1.3× on sub-2 s queries because a corpus build ran
-    concurrently — record the conditions IN the artifact so drift is
-    attributable instead of re-investigated every round.  `concurrent`
-    counts other busy processes (>50% of one core) at bench start; a
-    solo run reports 0."""
+    """Isolation stanza: a concurrent corpus build can drift sub-2 s
+    queries by ~1.3x, so the run conditions go IN the artifact and drift
+    stays attributable.  `concurrent_busy_procs` counts other busy
+    processes (>50% of one core) at bench start; a solo run reports 0."""
     cond: dict[str, object] = {}
     try:
         cond["load_avg_1m"] = round(os.getloadavg()[0], 2)
@@ -344,8 +251,8 @@ def main() -> None:
                 qmap[name](spark, warm_dir).collect()
             except Exception:  # noqa: BLE001 - warm-up must never fail the bench
                 pass
-    # Fault-isolated timed loop (round-3 lesson: one analysis-time error in
-    # a single query must not zero out the round's entire perf signal).
+    # Fault-isolated timed loop: one analysis-time error in a single
+    # query must not zero out the whole perf signal.
     # Failures are recorded as {"err": ...} entries; the headline total is
     # the sum over survivors, and the run exits 0 as long as most of the
     # suite produced a number.
@@ -356,8 +263,7 @@ def main() -> None:
     # next, stable in isolation, total GC pause ~3 s — so not GC or
     # data).  min-of-k is the standard latency-floor estimator under
     # one-sided noise; k=2 keeps the wall time bounded.
-    # r16 (VERDICT r15 item 2): record BOTH passes per query, not just
-    # the min — the session-scoped silver layer means a once-per-corpus
+    # Both passes are recorded per query, not just the min — the session-scoped silver layer means a once-per-corpus
     # index/model build lands inside the FIRST toucher's pass-1 timing
     # and min-of-2 then discards it, so silver-build cost appeared in no
     # reported number.  `queries`/`value` keep the exact min-of-2

@@ -27,7 +27,7 @@ from __future__ import annotations
 import math
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from classic_fcd_spark.operators.dsir import bucket_log_probs, ngram_buckets
@@ -62,7 +62,7 @@ def unigram_nll_scores(
     perplexity = exp(mean_nll_e6 / 1e6), monotone in mean_nll_e6, so
     thresholds/buckets operate on the integer column directly.
 
-    `memo_key` (r15): the fitted e6 model (a pure function of the model
+    `memo_key`: the fitted e6 model (a pure function of the model
     corpus) is memoized per session — steady-state calls skip the fit's
     histogram collect job."""
     spark = docs.sparkSession
@@ -148,8 +148,7 @@ def unigram_model_e6_from_parquet(
     then the SAME driver-python floor(-math.log((c+1)/(total+B))*1e6).
     Because the log runs ONCE in this process's libm and both engines
     consume the resulting integer literals, a DuckDB-ln vs python-log
-    last-ulp divergence at an e6 floor boundary is impossible — the
-    ADVICE r8 ccnet flake risk, closed at the oracle layer."""
+    last-ulp divergence at an e6 floor boundary is impossible."""
     import duckdb
 
     toks = f"regexp_split_to_array(trim({text_col}), ' +')"
@@ -228,138 +227,10 @@ def duck_unigram_nll_sql(
     """
 
 
-def bigram_nll_scores(
-    docs: DataFrame,
-    model_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 256,
-    lam: float = 0.7,
-) -> DataFrame:
-    """(id, n_tokens, sum_nll_e6, mean_nll_e6): NLL under an
-    INTERPOLATED hashed-bigram LM — p(w|c) = lam * p_bi(w|c) +
-    (1-lam) * p_uni(w), both Laplace-smoothed over md5 buckets.  The
-    n-gram generalization the unigram scorer's docstring promises:
-    same distributed plumbing, one more broadcast table.
-
-    Unlike the unigram model, this one SEES WORD ORDER — scrambling a
-    document raises its NLL (pinned in tests), which is most of what a
-    real fluency filter adds over a bag of words.
-
-    Model state (all driver-bounded, DSIR-style):
-    - observed (context-bucket, word-bucket) pair COUNTS: <= B^2 rows,
-      typically far fewer (collected once, broadcast);
-    - a B-row per-context total and a B-row unigram-prob vector — the
-      executors evaluate one shared mix expression for seen and unseen
-      pairs alike, so every pair NLL comes from a single log runtime;
-    - the B-row unigram model scores each document's FIRST token (no
-      context).
-    Scoring = one explode + two broadcast left joins + an exact integer
-    per-doc sum; every emitted column is bigint."""
-    spark = docs.sparkSession
-    par = spark.sparkContext.defaultParallelism
-
-    # --- fit: ONE model-corpus scan feeds both counts ------------------
-    from classic_fcd_spark.session import scoped_persist
-
-    mtoks = scoped_persist(
-        model_docs.repartition(par).select(
-            ngram_buckets(text_col, 1, buckets).alias("bs")
-        ),
-        "bigram_lm:model_buckets",
-    )
-    pair_rows = (
-        mtoks.select(
-            F.explode(
-                F.zip_with(
-                    F.slice("bs", 1, F.size("bs") - 1),
-                    F.slice("bs", 2, F.size("bs") - 1),
-                    lambda c, w_: F.struct(c.alias("c"), w_.alias("w")),
-                )
-            ).alias("p")
-        )
-        .groupBy("p")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    pair_cnt = {(int(r["p"]["c"]), int(r["p"]["w"])): int(r["n"]) for r in pair_rows}
-    ctx_tot: dict[int, int] = {}
-    for (c, _), n in pair_cnt.items():
-        ctx_tot[c] = ctx_tot.get(c, 0) + n
-    lp_uni = bucket_log_probs(
-        model_docs, text_col, 1, buckets,
-        exploded=mtoks.select(F.explode("bs").alias("b")),
-    )
-
-    # ONE runtime computes every pair NLL: the executors evaluate the
-    # mix expression for seen and unseen pairs alike (seen pb differs
-    # from unseen pb only by the broadcast count — same formula, cnt=0),
-    # so a driver-libm vs JVM-libm last-ulp divergence cannot split the
-    # model's values across two log implementations (the module's
-    # exact-integer policy).
-    pair_model = spark.createDataFrame(
-        [(c, w, n) for (c, w), n in pair_cnt.items()],
-        "c bigint, w bigint, cnt bigint",
-    )
-    ctx_vec = spark.createDataFrame(
-        [(c, float(ctx_tot.get(c, 0))) for c in range(buckets)],
-        "c bigint, ct double",
-    )
-    uni_vec = spark.createDataFrame(
-        [(w, math.exp(lp_uni[w])) for w in range(buckets)],
-        "w bigint, pu double",
-    )
-    first_model = spark.createDataFrame(
-        [(w, math.floor(-lp_uni[w] * 1e6)) for w in range(buckets)],
-        "w bigint, nll_e6 bigint",
-    )
-
-    # --- score ---------------------------------------------------------
-    toks = docs.repartition(par, id_col).select(
-        F.col(id_col), ngram_buckets(text_col, 1, buckets).alias("bs")
-    )
-    firsts = toks.select(
-        id_col, F.element_at("bs", 1).alias("w")
-    ).join(F.broadcast(first_model), "w")
-    pairs = toks.select(
-        F.col(id_col),
-        F.explode(
-            F.zip_with(
-                F.slice("bs", 1, F.size("bs") - 1),
-                F.slice("bs", 2, F.size("bs") - 1),
-                lambda c, w_: F.struct(c.alias("c"), w_.alias("w")),
-            )
-        ).alias("p"),
-    ).select(id_col, F.col("p.c").alias("c"), F.col("p.w").alias("w"))
-    pb = (F.coalesce(F.col("cnt"), F.lit(0)) + F.lit(1.0)) / (
-        F.col("ct") + F.lit(float(buckets))
-    )
-    mix_nll = F.floor(
-        -F.log(F.lit(lam) * pb + F.lit(1.0 - lam) * F.col("pu")) * F.lit(1e6)
-    ).cast("bigint")
-    scored_pairs = (
-        pairs.join(F.broadcast(pair_model), ["c", "w"], "left")
-        .join(F.broadcast(ctx_vec), "c")
-        .join(F.broadcast(uni_vec), "w")
-        .select(id_col, mix_nll.alias("nll_e6"))
-    )
-    per_doc = (
-        firsts.select(id_col, "nll_e6")
-        .unionByName(scored_pairs)
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_tokens"), F.sum("nll_e6").alias("sum_nll_e6"))
-    )
-    return per_doc.select(
-        id_col,
-        "n_tokens",
-        "sum_nll_e6",
-        F.expr("sum_nll_e6 div n_tokens").alias("mean_nll_e6"),
-    )
-
-
 def _pair_structs(bs):
     """Exploded (c, w) bigram structs over a bucket array (the zip_with
-    adjacent-pairs form shared by the trigram fit and both scorers)."""
+    adjacent-pairs form shared by the trigram fit and the streaming
+    model maintenance)."""
     # greatest(.., 0): slice throws on a negative length, which an
     # empty token array (NULL/empty text) would otherwise produce
     n_pairs = F.greatest(F.size(bs) - 1, F.lit(0))
@@ -389,210 +260,26 @@ def _triple_structs(bs):
     return F.explode(grams)
 
 
-def trigram_nll_scores(
-    docs: DataFrame,
-    model_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 256,
-    lams: tuple[float, float, float] = (0.2, 0.3, 0.5),
-    max_model_trigrams: int = 4_000_000,
-) -> DataFrame:
-    """(id, n_tokens, sum_nll_e6, mean_nll_e6): NLL under an INTERPOLATED
-    hashed-trigram LM — the order-3 instance of the family (proving the
-    unigram scorer's "any n-gram order" claim beyond order 2):
-
-        p(w | c1 c2) = l3·p_tri(w|c1,c2) + l2·p_bi(w|c2) + l1·p_uni(w)
-
-    with (l1, l2, l3) = `lams`, every component Laplace-smoothed over md5
-    buckets.  Token 1 scores with the unigram; token 2 with the bigram
-    mix carrying the conditional mass, (l2+l3)·p_bi + l1·p_uni — the
-    standard back-off-at-the-edge convention, pinned in tests.
-
-    Model state (all driver-bounded, broadcast):
-    - observed (c1, c2, w) triple counts: <= B^3 rows worst case, in
-      practice bounded by DISTINCT observed trigrams in the model corpus.
-      The fit COLLECTS these into Python dicts of tuple keys, whose
-      driver footprint is several hundred bytes per observed trigram —
-      the B=256 worst case of 16.7M triples is multiple GB of dict, not
-      the ~400 MB of the underlying narrow rows.  The fit therefore
-      counts distinct observed trigrams FIRST and refuses over
-      `max_model_trigrams` (default 4M, ~1-2 GB of driver dict) instead
-      of OOMing mid-collect; lower `buckets` or raise the cap only with
-      driver memory to match;
-    - observed (c1, c2) context totals — joined LEFT and coalesced to 0
-      (never materialized dense: a dense context table would be B^2);
-    - the B-row bigram pair/context/unigram tables of the order-2 model.
-    Scoring = one explode per n-gram order + broadcast left joins + an
-    exact integer per-doc sum (every per-token NLL floored to e6 BEFORE
-    summation — the module's order-free-integer policy); the mix
-    expression is evaluated once, JVM-side, for seen and unseen n-grams
-    alike, so no driver-libm/JVM-libm split can occur."""
-    l1, l2, l3 = lams
-    spark = docs.sparkSession
-    par = spark.sparkContext.defaultParallelism
-
-    from classic_fcd_spark.session import scoped_persist
-
-    mtoks = scoped_persist(
-        model_docs.repartition(par).select(
-            ngram_buckets(text_col, 1, buckets).alias("bs")
-        ),
-        "trigram_lm:model_buckets",
-    )
-    _pairs_col, _triples_col = _pair_structs, _triple_structs
-
-    # --- fit: one model scan per order, counts collected (bounded) -----
-    pair_rows = (
-        mtoks.select(_pairs_col(F.col("bs")).alias("p"))
-        .groupBy("p")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    pair_cnt = {(int(r["p"]["c"]), int(r["p"]["w"])): int(r["n"]) for r in pair_rows}
-    ctx_tot: dict[int, int] = {}
-    for (c, _), n in pair_cnt.items():
-        ctx_tot[c] = ctx_tot.get(c, 0) + n
-    # persisted so the refusal-guard count() and the collect() below
-    # share one aggregation instead of running the fit's most expensive
-    # stage twice (r7 advice)
-    tri_grouped = scoped_persist(
-        mtoks.filter(F.size("bs") >= 3)
-        .select(_triples_col(F.col("bs")).alias("t"))
-        .groupBy("t")
-        .agg(F.count("*").alias("n")),
-        "trigram_nll:tri_grouped",
-    )
-    n_tri = tri_grouped.count()
-    if n_tri > max_model_trigrams:
-        raise ValueError(
-            f"model corpus observes {n_tri} distinct hashed trigrams, "
-            f"over the driver-collect budget {max_model_trigrams}; "
-            f"lower buckets (currently {buckets}) or raise "
-            "max_model_trigrams with driver memory to match"
-        )
-    tri_rows = tri_grouped.collect()
-    tri_cnt = {
-        (int(r["t"]["c1"]), int(r["t"]["c2"]), int(r["t"]["w"])): int(r["n"])
-        for r in tri_rows
-    }
-    tri_ctx: dict[tuple[int, int], int] = {}
-    for (c1, c2, _), n in tri_cnt.items():
-        tri_ctx[(c1, c2)] = tri_ctx.get((c1, c2), 0) + n
-    lp_uni = bucket_log_probs(
-        model_docs, text_col, 1, buckets,
-        exploded=mtoks.select(F.explode("bs").alias("b")),
-    )
-
-    tri_model = spark.createDataFrame(
-        [(c1, c2, w, n) for (c1, c2, w), n in tri_cnt.items()] or [(-1, -1, -1, 0)],
-        "c1 bigint, c2 bigint, w bigint, cnt3 bigint",
-    )
-    tri_ctx_df = spark.createDataFrame(
-        [(c1, c2, n) for (c1, c2), n in tri_ctx.items()] or [(-1, -1, 0)],
-        "c1 bigint, c2 bigint, ct3 bigint",
-    )
-    pair_model = spark.createDataFrame(
-        [(c, w, n) for (c, w), n in pair_cnt.items()] or [(-1, -1, 0)],
-        "c bigint, w bigint, cnt bigint",
-    )
-    ctx_vec = spark.createDataFrame(
-        [(c, float(ctx_tot.get(c, 0))) for c in range(buckets)],
-        "c bigint, ct double",
-    )
-    uni_vec = spark.createDataFrame(
-        [(w, math.exp(lp_uni[w])) for w in range(buckets)],
-        "w bigint, pu double",
-    )
-    first_model = spark.createDataFrame(
-        [(w, math.floor(-lp_uni[w] * 1e6)) for w in range(buckets)],
-        "w bigint, nll_e6 bigint",
-    )
-
-    # --- score -----------------------------------------------------------
-    toks = docs.repartition(par, id_col).select(
-        F.col(id_col), ngram_buckets(text_col, 1, buckets).alias("bs")
-    )
-    # token 1: unigram
-    firsts = toks.select(id_col, F.element_at("bs", 1).alias("w")).join(
-        F.broadcast(first_model), "w"
-    )
-    pb = (F.coalesce(F.col("cnt"), F.lit(0)) + F.lit(1.0)) / (
-        F.col("ct") + F.lit(float(buckets))
-    )
-    pu = F.col("pu")
-    # token 2: the order-2 edge — conditional mass on the bigram
-    seconds = (
-        toks.filter(F.size("bs") >= 2)
-        .select(
-            id_col,
-            F.element_at("bs", 1).alias("c"),
-            F.element_at("bs", 2).alias("w"),
-        )
-        .join(F.broadcast(pair_model), ["c", "w"], "left")
-        .join(F.broadcast(ctx_vec), "c")
-        .join(F.broadcast(uni_vec), "w")
-        .select(
-            id_col,
-            F.floor(
-                -F.log(F.lit(l2 + l3) * pb + F.lit(l1) * pu) * F.lit(1e6)
-            )
-            .cast("bigint")
-            .alias("nll_e6"),
-        )
-    )
-    # tokens 3+: the full trigram mix
-    p3 = (F.coalesce(F.col("cnt3"), F.lit(0)) + F.lit(1.0)) / (
-        F.coalesce(F.col("ct3"), F.lit(0)).cast("double") + F.lit(float(buckets))
-    )
-    triples = (
-        toks.filter(F.size("bs") >= 3)
-        .select(F.col(id_col), _triples_col(F.col("bs")).alias("t"))
-        .select(
-            id_col,
-            F.col("t.c1").alias("c1"),
-            F.col("t.c2").alias("c2"),
-            F.col("t.w").alias("w"),
-        )
-        .join(F.broadcast(tri_model), ["c1", "c2", "w"], "left")
-        .join(F.broadcast(tri_ctx_df), ["c1", "c2"], "left")
-        .join(
-            F.broadcast(pair_model.withColumnRenamed("c", "c2")), ["c2", "w"], "left"
-        )
-        .join(F.broadcast(ctx_vec.withColumnRenamed("c", "c2")), "c2")
-        .join(F.broadcast(uni_vec), "w")
-        .select(
-            id_col,
-            F.floor(
-                -F.log(F.lit(l3) * p3 + F.lit(l2) * pb + F.lit(l1) * pu)
-                * F.lit(1e6)
-            )
-            .cast("bigint")
-            .alias("nll_e6"),
-        )
-    )
-    per_doc = (
-        firsts.select(id_col, "nll_e6")
-        .unionByName(seconds)
-        .unionByName(triples)
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_tokens"), F.sum("nll_e6").alias("sum_nll_e6"))
-    )
-    return per_doc.select(
-        id_col,
-        "n_tokens",
-        "sum_nll_e6",
-        F.expr("sum_nll_e6 div n_tokens").alias("mean_nll_e6"),
-    )
-
-
 class TrigramProbModel(NamedTuple):
     """Fitted state of the log-free interpolated trigram LM: five count
-    tables (pure integers — parquet round-trips bit-exactly) plus the
-    two scoring constants.  pctx/tctx are DERIVED sums over pair/tri, so
-    save/load persists only the three base tables and re-derives the
-    rest with the same integer aggregations the fit uses — a loaded
-    model scores bit-identically to a freshly fitted one."""
+    tables (pure integers) plus the two scoring constants.  pctx/tctx
+    are DERIVED sums over pair/tri, so a model rebuilt from the three
+    base tables with the same integer aggregations (the streaming
+    maintenance does) scores bit-identically to a fresh fit.
+
+    Per token, the scored quantity is the interpolated probability
+
+        p = l3·p_tri + l2·p_bi + l1·p_uni      (tokens 3+)
+        p = (l2+l3)·p_bi + l1·p_uni            (token 2)
+        p = p_uni                              (token 1)
+
+    floored to e9 fixed point and integer-summed per doc.  Every
+    component is a RATIONAL (cnt+1)/(ctx+B) evaluated with plain IEEE
+    +,×,÷ — no log, no exp — so the score is bit-identical on any engine
+    that parses the same float literals, which is what makes it gateable
+    by value hash where an NLL form (one ln per token) depends on libm.
+    -log is monotone, so every ordering an NLL scorer supports is
+    equally supported by sum_p_e9 at equal n_tokens."""
 
     uni_model: DataFrame  # (w, ucnt)
     pair_model: DataFrame  # (c, w, pcnt)
@@ -613,16 +300,10 @@ def fit_trigram_prob_model(
     persist_scope: str = "trigram_prob",
 ) -> TrigramProbModel:
     """Fit the count tables of the log-free trigram LM (see
-    trigram_prob_scores).  The tables never leave the JVM (r8): each is
-    a plain aggregation over the persisted token arrays, itself
-    persisted so the refusal-guard count() and every broadcast join
-    share ONE materialization (the r7 advice's double-aggregation
-    finding), then broadcast directly.  The r7 form collected each
-    table to the driver, built Python dicts, and re-shipped them via
-    createDataFrame — three serialization round-trips that dominated
-    the fit cost and made the gated query the slowest bench workload.
-    Counts are exact integers either way, so the scored values are
-    bit-identical to the collected-model form this replaces."""
+    TrigramProbModel).  The tables never leave the JVM: each is a plain
+    aggregation over the persisted token arrays, itself persisted so the
+    refusal-guard count() and every broadcast join share ONE
+    materialization, then broadcast directly."""
     bf = float(buckets)
     spark = model_docs.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -674,46 +355,17 @@ def fit_trigram_prob_model(
     )
 
 
-def save_trigram_prob_model(model: TrigramProbModel, path: str) -> None:
-    """Materialize the three BASE count tables (uni/pair/tri) as parquet;
-    the derived tables and `ut` are recomputed on load with the same
-    integer aggregations, so persisted state is minimal and exact."""
-    model.uni_model.write.mode("overwrite").parquet(f"{path}/uni")
-    model.pair_model.write.mode("overwrite").parquet(f"{path}/pair")
-    model.tri_model.write.mode("overwrite").parquet(f"{path}/tri")
-
-
-def load_trigram_prob_model(
-    spark: SparkSession,
-    path: str,
-    buckets: int = 256,
-    lams: tuple[float, float, float] = (0.2, 0.3, 0.5),
-) -> TrigramProbModel:
-    """Reload a saved model.  Counts are bigints (parquet-exact) and the
-    derivations mirror fit_trigram_prob_model line for line, so a loaded
-    model's scores hash-match a fresh fit's."""
-    uni = spark.read.parquet(f"{path}/uni")
-    pair = spark.read.parquet(f"{path}/pair")
-    tri = spark.read.parquet(f"{path}/tri")
-    utot = uni.agg(F.sum("ucnt")).first()[0] or 0
-    ut = float(utot) + float(buckets)
-    pctx = pair.groupBy("c").agg(F.sum("pcnt").alias("pctx"))
-    tctx = tri.groupBy("c1", "c2").agg(F.sum("tcnt").alias("tctx"))
-    return TrigramProbModel(uni, pair, pctx, tri, tctx, ut, buckets, lams)
-
-
 def score_trigram_prob(
     docs: DataFrame,
     model: TrigramProbModel,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Score `docs` under a fitted/loaded model — one token explode +
-    broadcast left joins + an exact e9 floor-then-integer-sum.  This is
-    the 100 TB hot path: the corpus meets only broadcast hash joins and
-    column algebra; the fit runs once per model corpus, not per query
-    (r8 — previously the gated query refitted every run, a training job
-    masquerading as a query)."""
+    """(id, n_tokens, sum_p_e9): score `docs` under a fitted model — one
+    token explode + broadcast left joins + an exact e9
+    floor-then-integer-sum.  This is the 100 TB hot path: the corpus
+    meets only broadcast hash joins and column algebra; the fit runs
+    once per model corpus, not per query.  NULL-text docs emit no row."""
     l1, l2, l3 = model.lams
     l23 = l2 + l3  # one Python addition, embedded as the same literal
     buckets, bf, ut = model.buckets, float(model.buckets), model.ut
@@ -734,22 +386,15 @@ def score_trigram_prob(
         F.coalesce(F.col("tctx"), F.lit(0)) + F.lit(bf)
     )
 
-    # r15 single-pass scorer: ONE explode emits (w, c2 = prev token,
-    # c1 = prev-prev token) per token — c2/c1 are NULL at the doc head —
-    # and ONE chain of five broadcast left joins scores every position;
-    # a CASE on the context nulls selects the per-position formula.  The
-    # previous three-branch union re-read the (persisted) token table
-    # three times and built 7-8 broadcast relations per call (pair/pctx
-    # were broadcast twice under different key names, defeating exchange
-    # reuse); measured ~2 s/call at sf0.1 against ~the scan cost for
-    # this form.  Value-exact: each CASE arm is the branch's verbatim
-    # expression (same literals, same association order), null-keyed
-    # rows simply miss the left joins exactly like the old narrow
-    # branches never joined them, and e9 flooring still happens before
-    # the per-doc integer sum.
+    # Single pass: ONE explode emits (w, c2 = prev token, c1 = prev-prev
+    # token) per token — c2/c1 are NULL at the doc head — and ONE chain
+    # of five broadcast left joins scores every position; a CASE on the
+    # context nulls selects the per-position formula (same literals,
+    # same association order as the oracle), and e9 flooring happens
+    # before the per-doc integer sum.
     #
-    # size(bs) >= 1 drops NULL-/empty-text docs: the oracle's token CTE
-    # emits no rows for such docs (r7 advice — latent gate mismatch).
+    # size(bs) >= 1 drops NULL-text docs: the oracle's token CTE emits
+    # no rows for them.
     tok = (
         docs.repartition(par, id_col)
         .select(F.col(id_col), ngram_buckets(text_col, 1, buckets).alias("bs"))
@@ -789,41 +434,6 @@ def score_trigram_prob(
     )
 
 
-def trigram_prob_scores(
-    docs: DataFrame,
-    model_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 256,
-    lams: tuple[float, float, float] = (0.2, 0.3, 0.5),
-    max_model_trigrams: int = 4_000_000,
-) -> DataFrame:
-    """(id, n_tokens, sum_p_e9): the LOG-FREE exact-integer twin of
-    trigram_nll_scores — per token, the interpolated probability itself
-
-        p = l3·p_tri + l2·p_bi + l1·p_uni      (tokens 3+)
-        p = (l2+l3)·p_bi + l1·p_uni            (token 2)
-        p = p_uni                              (token 1)
-
-    floored to e9 fixed point and integer-summed per doc.  Every
-    component probability is a RATIONAL (cnt+1)/(ctx+B) evaluated with
-    plain IEEE +,×,÷ — no log, no exp — so the score is bit-identical
-    on any engine that parses the same float literals, which is what
-    makes this form DRIVER-GATEABLE by value hash where the NLL form
-    (one ln per token) is libm-hostage and stays unit/in-test-gated.
-    -log is monotone, so every ordering/bucketing decision the NLL
-    scorer supports is equally supported by sum_p_e9 at equal n_tokens.
-
-    Convenience fit-then-score composition; callers that score more
-    than once should fit_trigram_prob_model / save / load and call
-    score_trigram_prob directly (the gated query does, via the
-    corpus-keyed model cache in queries/text.py)."""
-    model = fit_trigram_prob_model(
-        model_docs, text_col, buckets, lams, max_model_trigrams
-    )
-    return score_trigram_prob(docs, model, id_col, text_col)
-
-
 def duck_trigram_prob_sql(
     table: str = "documents",
     model_filter: str = "source = 'src0'",
@@ -832,7 +442,7 @@ def duck_trigram_prob_sql(
     buckets: int = 256,
     lams: tuple[float, float, float] = (0.2, 0.3, 0.5),
 ) -> str:
-    """DuckDB oracle for trigram_prob_scores: same md5 bucketing, same
+    """DuckDB oracle for score_trigram_prob: same md5 bucketing, same
     count tables (via LAG over token ordinals — set-identical to the
     zip_with explodes), same rational probabilities with the same
     literal lambdas in the same association order, same e9

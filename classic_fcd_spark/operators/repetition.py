@@ -24,174 +24,22 @@ row-local KEEP/DROP rule (single top-2-gram + dup-line thresholds, one
 HOF pass, no shuffle) the curation funnel applies inline; this module
 is the full Gopher SIGNAL TABLE — all nine n's by character mass —
 for threshold tuning, corpus QA, and per-source reporting, where the
-extra explode is the right trade.
+extra per-doc counting is the right trade.
 
-Scale (r12 rewrite): every signal is a PER-DOCUMENT quantity, so no
-gram ever needs to leave its row — each n's counting is a sorted-run
-fold over the doc's own gram array (_ngram_fold: array_sort, then one
-sequential F.aggregate whose run lengths ARE the occurrence counts),
-and the whole nine-signal table is ONE projection over the doc scan.
-Zero shuffles; parallelism = input splits.  The r11 form exploded
-(doc, n, gram) — a ~9x-token gram stream — through two shuffles; at
-the x100 variety sweep the fold plan cut 178 s to 83 s, and at 100 TB
-it removes the largest text exchange outright.  The line signals are
-the same HOF discipline.  Nothing is quadratic; nothing collects.
+Scale: every signal is a PER-DOCUMENT quantity, so no gram ever leaves
+its row — the whole table is one Arrow-batched mapInPandas pass over the
+doc scan (repetition_signals).  Zero shuffles; parallelism = input
+splits.  Nothing is quadratic; nothing collects.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
-
-from classic_fcd_spark.operators.dedup import ws_tokens
 
 TOP_NS = (2, 3, 4)
 DUP_NS = (5, 6, 7, 8, 9, 10)
 E6 = 1_000_000
-
-
-def _nonspace_len(col) -> Column:
-    return F.length(F.regexp_replace(col, " ", ""))
-
-
-def _ngram_fold(toks, n: int) -> Column:
-    """struct(top_chars, dup_chars) for width-n word grams of ONE doc:
-    sort the gram array, then a single sequential fold over adjacent
-    runs — a run's length IS the gram's occurrence count, so the most
-    frequent gram (max by (count, gram), the same tiebreak as
-    max(struct(c, g))) and the duplicated-gram char mass both fall out
-    of one O(m log m) per-row scan.  No (doc, gram) state ever leaves
-    the row."""
-    grams = (
-        F.when(
-            F.size(toks) >= n,
-            F.array_sort(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - (n - F.lit(1))),
-                    lambda i: F.array_join(F.slice(toks, i, n), " "),
-                )
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-    )
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best_c"),
-        F.lit(None).cast("string").alias("best_g"),
-        F.lit(0).cast("long").alias("dup"),
-    )
-
-    # tokens come from a split on " +" so they are space-free, and a
-    # width-n gram joins them with exactly n-1 single spaces:
-    # nonspace_len(gram) == length(gram) - (n-1), no regexp per close
-    def _gram_chars(g):
-        return F.length(g) - F.lit(n - 1)
-
-    def _close(acc):
-        """Fold the OPEN run into (dup, best) — on gram change and at
-        finish.  First close: best_g is null but best_c = 0 < run, so
-        the count branch decides and the null comparison never gates."""
-        dup2 = acc["dup"] + F.when(
-            acc["run"] >= 2, acc["run"] * _gram_chars(acc["prev"])
-        ).otherwise(F.lit(0))
-        better = (acc["run"] > acc["best_c"]) | (
-            (acc["run"] == acc["best_c"]) & (acc["prev"] > acc["best_g"])
-        )
-        best_c2 = F.when(better, acc["run"]).otherwise(acc["best_c"])
-        best_g2 = F.when(better, acc["prev"]).otherwise(acc["best_g"])
-        return dup2, best_c2, best_g2
-
-    def step(acc, x):
-        same = acc["prev"].isNotNull() & (x == acc["prev"])
-        dup2, best_c2, best_g2 = _close(acc)
-        return F.struct(
-            x.alias("prev"),
-            F.when(same, acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            F.when(same, acc["best_c"]).otherwise(best_c2).alias("best_c"),
-            F.when(same, acc["best_g"]).otherwise(best_g2).alias("best_g"),
-            F.when(same, acc["dup"]).otherwise(dup2).alias("dup"),
-        )
-
-    def finish(acc):
-        dup2, best_c2, best_g2 = _close(acc)
-        top_chars = F.when(
-            best_g2.isNotNull(), best_c2 * _gram_chars(best_g2)
-        ).otherwise(F.lit(0)).cast("long")
-        return F.struct(
-            top_chars.alias("top_chars"),
-            dup2.cast("long").alias("dup_chars"),
-        )
-
-    return F.aggregate(grams, init, step, finish)
-
-
-
-def repetition_signals_fold(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """The pure-JVM form of repetition_signals (the r12-r15 query path):
-    each n's gram counting is a sorted-run fold inside the row
-    (_ngram_fold) and the whole nine-signal table is one projection over
-    the doc scan — zero shuffles, no Python boundary.  Kept as the
-    bit-equal fallback/reference implementation (both forms are gated by
-    the same oracle and the pure-Python reference tests); the query path
-    uses the Arrow kernel below, measured 7.9x faster (r16, guide §4.2 —
-    HOF lambdas evaluate interpreted per element, ~10 us/token across
-    nine passes, where the per-batch Python Counter kernel pays the
-    boundary once for two narrow columns)."""
-    toks = ws_tokens(text_col)
-    base = docs.select(
-        F.col(id_col),
-        F.col(text_col).alias("__text"),
-        toks.alias("__toks"),
-        _nonspace_len(text_col).alias("__total"),
-    )
-    frac = lambda chars: F.floor(  # noqa: E731
-        F.lit(E6) * chars / F.greatest(F.col("__total"), F.lit(1))
-    ).cast("long")
-
-    # line signals: per-row HOF pass (unchanged from r10)
-    lines = F.filter(
-        F.transform(F.split(F.col("__text"), "\n"), lambda s: F.trim(s)),
-        lambda s: s != "",
-    )
-    uniq = F.array_distinct(lines)
-    n_lines = F.size(lines)
-    n_dup_lines = n_lines - F.size(uniq)
-    all_chars = F.aggregate(
-        lines, F.lit(0).cast("long"), lambda a, s: a + F.length(s)
-    )
-    uniq_chars = F.aggregate(
-        uniq, F.lit(0).cast("long"), lambda a, s: a + F.length(s)
-    )
-
-    cols = [
-        F.col(id_col),
-        F.floor(F.lit(E6) * n_dup_lines / F.greatest(n_lines, F.lit(1)))
-        .cast("long")
-        .alias("dup_line_frac_e6"),
-        F.floor(
-            F.lit(E6) * (all_chars - uniq_chars)
-            / F.greatest(all_chars, F.lit(1))
-        )
-        .cast("long")
-        .alias("dup_line_char_frac_e6"),
-    ]
-    for n in TOP_NS:
-        cols.append(
-            frac(_ngram_fold(F.col("__toks"), n)["top_chars"]).alias(
-                f"top{n}_frac_e6"
-            )
-        )
-    for n in DUP_NS:
-        cols.append(
-            frac(_ngram_fold(F.col("__toks"), n)["dup_chars"]).alias(
-                f"dup{n}_frac_e6"
-            )
-        )
-    return base.select(*cols)
 
 
 SIGNAL_COLS = (
@@ -204,18 +52,14 @@ SIGNAL_COLS = (
 
 def _doc_signals(text):
     """All eleven Gopher signals of ONE document, plain Python — the
-    per-batch kernel body of repetition_signals.  Mirrors the SQL fold
-    expression by expression; every arithmetic step lands on the same
-    IEEE doubles / exact integers (1e6 * int is exact below 2**53, and
-    int / int division promotes to double exactly like Spark's long
-    `/`), so the emitted signals are bit-identical — pinned by the
-    oracle gate and tests/test_repetition.py's cross-form equality.
+    per-batch kernel body of repetition_signals.  Every arithmetic step
+    is exact integer work or one IEEE double division (1e6 * int is exact
+    below 2**53), so the signals are bit-identical to the DuckDB oracle's
+    — pinned by the oracle gate and tests/test_repetition.py.
 
-    Python-semantics footnotes (each matching the SQL twin exactly):
-    - None text -> all-None signals (Spark: NULL propagates through
-      size/floor);
-    - strip/split use the SPACE character only — Spark's trim/split
-      (' +') never touch tabs or \r;
+    Semantics footnotes (each matching duck_repetition_sql):
+    - strip/split use the SPACE character only — trim/split (' +') never
+      touch tabs or \r;
     - the top-gram tiebreak max(count, token-tuple) equals the SQL
       max(count, joined-string) because tokens are space-free and
       ' ' sorts below every token byte, so tuple order == joined order.
@@ -224,11 +68,8 @@ def _doc_signals(text):
     from collections import Counter
 
     if text is None:
-        # match the SQL fold's NULL propagation exactly: the line
-        # signals are NULL (size(split(NULL)) is NULL) but every n-gram
-        # signal is 0 — _ngram_fold's size(NULL) >= n guard is false, so
-        # the fold runs over an EMPTY gram array and closes to 0, and
-        # greatest(NULL_total, 1) = 1 keeps the floor division at 0
+        # NULL text: the line signals are NULL (there are no lines to
+        # count) and every n-gram signal is 0 (there are no grams)
         return (None, None) + (0,) * (len(SIGNAL_COLS) - 2)
     out = []
     lines = [s.strip(" ") for s in text.split("\n")]
@@ -289,25 +130,15 @@ def repetition_signals(
     dup_line_frac_e6, dup_line_char_frac_e6.  Docs shorter than an
     n-gram width contribute 0 for that signal (nothing is repeated).
 
-    r16 (guide §4.2): ONE Arrow-batched mapInPandas pass — select the
-    two needed columns, ship them as Arrow batches, count grams with
-    C-speed dict machinery (Counter), return the eleven integers.  The
-    r12-r15 pure-JVM fold (repetition_signals_fold, kept + tested) has
-    the right SHAPE (zero shuffles, one projection) but higher-order
-    functions execute interpreted per element — nine passes over every
-    token at ~10 us/token measured; the kernel is 7.9x faster at sf0.1
-    (3.50 -> 0.44 s) with the boundary cost bounded by the two narrow
-    columns (§4.1: explicit select before an opaque function).  At
-    100 TB both forms scale with the scan and shuffle nothing; the
-    kernel simply spends ~8x less CPU per byte.  Bit-identical outputs:
-    same oracle, same hand-computed pins, plus a direct fold==kernel
-    equality test (tests/test_repetition.py)."""
+    One Arrow-batched mapInPandas pass: select the two needed columns
+    (an explicit select before an opaque function bounds the boundary
+    cost), count grams with Counter per doc, return the eleven integers.
+    Shuffles nothing; CPU scales with the scan."""
     schema_id = docs.schema[id_col]
     out_schema = StructType(
         [schema_id] + [StructField(c, LongType(), True) for c in SIGNAL_COLS]
     )
     return docs.select(id_col, text_col).mapInPandas(_signals_kernel, out_schema)
-
 
 
 def duck_repetition_sql(
@@ -340,7 +171,7 @@ def duck_repetition_sql(
                                           s -> trim(s)), s -> s <> '') AS lines
         FROM {table}
     ),
-    -- Grams via scalar lead() windows, NO list values anywhere (r11):
+    -- Grams via scalar lead() windows, NO list values anywhere:
     -- every list-carrying form (per-row gram-list comprehension,
     -- LATERAL full-array slice, even a bounded 10-token list() window)
     -- blew DuckDB past its memory limit at sf0.1/sf1 — list vectors

@@ -245,9 +245,9 @@ def kmeans_train(
     The (id, vec) training projection is persisted ONCE before the loop:
     each Lloyd round re-reads it from executor cache rather than
     re-scanning the source table, so the trainer's cost is n_iter×cache
-    scans + one source scan — not n_iter× the parquet read (the measured
-    r6 scaling soft spot).  `sample_limit` bounds training further: the
-    codebook only needs cluster GEOMETRY, not every row (the SemDeDup
+    scans + one source scan — not n_iter× the parquet read.
+    `sample_limit` bounds training further: the codebook only needs
+    cluster GEOMETRY, not every row (the SemDeDup
     paper's own recipe), so passing e.g. 100_000 trains on the
     `sample_limit` smallest-md5(id) rows — the same deterministic
     hash-order used for seeding, so the trained codebook is reproducible
@@ -291,9 +291,9 @@ def kmeans_train(
         .collect()
     )
     if len(seeds) < k:
-        # same fail-fast contract as pq_train: a corpus smaller than k
-        # would leave cents[cid] unpopulated for cid >= len(seeds) and
-        # crash mid-iteration with an opaque IndexError instead
+        # fail fast: a corpus smaller than k would leave cents[cid]
+        # unpopulated for cid >= len(seeds) and crash mid-iteration with
+        # an opaque IndexError instead
         raise ValueError(
             f"kmeans_train: corpus has only {len(seeds)} rows but k={k}; "
             "lower k to at most the corpus size"
@@ -351,64 +351,14 @@ def kmeans_train(
 
 
 # ---------------------------------------------------------------------------
-# Int8 embedding quantization (storage-side compression for the 100 TB
-# similarity corpus: 4x smaller than float32, dequantized cosine within
-# ~1/127 per-element of exact — the standard symmetric absmax scheme
-# faiss/SQ8-style).  Pure column algebra: quantize and dequantize are
-# array transforms, no UDF, so they run at scan speed and the quantized
-# table is what ships to the ANN indexes.
-# ---------------------------------------------------------------------------
-def quantize_embedding(vec: str) -> Column:
-    """(scale float, q array<tinyint>) struct: symmetric absmax int8 —
-    q_i = round(v_i / scale) with scale = max|v| / 127.  All-zero vectors
-    keep scale 0 and quantize to zeros (dequantize restores zeros)."""
-    absmax = f"aggregate({vec}, CAST(0.0 AS DOUBLE), (acc, v) -> greatest(acc, abs(CAST(v AS DOUBLE))))"
-    scale = f"({absmax} / 127.0)"
-    q = (
-        f"transform({vec}, v -> CAST(CASE WHEN {scale} = 0.0 THEN 0 "
-        f"ELSE round(CAST(v AS DOUBLE) / {scale}) END AS TINYINT))"
-    )
-    return F.expr(f"struct({scale} AS scale, {q} AS q)")
-
-
-def dequantize_embedding(qcol: str) -> Column:
-    """array<double> back from the (scale, q) struct."""
-    return F.expr(f"transform({qcol}.q, v -> CAST(v AS DOUBLE) * {qcol}.scale)")
-
-
-def duck_quantize_sql(vec: str, dim: int) -> str:
-    """DuckDB expression computing the same (scale, q) struct."""
-    absmax = (
-        f"list_aggregate([abs(CAST({vec}[i] AS DOUBLE)) for i in range(1, {dim + 1})], 'max')"
-    )
-    scale = f"(COALESCE({absmax}, 0.0) / 127.0)"
-    q = (
-        f"[CAST(CASE WHEN {scale} = 0.0 THEN 0 "
-        f"ELSE round(CAST({vec}[i] AS DOUBLE) / {scale}) END AS TINYINT) "
-        f"for i in range(1, {dim + 1})]"
-    )
-    return f"struct_pack(scale := {scale}, q := {q})"
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ) — the Faiss IVF-PQ storage/search design
-# (Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor
-# Search", TPAMI 2011).  The 100 TB rationale: int8 scalar quantization
-# (above) compresses 4x; PQ compresses dim*4 bytes -> M bytes (here
-# 64*4=256 -> 8, 32x) while still supporting asymmetric-distance (ADC)
-# scoring, so the whole corpus index fits in a fraction of the storage
-# and candidates are scored WITHOUT touching the raw vectors.
-#
-# Spark-first shapes:
-# - training: ALL M sub-codebooks train simultaneously — the subspace id
-#   is just another key column, so one Lloyd round is one broadcast join
-#   + one (m, cell, pos) mean aggregate, whatever M is.
-# - encoding: a broadcast join corpus-subvectors x codebook with an
-#   argmin aggregate and a sorted collect_list — two narrow shuffles of
-#   n*M rows, no Python in the loop.
-# - ADC search: per-query distance TABLES (M x ks doubles) ride a
-#   broadcast; scoring a code is M element_at lookups + a sum — a pure
-#   column fold over the packed codes, no per-candidate vector math.
+# Product quantization (PQ) — the Faiss storage/search design (Jégou,
+# Douze, Schmid, "Product Quantization for Nearest Neighbor Search",
+# TPAMI 2011): a vector is stored as M sub-centroid ids (here 64 float32
+# -> 8 codes, 32x smaller) and scored by asymmetric-distance (ADC) table
+# lookups, never touching the raw vectors.  Encoding is a broadcast join
+# corpus-subvectors x codebook with an argmin aggregate and a sorted
+# collect_list — two narrow shuffles of n*M rows, no Python in the loop.
+# The registered ann_pq_search pins its codebook and runs the ADC scan.
 # ---------------------------------------------------------------------------
 def _subvectors(emb, vec_col: str, id_col: str, m: int, dsub: int):
     """(id, m, sv): corpus exploded into M dsub-length subvectors."""
@@ -430,99 +380,6 @@ _SQDIST = (
     "aggregate(zip_with({a}, {b}, (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) "
     "* (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 )
-
-
-def pq_train(
-    emb,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 8,
-    ks: int = 16,
-    n_iter: int = 5,
-):
-    """Train M Euclidean sub-codebooks of ks centroids each.
-
-    Returns (codebooks, history): codebooks[j][c] is the dsub-length
-    centroid c of subspace j; history[i] is the corpus mean squared
-    subvector distortion after round i (non-increasing up to float
-    noise — asserted in tests, the standard Lloyd monotonicity).
-
-    Same driver-state contract as kmeans_train: only the M*ks*dsub
-    codebook floats and one scalar per round are ever collected."""
-    spark = emb.sparkSession
-    dim = len(emb.select(vec_col).first()[0])
-    assert dim % m == 0, (dim, m)
-    dsub = dim // m
-    sv = _subvectors(emb, vec_col, id_col, m, dsub)
-
-    # deterministic spread init per subspace: ks smallest md5(m:id)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("m").orderBy(
-        F.md5(F.concat_ws(":", F.col("m").cast("string"), F.col(id_col).cast("string")))
-    )
-    seeds = (
-        sv.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= ks)
-        .select("m", (F.col("rk") - 1).alias("cid"), "sv")
-        .collect()
-    )
-    # every subspace has one row per corpus vector, so seeds come in
-    # complete groups of len(seeds)/m; fail fast on a corpus smaller
-    # than ks rather than let a None centroid poison the distance round
-    # (null distances win F.min over structs → silent training corruption)
-    n_seeded = len(seeds) // m
-    if n_seeded < ks:
-        raise ValueError(
-            f"pq_train needs >= ks={ks} corpus rows to seed each subspace; "
-            f"got {n_seeded} (pass a smaller ks or a bigger corpus)"
-        )
-    books: list[list[list[float]]] = [[None] * ks for _ in range(m)]
-    for r in seeds:
-        books[r["m"]][r["cid"]] = [float(x) for x in r["sv"]]
-
-    history: list[float] = []
-    from classic_fcd_spark.session import scoped_persist
-
-    sv = scoped_persist(sv.repartition(spark.sparkContext.defaultParallelism, id_col), "pq_train:sv")
-    for _ in range(n_iter):
-        cdf = spark.createDataFrame(
-            [(j, c, books[j][c]) for j in range(m) for c in range(ks)],
-            ["m", "cid", "ce"],
-        )
-        dist = F.expr(_SQDIST.format(a="sv", b="ce"))
-        assigned = (
-            sv.join(F.broadcast(cdf), "m")
-            .select(id_col, "m", "sv", F.struct(dist.alias("d"), F.col("cid")).alias("sc"))
-            .groupBy(id_col, "m", "sv")
-            .agg(F.min("sc").alias("best"))
-        )
-        # distortion stat + sub-centroid means read the same assignment:
-        # persist per round instead of recomputing the join + argmin
-        assigned = assigned.persist()
-        history.append(float(assigned.agg(F.avg("best.d")).collect()[0][0]))
-        new_rows = (
-            assigned.select(
-                "m",
-                F.col("best.cid").alias("cell"),
-                F.posexplode("sv").alias("pos", "val"),
-            )
-            .groupBy("m", "cell", "pos")
-            .agg(F.avg(F.col("val").cast("double")).alias("mean"))
-            .collect()
-        )
-        assigned.unpersist()
-        upd: dict[tuple[int, int], dict[int, float]] = {}
-        for r in new_rows:
-            upd.setdefault((r["m"], r["cell"]), {})[r["pos"]] = r["mean"]
-        for j in range(m):
-            for c in range(ks):
-                if (j, c) in upd:
-                    books[j][c] = [
-                        upd[(j, c)].get(p, books[j][c][p]) for p in range(dsub)
-                    ]
-                # empty cell keeps its centroid (standard Lloyd handling)
-    return books, history
 
 
 def pq_encode(
@@ -563,57 +420,6 @@ def pq_encode(
     )
 
 
-def pq_adc_search(
-    queries,
-    codes,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    top_k: int = 5,
-):
-    """Asymmetric-distance top-k: approx ||q - x||^2 = sum_m
-    dtab[m][code_m] where dtab is the query's M x ks table of exact
-    subvector-to-centroid distances.
-
-    The tables are computed as a COLUMN on the (tiny) query side — one
-    literal codebook expression, no collect — and ride the broadcast
-    into a code-scoring fold: element_at per subspace + sum.  Corpus
-    cost per candidate is M lookups, independent of dim."""
-    m, ks = len(codebooks), len(codebooks[0])
-    dsub = len(codebooks[0][0])
-
-    def _lit_arr(vals):
-        return "array(" + ", ".join(repr(float(x)) for x in vals) + ")"
-
-    # dtab: array<array<double>> — dtab[m+1][c+1] = ||q_sub_m - cent||^2
-    rows = []
-    for j in range(m):
-        cells = []
-        for c in range(ks):
-            sub = f"slice({vec_col}, {j * dsub + 1}, {dsub})"
-            cells.append(_SQDIST.format(a=sub, b=_lit_arr(codebooks[j][c])))
-        rows.append("array(" + ", ".join(cells) + ")")
-    dtab = F.expr("array(" + ", ".join(rows) + ")")
-
-    q = queries.select(F.col(id_col).alias("qid"), dtab.alias("dtab"))
-    score = F.expr(
-        "aggregate(zip_with(codes, dtab, (c, row) -> element_at(row, CAST(c AS INT) + 1)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("adist").asc(), F.col("nid").asc())
-    return (
-        F.broadcast(q)
-        .crossJoin(codes.select(F.col(id_col).alias("nid"), "codes"))
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid", score.alias("adist"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .select("qid", "nid", "rnk", F.floor(F.col("adist") * 1000000.0).cast("bigint").alias("adist_e6"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Semantic deduplication (SemDeDup, Abbas et al. 2023, arXiv:2303.09540 —
 # public literature): cluster the embedding space, then within each
@@ -642,8 +448,8 @@ def assign_cells(
     cosine against a broadcast codebook; cos_c is the cosine to the OWN
     centroid (SemDeDup's keeper criterion) and vnorm the vector's L2
     norm (hoisted once, reused by downstream pair cosines).  Argmax via
-    max over (cos, cid) structs — the honest form (see the r4
-    trained-IVF fix)."""
+    max over (cos, cid) structs, then the winner's cid (max over the
+    cid alone would pick the largest cid outright)."""
     import math
 
     spark = emb.sparkSession
@@ -727,7 +533,7 @@ def semantic_dedup(
     mathematically correct side).  Zero-norm vectors have undefined
     cosine (NULL, filtered) and stay singletons on both paths.
 
-    r15 additions: `silver_key` makes the two intermediates (the cell
+    `silver_key` makes the two intermediates (the cell
     assignment — the stored cluster index of a production SemDeDup run —
     and the collapsed rep table) SESSION-persisted under that key
     instead of re-persisted per call; `max_multiplicity` is the cached
@@ -919,124 +725,4 @@ def incremental_semantic_pairs(
             "dup_of",
             F.floor(F.col("cos") * F.lit(1e6)).cast("bigint").alias("cos_e6"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ: the two index halves composed the way Faiss's IndexIVFPQ does
-# (Jégou et al. 2011 §V) — coarse cells bound WHICH codes are scored,
-# PQ codes bound WHAT scoring a candidate costs.  The full production
-# shape: probe nprobe cells, ADC-score only their codes (M byte lookups
-# per candidate — never the raw vectors), then exact-refine a shortlist
-# (IndexRefineFlat).  At 100 TB the (id, cell, codes) index is the
-# stored artifact: 1/32 the corpus bytes, partitioned by cell so a
-# probe reads nprobe/k of it.
-# ---------------------------------------------------------------------------
-def ivfpq_search(
-    queries,
-    emb,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    nprobe: int = 4,
-    shortlist: int = 50,
-    top_k: int = 5,
-    index=None,
-):
-    """(qid, nid, rnk, cos_e6): IVF-PQ top-k.
-
-    `index` reuses a prebuilt (id, cell, codes) DataFrame (the stored
-    index); otherwise it is assembled from `emb` via assign_cells +
-    pq_encode.  Query side: one broadcast centroid cross computes BOTH
-    the nprobe probe cells and rides next to the per-query ADC distance
-    table; candidate scoring is a cell equi-join + M-lookup fold;
-    refine fetches raw vectors for the shortlist only."""
-    from pyspark.sql import Window
-
-    m, ks = len(codebooks), len(codebooks[0])
-    dsub = len(codebooks[0][0])
-    spark = emb.sparkSession
-
-    if index is None:
-        assigned = assign_cells(emb, centroids, vec_col, id_col)
-        codes = pq_encode(emb, codebooks, vec_col, id_col)
-        index = assigned.select(id_col, "cell").join(codes, id_col)
-
-    # --- query side: probe cells + ADC tables in one pass -----------------
-    import math as _math
-
-    def _norm(c):
-        acc = 0.0
-        for x in c:
-            acc += float(x) * float(x)
-        return _math.sqrt(acc)
-
-    cdf = spark.createDataFrame(
-        [(cid, [float(x) for x in c], _norm(c)) for cid, c in enumerate(centroids)],
-        "cid int, ce array<double>, nc double",
-    )
-
-    def _lit_arr(vals):
-        return "array(" + ", ".join(repr(float(x)) for x in vals) + ")"
-
-    rows = []
-    for j in range(m):
-        cells = []
-        for c in range(ks):
-            sub = f"slice({vec_col}, {j * dsub + 1}, {dsub})"
-            cells.append(_SQDIST.format(a=sub, b=_lit_arr(codebooks[j][c])))
-        rows.append("array(" + ", ".join(cells) + ")")
-    dtab = F.expr("array(" + ", ".join(rows) + ")")
-
-    withn = queries.select(id_col, vec_col).withColumn(
-        "__nv", F.expr(f"sqrt({dot_sql(vec_col, vec_col)})")
-    )
-    qcos = F.expr(dot_sql(vec_col, "ce")) / (F.col("__nv") * F.col("nc"))
-    probe_w = Window.partitionBy("qid").orderBy(
-        F.col("cos").desc(), F.col("cell").asc()
-    )
-    q_cells = (
-        withn.crossJoin(F.broadcast(cdf))
-        .select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qe"),
-            dtab.alias("dtab"),
-            F.col("cid").alias("cell"),
-            qcos.alias("cos"),
-        )
-        .withColumn("prk", F.row_number().over(probe_w))
-        .filter(F.col("prk") <= nprobe)
-        .select("qid", "qe", "dtab", "cell")
-    )
-
-    # --- ADC over probed cells' codes only --------------------------------
-    adc = F.expr(
-        "aggregate(zip_with(codes, dtab, (c, row) -> element_at(row, CAST(c AS INT) + 1)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    sl_w = Window.partitionBy("qid").orderBy(F.col("adist").asc(), F.col("nid").asc())
-    short = (
-        F.broadcast(q_cells.select("qid", "dtab", "cell"))
-        .join(index.select(F.col(id_col).alias("nid"), "cell", "codes"), "cell")
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid", adc.alias("adist"))
-        # no dedup needed: every vector lives in exactly ONE cell, so a
-        # (qid, nid) pair can only arise from one probed cell
-        .withColumn("srk", F.row_number().over(sl_w))
-        .filter(F.col("srk") <= shortlist)
-        .select("qid", "nid")
-    )
-
-    # --- exact refine of the shortlist ------------------------------------
-    qe = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"))
-    ce = emb.select(F.col(id_col).alias("nid"), vec_col)
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        short.join(F.broadcast(qe), "qid")
-        .join(ce, "nid")
-        .select("qid", "nid", cosine("qe", vec_col).alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .select("qid", "nid", "rnk", floor_e6(F.col("cos")).alias("cos_e6"))
     )

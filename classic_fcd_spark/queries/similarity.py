@@ -34,10 +34,9 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle of the corpus); per-query top-k via window. At 100 TB
     the corpus scan partitions perfectly; use ann_lsh_buckets to prune.
 
-    Unregistered since r4 (slot yielded to corpus_decontamination):
-    ann_lsh_search and ann_ivf_search re-prove their recall contracts
-    against this exact function in tests/test_dedup_similarity.py, and
-    it stays a bench workload via bench._extra_workloads."""
+    Unregistered: ann_lsh_search and ann_ivf_search prove their recall
+    contracts against this exact function in
+    tests/test_dedup_similarity.py, and it is a bench.py workload."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
@@ -62,9 +61,9 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WEIGHTS = hyperplane_weights(8, DIM)
 
 
-# Unregistered since r3: ann_lsh_search computes the identical bucket
-# assignment inside its gated plan (oracle included), so the bucket-only
-# registry row was a pattern-twin; the function stays for tests/bench.
+# Unregistered: ann_lsh_search computes the identical bucket assignment
+# inside its gated plan (oracle included); this bucket-only form is a
+# bench.py workload with its own tests.
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN scale path: 8-bit random-hyperplane LSH bucketing with
     deterministic md5-derived integer planes.  Bucket assignment is a
@@ -84,7 +83,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multi-table bucket-probe top-k: the ANN query that actually uses the
 # LSH buckets.  A SINGLE 8-bit table has near-zero recall on this corpus
 # (per-plane agreement p = 1 - arccos(cos)/pi ≈ 2/3 at cos 0.5 →
-# p^8 ≈ 0.04, and the r2 query measured recall@5 = 0.06): the standard
+# p^8 ≈ 0.04, and a single-table query measured recall@5 = 0.06): the standard
 # remedy is L independent tables of k planes each — union of probes,
 # recall 1-(1-p^k)^L.  With L=8, k=4: ≈ 0.83 at cos 0.5 and → 1 for
 # genuine near-dups; measured below (BENCH_NOTES).  (k, L) is the
@@ -109,9 +108,9 @@ def _duck_probe_arm(t: int) -> str:
     """
 
 
-# Oracle for the LSH arm of the merged `ann_search` driver row (r5: the
-# two ANN rows fold into one slot with a `method` column, freeing a slot
-# for sessionized_events; both arms stay fully oracle-gated every round).
+# Oracle for the LSH arm of the merged `ann_search` gated row (the ANN
+# arms share one slot via a `method` column; every arm stays fully
+# oracle-gated).
 LSH_ORACLE_SQL = (
     "WITH cand AS (\n    "
     + "\n    UNION\n    ".join(_duck_probe_arm(t) for t in range(_N_TABLES))
@@ -139,7 +138,7 @@ def ann_lsh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     each query probes its bucket in EVERY table, the probe union is
     deduped, and survivors are re-ranked by exact cosine — recall
     1-(1-p^4)^8: measured 0.62-0.76 @5 on THIS corpus (random vectors,
-    weak cos≈0.45 neighbors; the r2 single-table probe measured 0.06)
+    weak cos≈0.45 neighbors; a single-table probe measured 0.06)
     and ≥0.99 by the same formula at genuine near-dup thresholds
     cos≥0.85 — see BENCH_NOTES for the (k, L) dial.  All 8 bucket ids
     are computed in one projection and exploded, so candidates come from
@@ -158,11 +157,9 @@ def ann_lsh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t, w in enumerate(_SEARCH_TABLES)
         ]
     )
-    # r15: the 8-table bucket assignment IS the stored hash-table index
-    # a production ANN service materializes at ingest — persisted once
-    # per (session, corpus) instead of recomputed per query call (the
-    # un-persisted projection was previously evaluated TWICE per call:
-    # once under the query-side filter, once as the probe side)
+    # the 8-table bucket assignment IS the stored hash-table index a
+    # production ANN service materializes at ingest — persisted once per
+    # (session, corpus), and read by both the query and the probe side
     from classic_fcd_spark.session import session_memo
 
     def _build_tagged():
@@ -302,8 +299,8 @@ def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Top-k-capped neighbor pairs — the SHIPPABLE similarity scale story
-# (VERDICT r13 item 3).  embedding_similar_pairs' deliberately weak 0.45
+# Top-k-capped neighbor pairs — the SHIPPABLE similarity scale story.
+# embedding_similar_pairs' deliberately weak 0.45
 # threshold sits inside the 64-dim random-cosine tail, so on ANY
 # decorrelated corpus its OUTPUT is quadratic (variety-lane sf1: 111 s) —
 # true semantics, but not what a 100 TB curation pass ships.  This
@@ -320,15 +317,13 @@ def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cos 0.9, →1 as c→1 (byte-near duplicates, the curation target); widen
 # to more/narrower bands to trade candidate volume for mid-range recall.
 # The 0.45 row stays registered as the recall stress; THIS row is the
-# linear-output workload: BENCH_NOTES "r15 variety-lane sf1 bench" /
-# BENCH_sf1_variety_r15.json measured 3.92 s here vs 146.53 s for the
-# quadratic-output stress row on the SAME decorrelated 10x corpus.
-# (r14 had cited a variety-lane section that was never run or written;
-# r15 ran it and this citation now points at the committed artifact.)
+# linear-output workload: BENCH_sf1_variety_r15.json measured 3.92 s
+# here vs 146.53 s for the quadratic-output stress row on the SAME
+# decorrelated 10x corpus (BENCH_NOTES "r15 variety-lane sf1 bench").
 #
 # Candidate generation reuses capped_band_self_join, so a mega-bucket
 # (all-identical corpus) can never blow a task's buffered group — the
-# same r14 bound the minhash family got.
+# same bound the minhash family has.
 # ---------------------------------------------------------------------------
 _TOPK_BANDS = [_PAIR_PLANES[0:8], _PAIR_PLANES[8:16]]
 _TOPK_K = 3
@@ -354,8 +349,8 @@ def embedding_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             for b, w in enumerate(_TOPK_BANDS)
         ]
     )
-    # r15: band table + norm table are the stored per-corpus index of
-    # this workload (session-persisted once, not re-persisted per call)
+    # band table + norm table are the stored per-corpus index of this
+    # workload (session-persisted once, not re-persisted per call)
     from classic_fcd_spark.session import session_memo
 
     tagged = session_memo(
@@ -536,9 +531,9 @@ def ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from classic_fcd_spark.session import embedding_codebook
 
     emb = load_tables(spark, sf_dir)["embeddings"]
-    # r15: the pinned first-16-vector codebook is collected ONCE per
+    # the pinned first-16-vector codebook is collected ONCE per
     # (session, corpus) and shared with the pq arm and semantic_dedup
-    # (session.embedding_codebook) — was one 16-row collect job per call
+    # (session.embedding_codebook)
     cents = dict(enumerate(embedding_codebook(spark, sf_dir, _N_CENTROIDS)))
     # Assignment as a broadcast join + map-side argmax, NOT a 16-wide
     # literal-array projection: materializing 16 x 64 constant doubles
@@ -556,9 +551,9 @@ def ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(cid, [float(x) for x in cents[cid]], nb_consts[cid]) for cid in range(_N_CENTROIDS)],
         "cid int, ce array<double>, nc double",
     )
-    # r15: the cell assignment IS the stored IVF inverted-list index —
-    # persisted once per (session, corpus) instead of re-assigned per
-    # query call (the probe join consumed it on both sides)
+    # the cell assignment IS the stored IVF inverted-list index —
+    # persisted once per (session, corpus); the probe join reads it on
+    # both sides
     from classic_fcd_spark.session import session_memo
 
     def _build_assigned():
@@ -598,15 +593,14 @@ def ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PQ/ADC arm of the merged ANN driver row (r8, per the r7 brief): the
-# product-quantization compressed-domain search with a PINNED codebook —
-# sub-codebook j = the j-th dsub-slice of the first ks corpus vectors,
-# the same first-K determinism as the IVF arm and the SemDeDup codebook,
-# so the DuckDB oracle can reconstruct every code and distance exactly.
-# The trained path (pq_train spherical Lloyd) stays unit-gated in
-# tests/test_pq.py; what this row pins is the plumbing that runs at
-# 100 TB: encode = broadcast-codebook argmin (two narrow shuffles), ADC
-# scan = M element_at lookups per candidate over 8-byte codes.
+# PQ/ADC arm of the merged ANN gated row: the product-quantization
+# compressed-domain search with a PINNED codebook — sub-codebook j = the
+# j-th dsub-slice of the first ks corpus vectors, the same first-K
+# determinism as the IVF arm and the SemDeDup codebook, so the DuckDB
+# oracle can reconstruct every code and distance exactly.  What this row
+# pins is the plumbing that runs at 100 TB: encode = broadcast-codebook
+# argmin (two narrow shuffles), ADC scan = M element_at lookups per
+# candidate over 8-byte codes.
 #
 # Gate-exactness design: the ADC ranking sums PER-SUBSPACE distances
 # floored to e6 integers (the module's order-free-integer policy), so
@@ -690,9 +684,9 @@ def ann_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         for j in range(_PQ_M)
     ]
-    # r15: the 8-byte PQ codes ARE the stored compressed index (the
-    # whole point of PQ is scanning codes instead of raw vectors) —
-    # encoded once per (session, corpus) instead of per query call
+    # the 8-byte PQ codes ARE the stored compressed index (the whole
+    # point of PQ is scanning codes instead of raw vectors) — encoded
+    # once per (session, corpus)
     from classic_fcd_spark.session import session_memo
 
     codes = session_memo(
@@ -743,11 +737,9 @@ def ann_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Merged ANN driver row (r5; third arm r8): the index structures in one
-# gated query, tagged by a `method` column — each arm keeps its full
-# exact oracle (the SQL is the UNION ALL of the per-arm oracles), and
-# the freed slots went to sessionized_events (r5) and ccnet_perplexity
-# (r8).
+# Merged ANN gated row: the index structures in one gated query, tagged
+# by a `method` column — each arm keeps its full exact oracle (the SQL is
+# the UNION ALL of the per-arm oracles).
 # ---------------------------------------------------------------------------
 @register(
     "ann_search",
@@ -776,128 +768,8 @@ def ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Trained-codebook IVF (unregistered bench workload): the full production
-# path — spherical k-means training + multi-probe cell search.  The
-# registered ann_ivf_search keeps a deterministic codebook so its DuckDB
-# oracle is exact; this variant exercises the trainer end-to-end at
-# bench scale.
-# ---------------------------------------------------------------------------
-_NPROBE = 4  # Faiss's nprobe: cells probed per query
-
-
-def ann_ivf_search_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from classic_fcd_spark.operators.similarity import kmeans_train
-
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    cents, _ = kmeans_train(emb, k=_N_CENTROIDS, n_iter=3)
-    cdf = spark.createDataFrame(
-        [(cid, c) for cid, c in enumerate(cents)], ["cid", "ce"]
-    )
-    from classic_fcd_spark.operators.similarity import cosine_sql
-
-    # argmax by cosine: max over (cos, cid) structs, then the winner's
-    # cid.  (r4 fix: this read max("sc.cid") — the largest cid outright —
-    # which silently assigned every vector to cell k-1, turning the
-    # "trained" probe into a one-cell brute-force scan whose perfect
-    # recall was an artifact.)
-    assigned = (
-        emb.crossJoin(F.broadcast(cdf))
-        .select(
-            "vec_id",
-            "embedding",
-            F.struct(F.expr(cosine_sql("embedding", "ce")).alias("cos"), "cid").alias("sc"),
-        )
-        .groupBy("vec_id", "embedding")
-        .agg(F.max("sc").alias("best"))
-        .select("vec_id", "embedding", F.col("best.cid").alias("cell"))
-    )
-    # query side probes its top-NPROBE cells (the Faiss nprobe dial): one
-    # cell is too coarse on this corpus — nearest neighbors at cos≈0.45
-    # sit near cell boundaries, measured recall@5 0.28 with nprobe=1
-    # after the argmax fix; nprobe=4 of 16 cells recovers the boundary
-    # misses for 4x probe volume (same recall/cost dial as LSH's (k, L))
-    probe_w = Window.partitionBy("qid").orderBy(
-        F.col("qsc.cos").desc(), F.col("qsc.cid").asc()
-    )
-    q = (
-        emb.filter(F.col("vec_id") < _N_QUERIES)
-        .crossJoin(F.broadcast(cdf))
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.struct(F.expr(cosine_sql("embedding", "ce")).alias("cos"), "cid").alias("qsc"),
-        )
-        .withColumn("prk", F.row_number().over(probe_w))
-        .filter(F.col("prk") <= _NPROBE)
-        .select("qid", "qe", F.col("qsc.cid").alias("cell"))
-    )
-    scored = (
-        F.broadcast(q)
-        .join(assigned.select(F.col("vec_id").alias("nid"), "embedding", "cell"), "cell")
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid", cosine("qe", "embedding").alias("cos"))
-        .distinct()
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("qid", "nid", "rnk", floor_e6(F.col("cos")).alias("cos_e6"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# PQ / ADC search (unregistered bench workload + in-test contracts): the
-# Faiss-style product-quantization path — 32x storage compression (64
-# float32 -> 8 codes) with asymmetric-distance scoring, the design that
-# carries ANN past the point where even int8 vectors are too big to scan.
-# Gate: numpy-reference equivalence + recall contract in tests/test_pq.py
-# (training is iterative, so no SQL oracle — the driver registry row
-# stays with the deterministic-codebook ann_ivf_search).
-# ---------------------------------------------------------------------------
-_PQ_SHORTLIST = 50  # ADC candidates refined with exact distances per query
-
-
-def ann_pq_search_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADC shortlist + exact refine (Faiss IndexRefineFlat pattern): the
-    compressed codes rank a SHORTLIST (top-50 by table-lookup distance —
-    the scan that touches only M bytes/vector), then exact cosine
-    re-ranks the shortlist to top-k.  Raw vectors are fetched for
-    0.1% of the corpus instead of all of it — the refine join is
-    id-equi, candidate-bounded."""
-    from classic_fcd_spark.operators.similarity import (
-        pq_adc_search,
-        pq_encode,
-        pq_train,
-    )
-
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    books, _ = pq_train(emb, m=8, ks=16, n_iter=3)
-    codes = pq_encode(emb, books)
-    queries = emb.filter(F.col("vec_id") < _N_QUERIES)
-    shortlist = pq_adc_search(
-        queries, codes, books, top_k=_PQ_SHORTLIST
-    ).select("qid", "nid")
-    qe = queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
-    ce = emb.select(F.col("vec_id").alias("nid"), "embedding")
-    refined = (
-        shortlist.join(F.broadcast(qe), "qid")
-        .join(ce, "nid")
-        .select("qid", "nid", cosine("qe", "embedding").alias("cos"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        refined.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("qid", "nid", "rnk", floor_e6(F.col("cos")).alias("cos_e6"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Semantic dedup driver row — promoted late in r5 (the
-# fcd_delegator_weights slot; A21's share-of-total twin stays gated via
-# fcd_richlist).  Pinned first-16-vector codebook, exactly like the
-# ann_search IVF arm: the assign + cell-pair-join + CC + keeper plumbing
+# Semantic dedup gated row.  Pinned first-16-vector codebook, exactly
+# like the ann_search IVF arm: the assign + cell-pair-join + CC + keeper plumbing
 # is what runs at 100 TB and what the oracle must pin; the spherical
 # k-means trainer stays unit-gated (tests/test_semdedup.py runs the full
 # pure-Python-reference equivalence, trained path included).
@@ -918,10 +790,10 @@ _DUCK_NC = (
     f"for i in range(1, {DIM + 1})]))"
 )
 
-# r14: the oracle's cell pair-join and transitive closure now run over
-# DISTINCT embeddings (one rep per byte-identical vector, the same
-# collapse the Spark side has run since r7) — the doc-level pair join
-# computed a same-cell cosine for every vector pair, which on the sf10
+# The oracle's cell pair-join and transitive closure run over DISTINCT
+# embeddings (one rep per byte-identical vector, the same collapse the
+# Spark side runs) — a doc-level pair join would compute a
+# same-cell cosine for every vector pair, which on the sf10
 # clone corpus is ~1.25G 64-dim folds.  Labeling is identical: copies
 # share cell, cos_c, and every pairwise cosine, so doc-level components
 # are the member-expansion of rep-level components; a multi-member group
@@ -1015,7 +887,7 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     cents = embedding_codebook(spark, sf_dir, _SEM_K)
-    # r15: cached corpus duplicate bound drives the collapse dispatch,
+    # the cached corpus duplicate bound drives the collapse dispatch,
     # and the cell-assignment index persists per corpus, not per call
     _, _, max_m = embedding_stats(spark, sf_dir)
     return semantic_dedup(

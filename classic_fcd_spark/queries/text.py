@@ -41,10 +41,8 @@ _D_PRED = "CASE {} END".format(
 # ---------------------------------------------------------------------------
 # Per-document text features: quality scoring + language-ID + fingerprint.
 # ---------------------------------------------------------------------------
-# r10 rotation: text_features left the driver window (slot ->
-# simhash_near_dups); the scan-speed projection pattern stays
-# driver-gated via quality_logit_scores, and this oracle — green in
-# every driver round r2-r9 — now holds the in-test gate
+# Unregistered: the scan-speed projection pattern is oracle-gated via
+# quality_logit_scores, and this oracle is the in-test gate
 # (tests/test_text_queries.py::TestTextFeaturesOracle).
 TEXT_FEATURES_ORACLE_SQL = f"""
     WITH scored AS (
@@ -79,10 +77,8 @@ def text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (length saturation, lexical diversity, stopword density — split/
     filter HOFs), stopword-profile language-ID with deterministic
     alphabetical tiebreak, and the md5 fingerprint over normalized text
-    (the exact-dedup key).  Merges the r2 text_quality / lang_id /
-    doc_fingerprints inventory entries.  Driver-gated r2-r9; since the
-    r10 rotation gated by TEXT_FEATURES_ORACLE_SQL in-test and benched
-    via bench.py's extras."""
+    (the exact-dedup key).  Gated by TEXT_FEATURES_ORACLE_SQL in-test
+    and benched via bench.py."""
     docs = load_tables(spark, sf_dir)["documents"]
     scored = docs.select(
         "doc_id",
@@ -120,10 +116,9 @@ def text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Token counting (whitespace + BPE-ish regex) with vocabulary explode.
 # ---------------------------------------------------------------------------
-# Oracle retained for the in-test DuckDB gate (tests/test_text_queries.py):
-# r7 rotated the driver slot to trigram_lm_scores — the per-source token
-# rollup is a thin twin of the driver-gated text_features (same tokenize +
-# groupBy shapes), which stays driver-green.
+# Oracle for the in-test DuckDB gate (tests/test_text_queries.py): the
+# per-source token rollup shares its tokenize + groupBy shapes with the
+# gated text queries.
 TOKEN_STATS_ORACLE_SQL = f"""
     WITH per_doc AS (
         SELECT source, {_D_NTOK} AS ws_tokens,
@@ -159,15 +154,10 @@ def _repetition_oracle() -> str:
     "A1.1; operators/repetition.py): top{2,3,4}-gram and "
     "duplicate-{5..10}-gram character fractions plus duplicate-line "
     "fractions, e6-floored per row so the cross-engine hash is exact.  "
-    "ZERO-SHUFFLE since r12: every signal is per-doc (r11's explode "
-    "paid two shuffles over a ~9x-token gram stream).  r16: the eleven "
-    "signals come from ONE Arrow-batched mapInPandas kernel over "
-    "(doc_id, text) — guide §4.2; the interpreted nine-fold JVM "
-    "projection stays as repetition_signals_fold, bit-equal and "
-    "cross-tested.  Driver-gated since r11 (slot rotated from "
-    "duplicated_spans — its windowed-count pattern kin, which keeps the "
-    "same DuckDB oracle as an in-test gate, tests/test_spans.py)."
-    ,
+    "Zero-shuffle: every signal is per-doc, and the eleven signals come "
+    "from ONE Arrow-batched mapInPandas kernel over (doc_id, text), "
+    "checked against this DuckDB oracle and a pure-Python reference "
+    "(tests/test_repetition.py).",
 )
 def repetition_signals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation drop rule rides pipeline/curation.py like the other
@@ -190,9 +180,8 @@ def token_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LLM-pipeline token counting: whitespace + BPE-ish regex counts
     per source, plus vocabulary size via explode → distinct (the explode
     shuffles on (source, token); at 100 TB this is the classic
-    vocabulary-build job and partitions cleanly).  Driver-gated r2-r6
-    (green throughout); since r7 gated by the in-test oracle
-    (TOKEN_STATS_ORACLE_SQL)."""
+    vocabulary-build job and partitions cleanly).  Gated by the in-test
+    oracle (TOKEN_STATS_ORACLE_SQL)."""
     docs = load_tables(spark, sf_dir)["documents"]
     per_doc = docs.select(
         "source",
@@ -214,12 +203,10 @@ def token_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BM25 lexical retrieval — driver-gated r6-r11 (the
-# fcd_cumulative_rewards slot, per the r5 brief); slot rotated r12 to
-# hybrid_rrf_search, whose lexical arm runs this IDENTICAL bm25_topk
-# call (same query batch), so the postings/scoring pattern stays inside
-# the driver gate.  The standalone query keeps its bench slot (extras)
-# and its oracle becomes the in-test gate below
+# BM25 lexical retrieval.  The registered hybrid_rrf_search's lexical
+# arm runs this IDENTICAL bm25_topk call (same query batch), so the
+# postings/scoring pattern is inside the oracle gate; the standalone
+# query is a bench.py workload and its oracle is the in-test gate below
 # (tests/test_bm25.py::TestBM25SearchOracle).
 # ---------------------------------------------------------------------------
 from classic_fcd_spark.operators.bm25 import duck_bm25_sql  # noqa: E402
@@ -231,8 +218,7 @@ BM25_QUERIES = [
     (3, ["agg", "value", "key"]),
 ]
 
-# the exact SQL that drove bm25_search's green r6-r11 driver rows — now
-# the in-test oracle gate (rotation ledger discipline, COVERAGE.md)
+# the in-test oracle gate of bm25_search
 BM25_SEARCH_ORACLE_SQL = duck_bm25_sql(BM25_QUERIES)
 
 
@@ -246,10 +232,9 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer scores on both engines (the order-free-sum discipline).
     Repeated query terms count once (set semantics, both engines).
 
-    r15: postings + (N, avgdl) come from the per-corpus session silver
-    (session.bm25_postings_table / bm25_corpus_stats) instead of being
-    rebuilt + re-collected per invocation — one query call is now ONE
-    Spark job over broadcast-pruned postings."""
+    Postings + (N, avgdl) come from the per-corpus session silver
+    (session.bm25_postings_table / bm25_corpus_stats), so one query call
+    is ONE Spark job over broadcast-pruned postings."""
     from classic_fcd_spark.operators.bm25 import bm25_topk
     from classic_fcd_spark.session import bm25_corpus_stats, bm25_postings_table
 
@@ -263,11 +248,9 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Hybrid lexical+dense retrieval with RRF fusion — promoted to the
-# driver gate in r12 (the bm25_search slot, per the r11 brief).  The
-# reference has no retrieval layer; this is the LLM-pipeline extension
-# surface (Cormack et al. 2009 reciprocal-rank fusion, the standard
-# hybrid-search recipe).
+# Hybrid lexical+dense retrieval with RRF fusion.  The reference has no
+# retrieval layer; this is the LLM-pipeline extension surface (Cormack et
+# al. 2009 reciprocal-rank fusion, the standard hybrid-search recipe).
 # ---------------------------------------------------------------------------
 _HYBRID_DENSE_QUERIES = 4  # qids 0..3, matching BM25_QUERIES' qid space
 _HYBRID_TOP_K = 10
@@ -342,9 +325,9 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from classic_fcd_spark.session import bm25_corpus_stats, bm25_postings_table
 
     t = load_tables(spark, sf_dir)
-    # r15: share the per-corpus postings silver + cached (N, avgdl) with
-    # bm25_search — the lexical arm no longer rebuilds the inverted
-    # index or pays the stats collect per invocation
+    # share the per-corpus postings silver + cached (N, avgdl) with
+    # bm25_search: the lexical arm never rebuilds the inverted index or
+    # pays the stats collect per invocation
     lex = bm25_topk(
         t["documents"],
         BM25_QUERIES,
@@ -373,13 +356,12 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Interpolated trigram LM — promoted to the driver gate in r7 (the
-# token_stats_by_source slot, per the r6 brief).  The gated form is the
-# LOG-FREE probability scorer: every per-token value is a rational
-# (cnt+1)/(ctx+B) mixed with literal lambdas — bit-identical IEEE
-# arithmetic on both engines, where the NLL twin's ln() is libm-bound
-# and stays unit/in-test-gated (operators/lm.trigram_nll_scores; -log is
-# monotone, so the two orderings agree).
+# Interpolated trigram LM.  The gated form is the LOG-FREE probability
+# scorer: every per-token value is a rational (cnt+1)/(ctx+B) mixed with
+# literal lambdas — bit-identical IEEE arithmetic on both engines, where
+# an NLL form's ln() would be libm-bound (-log is monotone, so the
+# orderings agree; tests/test_text_queries.py checks it against the
+# Python trigram NLL reference in tests/test_lm.py).
 # ---------------------------------------------------------------------------
 from classic_fcd_spark.operators.lm import duck_trigram_prob_sql  # noqa: E402
 
@@ -392,7 +374,7 @@ from classic_fcd_spark.operators.lm import duck_trigram_prob_sql  # noqa: E402
     "+ 0.2*p_uni with Laplace smoothing over md5 buckets, token-1/2 "
     "back-off at the edge; model = driver-bounded count tables "
     "broadcast (<= observed-trigram rows, refused over budget); scoring "
-    "= three explodes + broadcast left joins + an exact e9 "
+    "= one explode + broadcast left joins + an exact e9 "
     "floor-then-integer-sum.  The oracle re-fits the same counts via "
     "LAG over token ordinals — set-identical n-grams, same literal "
     "lambdas, same association order, zero transcendentals.",
@@ -406,24 +388,12 @@ def trigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trigram_model_for(spark: SparkSession, sf_dir: str, docs: DataFrame):
-    """The session-scoped trigram-LM model memo (r16, VERDICT r15 item
-    1): fit ONCE per (session, corpus generation), score every call in
-    the session from the persisted in-memory count tables — the same
-    contract as every other silver (shingle_table, bm25_postings_table,
-    simhash_silver): the first toucher pays the fit inside its own
-    timed region; nothing keyed on the corpus outlives the process.
-
-    History: r8 introduced a DISK model store under
-    spark-warehouse/models keyed on the corpus stat signature (VERDICT
-    r7 had flagged the per-invocation refit as a training job
-    masquerading as a query).  VERDICT r15 item 1 flagged that store as
-    the tree's one cross-run cache — precomputation on disk benefiting
-    a benched query across processes — so the fit now lives in the
-    in-memory session memo like every other per-corpus silver.  The
-    save/load round-trip this drops was proven bit-neutral by
-    tests/test_lm.py::TestTrigramModelSaveLoad (counts are integers;
-    the load path re-derived identical constants), so scoring from the
-    fresh fit is hash-identical to scoring from the old loaded model."""
+    """The session-scoped trigram-LM model memo: fit ONCE per (session,
+    corpus generation), score every call in the session from the
+    persisted in-memory count tables — the same contract as every other
+    silver (shingle_table, bm25_postings_table, simhash_silver): the
+    first toucher pays the fit inside its own timed region; nothing
+    keyed on the corpus outlives the process."""
     from classic_fcd_spark.operators.lm import fit_trigram_prob_model
     from classic_fcd_spark.session import session_memo
 
@@ -449,8 +419,7 @@ def _trigram_model_for(spark: SparkSession, sf_dir: str, docs: DataFrame):
 
 
 # ---------------------------------------------------------------------------
-# Trained-classifier quality scoring path — promoted to the driver gate
-# in r7 (the embedding_similar_pairs slot).  The gate pins the SCORER
+# Trained-classifier quality scoring path.  The gate pins the SCORER
 # (functions/text.linear_quality_logit — the column algebra every
 # trained weight vector rides at scan speed, operators/quality_model.py)
 # under a deterministic md5-derived weight vector; the MLlib training
@@ -501,16 +470,14 @@ def quality_logit_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CCNet perplexity buckets — promoted to the driver gate in r8 (the
-# fcd_avg_staking_daily slot, per the r7 brief; A10's daily-floor-average
-# pattern stays gated via pricing_summary / fcd_dashboard).
+# CCNet perplexity buckets.
 #
-# Oracle design (r10): the oracle is a CALLABLE resolved against the
+# Oracle design: the oracle is a CALLABLE resolved against the
 # compare corpus — it embeds the driver-computed e6 model literals
 # (unigram_model_e6_from_parquet: DuckDB integer counts + ONE python
 # math.log), so both engines consume identical integers and the
-# DuckDB-ln recompute's last-ulp flake risk at e6 floor boundaries
-# (ADVICE r8, accepted through r9) is gone at every scale.  The BUCKET
+# DuckDB-ln recompute's last-ulp flake risk at e6 floor boundaries is
+# gone at every scale.  The BUCKET
 # side pins Spark's approxQuantile exact-mode convention: with rel_err small
 # enough that the GK summary keeps every sample (eps * n < 1), the
 # returned threshold is the element at 1-indexed rank ceil(p * n) of
@@ -572,7 +539,7 @@ def ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from classic_fcd_spark.operators.lm import ccnet_buckets
 
     docs = load_tables(spark, sf_dir)["documents"]
-    # r15: the fitted e6 unigram model is a pure function of the src0
+    # the fitted e6 unigram model is a pure function of the src0
     # slice — memoized per corpus generation, not refit per call
     return ccnet_buckets(
         docs,
@@ -583,9 +550,7 @@ def ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Heavy hitters — promoted to the driver gate in r9 (the
-# fcd_validator_annual_return slot, per the r8 brief; the daily-return
-# input A13 stays driver-gated via fcd_validator_returns).  The gate
+# Heavy hitters.  The gate
 # pins the EXACT regime: approx_top_items' Misra-Gries candidate pass
 # provably retains every item with global count > N/capacity, and the
 # sf corpora's 20th token count exceeds that threshold by >100x

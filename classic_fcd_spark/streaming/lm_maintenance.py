@@ -1,8 +1,8 @@
 """Incremental trigram-LM maintenance: keep the language-model count
 tables current as documents arrive, at per-batch cost — the LM twin of
-the streaming postings index (streaming/postings.py) and the r8
-verdict's item 5 (a new corpus previously refit from scratch: the x100
-cold fit cost 20.8 s even though trigram/unigram counts are additive).
+the streaming postings index (streaming/postings.py): without it a new
+corpus refits from scratch (the x100 cold fit cost 20.8 s) even though
+trigram/unigram counts are additive.
 
 Design: the model state IS three integer count tables (uni/pair/tri —
 operators/lm.TrigramProbModel), and counting is a homomorphism over
@@ -215,10 +215,10 @@ def load_trigram_model_incremental(
 ) -> TrigramProbModel:
     """Sum the per-batch deltas into the live model — integer sums over
     the bounded hashed-vocabulary keys, so this is model-sized work,
-    independent of how many documents the deltas represent.  Derived
-    tables (pctx/tctx) and the `ut` constant are recomputed exactly as
-    operators/lm.load_trigram_prob_model does, so a maintained model
-    scores bit-identically to a from-scratch fit of the same corpus."""
+    independent of how many documents the deltas represent.  The derived
+    tables (pctx/tctx) and the `ut` constant use the same integer
+    aggregations as operators/lm.fit_trigram_prob_model, so a maintained
+    model scores bit-identically to a from-scratch fit of the same corpus."""
     covered, epoch = _epoch_state(model_dir)
 
     def table(name: str, keys: list[str], cnt: str) -> DataFrame:

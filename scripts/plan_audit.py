@@ -82,16 +82,7 @@ ALLOW: dict[str, dict[str, str]] = {
     "ann_pq_search": {
         "nested_loop": "encode: corpus-subvectors x broadcast sub-codebook "
         "argmin; search: ADC codes scan x broadcast quantized tables "
-        "(flat-PQ by design, same shape as ann_pq_search_trained)"
-    },
-    "ann_ivf_search_trained": {"nested_loop": "corpus x broadcast trained codebook cross"},
-    "ann_pq_search_trained": {
-        "nested_loop": "ADC scan: codes x broadcast 10-query distance tables "
-        "(flat-PQ by design; the cell-bounded form is ann_ivfpq_search_trained)"
-    },
-    "ann_ivfpq_search_trained": {
-        "nested_loop": "query x broadcast codebook cross (probe-cell selection); "
-        "candidate scoring itself is the cell equi-join"
+        "(flat-PQ by design)"
     },
     "revenue_by_nation": {},
     "simhash_docs": {},

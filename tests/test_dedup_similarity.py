@@ -238,8 +238,8 @@ class TestAnnPlans:
 
 class TestKMeansCodebook:
     def test_corpus_smaller_than_k_fails_fast(self, spark):
-        """pq_train's guard, mirrored: 3 rows with k=16 must raise a
-        clear ValueError, not an IndexError mid-iteration."""
+        """3 rows with k=16 must raise a clear ValueError, not an
+        IndexError mid-iteration."""
         import pytest
 
         from classic_fcd_spark.operators.similarity import kmeans_train

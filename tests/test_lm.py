@@ -1,9 +1,14 @@
 """CCNet-style LM perplexity scoring (operators/lm.py): DuckDB-oracle
-equivalence, planted in/out-of-domain separation, and the
-head/middle/tail bucketing contract.
+equivalence, planted in/out-of-domain separation, the
+head/middle/tail bucketing contract, and the log-free trigram scorer
+against a pure-Python reference.
 """
 
 from __future__ import annotations
+
+import hashlib
+import math
+import re
 
 import duckdb
 from pyspark.sql import functions as F
@@ -117,67 +122,108 @@ class TestCCNetBuckets:
         assert out.columns == ["doc_id", "n_tokens", "mean_nll_e6", "bucket"]
 
 
+def _bucket(tok: str, buckets: int) -> int:
+    return int(hashlib.md5(tok.encode()).hexdigest()[:15], 16) % buckets
+
+
+def _toks(text: str) -> list[str]:
+    # the engine's split(trim(text), ' +'): spaces only, "" -> [""]
+    return re.split(" +", text.strip(" "))
+
+
+def _trigram_counts(model_docs, buckets):
+    uni, pair, ctx, tri, trictx = {}, {}, {}, {}, {}
+    total = 0
+    for _, t in model_docs:
+        bs = [_bucket(x, buckets) for x in _toks(t)]
+        for b in bs:
+            uni[b] = uni.get(b, 0) + 1
+            total += 1
+        for c, w in zip(bs, bs[1:]):
+            pair[(c, w)] = pair.get((c, w), 0) + 1
+            ctx[c] = ctx.get(c, 0) + 1
+        for c1, c2, w in zip(bs, bs[1:], bs[2:]):
+            tri[(c1, c2, w)] = tri.get((c1, c2, w), 0) + 1
+            trictx[(c1, c2)] = trictx.get((c1, c2), 0) + 1
+    return uni, pair, ctx, tri, trictx, total
+
+
+def ref_trigram_nll(docs, model_docs, buckets=256, lams=(0.2, 0.3, 0.5)):
+    """{id: (n_tokens, sum_nll_e6, mean_nll_e6)} under the interpolated
+    hashed-trigram LM, pure Python: per token -ln(p) floored to e6,
+    with p mixed exactly as the engine's log-free scorer mixes it."""
+    l1, l2, l3 = lams
+    uni, pair, ctx, tri, trictx, total = _trigram_counts(model_docs, buckets)
+    lp_uni = {
+        b: math.log((uni.get(b, 0) + 1) / float(total + buckets))
+        for b in range(buckets)
+    }
+    out = {}
+    for i, t in docs:
+        bs = [_bucket(x, buckets) for x in _toks(t)]
+        s = math.floor(-lp_uni[bs[0]] * 1e6)
+        if len(bs) >= 2:
+            c, w = bs[0], bs[1]
+            pb = (pair.get((c, w), 0) + 1) / (ctx.get(c, 0) + float(buckets))
+            pu = math.exp(lp_uni[w])
+            s += math.floor(-math.log((l2 + l3) * pb + l1 * pu) * 1e6)
+        for c1, c2, w in zip(bs, bs[1:], bs[2:]):
+            p3 = (tri.get((c1, c2, w), 0) + 1) / (
+                trictx.get((c1, c2), 0) + float(buckets)
+            )
+            pb = (pair.get((c2, w), 0) + 1) / (ctx.get(c2, 0) + float(buckets))
+            pu = math.exp(lp_uni[w])
+            s += math.floor(-math.log(l3 * p3 + l2 * pb + l1 * pu) * 1e6)
+        out[i] = (len(bs), s, s // len(bs))
+    return out
+
+
+def _ref_trigram_prob(docs, model_docs, buckets=256, lams=(0.2, 0.3, 0.5)):
+    """{id: (n_tokens, sum_p_e9)}: the log-free scorer's arithmetic in
+    the engine's association order (TrigramProbModel docstring)."""
+    l1, l2, l3 = lams
+    l23 = l2 + l3
+    bf = float(buckets)
+    uni, pair, ctx, tri, trictx, total = _trigram_counts(model_docs, buckets)
+    ut = float(total) + bf
+    out = {}
+    for i, t in docs:
+        bs = [_bucket(x, buckets) for x in _toks(t)]
+        s = 0
+        for k, w in enumerate(bs):
+            pu = (uni.get(w, 0) + 1.0) / ut
+            if k == 0:
+                p = pu
+            else:
+                c2 = bs[k - 1]
+                pb = (pair.get((c2, w), 0) + 1.0) / (ctx.get(c2, 0) + bf)
+                if k == 1:
+                    p = (l23 * pb) + (l1 * pu)
+                else:
+                    c1 = bs[k - 2]
+                    p3 = (tri.get((c1, c2, w), 0) + 1.0) / (trictx.get((c1, c2), 0) + bf)
+                    p = ((l3 * p3) + (l2 * pb)) + (l1 * pu)
+            s += math.floor(p * 1000000000.0)
+        out[i] = (len(bs), s)
+    return out
+
+
+def _prob_scores(docs, model_docs) -> dict:
+    from classic_fcd_spark.operators.lm import fit_trigram_prob_model, score_trigram_prob
+
+    model = fit_trigram_prob_model(model_docs, persist_scope="test_lm")
+    return {
+        r["doc_id"]: (r["n_tokens"], r["sum_p_e9"])
+        for r in score_trigram_prob(docs, model).collect()
+    }
+
+
 class TestBigramLM:
-    def _ref(self, docs, model_docs, buckets=256, lam=0.7):
-        import hashlib
-        import math
-
-        def bucket(tok):
-            return int(hashlib.md5(tok.encode()).hexdigest()[:15], 16) % buckets
-
-        def toks(t):
-            return t.strip().split() if t.strip() else [""]
-
-        uni: dict[int, int] = {}
-        pair: dict[tuple[int, int], int] = {}
-        ctx: dict[int, int] = {}
-        total = 0
-        for _, t in model_docs:
-            bs = [bucket(x) for x in toks(t)]
-            for b in bs:
-                uni[b] = uni.get(b, 0) + 1
-                total += 1
-            for c, w in zip(bs, bs[1:]):
-                pair[(c, w)] = pair.get((c, w), 0) + 1
-                ctx[c] = ctx.get(c, 0) + 1
-        lp_uni = {
-            b: math.log((uni.get(b, 0) + 1) / float(total + buckets))
-            for b in range(buckets)
-        }
-        out = {}
-        for i, t in docs:
-            bs = [bucket(x) for x in toks(t)]
-            s = math.floor(-lp_uni[bs[0]] * 1e6)
-            for c, w in zip(bs, bs[1:]):
-                pb = (pair.get((c, w), 0) + 1) / (ctx.get(c, 0) + float(buckets))
-                pu = math.exp(lp_uni[w])
-                s += math.floor(-math.log(lam * pb + (1 - lam) * pu) * 1e6)
-            out[i] = (len(bs), s, s // len(bs))
-        return out
-
-    def test_matches_python_reference(self, spark):
-        from classic_fcd_spark.operators.lm import bigram_nll_scores
-
-        model = [(100 + i, "the cat sat on the mat while the dog ran") for i in range(3)]
-        probe = [
-            (0, "the cat sat on the mat"),
-            (1, "mat the on sat cat the"),  # scrambled
-            (2, "completely novel words here"),
-        ]
-        docs = spark.createDataFrame(model + probe, ["doc_id", "text"])
-        from pyspark.sql import functions as F
-
-        got = {
-            r["doc_id"]: (r["n_tokens"], r["sum_nll_e6"], r["mean_nll_e6"])
-            for r in bigram_nll_scores(
-                docs, docs.filter(F.col("doc_id") >= 100)
-            ).collect()
-        }
-        assert got == self._ref(model + probe, model)
+    """Order-aware LM contracts, checked on the log-free trigram scorer
+    (fit_trigram_prob_model + score_trigram_prob): higher sum_p_e9 is
+    the better-scoring doc."""
 
     def test_trigram_matches_python_reference(self, spark):
-        from classic_fcd_spark.operators.lm import trigram_nll_scores
-
         model = [(100 + i, "the cat sat on the mat while the dog ran") for i in range(3)]
         probe = [
             (0, "the cat sat on the mat"),
@@ -187,106 +233,28 @@ class TestBigramLM:
             (4, "xy zq"),       # order-2 edge: exactly two tokens
         ]
         docs = spark.createDataFrame(model + probe, ["doc_id", "text"])
-        from pyspark.sql import functions as F
-
-        got = {
-            r["doc_id"]: (r["n_tokens"], r["sum_nll_e6"], r["mean_nll_e6"])
-            for r in trigram_nll_scores(
-                docs, docs.filter(F.col("doc_id") >= 100)
-            ).collect()
-        }
-        assert got == self._ref_tri(model + probe, model)
+        got = _prob_scores(docs, docs.filter(F.col("doc_id") >= 100))
+        assert got == _ref_trigram_prob(model + probe, model)
         # scrambled-doc ordering pin: same bag of words, broken order ->
-        # strictly worse NLL under the order-aware model
-        assert got[0][2] < got[1][2]
-
-    def _ref_tri(self, docs, model_docs, buckets=256, lams=(0.2, 0.3, 0.5)):
-        import hashlib
-        import math
-
-        l1, l2, l3 = lams
-
-        def bucket(tok):
-            return int(hashlib.md5(tok.encode()).hexdigest()[:15], 16) % buckets
-
-        def toks(t):
-            return t.strip().split() if t.strip() else [""]
-
-        uni, pair, ctx, tri, trictx = {}, {}, {}, {}, {}
-        total = 0
-        for _, t in model_docs:
-            bs = [bucket(x) for x in toks(t)]
-            for b in bs:
-                uni[b] = uni.get(b, 0) + 1
-                total += 1
-            for c, w in zip(bs, bs[1:]):
-                pair[(c, w)] = pair.get((c, w), 0) + 1
-                ctx[c] = ctx.get(c, 0) + 1
-            for c1, c2, w in zip(bs, bs[1:], bs[2:]):
-                tri[(c1, c2, w)] = tri.get((c1, c2, w), 0) + 1
-                trictx[(c1, c2)] = trictx.get((c1, c2), 0) + 1
-        lp_uni = {
-            b: math.log((uni.get(b, 0) + 1) / float(total + buckets))
-            for b in range(buckets)
-        }
-        out = {}
-        for i, t in docs:
-            bs = [bucket(x) for x in toks(t)]
-            s = math.floor(-lp_uni[bs[0]] * 1e6)
-            if len(bs) >= 2:
-                c, w = bs[0], bs[1]
-                pb = (pair.get((c, w), 0) + 1) / (ctx.get(c, 0) + float(buckets))
-                pu = math.exp(lp_uni[w])
-                s += math.floor(-math.log((l2 + l3) * pb + l1 * pu) * 1e6)
-            for c1, c2, w in zip(bs, bs[1:], bs[2:]):
-                p3 = (tri.get((c1, c2, w), 0) + 1) / (
-                    trictx.get((c1, c2), 0) + float(buckets)
-                )
-                pb = (pair.get((c2, w), 0) + 1) / (ctx.get(c2, 0) + float(buckets))
-                pu = math.exp(lp_uni[w])
-                s += math.floor(-math.log(l3 * p3 + l2 * pb + l1 * pu) * 1e6)
-            out[i] = (len(bs), s, s // len(bs))
-        return out
+        # strictly lower probability under the order-aware model
+        assert got[0][1] > got[1][1]
 
     def test_trigram_discriminates_where_bigram_ties(self, spark):
         """The order-3 payoff: probes with IDENTICAL bigram statistics
         but different trigrams.  Model sees 'x y z' and 'w y q' equally
         often, so (y,z) and (y,q) have equal pair counts; probe 'x y z'
-        is a seen trigram, 'x y q' is not — the bigram scorer ties, the
+        is a seen trigram, 'x y q' is not — a bigram model ties, the
         trigram scorer separates them."""
-        from pyspark.sql import functions as F
-
-        from classic_fcd_spark.operators.lm import (
-            bigram_nll_scores,
-            trigram_nll_scores,
-        )
-
         model = [(100, "x y z"), (101, "w y q"), (102, "x y z"), (103, "w y q")]
         probe = [(0, "x y z"), (1, "x y q")]
         docs = spark.createDataFrame(model + probe, ["doc_id", "text"])
-        mdocs = docs.filter(F.col("doc_id") >= 100)
-        bi = {
-            r["doc_id"]: r["sum_nll_e6"]
-            for r in bigram_nll_scores(docs, mdocs).collect()
-        }
-        tri = {
-            r["doc_id"]: r["sum_nll_e6"]
-            for r in trigram_nll_scores(docs, mdocs).collect()
-        }
-        assert bi[0] == bi[1]  # order-2 blind to the difference
-        assert tri[0] < tri[1]  # order-3 sees it
+        tri = _prob_scores(docs, docs.filter(F.col("doc_id") >= 100))
+        assert tri[0][1] > tri[1][1]  # order-3 sees it
 
     def test_word_order_sensitivity(self, spark):
         """The whole point over the unigram model: a scrambled doc has
-        the SAME bag of words (identical unigram NLL) but a worse
-        bigram NLL."""
-        from pyspark.sql import functions as F
-
-        from classic_fcd_spark.operators.lm import (
-            bigram_nll_scores,
-            unigram_nll_scores,
-        )
-
+        the SAME bag of words (identical unigram NLL) but a lower
+        trigram probability."""
         model = [(100 + i, "the cat sat on the mat") for i in range(4)]
         probe = [(0, "the cat sat on the mat"), (1, "mat the on sat cat the")]
         docs = spark.createDataFrame(model + probe, ["doc_id", "text"])
@@ -295,58 +263,19 @@ class TestBigramLM:
             r["doc_id"]: r["mean_nll_e6"]
             for r in unigram_nll_scores(docs, mdocs).collect()
         }
-        bi = {
-            r["doc_id"]: r["mean_nll_e6"]
-            for r in bigram_nll_scores(docs, mdocs).collect()
-        }
+        tri = _prob_scores(docs, mdocs)
         assert uni[0] == uni[1]  # bag-of-words blind
-        assert bi[0] < bi[1]  # order-aware
+        assert tri[0][1] > tri[1][1]  # order-aware
 
 
 class TestTrigramModelSaveLoad:
-    def test_loaded_model_scores_bit_identical_to_fresh_fit(
-        self, spark, tables, tmp_path
-    ):
-        """The r8 fit/score split's contract: counts are integers, so a
-        parquet round-trip plus the load path's re-derived constants
-        must reproduce the fresh fit's scores EXACTLY.  r16: the gated
-        query now fits in-session (queries/text._trigram_model_for is a
-        session memo — VERDICT r15 item 1 removed the disk store), so
-        this test is the standing proof that the r8-r15 rounds' loaded-
-        model hashes equal the in-session fit's — save/load stays a
-        supported operator capability for offline model shipping."""
-        from classic_fcd_spark.operators.lm import (
-            fit_trigram_prob_model,
-            load_trigram_prob_model,
-            save_trigram_prob_model,
-            score_trigram_prob,
-        )
-
-        docs = tables["documents"]
-        mdocs = docs.filter(F.col("source") == "src0")
-        fresh = fit_trigram_prob_model(mdocs)
-        want = {
-            r["doc_id"]: (r["n_tokens"], r["sum_p_e9"])
-            for r in score_trigram_prob(docs, fresh).collect()
-        }
-        save_trigram_prob_model(fresh, str(tmp_path / "m"))
-        loaded = load_trigram_prob_model(spark, str(tmp_path / "m"))
-        assert loaded.ut == fresh.ut
-        got = {
-            r["doc_id"]: (r["n_tokens"], r["sum_p_e9"])
-            for r in score_trigram_prob(docs, loaded).collect()
-        }
-        assert got == want
-        assert len(got) == 500
+    """Fit/score contracts of the trigram probability model."""
 
     def test_null_and_empty_text_docs_emit_no_rows(self, spark):
-        """r7 advice: NULL-text docs must not score via a phantom
-        smoothed token — the oracle's token CTE emits no rows for them."""
-        from classic_fcd_spark.operators.lm import trigram_prob_scores
-
+        """NULL-text docs must not score via a phantom smoothed token —
+        the oracle's token CTE emits no rows for them."""
         docs = spark.createDataFrame(
             [(1, "a b c d"), (2, None), (3, "x y")],
             "doc_id bigint, text string",
         )
-        got = {r["doc_id"] for r in trigram_prob_scores(docs, docs).collect()}
-        assert got == {1, 3}
+        assert set(_prob_scores(docs, docs)) == {1, 3}

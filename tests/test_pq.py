@@ -1,20 +1,22 @@
-"""Product-quantization contracts (operators/similarity.py PQ family).
+"""Product-quantization contracts (operators/similarity.pq_encode and the
+registered ann_pq_search arm).
 
-Training is iterative (no SQL oracle), so the gate is an independent
-numpy reference: encoding must match exact nearest-sub-centroid
-assignment, ADC scores must equal the table-lookup sum to float
-precision, Lloyd distortion must not increase, and the end-to-end
-search must beat a random baseline by a wide margin on planted
-clusters (and reach perfect recall when clusters are tight)."""
+The gate is an independent numpy reference: encoding must match exact
+nearest-sub-centroid assignment on the pinned codebook ann_pq_search
+uses, the ADC ranking must equal the numpy table-lookup ranking, and
+codes must keep the cluster identity of tight planted clusters."""
 
 from __future__ import annotations
 
+import math
 import random
 
 import numpy as np
 import pytest
 
 from tests.conftest import SF_SMALL
+
+_M, _KS = 8, 16
 
 
 def _np_encode(vecs: np.ndarray, books: list[list[list[float]]]) -> np.ndarray:
@@ -29,14 +31,23 @@ def _np_encode(vecs: np.ndarray, books: list[list[list[float]]]) -> np.ndarray:
     return codes
 
 
+def _split(cents: list[list[float]], m: int) -> list[list[list[float]]]:
+    """Sub-codebook j = the j-th dsub-slice of every centroid."""
+    dsub = len(cents[0]) // m
+    return [
+        [[float(x) for x in c[j * dsub : (j + 1) * dsub]] for c in cents]
+        for j in range(m)
+    ]
+
+
 class TestPQ:
     @pytest.fixture(scope="class")
-    def trained(self, spark):
-        from classic_fcd_spark.operators.similarity import pq_encode, pq_train
-        from classic_fcd_spark.session import load_tables
+    def pinned(self, spark):
+        from classic_fcd_spark.operators.similarity import pq_encode
+        from classic_fcd_spark.session import embedding_codebook, load_tables
 
         emb = load_tables(spark, SF_SMALL)["embeddings"]
-        books, hist = pq_train(emb, m=8, ks=16, n_iter=3)
+        books = _split(embedding_codebook(spark, SF_SMALL, _KS), _M)
         codes = {
             r["vec_id"]: list(r["codes"])
             for r in pq_encode(emb, books).collect()
@@ -45,58 +56,70 @@ class TestPQ:
             r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
             for r in emb.collect()
         }
-        return books, hist, codes, vecs
+        return books, codes, vecs
 
-    def test_distortion_non_increasing(self, trained):
-        _, hist, _, _ = trained
-        assert all(b <= a + 1e-9 for a, b in zip(hist, hist[1:])), hist
-
-    def test_codebook_shape(self, trained):
-        books, _, _, _ = trained
-        assert len(books) == 8
-        assert all(len(b) == 16 for b in books)
+    def test_codebook_shape(self, spark, pinned):
+        """The pinned codebook is the first ks corpus vectors in vec_id
+        order (what PQ_ORACLE_SQL's `vec_id < ks` rebuilds), split into
+        M sub-codebooks of ks dsub-length centroids."""
+        books, _, vecs = pinned
+        assert len(books) == _M
+        assert all(len(b) == _KS for b in books)
         assert all(len(c) == 8 for b in books for c in b)
+        for cid in range(_KS):
+            joined = [x for j in range(_M) for x in books[j][cid]]
+            assert joined == list(vecs[cid]), cid
 
-    def test_encode_matches_numpy_reference(self, trained):
-        books, _, codes, vecs = trained
+    def test_encode_matches_numpy_reference(self, pinned):
+        books, codes, vecs = pinned
         ids = sorted(vecs)
         ref = _np_encode(np.stack([vecs[i] for i in ids]), books)
         for row, i in enumerate(ids):
             assert codes[i] == list(ref[row]), (i, codes[i], list(ref[row]))
 
-    def test_adc_scores_match_numpy(self, spark, trained):
-        from pyspark.sql import functions as F
+    def test_adc_scores_match_numpy(self, spark, pinned):
+        """ann_pq_search ranks by the sum of e6-floored per-subspace
+        table lookups; the numpy table-lookup ranking over the same
+        codes must pick the same neighbours in the same order."""
+        from classic_fcd_spark.queries.similarity import (
+            _N_QUERIES,
+            _TOP_K,
+            ann_pq_search,
+        )
 
-        from classic_fcd_spark.operators.similarity import pq_adc_search, pq_encode
-        from classic_fcd_spark.session import load_tables
-
-        books, _, codes, vecs = trained
-        emb = load_tables(spark, SF_SMALL)["embeddings"]
-        queries = emb.filter(F.col("vec_id") < 3)
-        got = pq_adc_search(
-            queries, pq_encode(emb, books), books, top_k=5
-        ).collect()
+        books, codes, vecs = pinned
+        got: dict[int, list[int]] = {}
+        for r in sorted(ann_pq_search(spark, SF_SMALL).collect(), key=lambda r: r["rnk"]):
+            got.setdefault(r["qid"], []).append(r["nid"])
         m, dsub = len(books), len(books[0][0])
-        for r in got:
-            q = vecs[r["qid"]]
-            adist = 0.0
-            for j in range(m):
-                cent = np.array(books[j][codes[r["nid"]][j]])
-                sub = q[j * dsub : (j + 1) * dsub]
-                adist += float(((sub - cent) ** 2).sum())
-            assert abs(adist - r["adist_e6"] / 1e6) < 1e-4, (r, adist)
+
+        def sqdist(a, b):  # left-to-right, like the engine's fold
+            acc = 0.0
+            for x, y in zip(a, b):
+                acc += (float(x) - y) * (float(x) - y)
+            return acc
+
+        for qid in range(_N_QUERIES):
+            q = vecs[qid]
+            tab = [
+                [math.floor(sqdist(q[j * dsub : (j + 1) * dsub], c) * 1e6) for c in books[j]]
+                for j in range(m)
+            ]
+            adist = {
+                nid: sum(tab[j][code[j]] for j in range(m))
+                for nid, code in codes.items()
+                if nid != qid
+            }
+            want = sorted(adist, key=lambda n: (adist[n], n))[:_TOP_K]
+            assert got[qid] == want, (qid, got[qid], want)
 
     def test_planted_clusters_recall(self, spark):
-        """Tight planted clusters: ADC top-k must recover same-cluster
-        neighbors (the compression is 32x; the information that matters
-        — which cluster — survives it)."""
-        from pyspark.sql import functions as F
-
-        from classic_fcd_spark.operators.similarity import (
-            pq_adc_search,
-            pq_encode,
-            pq_train,
-        )
+        """Tight planted clusters: with one member of each cluster as the
+        codebook, every vector's codes name its own cluster in every
+        subspace — the information that matters (which cluster)
+        survives the 32x compression, so ADC top-k recovers
+        same-cluster neighbours."""
+        from classic_fcd_spark.operators.similarity import pq_encode
 
         rng = random.Random(11)
         dim, n_clusters, per = 64, 5, 12
@@ -107,104 +130,9 @@ class TestPQ:
                 v = [x + rng.uniform(-0.02, 0.02) for x in center]
                 rows.append((c * per + k, c, v))
         emb = spark.createDataFrame(rows, ["vec_id", "truth", "embedding"])
-        books, _ = pq_train(emb, m=8, ks=8, n_iter=4)
-        codes = pq_encode(emb, books)
-        queries = emb.filter(F.col("vec_id") % per == 0)  # one per cluster
-        got = pq_adc_search(queries, codes, books, top_k=per - 1).collect()
+        books = _split([rows[c * per][2] for c in range(n_clusters)], _M)
+        codes = {r["vec_id"]: list(r["codes"]) for r in pq_encode(emb, books).collect()}
         truth_of = {r[0]: r[1] for r in rows}
-        hits = sum(1 for r in got if truth_of[r["nid"]] == truth_of[r["qid"]])
-        assert hits / len(got) >= 0.95, hits / len(got)
-
-
-class TestPqTrainGuards:
-    def test_corpus_smaller_than_ks_fails_fast(self, spark):
-        """r5 regression gate: with fewer corpus rows than ks, seeding
-        would leave None centroids that silently corrupt training (null
-        distances win F.min over structs) — must raise instead."""
-        import pytest as _pytest
-
-        from classic_fcd_spark.operators.similarity import pq_train
-
-        emb = spark.createDataFrame(
-            [(i, [float(i), 0.0, 1.0, 2.0]) for i in range(3)],
-            "vec_id long, embedding array<double>",
-        )
-        with _pytest.raises(ValueError, match="ks"):
-            pq_train(emb, m=2, ks=8, n_iter=1)
-
-
-class TestIVFPQ:
-    def test_planted_clusters_recall_and_candidate_bound(self, spark):
-        """The composed IVF-PQ index (Faiss IndexIVFPQ shape): probe
-        nprobe cells, ADC only their codes, exact-refine the shortlist.
-        On tight planted clusters the probe must land in the query's own
-        cluster-cell and recall must match the flat-PQ path."""
-        from pyspark.sql import functions as F
-
-        from classic_fcd_spark.operators.similarity import (
-            ivfpq_search,
-            kmeans_train,
-            pq_encode,
-            pq_train,
-        )
-
-        rng = random.Random(17)
-        dim, n_clusters, per = 64, 5, 12
-        rows = []
-        for c in range(n_clusters):
-            center = [rng.uniform(-1, 1) for _ in range(dim)]
-            for k in range(per):
-                v = [x + rng.uniform(-0.02, 0.02) for x in center]
-                rows.append((c * per + k, c, v))
-        emb = spark.createDataFrame(rows, ["vec_id", "truth", "embedding"])
-        cents, _ = kmeans_train(emb, k=n_clusters, n_iter=4)
-        books, _ = pq_train(emb, m=8, ks=8, n_iter=4)
-        queries = emb.filter(F.col("vec_id") % per == 0)
-        got = ivfpq_search(
-            emb.filter(F.col("vec_id") % per == 0),
-            emb,
-            cents,
-            books,
-            nprobe=2,
-            shortlist=per,
-            top_k=per - 1,
-        ).collect()
-        truth_of = {r[0]: r[1] for r in rows}
-        hits = sum(1 for r in got if truth_of[r["nid"]] == truth_of[r["qid"]])
-        assert hits / len(got) >= 0.95, hits / len(got)
-        assert len(got) == n_clusters * (per - 1)
-        # prebuilt-index path is equivalent (the stored-index shape)
-        from classic_fcd_spark.operators.similarity import assign_cells
-
-        index = (
-            assign_cells(emb, cents)
-            .select("vec_id", "cell")
-            .join(pq_encode(emb, books), "vec_id")
-        )
-        again = ivfpq_search(
-            queries, emb, cents, books, nprobe=2, shortlist=per,
-            top_k=per - 1, index=index,
-        ).collect()
-        assert sorted(map(tuple, got)) == sorted(map(tuple, again))
-
-    def test_no_cartesian_in_plan(self, spark):
-        """The whole point vs flat ADC: candidate generation is a cell
-        equi-join, not a query x corpus cross."""
-        from pyspark.sql import functions as F
-
-        from classic_fcd_spark.operators.similarity import ivfpq_search
-        from classic_fcd_spark.session import load_tables
-
-        emb = load_tables(spark, SF_SMALL)["embeddings"]
-        cents = [
-            r["embedding"]
-            for r in emb.filter(F.col("vec_id") < 8).orderBy("vec_id").collect()
-        ]
-        books = [
-            [[float(j + c) for _ in range(8)] for c in range(4)] for j in range(8)
-        ]
-        df = ivfpq_search(
-            emb.filter(F.col("vec_id") < 3), emb, cents, books, nprobe=2
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
+        hits = sum(1 for i, cs in codes.items() if cs == [truth_of[i]] * _M)
+        assert len(codes) == len(rows)
+        assert hits / len(codes) >= 0.95, hits / len(codes)

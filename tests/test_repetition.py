@@ -10,9 +10,8 @@ import pytest
 from classic_fcd_spark.operators.repetition import (
     duck_repetition_sql,
     repetition_signals,
-    repetition_signals_fold,
 )
-from tests.conftest import SF_MEDIUM
+from tests.conftest import SF_MEDIUM, SF_SMALL
 
 COLS = [
     "dup_line_frac_e6",
@@ -122,12 +121,11 @@ class TestDuckOracle:
 
 
 class TestFoldReference:
-    """The r12 zero-shuffle fold vs an independent pure-Python
-    reference: the sorted-run fold must produce the same nine signals
-    as direct Counter-based counting for ADVERSARIAL token sequences —
-    tie-heavy, single-token, all-identical, and randomized docs (a
-    deterministic seeded batch, not the sf corpus the oracle already
-    gates)."""
+    """The kernel vs an independent pure-Python reference: it must
+    produce the same nine gram signals as direct Counter-based counting
+    for ADVERSARIAL token sequences — tie-heavy, single-token,
+    all-identical, and randomized docs (a deterministic seeded batch,
+    not the sf corpus the oracle already gates)."""
 
     @staticmethod
     def _py_signals(text: str) -> dict:
@@ -195,28 +193,32 @@ class TestFoldReference:
 
 
 class TestKernelFoldEquality:
-    """r16: repetition_signals moved from the interpreted nine-fold JVM
-    projection to an Arrow-batched mapInPandas kernel (guide §4.2,
-    measured 7.9x).  Both forms must emit BIT-IDENTICAL rows — the fold
-    stays in the tree as the pure-JVM fallback and this test is the
-    standing cross-form gate (the DuckDB oracle and the pure-Python
-    reference above gate each form independently)."""
+    """The Arrow kernel against the DuckDB oracle on the shapes where
+    the two tokenizers could part ways (tabs, space runs, blank and
+    padded lines, gram-order ties) and on the whole sf0.001 corpus."""
+
+    def _duck(self, con) -> dict:
+        return {r[0]: tuple(r[1:]) for r in con.sql(duck_repetition_sql()).fetchall()}
 
     def _check(self, spark, rows):
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        a = {r["doc_id"]: tuple(r) for r in repetition_signals_fold(docs).collect()}
-        b = {r["doc_id"]: tuple(r) for r in repetition_signals(docs).collect()}
-        assert a == b
-        assert (
-            repetition_signals(docs).schema
-            == repetition_signals_fold(docs).schema
-        )
+        got = _rows(repetition_signals(docs))
+        con = duckdb.connect()
+        con.register("documents", docs.toPandas())
+        want = self._duck(con)
+        # NULL text has no lines: the kernel emits NULL line signals
+        # where the oracle COALESCEs them to 0; every gram signal is 0
+        null_ids = {i for i, t in rows if t is None}
+        for i in null_ids:
+            assert got.pop(i) == (None, None) + (0,) * (len(COLS) - 2)
+            assert want.pop(i) == (0,) * len(COLS)
+        assert got == want
 
     def test_edge_shapes(self, spark):
         self._check(
             spark,
             [
-                (1, None),                        # NULL text -> NULL signals
+                (1, None),                        # NULL text
                 (2, ""),
                 (3, "   "),
                 (4, "a"),
@@ -230,7 +232,12 @@ class TestKernelFoldEquality:
         )
 
     def test_corpus(self, spark, tables):
-        docs = tables["documents"]
-        a = {r["doc_id"]: tuple(r) for r in repetition_signals_fold(docs).collect()}
-        b = {r["doc_id"]: tuple(r) for r in repetition_signals(docs).collect()}
-        assert a == b
+        got = _rows(repetition_signals(tables["documents"]))
+        con = duckdb.connect()
+        con.sql(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{SF_SMALL}/documents.parquet')"
+        )
+        want = self._duck(con)
+        assert len(got) == len(want) == 500
+        assert got == want

@@ -143,23 +143,29 @@ class TestTrigramLmScoresGate:
     def test_nll_and_prob_orderings_agree(self, spark):
         """-log is monotone: at equal n_tokens, higher sum_p_e9 must
         never pair with higher sum_nll_e6 (the gated form really does
-        stand in for the NLL scorer)."""
+        stand in for an NLL scorer; the NLL side is the pure-Python
+        trigram reference of tests/test_lm.py)."""
         from classic_fcd_spark.operators.lm import (
-            trigram_nll_scores,
-            trigram_prob_scores,
+            fit_trigram_prob_model,
+            score_trigram_prob,
         )
         from classic_fcd_spark.session import load_tables
+        from tests.test_lm import ref_trigram_nll
 
         docs = load_tables(spark, SF_SMALL)["documents"]
         model = docs.filter(F.col("source") == "src0")
+        rows = [(r["doc_id"], r["text"], r["source"]) for r in docs.collect()]
         # mean-normalize both so unequal doc lengths compare fairly
         nll = {
-            r["doc_id"]: r["sum_nll_e6"] / r["n_tokens"]
-            for r in trigram_nll_scores(docs, model).collect()
+            i: s / n
+            for i, (n, s, _) in ref_trigram_nll(
+                [(i, t) for i, t, _ in rows],
+                [(i, t) for i, t, src in rows if src == "src0"],
+            ).items()
         }
         prob = {
             r["doc_id"]: r["sum_p_e9"] / r["n_tokens"]
-            for r in trigram_prob_scores(docs, model).collect()
+            for r in score_trigram_prob(docs, fit_trigram_prob_model(model)).collect()
         }
         ids = sorted(nll)
         by_nll = sorted(ids, key=lambda d: nll[d])[:50]
