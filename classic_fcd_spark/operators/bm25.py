@@ -7,13 +7,17 @@ The lexical complement to the embedding ANN family: keyword search over
 decontamination recipes.
 
 Scale shape:
-- The (doc, term, tf) postings table is the materialized inverted-index
-  silver — one explode + one groupBy per corpus generation, reusable
-  across every query batch (like session.shingle_table for dedup).
-- Query time: the query-term set is tiny → broadcast; postings are
-  semi-joined down to query terms BEFORE any scoring work, so cost
-  follows matching postings, never the corpus.  Per-query top-k is a
-  bounded window.
+- The (doc, dl, term, tf, df) postings table is the materialized
+  inverted-index silver — one explode + one groupBy, plus one df
+  aggregate joined back, per corpus generation, reusable across every
+  query batch (like session.shingle_table for dedup).  It is
+  hash-partitioned on the doc id, so the per-(query, doc) score sum
+  reads it without an exchange.
+- Query time: the (qid, term) pairs are a bound VALUES list — a local
+  relation: no scan and no shuffle, its broadcast one small job over the
+  bound rows — and postings are pruned by a literal `term IN (...)`
+  filter BEFORE any scoring work, so cost follows matching postings,
+  never the corpus.  Per-query top-k is a bounded window.
 - Corpus stats (N, total tokens) are a 1-row aggregate — the only
   driver-side state.
 
@@ -37,8 +41,8 @@ from classic_fcd_spark.operators.dedup import ws_tokens
 def bm25_postings(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, term, tf, dl): term frequencies with per-doc length — the
-    inverted-index silver table.  One explode + one groupBy; dl rides
+    """(id, dl, term, tf): raw term frequencies with per-doc length —
+    with_df adds df to make the silver.  One explode + one groupBy; dl rides
     along via a size() column computed before the explode (no second
     tokenize pass, no second shuffle).  The input is spread across cores
     first — single-file scans arrive as one partition."""
@@ -49,6 +53,55 @@ def bm25_postings(
         F.explode(ws_tokens(text_col)).alias("term"),
     )
     return toks.groupBy(id_col, "dl", "term").agg(F.count("*").alias("tf"))
+
+
+def with_df(post: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, dl, term, tf, df): raw postings plus each term's document
+    frequency — the postings silver shape.  df is one shuffle aggregate
+    joined back by a shuffle-hash join: the vocabulary grows with the
+    corpus, so it is never broadcast.  The result is hash-partitioned on
+    the id, so bm25_topk's groupBy(qid, id) needs no exchange."""
+    par = post.sparkSession.sparkContext.defaultParallelism
+    dfreq = post.groupBy("term").agg(F.count("*").alias("df"))
+    return (
+        post.join(dfreq.hint("shuffle_hash"), "term")
+        .select(id_col, "dl", "term", "tf", "df")
+        .repartition(par, id_col)
+    )
+
+
+def corpus_stats(post: DataFrame, id_col: str = "doc_id") -> tuple[int, float]:
+    """(N, avgdl) from the postings' per-doc lengths: one scalar
+    aggregate job, never a second corpus tokenize — every doc
+    contributes >= 1 posting row under this tokenizer (empty text yields
+    one empty-string token), so distinct (id, dl) covers the whole
+    corpus.  (0, 0.0) for an empty corpus."""
+    row = (
+        post.select(id_col, "dl")
+        .distinct()
+        .agg(F.count("*").alias("n"), F.sum("dl").alias("tot"))
+        .collect()[0]
+    )
+    if not row["n"]:
+        return (0, 0.0)
+    return (int(row["n"]), int(row["tot"]) / int(row["n"]))
+
+
+def _query_relation(spark, qpairs: list[tuple[int, str]]) -> DataFrame:
+    """(qid, term) as a VALUES list with every value bound as a
+    parameter (no quoting of terms in the SQL text).  It plans as a
+    local relation, so its broadcast reads no table and shuffles
+    nothing."""
+    rows = ", ".join(f"(:q{i}, :t{i})" for i in range(len(qpairs)))
+    args: dict[str, object] = {}
+    for i, (qid, term) in enumerate(qpairs):
+        args[f"q{i}"] = int(qid)
+        args[f"t{i}"] = term
+    return spark.sql(
+        "SELECT CAST(qid AS BIGINT) AS qid, term"
+        f" FROM VALUES {rows} AS q(qid, term)",
+        args=args,
+    )
 
 
 def _score_expr(n: int, avgdl: float, k1: float, b: float):
@@ -77,13 +130,14 @@ def bm25_topk(
 ) -> DataFrame:
     """(qid, id, rnk, score_e6): top-k BM25 docs per query.
 
-    `postings` reuses a pre-materialized bm25_postings table (the
-    long-lived-engine shape); otherwise it is built from `docs`.  N and
-    avgdl come from one scalar aggregate OVER THE POSTINGS' per-doc
-    lengths (bounded driver state) — never a second corpus tokenize:
-    every doc contributes >= 1 posting row under this tokenizer (empty
-    text yields one empty-string token), so distinct (id, dl) covers
-    the whole corpus.  An empty corpus returns an empty result.
+    `postings` reuses a pre-materialized postings table (the
+    long-lived-engine shape: session.bm25_postings_table, which carries
+    df); raw (id, dl, term, tf) postings — bm25_postings output,
+    streaming/postings.read_postings — get df from with_df, and without
+    `postings` they are built from `docs`.  `stats` passes a cached
+    (N, avgdl) pair (session.bm25_corpus_stats); otherwise corpus_stats
+    computes it from the postings.  An empty corpus returns an empty
+    result.
 
     A term repeated inside one query counts ONCE (set-of-terms queries,
     the common BM25 presentation without the qtf factor) — (qid, term)
@@ -92,17 +146,17 @@ def bm25_topk(
     spark = docs.sparkSession
     # set semantics per query: dedupe (qid, term) pairs, order-stable
     qpairs = list(dict.fromkeys((qid, t) for qid, terms in queries for t in terms))
-    if postings is not None:
+    if postings is None:
+        postings = bm25_postings(docs, id_col, text_col)
+    if "df" in postings.columns:
         post = postings
     else:
         # the stats collect below is an ACTION: without a persist the
-        # scoring job would rebuild the whole postings lineage a second
+        # scoring job would rebuild the postings and df lineage a second
         # time (shuffles are not reused across separate jobs)
         from classic_fcd_spark.session import scoped_persist
 
-        post = scoped_persist(
-            bm25_postings(docs, id_col, text_col), "bm25:postings"
-        )
+        post = scoped_persist(with_df(postings, id_col), "bm25:postings")
 
     def _empty() -> DataFrame:
         # empty-path schema must equal the non-empty path's, whatever
@@ -125,35 +179,14 @@ def bm25_topk(
 
     if not qpairs:
         return _empty()
-    # `stats` lets a long-lived engine pass the per-corpus cached (N,
-    # avgdl) pair (session.bm25_corpus_stats) instead of paying this
-    # collect job per query call (r15); the values are computed by the
-    # identical expression either way, so scores are bit-identical.
-    if stats is None:
-        row = (
-            post.select(id_col, "dl")
-            .distinct()
-            .agg(F.count("*").alias("n"), F.sum("dl").alias("tot"))
-            .collect()[0]
-        )
-        stats = (
-            (int(row["n"]), int(row["tot"]) / int(row["n"]))
-            if row["n"]
-            else (0, 0.0)
-        )
-    n, avgdl = stats
+    n, avgdl = corpus_stats(post, id_col) if stats is None else stats
     if not n:
         return _empty()
 
-    qdf = spark.createDataFrame(qpairs, ["qid", "term"])
-    # document frequency of QUERY terms only: postings pruned by the
-    # broadcast term set first, so df never aggregates the full vocab
-    terms = qdf.select("term").distinct()
-    matched = post.join(F.broadcast(terms), "term")
-    dfreq = matched.groupBy("term").agg(F.count("*").alias("df"))
+    terms = list(dict.fromkeys(t for _, t in qpairs))
     scored = (
-        matched.join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(qdf), "term")
+        post.filter(F.col("term").isin(terms))
+        .join(F.broadcast(_query_relation(spark, qpairs)), "term")
         .withColumn(
             "s_e6",
             F.floor(_score_expr(n, avgdl, k1, b) * F.lit(1000000.0)).cast("bigint"),

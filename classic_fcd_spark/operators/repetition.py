@@ -68,9 +68,9 @@ def _doc_signals(text):
     from collections import Counter
 
     if text is None:
-        # NULL text: the line signals are NULL (there are no lines to
-        # count) and every n-gram signal is 0 (there are no grams)
-        return (None, None) + (0,) * (len(SIGNAL_COLS) - 2)
+        # NULL text has no lines and no grams: every signal is 0, as the
+        # oracle's COALESCE and the "" row give
+        return (0,) * len(SIGNAL_COLS)
     out = []
     lines = [s.strip(" ") for s in text.split("\n")]
     lines = [s for s in lines if s != ""]

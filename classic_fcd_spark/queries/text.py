@@ -203,11 +203,9 @@ def token_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BM25 lexical retrieval.  The registered hybrid_rrf_search's lexical
-# arm runs this IDENTICAL bm25_topk call (same query batch), so the
-# postings/scoring pattern is inside the oracle gate; the standalone
-# query is a bench.py workload and its oracle is the in-test gate below
-# (tests/test_bm25.py::TestBM25SearchOracle).
+# BM25 lexical retrieval.  hybrid_rrf_search's lexical arm is this same
+# bm25_topk call over the same query batch; bm25_search itself is
+# unregistered, gated in-test (tests/test_bm25.py::TestBM25SearchOracle).
 # ---------------------------------------------------------------------------
 from classic_fcd_spark.operators.bm25 import duck_bm25_sql  # noqa: E402
 
@@ -224,17 +222,17 @@ BM25_SEARCH_ORACLE_SQL = duck_bm25_sql(BM25_QUERIES)
 
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k lexical retrieval (Okapi BM25, Robertson/Walker;
-    Lucene +1 idf smoothing) over the documents corpus: postings = one
-    explode + groupBy (the reusable inverted-index silver); query terms
-    broadcast and postings semi-join-pruned BEFORE scoring, so cost
-    follows matching postings, never the corpus; per-(q,doc,term)
+    Lucene +1 idf smoothing) over the documents corpus: the postings
+    silver carries df; a literal term filter prunes it BEFORE scoring,
+    so cost follows matching postings, never the corpus; per-(q,doc,term)
     partials floored to e6 fixed point before the per-doc sum — exact
     integer scores on both engines (the order-free-sum discipline).
     Repeated query terms count once (set semantics, both engines).
 
-    Postings + (N, avgdl) come from the per-corpus session silver
-    (session.bm25_postings_table / bm25_corpus_stats), so one query call
-    is ONE Spark job over broadcast-pruned postings."""
+    Postings (with df) and (N, avgdl) come from the per-corpus session
+    silver (session.bm25_postings_table / bm25_corpus_stats), so a warm
+    call only scores, in three jobs: the query-relation broadcast, the
+    per-query top-k exchange and the result (tests/test_job_budget.py)."""
     from classic_fcd_spark.operators.bm25 import bm25_topk
     from classic_fcd_spark.session import bm25_corpus_stats, bm25_postings_table
 
@@ -308,7 +306,8 @@ def _duck_hybrid_rrf_sql() -> str:
     _duck_hybrid_rrf_sql(),
     doc="Hybrid lexical+dense retrieval fused by Reciprocal Rank Fusion "
     "(Cormack et al. 2009): the lexical arm is the full bm25_search "
-    "plan (postings silver, broadcast query terms, e6-exact scores); "
+    "plan (df-carrying postings silver, bound query relation, e6-exact "
+    "scores); "
     "the dense arm is brute-force cosine top-k over the shared doc-id "
     "space, ranked by floor(cos*1e6) so both engines order identically; "
     "fusion = sum of 1e9 div (60+rank) over the two arms — exact bigint "
@@ -325,9 +324,8 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from classic_fcd_spark.session import bm25_corpus_stats, bm25_postings_table
 
     t = load_tables(spark, sf_dir)
-    # share the per-corpus postings silver + cached (N, avgdl) with
-    # bm25_search: the lexical arm never rebuilds the inverted index or
-    # pays the stats collect per invocation
+    # the per-corpus silver (postings with df) and cached (N, avgdl),
+    # shared with bm25_search: a warm lexical arm only scores
     lex = bm25_topk(
         t["documents"],
         BM25_QUERIES,

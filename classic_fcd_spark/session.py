@@ -382,38 +382,32 @@ def simhash_grp_table(spark, sf_dir: str):
 
 
 def bm25_postings_table(spark, sf_dir: str):
-    """The (doc_id, dl, term, tf) inverted-index silver over `documents`,
-    persisted once per (session, corpus) — the medallion pattern
-    shingle_table applies to the dedup family, applied to the lexical
-    family: bm25_search and hybrid_rrf_search's lexical arm share it
-    instead of rebuilding and re-persisting it per invocation."""
+    """The (doc_id, dl, term, tf, df) inverted-index silver over
+    `documents`, hash-partitioned on doc_id and persisted once per
+    (session, corpus) — the medallion pattern shingle_table applies to
+    the dedup family, applied to the lexical family: bm25_search and
+    hybrid_rrf_search's lexical arm share it instead of rebuilding the
+    postings and the per-term df per invocation."""
 
     def build():
-        from classic_fcd_spark.operators.bm25 import bm25_postings
+        from classic_fcd_spark.operators.bm25 import bm25_postings, with_df
 
         docs = load_tables(spark, sf_dir)["documents"]
-        return bm25_postings(docs).persist()
+        return with_df(bm25_postings(docs)).persist()
 
     return session_memo(spark, f"bm25_postings|{sf_dir}", build)
 
 
 def bm25_corpus_stats(spark, sf_dir: str) -> tuple[int, float]:
     """(N, avgdl) over the postings silver — one cached scalar aggregate
-    per corpus generation (was: one collect job per bm25_topk call).
-    Values are computed by the exact expression bm25_topk used inline,
-    so every emitted score literal is bit-identical."""
+    per corpus generation instead of one collect job per bm25_topk
+    call; operators.bm25.corpus_stats computes it either way, so every
+    emitted score literal is bit-identical."""
 
     def build():
-        post = bm25_postings_table(spark, sf_dir)
-        row = (
-            post.select("doc_id", "dl")
-            .distinct()
-            .agg(F.count("*").alias("n"), F.sum("dl").alias("tot"))
-            .collect()[0]
-        )
-        if not row["n"]:
-            return (0, 0.0)
-        return (int(row["n"]), int(row["tot"]) / int(row["n"]))
+        from classic_fcd_spark.operators.bm25 import corpus_stats
+
+        return corpus_stats(bm25_postings_table(spark, sf_dir))
 
     return session_memo(spark, f"bm25_stats|{sf_dir}", build)
 

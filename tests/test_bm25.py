@@ -220,6 +220,75 @@ class TestBM25Edges:
         assert twice == want
 
 
+def _spark_and_duck(spark, rows, queries):
+    """(bm25_topk rows, duck_bm25_sql rows) over the same tiny corpus."""
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    got = sorted(map(tuple, bm25_topk(df, queries).collect()))
+    con = duckdb.connect()
+    pdf = df.toPandas()  # noqa: F841 — bound into duckdb
+    want = sorted(map(tuple, con.sql(duck_bm25_sql(queries, table="pdf")).fetchall()))
+    return got, want
+
+
+class TestBM25QueryEdges:
+    """Query shapes the bound query relation and the literal term
+    filter must carry exactly as the oracle's quoted VALUES list does."""
+
+    def test_quote_and_backslash_terms(self, spark):
+        rows = ROWS + [
+            (5, "it's a back\\slash path it's"),
+            (6, "back\\slash and o'clock"),
+            (7, "plain rows here"),
+        ]
+        qs = [(0, ["it's", "back\\slash"]), (1, ["o'clock", "rows"])]
+        got, want = _spark_and_duck(spark, rows, qs)
+        assert got == want
+        assert {(q, d) for q, d, _, _ in got} >= {(0, 5), (0, 6), (1, 6)}
+
+    def test_absent_terms(self, spark):
+        """An absent term adds nothing to its query; a query whose terms
+        are all absent has no rows."""
+        qs = [(0, ["shuffle", "absentterm"]), (1, ["absentterm", "nothere"])]
+        got, want = _spark_and_duck(spark, ROWS, qs)
+        assert got == want
+        alone, _ = _spark_and_duck(spark, ROWS, [(0, ["shuffle"])])
+        assert got == alone and got
+
+
+class TestRawPostingsPath:
+    def test_streamed_postings_equal_the_silver_path(self, spark, tmp_path):
+        """bm25_topk over raw read_postings output (no df column: the
+        stream writes per-batch postings) ranks exactly like bm25_search
+        over the df-carrying session silver."""
+        import pyarrow.parquet as pq
+
+        from classic_fcd_spark.queries.text import BM25_QUERIES, bm25_search
+        from classic_fcd_spark.streaming.postings import (
+            read_postings,
+            run_postings_available_now,
+        )
+
+        docs = pq.read_table(f"{SF_SMALL}/documents.parquet")
+        docs_dir = tmp_path / "docs"
+        docs_dir.mkdir()
+        half = docs.num_rows // 2
+        pq.write_table(docs.slice(0, half), str(docs_dir / "part-0.parquet"))
+        pq.write_table(docs.slice(half), str(docs_dir / "part-1.parquet"))
+        post_dir = str(tmp_path / "postings")
+        run_postings_available_now(
+            spark, str(docs_dir), post_dir, str(tmp_path / "ck")
+        )
+        raw = read_postings(spark, post_dir)
+        assert "df" not in raw.columns
+        all_docs = spark.read.parquet(str(docs_dir))
+        streamed = sorted(
+            map(tuple, bm25_topk(all_docs, BM25_QUERIES, postings=raw).collect())
+        )
+        silver = sorted(map(tuple, bm25_search(spark, SF_SMALL).collect()))
+        assert streamed == silver
+        assert len(silver) == 40  # 4 queries x top-10
+
+
 class TestBM25SearchOracle:
     """bm25_search left the driver window in r12 (slot rotated to
     hybrid_rrf_search, whose lexical arm runs the identical bm25_topk

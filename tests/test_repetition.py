@@ -206,13 +206,11 @@ class TestKernelFoldEquality:
         con = duckdb.connect()
         con.register("documents", docs.toPandas())
         want = self._duck(con)
-        # NULL text has no lines: the kernel emits NULL line signals
-        # where the oracle COALESCEs them to 0; every gram signal is 0
-        null_ids = {i for i, t in rows if t is None}
-        for i in null_ids:
-            assert got.pop(i) == (None, None) + (0,) * (len(COLS) - 2)
-            assert want.pop(i) == (0,) * len(COLS)
+        # every row, the NULL-text one included (all signals 0 on both)
         assert got == want
+        for i, t in rows:
+            if t is None:
+                assert got[i] == (0,) * len(COLS)
 
     def test_edge_shapes(self, spark):
         self._check(
