@@ -8,8 +8,8 @@ decontamination recipes.
 
 Scale shape:
 - The (doc, dl, term, tf, df) postings table is the materialized
-  inverted-index silver — one explode + one groupBy, plus one df
-  aggregate joined back, per corpus generation, reusable across every
+  inverted-index silver — one explode + one groupBy, plus a df count
+  over a window on the term, per corpus generation, reusable across every
   query batch (like session.shingle_table for dedup).  It is
   hash-partitioned on the doc id, so the per-(query, doc) score sum
   reads it without an exchange.
@@ -57,14 +57,15 @@ def bm25_postings(
 
 def with_df(post: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, dl, term, tf, df): raw postings plus each term's document
-    frequency — the postings silver shape.  df is one shuffle aggregate
-    joined back by a shuffle-hash join: the vocabulary grows with the
-    corpus, so it is never broadcast.  The result is hash-partitioned on
-    the id, so bm25_topk's groupBy(qid, id) needs no exchange."""
+    frequency — the postings silver shape.  df is a count over a window
+    on the term, so the postings are read (and the corpus tokenized)
+    once; an aggregate joined back would plan a second tokenize for the
+    df side.  The vocabulary grows with the corpus, so nothing is
+    broadcast.  The result is hash-partitioned on the id, so
+    bm25_topk's groupBy(qid, id) needs no exchange."""
     par = post.sparkSession.sparkContext.defaultParallelism
-    dfreq = post.groupBy("term").agg(F.count("*").alias("df"))
     return (
-        post.join(dfreq.hint("shuffle_hash"), "term")
+        post.withColumn("df", F.count("*").over(Window.partitionBy("term")))
         .select(id_col, "dl", "term", "tf", "df")
         .repartition(par, id_col)
     )

@@ -19,8 +19,7 @@ collectors REPLACE their day partition (truncate-and-reload parity),
 and both paths commit through the crash-safe two-phase promotion
 (sources/promote.py), so a crash at any job boundary — or inside a
 promotion — converges on re-run: the batch twin of what
-streaming/block_ingest.py does for the per-block transaction
-(VERDICT r10 item 7).
+streaming/block_ingest.py does for the per-block transaction.
 
 Scale: every MERGE touches only the window's day partitions (3-4 of
 them); the gold inputs are day-grain aggregates, so at 100 TB the read
@@ -35,7 +34,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from classic_fcd_spark.streaming.minute_pipeline import PARTITION_COL, merge_upsert
+from classic_fcd_spark.sources.promote import (
+    DAYS,
+    PARTITION_COL,
+    merge_upsert,
+    read_table,
+    replace_partitions,
+    stored_partitions,
+)
 
 DASHBOARD = "dashboard_gold"
 VALIDATOR_RETURNS = "validator_returns_gold"
@@ -58,28 +64,6 @@ def _window_days(asof_day: str) -> list[str]:
     ]
 
 
-def _existing_days(spark: SparkSession, path: str) -> set[str]:
-    """Heal BEFORE reading (ADVICE r11): after a crashed promotion a
-    stored day parked as `day_pt=X__old` would be invisible to the
-    exists-guard and silently recomputed; finishing the swap first
-    keeps the guard's 'a stored day is left alone' contract across
-    crashes."""
-    from classic_fcd_spark.sources.promote import heal_table
-
-    heal_table(path)
-    if not os.path.isdir(path) or not any(
-        f.startswith(f"{PARTITION_COL}=") for f in os.listdir(path)
-    ):
-        return set()
-    return {
-        r[0]
-        for r in spark.read.parquet(path)
-        .select(PARTITION_COL)
-        .distinct()
-        .collect()
-    }
-
-
 def _merge_window(
     spark: SparkSession,
     gold: DataFrame,
@@ -93,7 +77,10 @@ def _merge_window(
     (skip days already stored unless updateExisting), MERGE by key."""
     scoped = gold.filter(F.col("day").isin(days))
     if not update_existing:
-        skip = _existing_days(spark, table_dir) & set(days)
+        # the listing heals first: after a crashed promotion a stored day
+        # parked as `day_pt=X__old` would be invisible to the guard and
+        # silently recomputed
+        skip = set(stored_partitions(table_dir)) & set(days)
         if skip:
             scoped = scoped.filter(~F.col("day").isin(sorted(skip)))
     merge_upsert(spark, scoped, table_dir, keys, partition_expr=F.col("day"))
@@ -153,36 +140,12 @@ def collect_validator_returns(
     )
 
 
-def _replace_day_partition(
-    spark: SparkSession, snap: DataFrame, table_dir: str, asof_day: str
-) -> None:
-    """TRUNCATE-and-reload semantics for the snapshot tables, scoped to
-    one day partition: the reference deletes the day's rows and reloads
-    from the tracking file (richlist.ts / unvested.ts), so a row that
-    LEFT the file must not survive — an upsert-MERGE would keep it.
-    Implemented as a staged partitioned write + the crash-safe two-phase
-    partition swap (sources/promote.py): the whole day flips atomically,
-    a crash heals on the next open."""
-    import shutil
-
-    from classic_fcd_spark.sources.promote import heal_table, promote_partitions
-
-    heal_table(table_dir)
-    tmp = table_dir.rstrip("/") + "__tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        snap.withColumn(PARTITION_COL, F.col("day"))
-        .write.mode("overwrite")
-        .partitionBy(PARTITION_COL)
-        .parquet(tmp)
-    )
-    promote_partitions(tmp, table_dir, PARTITION_COL, [asof_day])
-
-
 def collect_richlist(spark: SparkSession, out_dir: str, asof_day: str) -> None:
     """richlist.ts — the day's tracking-file snapshot, stamped with the
-    collection day and replaced wholesale (the reference truncates the
-    day and reloads from the tracking file)."""
+    collection day and replaced wholesale: the reference truncates the
+    day and reloads from the tracking file, so an account that LEFT the
+    file must not survive (an upsert-MERGE would keep it).  The whole
+    day partition flips atomically."""
     from classic_fcd_spark.queries.fcd import fcd_richlist
 
     snap = fcd_richlist(spark, "").select(
@@ -191,8 +154,9 @@ def collect_richlist(spark: SparkSession, out_dir: str, asof_day: str) -> None:
         "account",
         "amount",
         "pct_e9",
+        F.lit(asof_day).alias(PARTITION_COL),
     )
-    _replace_day_partition(spark, snap, os.path.join(out_dir, RICHLIST), asof_day)
+    replace_partitions(snap, os.path.join(out_dir, RICHLIST), [asof_day], DAYS)
 
 
 def collect_unvested(spark: SparkSession, out_dir: str, asof_day: str) -> None:
@@ -201,9 +165,12 @@ def collect_unvested(spark: SparkSession, out_dir: str, asof_day: str) -> None:
     from classic_fcd_spark.queries.fcd import fcd_unvested
 
     snap = fcd_unvested(spark, "").select(
-        F.lit(asof_day).alias("day"), "denom", "amount"
+        F.lit(asof_day).alias("day"),
+        "denom",
+        "amount",
+        F.lit(asof_day).alias(PARTITION_COL),
     )
-    _replace_day_partition(spark, snap, os.path.join(out_dir, UNVESTED), asof_day)
+    replace_partitions(snap, os.path.join(out_dir, UNVESTED), [asof_day], DAYS)
 
 
 def run_daily_gold(
@@ -231,10 +198,4 @@ def run_daily_gold(
 
 
 def read_gold(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
-    """Reader with the same heal-on-open discipline as the streaming
-    tables (a crashed promotion is finished before the read)."""
-    from classic_fcd_spark.sources.promote import heal_table
-
-    path = os.path.join(out_dir, table)
-    heal_table(path)
-    return spark.read.parquet(path).drop(PARTITION_COL)
+    return read_table(spark, os.path.join(out_dir, table))

@@ -6,11 +6,10 @@ proposals in ONE database transaction per block, then fires the
 minute-boundary rollups inside the same transaction
 (src/collector/block/block.ts:142-197 saveBlockInformation) — so the
 serving tables can never be ahead of or behind bronze by more than the
-in-flight block.  Before r9 this engine had every piece (minute
-pipeline, extract maintenance, account_tx silver) exactly-once under
-its OWN checkpoint: a crash between streams could leave bronze ahead
-of the extracts with no shared replay boundary (VERDICT r8, missing
-item 1).
+in-flight block.  Every piece (minute pipeline, extract maintenance,
+account_tx silver) is also exactly-once under its OWN checkpoint, but
+separate streams have no shared replay boundary: a crash between them
+could leave bronze ahead of the extracts.
 
 This module composes them: one feed stream, one checkpoint, one
 foreachBatch that per micro-batch writes ALL the reference
@@ -37,11 +36,11 @@ transaction's sinks —
    — bundle feed only; recomputed from blockreward bronze for the
    touched minutes, then MERGE by (minute, denom, rtype))
 
-Feed shapes: a plain TX feed (r9 — sinks 2-8; block entities derive
-from tx heights) or the full BLOCK-BUNDLE feed (r10 —
-build_block_bundle_feed: kind='block' rows carrying proposer +
-reward_events beside kind='tx' rows, the flattened parquet analogue of
-the lcdBlock+blockResults bundle saveBlockInformation receives).  The
+Feed shapes: a plain TX feed (sinks 2-8; block entities derive from
+tx heights) or the full BLOCK-BUNDLE feed (build_block_bundle_feed:
+kind='block' rows carrying proposer + reward_events beside kind='tx'
+rows, the flattened parquet analogue of the lcdBlock+blockResults
+bundle saveBlockInformation receives).  The
 bundle feed covers empty blocks (a block with zero txs still writes
 its entity and rewards) and makes the transaction the reference's full
 seven-sink write set.
@@ -91,8 +90,8 @@ from classic_fcd_spark.serving.extract import (
     merge_account_page_extract,
     merge_tx_lookup_extract,
 )
+from classic_fcd_spark.sources.promote import merge_upsert, read_table
 from classic_fcd_spark.streaming.drain import drain, file_stream
-from classic_fcd_spark.streaming.minute_pipeline import merge_upsert
 
 BRONZE = "txs_bronze"
 BLOCKS = "blocks"
@@ -258,10 +257,10 @@ def detect_proposal_ids(txs: DataFrame) -> DataFrame:
         # REFRESHES by the RAW attr string via lcd.getProposal, so any
         # value that isn't already a bare digit string ('12abc',
         # '0x1A', and whitespace-padded ' 7 ' alike) passes the gate
-        # yet fails the raw-URL fetch and is never stored (ADVICE
-        # r10/r11).  Match that end-to-end behavior by filtering the
-        # UNTRIMMED value: only /^[0-9]+$/ survives — parseInt's trim
-        # is irrelevant because the fetch doesn't trim.
+        # yet fails the raw-URL fetch and is never stored.  Match that
+        # end-to-end behavior by filtering the UNTRIMMED value: only
+        # /^[0-9]+$/ survives — parseInt's trim is irrelevant because
+        # the fetch doesn't trim.
         .select("height", F.col("a.value").alias("pid_str"))
         .filter(F.col("pid_str").rlike(r"^[0-9]+$"))
     )
@@ -396,7 +395,7 @@ def ingest_block_batch(
     finally:
         # unpersist BOTH caches on every exit path — a sink raising
         # after blks.cache() must not leak cached blocks across
-        # crash/replay cycles (ADVICE r10)
+        # crash/replay cycles
         txs.unpersist()
         if blks is not None:
             blks.unpersist()
@@ -547,12 +546,7 @@ def read_account_tx(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
-    from classic_fcd_spark.sources.promote import heal_table
-    from classic_fcd_spark.streaming.minute_pipeline import PARTITION_COL
-
-    path = os.path.join(out_dir, ROLLUP)
-    heal_table(path)
-    return spark.read.parquet(path).drop(PARTITION_COL)
+    return read_table(spark, os.path.join(out_dir, ROLLUP))
 
 
 def read_blocks(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -569,18 +563,8 @@ def read_rewards_bronze(
 
 
 def read_reward_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
-    from classic_fcd_spark.sources.promote import heal_table
-    from classic_fcd_spark.streaming.minute_pipeline import PARTITION_COL
-
-    path = os.path.join(out_dir, REWARD_ROLLUP)
-    heal_table(path)
-    return spark.read.parquet(path).drop(PARTITION_COL)
+    return read_table(spark, os.path.join(out_dir, REWARD_ROLLUP))
 
 
 def read_proposals(spark: SparkSession, out_dir: str) -> DataFrame:
-    from classic_fcd_spark.sources.promote import heal_table
-    from classic_fcd_spark.streaming.minute_pipeline import PARTITION_COL
-
-    path = os.path.join(out_dir, PROPOSALS)
-    heal_table(path)
-    return spark.read.parquet(path).drop(PARTITION_COL)
+    return read_table(spark, os.path.join(out_dir, PROPOSALS))

@@ -14,11 +14,10 @@ both from the postings), so no separate stats state needs maintaining.
 
 Exactly-once: a blind append inside foreachBatch is only at-least-once
 (a batch replayed after a crash between the write and the checkpoint
-commit would double its docs' tf/df).  The write therefore targets a
-`batch_pt=<batch_id>` partition with dynamic partition overwrite — a
-replayed batch OVERWRITES its own partition instead of appending next
-to its first attempt, the standard idempotent-foreachBatch recipe (the
-same mechanism as the streaming MERGE sink).
+commit would double its docs' tf/df).  The write is therefore the
+growing-index append of streaming/index_store.py: a replayed batch
+OVERWRITES its own `batch_pt=<batch_id>` partition instead of appending
+next to its first attempt.
 """
 
 from __future__ import annotations
@@ -29,6 +28,7 @@ from pyspark.sql import DataFrame
 
 from classic_fcd_spark.operators.bm25 import bm25_postings
 from classic_fcd_spark.streaming.drain import drain, file_stream
+from classic_fcd_spark.streaming.index_store import BATCH_COL, write_index_batch
 
 
 def run_postings_available_now(
@@ -55,19 +55,9 @@ def write_postings_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Idempotent per-batch postings write: dynamic overwrite of this
-    batch's own partition, so a replay cannot double-append."""
-    from pyspark.sql import functions as F
-
-    (
-        bm25_postings(bdf, id_col, text_col)
-        .withColumn("batch_pt", F.lit(str(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_pt")
-        .parquet(postings_dir)
-    )
+    """Idempotent per-batch postings write (a replay cannot double-append)."""
+    write_index_batch(bm25_postings(bdf, id_col, text_col), postings_dir, batch_id)
 
 
 def read_postings(spark: Any, postings_dir: str) -> DataFrame:
-    return spark.read.parquet(postings_dir).drop("batch_pt")
+    return spark.read.parquet(postings_dir).drop(BATCH_COL)

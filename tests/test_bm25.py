@@ -99,6 +99,20 @@ class TestBM25Plan:
 
     QUERIES = [(0, ["join"])]
 
+    def test_silver_tokenizes_once_and_is_id_partitioned(self, spark):
+        """The postings silver (with_df over bm25_postings) reads the
+        tokens once: one Generate in its plan, df derived from the same
+        tf rows, and the result hash-partitioned on doc_id for the
+        exchange-free scoring groupBy.  Planted rows, so no persisted
+        silver of another test stands in for the plan."""
+        from classic_fcd_spark.operators.bm25 import with_df
+
+        docs = spark.createDataFrame(ROWS, ["doc_id", "text"])
+        silver = with_df(bm25_postings(docs))
+        plan = silver._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Generate ") == 1, plan
+        assert "hashpartitioning(doc_id" in plan.splitlines()[1], plan
+
 
 class TestRRFFusion:
     def test_matches_python_reference(self, spark):

@@ -11,6 +11,9 @@
 - Every cache is keyed through the session registry in session.py, on
   the session UUID: nothing keys on `id(spark)` (reusable after GC) or
   on `applicationId` (shared by every `newSession()` of one context).
+- Every parquet table commit goes through sources/promote.py: no other
+  module stages a `__tmp` tree, promotes partitions or heals a table,
+  so the crash-safe commit and heal-on-read exist once.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ import re
 PKG = pathlib.Path(__file__).resolve().parent.parent / "classic_fcd_spark"
 DRAIN = PKG / "streaming" / "drain.py"
 SESSION = PKG / "session.py"
+PROMOTE = PKG / "sources" / "promote.py"
 
 
 def _hits(pattern: str, skip: tuple[pathlib.Path, ...] = ()) -> list[str]:
@@ -85,3 +89,20 @@ class TestCacheGuard:
         assert re.search(self.ID_SPARK, "key = (id(spark), sf_dir)")
         assert re.search(self.APP_ID, "spark.sparkContext.applicationId")
         assert _hits(r"sessionUUID")
+
+
+class TestCommitGuard:
+    PATTERNS = (r"\bpromote_partitions\(", r"\bheal_table\(", r"__tmp\b")
+
+    def test_commit_only_in_promote(self):
+        for pattern in self.PATTERNS:
+            assert _hits(pattern, skip=(PROMOTE,)) == [], pattern
+
+    def test_scan_sees_the_commit(self):
+        # guards the guard: each pattern matches the form it forbids, and
+        # the scan reaches the one module that stages, promotes and heals
+        forms = ("promote_partitions(tmp, d, c, v)", "heal_table(path)", 'd + "__tmp"')
+        for pattern, form in zip(self.PATTERNS, forms):
+            assert re.search(pattern, form)
+            files = {h.rsplit(":", 1)[0] for h in _hits(pattern)}
+            assert files == {"classic_fcd_spark/sources/promote.py"}, pattern

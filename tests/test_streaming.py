@@ -126,9 +126,9 @@ class TestStreamingMinuteRollup:
         nor rewrite day d1's files — the read prunes partitions (checked
         on the physical plan) and the write promotes only touched
         partition dirs (checked via file inodes/mtimes)."""
-        from classic_fcd_spark.streaming.minute_pipeline import (
+        from classic_fcd_spark.sources.promote import (
             PARTITION_COL,
-            _existing_touched,
+            read_partitions,
         )
 
         out = os.path.join(workdir, "scoped_out")
@@ -149,7 +149,7 @@ class TestStreamingMinuteRollup:
 
         # the read side prunes: only d2's partition reaches the scan
         plan = (
-            _existing_touched(spark, out, ["2021-01-02"])
+            read_partitions(spark, out, ["2021-01-02"], PARTITION_COL)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -288,12 +288,29 @@ class TestDimRefresh:
 
 
 class TestMergeUpsertProperty:
-    def test_random_batch_sequences_match_dict_reference(self, spark, workdir):
+    @pytest.mark.parametrize("layout", ["day_prefix", "kb_bucket"])
+    def test_random_batch_sequences_match_dict_reference(
+        self, spark, workdir, layout
+    ):
         """S9 as a property: any sequence of upsert batches (including
         replays) must leave the table equal to a dict applied in the same
-        order — MERGE semantics, partition layout irrelevant."""
+        order — MERGE semantics, partition layout irrelevant.  Run over
+        the day-prefix layout of the rollups and the md5-bucket layout
+        of the serving extracts (bucket column + in-bucket sort order);
+        either way each touched partition holds one data file."""
         import itertools
         import random
+
+        from classic_fcd_spark.serving.extract import _bucket_expr
+        from classic_fcd_spark.sources.promote import Layout
+
+        if layout == "kb_bucket":
+            kw = {
+                "partition_expr": _bucket_expr("minute", 3),
+                "layout": Layout("kb", ("minute", "event_type DESC")),
+            }
+        else:
+            kw = {}
 
         rng = random.Random(11)
         minutes = [f"2021-01-0{d} 00:0{m}:00" for d in (1, 2) for m in (1, 2)]
@@ -310,11 +327,14 @@ class TestMergeUpsertProperty:
             df = spark.createDataFrame(
                 batch, ["minute", "event_type", "n_events", "sum_value"]
             )
-            merge_upsert(spark, df, out, ["minute", "event_type"])
+            merge_upsert(spark, df, out, ["minute", "event_type"], **kw)
             if rng.random() < 0.4:  # replay the same batch (restart)
-                merge_upsert(spark, df, out, ["minute", "event_type"])
+                merge_upsert(spark, df, out, ["minute", "event_type"], **kw)
         got = {
             (r["minute"], r["event_type"]): (r["n_events"], r["sum_value"])
             for r in spark.read.parquet(out).collect()
         }
         assert got == ref
+        for part in os.listdir(out):
+            files = os.listdir(os.path.join(out, part))
+            assert len([f for f in files if f.endswith(".parquet")]) == 1, part
