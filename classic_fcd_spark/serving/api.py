@@ -59,11 +59,13 @@ def get_tx_list(
         .orderBy(F.col("height").desc(), F.col("hash").desc())
         .limit(limit + 1)
     )
-    # J4: page of ids ⋉ tx — broadcast the tiny page side
-    rows = (
-        txs.join(F.broadcast(page), ["hash", "height"], "left_semi")
-        .orderBy(F.col("height").desc(), F.col("hash").desc())
-        .collect()
+    # J4: page of ids ⋉ tx — broadcast the tiny page side.  The ≤ limit+1
+    # matched rows go into keyset order on the driver: a global orderBy
+    # here would add a sampling job and an exchange for those few rows
+    rows = sorted(
+        txs.join(F.broadcast(page), ["hash", "height"], "left_semi").collect(),
+        key=lambda r: (r["height"], r["hash"]),
+        reverse=True,
     )
     next_cursor = None
     if len(rows) > limit:
@@ -103,7 +105,7 @@ def enrich_account_txs(
     THE exchange-regime join: one deposit-sweep account can hold ~20%
     of all account_tx rows (measured at 20M rows — unsalted straggler
     3.43 s, partition spread 7.15x; 16-salt repair → 1.90x, p99 −28%;
-    BENCH_NOTES r11), and a 1000-executor stage is bounded by that one
+    BENCH_NOTES), and a 1000-executor stage is bounded by that one
     straggler task.  So the join runs through auto_salted_join
     (operators/skewjoin.py): a Misra-Gries heavy-hitters pass detects
     keys above `min_share` of the fact, and ONLY then engages the salt
@@ -114,7 +116,7 @@ def enrich_account_txs(
     bounded Arrow scan of the fact.  Left join: enrichment never drops
     a fact row for a dim miss.
 
-    `memo_key` (r15): when the fact is a per-corpus silver, pass its
+    `memo_key`: when the fact is a per-corpus silver, pass its
     generation key so the detection verdict (the hot-key list) is reused
     across calls instead of re-scanning the fact each time."""
     from classic_fcd_spark.operators.skewjoin import auto_salted_join

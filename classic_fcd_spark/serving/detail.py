@@ -1,5 +1,5 @@
 """Response-shape wrappers for the last reference read endpoints that
-previously had only query-layer gates (the r6 manifest's `query` rows):
+previously had only query-layer gates (the manifest's `query` rows):
 proposal detail, the per-operator staking pages (delegations / claims /
 delegators / return), the bank balance view, and the treasury surface
 (taxproceeds / richlist / totalsupply / circulatingsupply), plus the
@@ -52,7 +52,7 @@ from classic_fcd_spark import session
 from classic_fcd_spark.serving.endpoints import (
     _dashboard_days,
     _day_ms,
-    _latest_price_at,
+    _latest_prices,
     _money,
 )
 from classic_fcd_spark.sources.fixtures import (
@@ -451,7 +451,7 @@ def get_delegators_page(
         .groupBy(F.col("delegator_address").alias("address"))
         .agg(F.sum("shares").cast("long").alias("amount"))
     )
-    # a popular validator's delegator set is unbounded (r7 advice): the
+    # a popular validator's delegator set is unbounded: the
     # page order + LIMIT run in Spark (TakeOrdered — distributed, no
     # unpartitioned window) and only page*limit rows ever reach the
     # driver; totalCnt/total come from one bounded 1-row aggregate
@@ -554,8 +554,8 @@ def get_account_balance(spark: SparkSession, address: str) -> dict:
     # the per-coin arithmetic stays the gated column algebra, but as ONE
     # plan over the coins array — one row per coin carrying its own
     # schedules, freed_rate and vesting_balance evaluated in the same
-    # select, one collect (r7 verdict item 7: the previous form launched
-    # a Spark job per coin and per vesting schedule in a Python loop)
+    # select, one collect (not a Spark job per coin and per vesting
+    # schedule in a Python loop)
     coin_rows = [
         (
             c["denom"],
@@ -686,7 +686,7 @@ def get_tax_proceeds(spark: SparkSession) -> dict:
         .agg(F.sum("tax").alias("amount"))
         .collect()
     )
-    prices = _latest_price_at(spark)
+    prices = _latest_prices(spark)[0]
     total = Decimal(0)
     proceeds = []
     for r in _sort_denoms([{"denom": r["denom"], "amount": int(r["amount"])} for r in sums]):
@@ -727,6 +727,9 @@ def get_rich_list(
         return []
     rows = (
         read_richlist_csv(spark, path, denom)
+        # the page never reads the share-of-total column: selecting past
+        # it lets the optimizer drop its sum-over-() window and exchange
+        .select("account", "amount")
         .orderBy(F.col("amount").desc(), "account")
         .limit(page * limit)
         .collect()

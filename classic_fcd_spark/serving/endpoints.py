@@ -22,10 +22,16 @@ the distributed plan from the query layer:
 - get_denom_swap_rate   ← GET /v1/market/swaprate/:base
   (src/service/market/getSwapRate.ts:19-40 + helper.ts:42-60 getSwapRate)
 
-Scale note: every wrapper collects ONLY a bounded page / dim-sized
-result (a page of votes, the 20-validator dim, 50 price buckets, one
-row per denom); the heavy work (vote dedupe window, delegation rollup,
-price bucketing) stays in the distributed plan.  Money strings are
+One plan per request.  A warm request on this engine costs mostly fixed
+per-job overhead (job submission, stage scheduling, task launch), not
+executor CPU, so a wrapper whose response is one relation answers with
+one collected plan: the existence check, the page and its total ride in
+that plan, not in extra collects.  The driver only reorders or sums rows
+it has already collected, and only dim-bounded ones (the 20-validator
+dim, one row per denom); the unbounded work (vote dedupe, delegation
+rollup, price bucketing) stays in the distributed plan.  Each bench
+route family's warm job count is a reviewed budget
+(tests/test_job_budget.py, WARM_ROUTE_BUDGETS).  Money strings are
 decimal(38,10)-scale (the engine's DECIMAL_T policy, SURVEY §1.3); the
 reference's BigNumber default precision differs in trailing digits only.
 """
@@ -39,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from classic_fcd_spark.sources.fixtures import (
+    FIXTURE_NOW_EPOCH,
     gen_delegations,
     gen_deposits,
     gen_prices,
@@ -74,10 +81,47 @@ def _account_info(row, addr_field: str) -> dict:
     return info
 
 
-def _validator_accounts(spark: SparkSession):
-    return gen_validators(spark).select(
-        "account_address", "operator_address", "moniker"
+def _proposal_page(
+    spark: SparkSession,
+    proposal_id: int,
+    rows: DataFrame,
+    addr_col: str,
+    id_col: str,
+    page: int,
+    limit: int,
+) -> tuple[int, list]:
+    """(totalCnt, page rows) of one proposal's `rows` (votes or
+    deposits) in one collect: the total is `count(*) over ()`, the page
+    is newest `id_col` first with its `addr_col` account enriched from
+    the validator dim, and a marker row from the proposals table is the
+    existence check.  Raises KeyError for an unknown proposal.  A page
+    past the end carries no total, so only then a second job counts."""
+    paged = (
+        rows.withColumn("total_cnt", F.count("*").over(Window.partitionBy()))
+        .join(
+            F.broadcast(
+                gen_validators(spark).select(
+                    "account_address", "operator_address", "moniker"
+                )
+            ),
+            F.col(addr_col) == F.col("account_address"),
+            "left",
+        )
+        .orderBy(F.col(id_col).desc())
+        .offset((page - 1) * limit)
+        .limit(limit)
     )
+    found = (
+        gen_proposals(spark)
+        .filter(F.col("proposal_id") == proposal_id)
+        .select(F.lit(True).alias("found"))
+    )
+    got = paged.unionByName(found, allowMissingColumns=True).collect()
+    if not any(r["found"] for r in got):
+        raise KeyError(f"Proposal not found: {proposal_id}")
+    page_rows = [r for r in got if not r["found"]]
+    total_cnt = page_rows[0]["total_cnt"] if page_rows else rows.count()
+    return total_cnt, page_rows
 
 
 def get_proposal_votes(
@@ -96,33 +140,21 @@ def get_proposal_votes(
     'Yes' page even if an earlier vote was 'Yes'), (4) totalCnt counts
     the FILTERED set, (5) drop/take paging.  Raises KeyError for an
     unknown proposal (the reference's APIError NOT_FOUND)."""
-    props = {
-        r["proposal_id"]
-        for r in gen_proposals(spark).select("proposal_id").collect()
-    }
-    if proposal_id not in props:
-        raise KeyError(f"Proposal not found: {proposal_id}")
-    votes = gen_votes(spark).filter(F.col("proposal_id") == proposal_id)
-    w = Window.partitionBy("voter").orderBy(F.col("vote_id").desc())
     latest = (
-        votes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+        gen_votes(spark)
+        .filter(F.col("proposal_id") == proposal_id)
+        # the page and its total need the whole deduped set in one
+        # partition: one shuffle puts it there, and the dedupe, the
+        # count and the page then run with no further exchange
+        .repartition(1, "voter")
+        .groupBy("voter")
+        .agg(F.max_by(F.struct("vote_id", "option"), "vote_id").alias("v"))
+        .select("voter", "v.vote_id", "v.option")
     )
     if option is not None:
         latest = latest.filter(F.col("option") == option)
-    total_cnt = latest.count()
-    page_rows = (
-        latest.join(
-            F.broadcast(_validator_accounts(spark)),
-            latest["voter"] == F.col("account_address"),
-            "left",
-        )
-        .orderBy(F.col("vote_id").desc())
-        .offset((page - 1) * limit)
-        .limit(limit)
-        .select("vote_id", "voter", "option", "operator_address", "moniker")
-        .collect()
+    total_cnt, page_rows = _proposal_page(
+        spark, proposal_id, latest, "voter", "vote_id", page, limit
     )
     return {
         "totalCnt": total_cnt,
@@ -142,25 +174,9 @@ def get_proposal_deposits(
     first (the reference reverses the stored order before paging);
     deposit amounts keep the Coin[] shape; depositor enriched like the
     votes page.  Raises KeyError for an unknown proposal."""
-    props = {
-        r["proposal_id"]
-        for r in gen_proposals(spark).select("proposal_id").collect()
-    }
-    if proposal_id not in props:
-        raise KeyError(f"Proposal not found: {proposal_id}")
     deps = gen_deposits(spark).filter(F.col("proposal_id") == proposal_id)
-    total_cnt = deps.count()
-    page_rows = (
-        deps.join(
-            F.broadcast(_validator_accounts(spark)),
-            deps["depositor"] == F.col("account_address"),
-            "left",
-        )
-        .orderBy(F.col("deposit_id").desc())
-        .offset((page - 1) * limit)
-        .limit(limit)
-        .select("deposit_id", "depositor", "amount", "operator_address", "moniker")
-        .collect()
+    total_cnt, page_rows = _proposal_page(
+        spark, proposal_id, deps, "depositor", "deposit_id", page, limit
     )
     return {
         "totalCnt": total_cnt,
@@ -268,28 +284,32 @@ def _assemble_staking_view(rows, my_undelegations: list[dict]) -> dict:
     }
 
 
-def _latest_price_at(spark: SparkSession, cutoff_s: int | None = None) -> dict:
-    """Newest price per denom, optionally at-or-before a cutoff epoch —
-    one window over the minute table, |denoms| rows collected (the
-    getOnedayBefore / getActiveOraclePrices shape)."""
-    p = gen_prices(spark)
-    if cutoff_s is not None:
-        p = p.filter(F.col("datetime") <= F.timestamp_seconds(F.lit(cutoff_s)))
-    w = Window.partitionBy("denom").orderBy(F.col("datetime").desc())
+# helper.ts:21-40 getOnedayBefore: the newest price at or before
+# midnight-minus-one-minute of "now" is the one-day-ago price
+_DAY_CUT_S = (FIXTURE_NOW_EPOCH // 86400) * 86400 - 60
+
+
+def _latest_prices(spark: SparkSession) -> tuple[dict, dict]:
+    """(newest price per denom, newest at or before the one-day cut) —
+    the getActiveOraclePrices / getOnedayBefore pair from one aggregate
+    over the minute table, |denoms| rows collected.  A denom with no
+    price at or before the cut is absent from the second dict."""
+    cut = F.col("datetime") <= F.timestamp_seconds(F.lit(_DAY_CUT_S))
     rows = (
-        p.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("denom", "price")
+        gen_prices(spark)
+        .groupBy("denom")
+        .agg(
+            F.max_by("price", "datetime").alias("now"),
+            F.max_by(
+                F.when(cut, F.col("price")), F.when(cut, F.col("datetime"))
+            ).alias("before"),
+        )
         .collect()
     )
-    return {r["denom"]: float(r["price"]) for r in rows}
-
-
-def fixture_now_epoch(spark: SparkSession) -> int:
-    """The fixture's 'now': its newest price minute (the reference uses
-    wall-clock Date.now(); a deterministic fixture pins it instead)."""
-    row = gen_prices(spark).agg(F.max("datetime").alias("m")).collect()[0]
-    return int(row["m"].timestamp())
+    return (
+        {r["denom"]: float(r["now"]) for r in rows},
+        {r["denom"]: float(r["before"]) for r in rows if r["before"] is not None},
+    )
 
 
 def get_market_price(
@@ -309,7 +329,6 @@ def get_market_price(
     in the reference — money-string scale here)."""
     from classic_fcd_spark.pipeline.prices import price_interval_buckets_e6
 
-    now_s = fixture_now_epoch(spark)
     p = gen_prices(spark).filter(F.col("denom") == denom)
     agg = (
         price_interval_buckets_e6(p, interval_minutes)
@@ -326,9 +345,9 @@ def get_market_price(
         }
         for r in reversed(agg)
     ]
-    last = _latest_price_at(spark).get(denom)
-    day_cut = (now_s // 86400) * 86400 - 60
-    before = _latest_price_at(spark, day_cut).get(denom)
+    now, day_before = _latest_prices(spark)
+    last = now.get(denom)
+    before = day_before.get(denom)
     variation = None
     rate = None
     if last is not None and before is not None:
@@ -359,7 +378,7 @@ def get_dashboard_general_info(spark: SparkSession) -> dict:
     )
     from classic_fcd_spark.sources.fixtures import gen_general_info, gen_issuances
 
-    prices = {d: _money(p) for d, p in _latest_price_at(spark).items()}
+    prices = {d: _money(p) for d, p in _latest_prices(spark)[0].items()}
     issuances = {
         r["denom"]: _money(int(r["issuance"]))
         for r in gen_issuances(spark).collect()
@@ -407,21 +426,15 @@ def get_validators_listing(spark: SparkSession) -> list[dict]:
     operatorAddress, accountAddress, description.moniker, votingPower
     (weight + share-of-total rate, both money strings), and
     commissionInfo.rate.  One dim-bounded collect; the share denominator
-    is a 1-row aggregate."""
-    from classic_fcd_spark.sources.fixtures import gen_validators
-
-    vals = gen_validators(spark)
-    rows = (
-        vals.withColumn(
-            "total", F.sum("voting_power").over(Window.partitionBy())
-        )
-        .orderBy(F.col("voting_power").desc(), F.col("operator_address"))
-        .collect()
+    is the sum of the collected rows."""
+    rows = sorted(
+        gen_validators(spark).collect(),
+        key=lambda r: (-r["voting_power"], r["operator_address"]),
     )
+    total = sum(Decimal(str(r["voting_power"])) for r in rows)
     out = []
     for r in rows:
         weight = Decimal(str(r["voting_power"]))
-        total = Decimal(str(r["total"]))
         out.append(
             {
                 "operatorAddress": r["operator_address"],
@@ -471,17 +484,17 @@ def get_proposals_listing(spark: SparkSession) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
-# Bronze-source seam (r13, VERDICT r12 item 2): in production the
-# dashboard/account endpoint family reads STORED bronze/silver tables
-# written by the streaming ingest; the fixture generators stand in for
-# those tables in the default (test/demo) deployment.  bronze_sources()
-# swaps the stored tables in for a scope — the day-in-the-life e2e pins
-# endpoint responses over the INGESTED tables against the fixture-bronze
-# twins (the engine's analogue of dashboard.spec.ts running over a
-# freshly collected database).  The scope lives in a ContextVar holding
-# an IMMUTABLE mapping (ADVICE r13): nested and concurrent scopes are
-# safe by construction — each enter builds a merged copy and each exit
-# restores the caller's view via the token, instead of relying on a
+# Bronze-source seam: in production the dashboard/account endpoint
+# family reads STORED bronze/silver tables written by the streaming
+# ingest; the fixture generators stand in for those tables in the
+# default (test/demo) deployment.  bronze_sources() swaps the stored
+# tables in for a scope — the day-in-the-life e2e pins endpoint
+# responses over the INGESTED tables against the fixture-bronze twins
+# (the engine's analogue of dashboard.spec.ts running over a freshly
+# collected database).  The scope lives in a ContextVar holding an
+# IMMUTABLE mapping: nested and concurrent scopes are safe by
+# construction — each enter builds a merged copy and each exit restores
+# the caller's view via the token, instead of relying on a
 # single-writer convention over a module-global dict.
 # ---------------------------------------------------------------------------
 import contextvars as _contextvars
@@ -507,8 +520,8 @@ def bronze_sources(
     `account_tx` (the account_tx silver — pass the streamed one to skip
     re-deriving the regex address walk the ingest already paid for).
 
-    Thread-locality (ADVICE r14): the scope lives in a ContextVar, so a
-    worker thread SPAWNED INSIDE this scope starts from the default
+    Thread-locality: the scope lives in a ContextVar, so a worker
+    thread SPAWNED INSIDE this scope starts from the default
     empty context and falls back to fixture sources — unlike the old
     module-global dict, which was process-visible.  Nothing in the repo
     threads through here today; if a future serving layer does, pass
@@ -813,10 +826,9 @@ def get_denom_swap_rate(spark: SparkSession, base: str) -> list[dict]:
                 out[d] = Decimal(str(v)) / pb
         return out
 
-    now_rates = swap_rates(_latest_price_at(spark))
-    now_s = fixture_now_epoch(spark)
-    day_cut = (now_s // 86400) * 86400 - 60
-    before_rates = swap_rates(_latest_price_at(spark, day_cut))
+    now, day_before = _latest_prices(spark)
+    now_rates = swap_rates(now)
+    before_rates = swap_rates(day_before)
     rows = []
     for d in sorted(now_rates):
         cur = now_rates[d]

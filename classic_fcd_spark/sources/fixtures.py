@@ -285,6 +285,9 @@ def gen_txs(spark: SparkSession, n: int = FIXTURE_N_BLOCKS) -> DataFrame:
 # (600 × 450 s), so every (day, denom) reward row finds a daily avg price;
 # both sides scale by FIXTURE_SCALE so the ratio is scale-invariant.
 FIXTURE_N_PRICE_MINUTES = 4500 * FIXTURE_SCALE
+# The fixture's "now": its newest price minute.  The reference uses
+# wall-clock Date.now(); a deterministic fixture pins it instead.
+FIXTURE_NOW_EPOCH = EPOCH_START + (FIXTURE_N_PRICE_MINUTES - 1) * 60
 
 
 @bronze_table

@@ -1,12 +1,12 @@
-"""Warm Spark-job budgets per query at sf0.001: a reviewed table, not a
-number a test edit may raise in passing.
+"""Warm Spark-job budgets per query at sf0.001 and per serving route
+family: reviewed tables, not numbers a test edit may raise in passing.
 
 A warm call on this engine costs mostly fixed per-job overhead (job
 submission, stage scheduling, task launch), not executor CPU, so the
 number of jobs a warm call launches is the cost this gate holds.  Each
-query runs once cold (filling its session silvers and memos), then once
-more inside a job group; the group's job ids are the warm call's jobs,
-plan-time probes included.
+query or request runs once cold (filling its session silvers and memos),
+then once more inside a job group; the group's job ids are the warm
+call's jobs, plan-time probes included.
 
 Raising an entry needs the same review as `scripts/plan_audit.py`'s
 `ALLOW`: say in the change's notes which job was added and why it pays.
@@ -32,13 +32,30 @@ WARM_JOB_BUDGETS = {
 }
 
 
-def _warm_jobs(spark, fn) -> int:
-    fn(spark, SF_SMALL).collect()
+# route family (perfbench's api_serving REQUEST_MIX) -> most warm jobs
+# of one request, each its measured count.  The three point reads are
+# one pruned scan each; every other route is one collected plan plus the
+# jobs its exchanges and broadcasts cost under adaptive execution.
+WARM_ROUTE_BUDGETS = {
+    "lookup_tx": 1,
+    "account_page": 1,
+    "hot_walk": 1,
+    "tx_list": 2,  # the page's top-k exchange, then the semi-join collect
+    "dashboard": 4,  # price aggregate (2), issuances, newest snapshot
+    "governance": 3,  # one shuffle, the validator-dim broadcast, collect
+    "staking": 1,
+    "market": 2,  # the one price aggregate: its exchange and collect
+    "bank": 1,
+}
+
+
+def _warm_jobs(spark, call, name: str) -> int:
+    call()
     sc = spark.sparkContext
-    group = f"test_job_budget:{fn.__name__}"
-    sc.setJobGroup(group, f"warm {fn.__name__}")
+    group = f"test_job_budget:{name}"
+    sc.setJobGroup(group, f"warm {name}")
     try:
-        fn(spark, SF_SMALL).collect()
+        call()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -49,5 +66,55 @@ def _warm_jobs(spark, fn) -> int:
 def test_warm_call_within_budget(spark, name):
     module, budget = WARM_JOB_BUDGETS[name]
     fn = getattr(importlib.import_module(module), name)
-    jobs = _warm_jobs(spark, fn)
+    jobs = _warm_jobs(spark, lambda: fn(spark, SF_SMALL).collect(), name)
     assert 0 < jobs <= budget, f"{name}: {jobs} warm jobs, budget {budget}"
+
+
+@pytest.fixture(scope="module")
+def extract(spark, tmp_path_factory):
+    """The point-read extracts of the fixture txs, written once."""
+    from classic_fcd_spark.pipeline.medallion import account_tx_silver
+    from classic_fcd_spark.serving.extract import (
+        write_account_page_extract,
+        write_tx_lookup_extract,
+    )
+    from classic_fcd_spark.sources.fixtures import gen_txs
+
+    out = str(tmp_path_factory.mktemp("route_extract"))
+    write_tx_lookup_extract(gen_txs(spark), out)
+    write_account_page_extract(account_tx_silver(gen_txs(spark)), out)
+    return out
+
+
+def _route_call(spark, family: str, extract: str):
+    """One request of `family` as api_serving sends it, on fixture
+    sources (the point reads on the fixture's extract)."""
+    import classic_fcd_spark.serving.detail as D
+    import classic_fcd_spark.serving.endpoints as E
+    from classic_fcd_spark.serving.api import get_tx_list
+    from classic_fcd_spark.serving.extract import lookup_account_page, lookup_tx
+    from classic_fcd_spark.sources.fixtures import addr_str, gen_txs, tx_hash_str
+
+    acct = addr_str(3)
+    if family == "hot_walk":
+        # the walk's second page: keyset cursor = the first page's last row
+        last = lookup_account_page(spark, extract, acct)[9]
+        cursor = (last["height"], last["hash"])
+        return lambda: lookup_account_page(spark, extract, acct, offset=cursor)
+    return {
+        "lookup_tx": lambda: lookup_tx(spark, extract, tx_hash_str(95 * 3)).collect(),
+        "account_page": lambda: lookup_account_page(spark, extract, acct),
+        "tx_list": lambda: get_tx_list(gen_txs(spark), E._account_tx(spark), acct),
+        "dashboard": lambda: E.get_dashboard_general_info(spark),
+        "governance": lambda: E.get_proposal_votes(spark, 1),
+        "staking": lambda: E.get_validators_listing(spark),
+        "market": lambda: E.get_denom_swap_rate(spark, "ukrw"),
+        "bank": lambda: D.get_rich_list(spark, "uluna"),
+    }[family]
+
+
+@pytest.mark.parametrize("family", sorted(WARM_ROUTE_BUDGETS))
+def test_warm_route_within_budget(spark, extract, family):
+    budget = WARM_ROUTE_BUDGETS[family]
+    jobs = _warm_jobs(spark, _route_call(spark, family, extract), family)
+    assert 0 < jobs <= budget, f"{family}: {jobs} warm jobs, budget {budget}"

@@ -294,7 +294,7 @@ class TestCrashSafePromotion:
     promotion can die at ANY rename boundary without losing previously
     merged history — a manifest precedes the first move, each swap
     parks the live bucket before the staged one moves in, and
-    heal_extract (run by the next open OR the next merge) converges to
+    heal_table (run by the next open OR the next merge) converges to
     the exact state an uninterrupted merge would have produced."""
 
     @staticmethod
