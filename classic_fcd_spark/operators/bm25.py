@@ -149,15 +149,11 @@ def bm25_topk(
     qpairs = list(dict.fromkeys((qid, t) for qid, terms in queries for t in terms))
     if postings is None:
         postings = bm25_postings(docs, id_col, text_col)
-    if "df" in postings.columns:
-        post = postings
-    else:
-        # the stats collect below is an ACTION: without a persist the
-        # scoring job would rebuild the postings and df lineage a second
-        # time (shuffles are not reused across separate jobs)
-        from classic_fcd_spark.session import scoped_persist
-
-        post = scoped_persist(with_df(postings, id_col), "bm25:postings")
+    # a caller that scores one corpus repeatedly passes its df-carrying
+    # silver (session.bm25_postings_table); any other postings get df
+    # here as a lazy plan, which the stats collect and the scoring job
+    # each evaluate
+    post = postings if "df" in postings.columns else with_df(postings, id_col)
 
     def _empty() -> DataFrame:
         # empty-path schema must equal the non-empty path's, whatever

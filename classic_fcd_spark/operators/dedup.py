@@ -202,11 +202,11 @@ def choose_lsh_bands(
     return best[1]
 
 
-# Per-task working-set cap for the band self-join (VERDICT r13 item 2).
+# Per-task working-set cap for the band self-join.
 # A sort-merge self-join on (band, bh) buffers one side's ENTIRE band
 # group per key, so its memory is bounded only by the largest bucket —
 # which on an adversarial (all-identical) or heavily-cloned corpus is
-# the whole corpus: the r13 sf10 run hit UNABLE_TO_ACQUIRE_MEMORY in
+# the whole corpus: an sf10 run hit UNABLE_TO_ACQUIRE_MEMORY in
 # exactly this join and was "fixed" by 64 GB of driver — vertical
 # scaling a 100 TB design cannot assume.  Buckets larger than this are
 # split into ceil(n/K) sub-groups by a secondary hash of the id and the
@@ -218,12 +218,12 @@ def choose_lsh_bands(
 # degenerate path: zero replication.
 MAX_BAND_GROUP = 4096
 
-# Duplicate-mass dispatch for the r14 collapse (r15, VERDICT r14 item 3).
+# Duplicate-mass dispatch for the duplicate collapse.
 # collapse_by_shingles is a pure PERFORMANCE rewrite — both the collapsed
 # and the direct plan emit the exact same pair set — but the collapse
 # costs a full groupBy on the shingle arrays plus two member-expansion
-# joins, which r14 charged to EVERY corpus: 2.73x on minhash at sf0.1,
-# where the planted duplicate mass is 8 docs out of 5000.  The extra
+# joins, which an always-on collapse charges to EVERY corpus: 2.73x on
+# minhash at sf0.1, where the planted duplicate mass is 8 docs of 5000.  The extra
 # verify work the direct plan risks is bounded by the duplicate PAIRS it
 # re-verifies: sum_g C(m_g,2) <= n_dup_docs * max_m / 2 (n_dup_docs =
 # n_docs - n_distinct; within a group of size m there are (m-1) redundant
@@ -232,8 +232,8 @@ MAX_BAND_GROUP = 4096
 # ~COLLAPSE_DUP_MASS/2 extra pairs (~3M shingle-token rows at the
 # default — noise at any scale); above it (clone corpora, adversarial
 # all-identical) the collapse's distinct-sized verify is the difference
-# between 1x and multiplicity-quadratic shuffle volume (the r13 sf10
-# 125 GB verify).  Stats come from session.shingle_stats — one cached
+# between 1x and multiplicity-quadratic shuffle volume (a 125 GB sf10
+# verify).  Stats come from session.shingle_stats — one cached
 # fingerprint aggregate per corpus, never a per-query probe.
 COLLAPSE_DUP_MASS = 1 << 16
 
@@ -261,20 +261,20 @@ def adaptive_band_self_join(
     An honest corpus (every bucket within the cap) then runs the
     ORIGINAL direct self-join with ZERO added shuffles; a degenerate one
     (all-identical / heavily-cloned) pays the split instead of melting a
-    task.  `banded` should be persisted by the caller — both the
-    detection agg and the join branches re-read it.
+    task.  `banded` should be a silver when the caller has a corpus key
+    — both the detection agg and the join branches re-read it.
 
-    The probe is EAGER (ADVICE r14): it runs a Spark job at DataFrame-
+    The probe is EAGER: it runs a Spark job at DataFrame-
     construction time, so building this plan costs one pass over the
     banded table even if the result is never executed, and the dispatch
     freezes against build-time data.  Deliberate: every current caller
     executes the result exactly once per corpus generation, and the
     alternative (deferring behind the first action) would decide the
     plan from inside a running job.  If a caller ever constructs these
-    plans speculatively, memoize the probe next to the caller's persist
-    scope rather than making it lazy.
+    plans speculatively, memoize the probe under the caller's silver key
+    rather than making it lazy.
 
-    `memo_key` (r15) caches the probe RESULT per session via
+    `memo_key` caches the probe RESULT per session via
     session.session_memo: the max bucket count is a pure function of
     (corpus, banding parameters), so repeated invocations over the same
     corpus generation — every steady-state engine call — skip the probe
@@ -364,22 +364,24 @@ def lsh_candidate_pairs(
     """(i, j) candidate pairs sharing ≥1 LSH band, i < j, distinct.
 
     Shuffles on the band hash (skew-safe: bucket sizes are bounded by
-    collision rate, and since r14 HARD-bounded per task — buckets over
+    collision rate, and HARD-bounded per task — buckets over
     `max_band_group` engage the capped sub-group split, see
     adaptive_band_self_join / capped_band_self_join); never
-    materializes the n² pair space.
+    materializes the n² pair space.  `memo_key` names the `docs`
+    corpus: it keys the band table silver and the max-bucket probe.
     """
-    banded = banded_signatures(docs, id_col, shingle_col, num_hashes, bands)
-    # The self-join would otherwise recompute the signatures on BOTH
-    # branches; persist the (tiny: bands rows/doc, ~50 bytes/row) banded
-    # table so they are computed exactly once.  At 100 TB banded is
-    # still ~1% of corpus size — persist to MEMORY_AND_DISK or a staging
-    # table; the join shuffles only (band, hash, id).  scoped_persist
-    # unpersists the previous run's cache, so a long-lived session holds
-    # one generation, not an ever-growing pile (round-1 leak fix).
-    from classic_fcd_spark.session import scoped_persist
+    # With `memo_key` the (tiny: bands rows/doc, ~50 bytes/row) banded
+    # table is a session silver: the max-bucket probe and both self-join
+    # branches read it instead of recomputing the signatures.  At 100 TB
+    # banded is still ~1% of corpus size — persist to MEMORY_AND_DISK or
+    # a staging table; the join shuffles only (band, hash, id).
+    from classic_fcd_spark.session import session_silver
 
-    banded = scoped_persist(banded, "lsh_candidate_pairs:banded")
+    banded = session_silver(
+        docs.sparkSession,
+        None if memo_key is None else f"lsh:banded|{memo_key}",
+        lambda: banded_signatures(docs, id_col, shingle_col, num_hashes, bands),
+    )
     return adaptive_band_self_join(
         banded, id_col, ["band", "bh"], max_band_group, memo_key=memo_key
     )
@@ -389,14 +391,14 @@ def collapse_by_shingles(
     sh: DataFrame, id_col: str, shingle_col: str
 ) -> DataFrame:
     """(shingle_col, rid, members, m): one row per DISTINCT shingle set —
-    the r7/r8 duplicate-collapse pattern (semantic_dedup /
+    the duplicate-collapse pattern of semantic_dedup /
     embedding_similar_pairs) applied to the text-dedup family.
 
     Byte-identical texts share the shingle ARRAY exactly (word_shingles
     is deterministic), so grouping on the array itself is exact — no
     fingerprint to collide.  On a duplicate-heavy corpus the banding and
-    the Jaccard verify then run once per DISTINCT document: the r13 sf10
-    attempt exploded because the clone corpus's ~25M all-true candidate
+    the Jaccard verify then run once per DISTINCT document: an sf10
+    attempt without it exploded because the clone corpus's ~25M all-true candidate
     pairs each dragged ~100 shingle rows through the verify shuffle
     (~125 GB — it exhausted the host's disk, not just its memory); with
     the collapse the verify is distinct-sized and the member expansion
@@ -417,8 +419,8 @@ def jaccard_pairs(
     Exploded-token formulation: intersection = count of shingle tokens
     shared by i and j, computed by joining the exploded (doc, token)
     table to the candidate list and grouping — only (pair, token) rows
-    ever move, never the full shingle arrays (the r1 plan shuffled
-    whole arrays to both sides of two joins).  Cost is
+    ever move, never the full shingle arrays (shuffling whole arrays to
+    both sides of two joins costs far more).  Cost is
     |candidates| × avg_shingles, independent of corpus width."""
     ex = docs.select(F.col(id_col), F.explode(F.col(shingle_col)).alias("s"))
     sizes = docs.select(F.col(id_col), F.size(F.col(shingle_col)).alias("n"))
@@ -551,7 +553,7 @@ def _simhash_rep_pairs(
     join stage so only true pairs leave it.
 
     Multi-band collisions (a pair agreeing on >1 band shows up once per
-    shared band) are deduped MAP-SIDE, not by distinct (r15 opt 2): a
+    shared band) are deduped MAP-SIDE, not by distinct: a
     pair is kept only in the FIRST band whose bytes agree — decidable
     from (sa, sb) alone inside the join stage, so each qualifying pair
     is emitted exactly once and the full-width distinct (one Exchange +
@@ -613,20 +615,13 @@ def simhash_hamming_pairs(
     expansion is collision-free).  Cost is O(output), not
     O(band-collision set).
 
-    `fingerprints` (r15) reuses a stored (id, simhash) table
+    `fingerprints` reuses a stored (id, simhash) table
     (session.simhash_silver) instead of re-fingerprinting per call;
-    `reps` (r16) likewise reuses a stored (simhash, rep) election
+    `reps` likewise reuses a stored (simhash, rep) election
     (session.simhash_grp_table) — without it the band self-join runs
     the rep groupBy once per side (the broadcast build side cannot
     share the probe side's exchange)."""
-    if fingerprints is not None:
-        sh = fingerprints
-    else:
-        from classic_fcd_spark.session import scoped_persist
-
-        sh = scoped_persist(
-            simhash32_table(docs, id_col, tokens), "simhash_hamming_pairs:sh"
-        )
+    sh = simhash32_table(docs, id_col, tokens) if fingerprints is None else fingerprints
     intra = (
         sh.select(F.col(id_col).alias("i"), "simhash")
         .join(sh.select(F.col(id_col).alias("j"), "simhash"), "simhash")
@@ -662,18 +657,11 @@ def simhash_component_edges(
     connected_components — same groups, same min-id keepers (every doc
     is still a node), ~100x fewer edges on dup-heavy corpora.
 
-    `fingerprints` (r15) reuses a stored (id, simhash) table
+    `fingerprints` reuses a stored (id, simhash) table
     (session.simhash_silver); the rep table is computed once and shared
-    with the band-pair arm (it was derived twice — here and inside
+    with the band-pair arm (not derived twice — here and inside
     _simhash_rep_pairs)."""
-    if fingerprints is not None:
-        sh = fingerprints
-    else:
-        from classic_fcd_spark.session import scoped_persist
-
-        sh = scoped_persist(
-            simhash32_table(docs, id_col, tokens), "simhash_component_edges:sh"
-        )
+    sh = simhash32_table(docs, id_col, tokens) if fingerprints is None else fingerprints
     reps = sh.groupBy("simhash").agg(F.min(id_col).alias("rep"))
     member = (
         sh.join(reps, "simhash")
@@ -697,7 +685,7 @@ def simhash_component_labels(
 ) -> DataFrame:
     """(node, label) keeper assignment over the simhash near-dup graph —
     equivalent to ``connected_components(simhash_component_edges(...))``
-    but exploiting the STAR SHAPE of the collapsed edge list (r15 opt 2):
+    but exploiting the STAR SHAPE of the collapsed edge list:
     the member→rep arm needs no iteration at all, so CC runs only on the
     rep-rep graph and members inherit ``label(rep)`` through one join.
 
@@ -714,27 +702,32 @@ def simhash_component_labels(
 
     Why it matters at scale: on a clone-heavy corpus the member arm is
     corpus-sized (sf10: ~5M member edges) while the rep graph stays
-    fingerprint-sized (the same ~3k edges as sf0.1).  The old path fed
-    the UNION to connected_components, pushing the edge count over the
-    single-task threshold and into the distributed pointer-jumping loop
-    — rounds of shuffles over corpus-sized label tables (the 4062 s
-    near_dup_groups row of CHECK_r15_strict_sf10.txt).  Here the loop
+    fingerprint-sized (the same ~3k edges as sf0.1).  Feeding the UNION
+    to connected_components pushes the edge count over the single-task
+    threshold and into the distributed pointer-jumping loop — rounds of
+    shuffles over corpus-sized label tables (a 4062 s near_dup_groups
+    run at sf10).  Here the loop
     input is invariant to clique sizes; the corpus-sized work is one
-    broadcast join (guide §3.1) plus one narrow-column distinct."""
-    from classic_fcd_spark.session import scoped_persist, session_memo
+    broadcast join (guide §3.1) plus one narrow-column distinct.
 
-    if fingerprints is not None:
-        sh = fingerprints
-    else:
-        sh = scoped_persist(
-            simhash32_table(docs, id_col, tokens), "simhash_component_labels:sh"
-        )
+    `memo_key` names the corpus: the rep graph, its edge count and its
+    labels are then session state of that corpus, so a warm call runs
+    no rep-graph work, only the member and rep joins against the
+    persisted labels.  `fingerprints` and `grp` take the stored (id, simhash)
+    table and its (simhash, rep, m) election (session.simhash_silver,
+    session.simhash_grp_table), so their exchanges are paid once per
+    corpus, not once per call."""
+    from classic_fcd_spark.session import session_memo, session_silver
+
+    spark = docs.sparkSession
+
+    def key(part: str) -> str | None:
+        return None if memo_key is None else f"starcc:{part}|{memo_key}"
+
+    sh = simhash32_table(docs, id_col, tokens) if fingerprints is None else fingerprints
     # (simhash, rep, m): rep election + clique size in the ONE aggregate
     # the rep table needs anyway — m decides below which reps are in the
-    # graph at all, replacing a member-column distinct + anti-join.
-    # r16: callers pass the stored per-corpus election
-    # (session.simhash_grp_table) so the groupBy exchange is paid once
-    # per corpus, not once per consumer per invocation.
+    # graph at all, replacing a member-column distinct + anti-join
     if grp is None:
         grp = sh.groupBy("simhash").agg(
             F.min(id_col).alias("rep"), F.count("*").alias("m")
@@ -745,21 +738,22 @@ def simhash_component_labels(
         .filter(F.col(id_col) != F.col("rep"))
         .select(F.col(id_col).alias("i"), F.col("rep").alias("j"))
     )
-    rep_edges = scoped_persist(
-        _simhash_rep_pairs(sh, id_col, max_hamming, reps=reps).select(
+    # the rep graph is fingerprint-sized; as a silver, its edge count
+    # fills it and the CC reads it instead of re-running the band join
+    rep_edges = session_silver(
+        spark,
+        key("rep_edges"),
+        lambda: _simhash_rep_pairs(sh, id_col, max_hamming, reps=reps).select(
             F.col("ra").alias("i"), F.col("rb").alias("j")
         ),
-        f"simhash_component_labels:rep_edges|{memo_key}",
     )
-    spark = sh.sparkSession
-    n_rep = session_memo(
-        spark, None if memo_key is None else f"starcc:n_rep|{memo_key}", rep_edges.count
-    )
-    rep_lab = scoped_persist(
-        connected_components(
+    n_rep = session_memo(spark, key("n_rep"), rep_edges.count)
+    rep_lab = session_silver(
+        spark,
+        key("rep_lab"),
+        lambda: connected_components(
             rep_edges, memo_key=None if memo_key is None else f"{memo_key}:reps"
         ),
-        f"simhash_component_labels:rep_lab|{memo_key}",
     )
     # the rep label table is rep-graph-sized; when that graph fit the
     # single-task CC regime (same 1M-edge yardstick, symmetrized) it
@@ -792,12 +786,21 @@ def simhash_component_labels(
 # ---------------------------------------------------------------------------
 def _single_task_cc(edges: DataFrame) -> DataFrame:
     """Union-find over the whole (symmetrized) edge list in ONE executor
-    task: repartition(1) + mapPartitions, no driver-side data.  Output
-    matches the distributed loop exactly: (node, label = min id of the
-    node's component)."""
+    task, no driver-side data.  Output matches the distributed loop
+    exactly: (node, label = min id of the node's component).
+
+    A DataFrame-native ``mapInArrow`` over ``coalesce(1)``, so building
+    the plan runs no job: an RDD round trip (``.rdd.mapPartitions`` +
+    ``createDataFrame``) runs the upstream stages at plan time under
+    adaptive execution.  coalesce, not repartition: a persisted edge
+    list is then read as a narrow fetch of its cached blocks, where
+    repartition(1) pays a full shuffle round for the same single-task
+    layout."""
+    import pyarrow as pa
+
     node_type = edges.schema["a"].dataType
 
-    def part(rows):
+    def part(batches):
         parent: dict = {}
 
         def find(x):
@@ -806,33 +809,37 @@ def _single_task_cc(edges: DataFrame) -> DataFrame:
                 x = parent[x]
             return x
 
-        for r in rows:
-            a, b = r[0], r[1]
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
+        arrow_type = None
+        for batch in batches:
+            arrow_type = batch.schema.field(0).type
+            for a, b in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+                if a not in parent:
+                    parent[a] = a
+                if b not in parent:
+                    parent[b] = b
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    parent[ra] = rb
         comp_min: dict = {}
         for v in parent:
             r = find(v)
             m = comp_min.get(r)
             if m is None or v < m:
                 comp_min[r] = v
-        for v in parent:
-            yield (v, comp_min[find(v)])
+        if parent:
+            nodes = list(parent)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(nodes, arrow_type),
+                    pa.array([comp_min[find(v)] for v in nodes], arrow_type),
+                ],
+                names=["node", "label"],
+            )
 
     out_schema = StructType(
         [StructField("node", node_type), StructField("label", node_type)]
     )
-    # coalesce, not repartition: the caller hands a PERSISTED edge
-    # list, so the 1-task read is a narrow fetch of the cached blocks —
-    # repartition(1) paid a full shuffle round (map job + fetch) for the
-    # same single-task layout
-    rdd = edges.coalesce(1).rdd.mapPartitions(part)
-    return edges.sparkSession.createDataFrame(rdd, out_schema)
+    return edges.coalesce(1).mapInArrow(part, out_schema)
 
 
 def connected_components(
@@ -855,44 +862,46 @@ def connected_components(
     truncates the growing lineage each round — without it the plan
     doubles per iteration.  Scales as rounds x a bounded number of
     shuffles on node id; no driver-side graph."""
-    edges = pairs.select(F.col("i").alias("a"), F.col("j").alias("b"))
-    # pairs are unique with i < j, so the reversed union cannot collide —
-    # no distinct() (it cost a full extra shuffle of the edge list)
-    edges = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    # materialize the edge list once — every iteration joins against it,
-    # and a lazy plan would re-run the upstream pair generation per round;
-    # then right-size partitioning to the GRAPH (≈500k edges/partition),
-    # not the session default — iteration cost is dominated by per-stage
-    # overhead when the dup graph is orders smaller than the corpus.
-    # persist + count, not localCheckpoint(eager) + count: the
-    # eager checkpoint is its own job, so sizing the graph cost TWO jobs
-    # before any CC work; the count now materializes the persist in one.
-    # Lineage truncation is only needed by the ITERATIVE branch (plans
-    # double per round), which re-checkpoints below.
-    # `memo_key` additionally memoizes the edge COUNT per corpus
-    # generation — it only picks the regime and the partition sizing, so
-    # a steady-state call skips the sizing job and the first real
-    # consumer materializes the persisted edges instead.
-    from classic_fcd_spark.session import scoped_persist, session_memo
 
-    edges = scoped_persist(edges, "connected_components:edges")
+    def symmetrized():
+        ab = pairs.select(F.col("i").alias("a"), F.col("j").alias("b"))
+        # pairs are unique with i < j, so the reversed union cannot
+        # collide — no distinct() (a full extra shuffle of the edge list)
+        return ab.unionByName(ab.select(F.col("b").alias("a"), F.col("a").alias("b")))
+
+    # `memo_key` names the corpus the pairs come from.  With it the
+    # symmetrized edge list is a session silver — every consumer (the
+    # sizing count, the single-task union-find, each iteration's join)
+    # reads it instead of re-running the upstream pair generation — and
+    # the edge COUNT is memoized next to it: it only picks the regime and
+    # the partition sizing, so a warm call plans with no job at all.
+    # Without a key the edges stay a lazy plan: the count and the CC run
+    # each recompute the pairs.  The count fills the persist; the eager
+    # localCheckpoint the iterative branch needs for lineage truncation
+    # is taken there, not here (it would be a second job before any CC
+    # work).
+    from classic_fcd_spark.session import session_memo, session_silver
+
+    spark = pairs.sparkSession
+    edges = session_silver(
+        spark, None if memo_key is None else f"cc:edges|{memo_key}", symmetrized
+    )
     n_edges = session_memo(
-        pairs.sparkSession,
-        None if memo_key is None else f"cc:n_edges|{memo_key}",
-        edges.count,
+        spark, None if memo_key is None else f"cc:n_edges|{memo_key}", edges.count
     )
     # Two regimes, picked off the edge count the partitioning needs
     # anyway.  The near-dup graph is orders smaller than the corpus
     # (banding + fingerprint collapse), so it routinely fits ONE task:
-    # below the threshold, a single mapPartitions union-find job beats
+    # below the threshold, one single-task union-find stage beats
     # O(log d) rounds x several scheduled stages each — executor-side,
     # not a driver collect, and the same (node, label) contract.  Above
     # it, the distributed pointer-jumping loop below.  (GraphX-style
     # local fallback; 1M symmetric edges is a few seconds of one core.)
     if n_edges <= local_threshold:
         return _single_task_cc(edges)
+    # right-size partitioning to the GRAPH (≈500k edges/partition), not
+    # the session default — iteration cost is dominated by per-stage
+    # overhead when the dup graph is orders smaller than the corpus
     n_parts = max(1, n_edges // 500_000 + 1)
     edges = edges.repartition(n_parts, "a").localCheckpoint(eager=True)
     # label_0 = least(node, min neighbor): the same single shuffle a
@@ -1010,7 +1019,7 @@ def incremental_near_dups(
     """(new_id, dup_of, inter, uni, jaccard) for new docs whose Jaccard
     vs some indexed doc reaches `threshold`.
 
-    `new_banded` (r15) lets a caller hand in the new batch's (id, band,
+    `new_banded` lets a caller hand in the new batch's (id, band,
     bh) table instead of re-deriving it here — banding is per-doc, so a
     doc_id filter of a stored corpus-wide band table is exactly the
     banded table of that slice (how the gated query feeds both sides

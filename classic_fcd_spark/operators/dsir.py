@@ -48,7 +48,7 @@ def ngram_buckets(text, n: int = 2, buckets: int = 256) -> Column:
     bodies are interpreted per ELEMENT, so referencing ws_tokens(text)
     (a regexp split of the whole doc) inside the inner lambda re-split
     the document once per token — O(tokens x doc_len) per doc, measured
-    as ~16x the whole scoring stage at sf0.1 (r8).  Binding it as a
+    as ~16x the whole scoring stage at sf0.1.  Binding it as a
     lambda variable evaluates the split once per row; every emitted
     bucket id is unchanged."""
 
@@ -106,10 +106,11 @@ def dsir_scores(
     driver-side (2 x B floats) and broadcast; scoring is explode +
     broadcast equi-join + per-doc sum — one shuffle of narrow rows.
 
-    `memo_key` (r15): the two fitted histograms (a pure function of the
-    two corpora) and the raw side's exploded bucket silver are memoized
-    per session under that key — steady-state calls skip both model-fit
-    collect jobs and the re-persist.
+    `memo_key`: the two fitted histograms (a pure function of the two
+    corpora) and the raw side's exploded bucket silver are memoized per
+    session under that key — steady-state calls skip both model-fit
+    collect jobs and the md5 hashing.  Without it every call fits and
+    hashes afresh.
 
     `quantize_e6` emits integer fixed-point scores instead: each
     bucket's log-ratio is floored to 1e-6 resolution BEFORE the per-doc
@@ -120,8 +121,9 @@ def dsir_scores(
     lesson as floor_e6 in the ANN family)."""
     spark = raw_docs.sparkSession
     # the raw side's exploded bucket table feeds BOTH the raw model fit
-    # and the per-doc scoring — materialize the md5 hashing once
-    from classic_fcd_spark.session import scoped_persist, session_memo
+    # and the per-doc scoring; with `memo_key` it is a silver, so the
+    # md5 hashing runs once per corpus
+    from classic_fcd_spark.session import session_memo, session_silver
 
     # spread the md5 bigram hashing across cores before the explode —
     # single-file scans arrive as one partition
@@ -132,24 +134,18 @@ def dsir_scores(
             F.col(id_col), F.explode(ngram_buckets(text_col, n, buckets)).alias("b")
         )
 
-    if memo_key is None:
-        ex = scoped_persist(_build_ex(), "dsir:raw_buckets")
-        lp_t = bucket_log_probs(target_docs, text_col, n, buckets)
-        lp_r = bucket_log_probs(raw_docs, text_col, n, buckets, exploded=ex)
-    else:
-        ex = session_memo(
-            spark, f"dsir:raw_buckets|{memo_key}", lambda: _build_ex().persist()
-        )
-        lp_t = session_memo(
-            spark,
-            f"dsir:lp_t|{memo_key}",
-            lambda: bucket_log_probs(target_docs, text_col, n, buckets),
-        )
-        lp_r = session_memo(
-            spark,
-            f"dsir:lp_r|{memo_key}",
-            lambda: bucket_log_probs(raw_docs, text_col, n, buckets, exploded=ex),
-        )
+    def key(part: str) -> str | None:
+        return None if memo_key is None else f"dsir:{part}|{memo_key}"
+
+    ex = session_silver(spark, key("raw_buckets"), _build_ex)
+    lp_t = session_memo(
+        spark, key("lp_t"), lambda: bucket_log_probs(target_docs, text_col, n, buckets)
+    )
+    lp_r = session_memo(
+        spark,
+        key("lp_r"),
+        lambda: bucket_log_probs(raw_docs, text_col, n, buckets, exploded=ex),
+    )
     if quantize_e6:
         ratio = spark.createDataFrame(
             [(b, math.floor((lp_t[b] - lp_r[b]) * 1e6)) for b in range(buckets)],

@@ -114,13 +114,17 @@ def ccnet_buckets(
     sketch, same machinery as operators/sketches.py) — TWO scalars
     collected, no global sort; at 100 TB that is the only honest way to
     rank by percentile.  Bucket boundaries inherit the sketch's
-    documented rank error (rel_err)."""
-    scored = unigram_nll_scores(
-        docs, model_docs, id_col, text_col, buckets, memo_key=memo_key
-    )
-    from classic_fcd_spark.session import scoped_persist
+    documented rank error (rel_err).  With `memo_key` the scores the
+    quantile pass and the bucketing both read are a session silver."""
+    from classic_fcd_spark.session import session_silver
 
-    scored = scoped_persist(scored, "ccnet:scores")
+    scored = session_silver(
+        docs.sparkSession,
+        None if memo_key is None else f"ccnet:scores|{memo_key}",
+        lambda: unigram_nll_scores(
+            docs, model_docs, id_col, text_col, buckets, memo_key=memo_key
+        ),
+    )
     qs = scored.approxQuantile("mean_nll_e6", list(cuts), rel_err)
     if not qs:
         # empty corpus: approxQuantile returns [] — emit the documented
@@ -297,49 +301,58 @@ def fit_trigram_prob_model(
     buckets: int = 256,
     lams: tuple[float, float, float] = (0.2, 0.3, 0.5),
     max_model_trigrams: int = 4_000_000,
-    persist_scope: str = "trigram_prob",
+    persist_scope: str | None = None,
 ) -> TrigramProbModel:
     """Fit the count tables of the log-free trigram LM (see
     TrigramProbModel).  The tables never leave the JVM: each is a plain
-    aggregation over the persisted token arrays, itself persisted so the
+    aggregation over the token arrays, broadcast directly.
+
+    `persist_scope` names the model corpus.  With it the token arrays
+    and every count table are session silvers under that scope, so the
     refusal-guard count() and every broadcast join share ONE
-    materialization, then broadcast directly."""
+    materialization; without it they are lazy plans."""
     bf = float(buckets)
     spark = model_docs.sparkSession
     par = spark.sparkContext.defaultParallelism
 
-    from classic_fcd_spark.session import scoped_persist
+    from classic_fcd_spark.session import session_silver
 
-    mtoks = scoped_persist(
-        model_docs.repartition(par).select(
+    def silver(part: str, build) -> DataFrame:
+        key = None if persist_scope is None else f"{persist_scope}:{part}"
+        return session_silver(spark, key, build)
+
+    mtoks = silver(
+        "model_buckets",
+        lambda: model_docs.repartition(par).select(
             ngram_buckets(text_col, 1, buckets).alias("bs")
         ),
-        f"{persist_scope}:model_buckets",
     )
-    uni_model = scoped_persist(
-        mtoks.select(F.explode("bs").alias("w"))
+    uni_model = silver(
+        "uni_model",
+        lambda: mtoks.select(F.explode("bs").alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("ucnt")),
-        f"{persist_scope}:uni_model",
     )
     utot = uni_model.agg(F.sum("ucnt")).first()[0] or 0
     # (utot + B) as one exact double literal shared by every division
     ut = float(utot) + bf
-    pair_model = scoped_persist(
-        mtoks.select(_pair_structs(F.col("bs")).alias("p"))
+    pair_model = silver(
+        "pair_model",
+        lambda: mtoks.select(_pair_structs(F.col("bs")).alias("p"))
         .select(F.col("p.c").alias("c"), F.col("p.w").alias("w"))
         .groupBy("c", "w")
         .agg(F.count("*").alias("pcnt")),
-        f"{persist_scope}:pair_model",
     )
-    pctx_model = pair_model.groupBy("c").agg(F.sum("pcnt").alias("pctx"))
-    tri_model = scoped_persist(
-        mtoks.filter(F.size("bs") >= 3)
+    pctx_model = silver(
+        "pctx_model", lambda: pair_model.groupBy("c").agg(F.sum("pcnt").alias("pctx"))
+    )
+    tri_model = silver(
+        "tri_model",
+        lambda: mtoks.filter(F.size("bs") >= 3)
         .select(_triple_structs(F.col("bs")).alias("t"))
         .select("t.c1", "t.c2", F.col("t.w").alias("w"))
         .groupBy("c1", "c2", "w")
         .agg(F.count("*").alias("tcnt")),
-        f"{persist_scope}:tri_model",
     )
     n_tri = tri_model.count()
     if n_tri > max_model_trigrams:
@@ -349,7 +362,10 @@ def fit_trigram_prob_model(
             f"buckets (currently {buckets}) or raise max_model_trigrams "
             "with executor memory to match"
         )
-    tctx_model = tri_model.groupBy("c1", "c2").agg(F.sum("tcnt").alias("tctx"))
+    tctx_model = silver(
+        "tctx_model",
+        lambda: tri_model.groupBy("c1", "c2").agg(F.sum("tcnt").alias("tctx")),
+    )
     return TrigramProbModel(
         uni_model, pair_model, pctx_model, tri_model, tctx_model, ut, buckets, lams
     )

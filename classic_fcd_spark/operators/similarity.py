@@ -265,8 +265,6 @@ def kmeans_train(
 
     from pyspark.sql import DataFrame  # noqa: F401 — signature doc only
 
-    from classic_fcd_spark.session import scoped_persist
-
     spark = emb.sparkSession
     proj = emb.select(id_col, vec_col)
     if sample_limit is not None:
@@ -276,10 +274,10 @@ def kmeans_train(
             proj.orderBy(F.md5(F.col(id_col).cast("string")), id_col)
             .limit(sample_limit)
         )
-    proj = scoped_persist(
-        proj.repartition(spark.sparkContext.defaultParallelism),
-        "kmeans_train:proj",
-    )
+    # spread across cores (a single-file scan arrives as one partition);
+    # the codebook is the result, so each round re-reads this plan
+    # rather than pinning a copy in executor storage
+    proj = proj.repartition(spark.sparkContext.defaultParallelism)
     # hash-ordered init: the k smallest md5(id) rows — deterministic,
     # pseudo-randomly spread across the corpus (unlike "first k", which
     # can land every seed in one region), and a distributed TakeOrdered
@@ -535,8 +533,9 @@ def semantic_dedup(
 
     `silver_key` makes the two intermediates (the cell
     assignment — the stored cluster index of a production SemDeDup run —
-    and the collapsed rep table) SESSION-persisted under that key
-    instead of re-persisted per call; `max_multiplicity` is the cached
+    and the collapsed rep table) and the connected-components state
+    session silvers under that key; without it they are lazy plans
+    recomputed per call; `max_multiplicity` is the cached
     corpus duplicate bound (session.embedding_stats) — when it is 1 the
     fingerprint collapse is the identity, so the groupBy, the rep
     persist and the copy-edge expansion are all skipped (the vectors ARE
@@ -546,17 +545,14 @@ def semantic_dedup(
     if centroids is None:
         centroids, _ = kmeans_train(emb, vec_col, id_col, k=k, n_iter=n_iter)
 
-    from classic_fcd_spark.session import scoped_persist, session_memo
+    from classic_fcd_spark.session import session_silver
 
-    def _persist(build, scope: str):
-        if silver_key is None:
-            return scoped_persist(build(), scope)
-        return session_memo(
-            emb.sparkSession, f"{scope}|{silver_key}", lambda: build().persist()
-        )
+    def _silver(build, scope: str):
+        key = None if silver_key is None else f"{scope}|{silver_key}"
+        return session_silver(emb.sparkSession, key, build)
 
     par = emb.sparkSession.sparkContext.defaultParallelism
-    assigned = _persist(
+    assigned = _silver(
         lambda: assign_cells(emb, centroids, vec_col, id_col).repartition(
             par, id_col
         ),
@@ -580,7 +576,7 @@ def semantic_dedup(
         nz = assigned.filter(F.col("vnorm") > 0).withColumn(
             "fp", F.md5(F.to_json(F.struct(F.col(vec_col).alias("v"))))
         )
-        reps = _persist(
+        reps = _silver(
             lambda: nz.groupBy("fp")
             .agg(
                 F.min(

@@ -103,23 +103,21 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         collapse_by_shingles,
         collapse_pays_off,
     )
-    from classic_fcd_spark.session import scoped_persist, shingle_stats, shingle_table
+    from classic_fcd_spark.session import session_silver, shingle_stats, shingle_table
 
     sh = shingle_table(spark, sf_dir).select("doc_id", "shingles")
-    # r15 duplicate-mass dispatch (VERDICT r14 item 3): the corpus-level
-    # fingerprint stats are ONE cached aggregate per corpus generation
-    # (session.shingle_stats), replacing r14's per-query collapse
-    # groupBy + max(m) probe.  Low duplicate mass -> the pre-collapse
-    # direct plan (r13's, driver-green throughout), whose extra verify
-    # work is bounded by COLLAPSE_DUP_MASS; high mass (clone corpora) ->
-    # the r14 collapse below.  Both plans emit the exact same pair set.
+    # duplicate-mass dispatch: the corpus-level fingerprint stats are ONE
+    # cached aggregate per corpus generation (session.shingle_stats), not
+    # a per-query collapse groupBy + max(m) probe.  Low duplicate mass ->
+    # the direct plan, whose extra verify work is bounded by
+    # COLLAPSE_DUP_MASS; high mass (clone corpora) -> the collapse below.
+    # Both plans emit the exact same pair set.
     n_docs, n_distinct, max_m = shingle_stats(spark, sf_dir)
     if not collapse_pays_off(n_docs, n_distinct, max_m):
-        # r15: candidates probe the per-corpus STORED band table
+        # candidates probe the per-corpus STORED band table
         # (session.banded_minhash_table — what a production ingest
-        # materializes) instead of re-deriving + re-persisting the full
-        # signature table per invocation; the max-bucket dispatch probe
-        # is memoized alongside it
+        # materializes) instead of re-deriving the signature table per
+        # invocation; the max-bucket dispatch probe is memoized with it
         from classic_fcd_spark.operators.dedup import adaptive_band_self_join
         from classic_fcd_spark.session import banded_minhash_table
 
@@ -133,17 +131,20 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         return jaccard_pairs(cand, sh, "doc_id", "shingles").filter(
             F.col("jaccard") >= 0.8
         )
-    # r14 duplicate collapse (SCALE.md §Dedup): band + verify once per
+    # duplicate collapse (SCALE.md §Dedup): band + verify once per
     # DISTINCT shingle set, expand member pairs after — identical output
     # (copies share every band and every pairwise Jaccard), but the
     # verify shuffle is distinct-sized instead of multiplicity-quadratic
-    # (the r13 sf10 clone corpus pushed ~125 GB through it).
-    groups = scoped_persist(
-        collapse_by_shingles(sh, "doc_id", "shingles"), "minhash:groups"
+    # (an sf10 clone corpus pushed ~125 GB through it).  The groups and
+    # the rep band table are corpus silvers.
+    groups = session_silver(
+        spark,
+        f"minhash:groups|{sf_dir}",
+        lambda: collapse_by_shingles(sh, "doc_id", "shingles"),
     )
     reps = groups.select(F.col("rid").alias("doc_id"), "shingles")
     cand = lsh_candidate_pairs(
-        reps, "doc_id", "shingles", memo_key=f"minhash:reps_max_bucket|{sf_dir}"
+        reps, "doc_id", "shingles", memo_key=f"minhash:reps|{sf_dir}"
     )
     rep_pairs = jaccard_pairs(cand, reps, "doc_id", "shingles").filter(
         F.col("jaccard") >= 0.8
@@ -168,11 +169,11 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # intra-group: identical docs — inter = uni = |shingles|, jaccard =
     # the same double division the oracle evaluates on the two copies
-    # (n/n = exactly 1.0 ≥ 0.8 on both engines).  size > 0 guard (r15,
-    # VERDICT r14 item 7): an empty-shingle duplicate group would emit
-    # 0/0 = NaN rows the oracle's >= 0.8 filter drops — unreachable on
-    # the >= 3-token silver, but the invariant belongs to this plan, not
-    # to the upstream filter.
+    # (n/n = exactly 1.0 ≥ 0.8 on both engines).  size > 0 guard: an
+    # empty-shingle duplicate group would emit 0/0 = NaN rows the
+    # oracle's >= 0.8 filter drops — unreachable on the >= 3-token
+    # silver, but the invariant belongs to this plan, not to the
+    # upstream filter.
     n = F.size("shingles").cast("long")
     intra = (
         groups.filter((F.col("m") >= 2) & (F.size("shingles") > 0))
@@ -191,11 +192,10 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact n-gram Jaccard (prefix-filtered set-similarity join).  Oracle
-# retained for the in-test DuckDB gate (tests/test_dedup_similarity.py):
-# r6 rotated the driver slot to duplicated_spans — the PPJoin candidate
-# discipline is re-proven by the still-gated minhash_lsh_near_dups +
-# near_dup_groups (same shingle silver, same verify-on-candidates shape).
+# Exact n-gram Jaccard (prefix-filtered set-similarity join), gated by the
+# in-test DuckDB oracle (tests/test_dedup_similarity.py); the registered
+# minhash_lsh_near_dups + near_dup_groups share its shingle silver and
+# its verify-on-candidates shape.
 # ---------------------------------------------------------------------------
 NGRAM_JACCARD_ORACLE_SQL = f"""
     WITH sh AS (
@@ -226,7 +226,7 @@ def _jaccard_prefix_silver(spark: SparkSession, sf_dir: str):
     (all-integer: ceil(4n/5) = (4n+4) div 5)."""
     from pyspark.sql import Window
 
-    from classic_fcd_spark.session import session_memo, shingle_table
+    from classic_fcd_spark.session import session_silver, shingle_table
 
     def build():
         sh = shingle_table(spark, sf_dir)
@@ -234,13 +234,11 @@ def _jaccard_prefix_silver(spark: SparkSession, sf_dir: str):
         freq = ex.groupBy("s").agg(F.count("*").alias("df"))
         w = Window.partitionBy("doc_id").orderBy("df", "s")
         ranked = ex.join(freq, "s").withColumn("rk", F.row_number().over(w))
-        return (
-            ranked.filter(F.col("rk") <= F.expr("n - ((4 * n + 4) div 5) + 1"))
-            .select("doc_id", "n", "s")
-            .persist()
-        )
+        return ranked.filter(
+            F.col("rk") <= F.expr("n - ((4 * n + 4) div 5) + 1")
+        ).select("doc_id", "n", "s")
 
-    return session_memo(spark, f"jaccard_prefix|{sf_dir}", build)
+    return session_silver(spark, f"jaccard_prefix|{sf_dir}", build)
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,14 +252,13 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~3 s at sf0.1 vs the naive all-occurrence join).  A size-ratio
     filter (5*min >= 4*max, integer-exact) prunes before the verify,
     and verification is one array_intersect per surviving candidate.
-    Driver-gated r2-r5 (green throughout); since r6 gated by the
-    in-test oracle (NGRAM_JACCARD_ORACLE_SQL)."""
+    Gated by the in-test oracle (NGRAM_JACCARD_ORACLE_SQL)."""
     from classic_fcd_spark.session import shingle_table
 
     # the shared persisted shingle silver table feeds the frequency
     # pass, the prefix build, and BOTH sides of the verify join
     sh = shingle_table(spark, sf_dir)
-    # r15: the rarest-first prefix index is a pure function of the
+    # the rarest-first prefix index is a pure function of the
     # corpus — exactly the stored-index class (band table, postings,
     # PQ codes) an ingest maintains next to the shingle silver — so it
     # is persisted once per (session, corpus generation); steady-state
@@ -297,10 +294,10 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SimHash signatures (single-pass projection).  Unregistered since r3:
-# simhash_near_dups recomputes the identical signatures inside its gated
-# plan (its oracle regenerates them in SQL), so a separate signature-only
-# registry row was a pattern-twin; the function stays for tests/bench.
+# SimHash signatures (single-pass projection).  Unregistered:
+# simhash_near_dups computes the identical signatures inside its gated
+# plan (its oracle regenerates them in SQL), so a signature-only registry
+# row would be a pattern-twin; the function stays for tests/bench.
 # ---------------------------------------------------------------------------
 def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash-32 fingerprinting: bit j = majority vote of md5-derived
@@ -308,11 +305,11 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hex-digit bit extraction keeps Spark and the SQL oracle
     bit-identical.  Shingle features, not unigram sets: the corpus draws
     from a ~31-word vocabulary, so every doc contains most of the vocab
-    and unigram-set fingerprints collapse onto a few values (r4 data:
-    308k hamming<=1 pairs from 5k docs — all false kin); 3-gram features
+    and unigram-set fingerprints collapse onto a few values (308k
+    hamming<=1 pairs from 5k docs — all false kin); 3-gram features
     restore discrimination, same as the MinHash path.
 
-    r15: returns the stored per-corpus fingerprint silver
+    Returns the stored per-corpus fingerprint silver
     (session.simhash_silver — identical rows: same >=3-token filter and
     the same word 3-shingles, via the shared shingle silver) instead of
     re-fingerprinting per call."""
@@ -323,7 +320,7 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # SimHash near-duplicates: hamming <= k via byte-band LSH (the query that
-# actually USES the simhash signatures — r1 shipped only the signatures).
+# actually USES the simhash signatures).
 # ---------------------------------------------------------------------------
 _SIMHASH_K = 1  # 4 byte-bands guarantee recall up to hamming <= 3 (pigeonhole);
 # k=1 keeps 'near-dup' strict.  Fingerprints are over word 3-shingles, not
@@ -332,10 +329,7 @@ _SIMHASH_K = 1  # 4 byte-bands guarantee recall up to hamming <= 3 (pigeonhole);
 # hundreds of thousands of hamming<=1 false-kin pairs (see simhash_docs).
 
 
-# Oracle: drove the green r3/r4 driver rows, held the in-test DuckDB gate
-# through r5-r9 (tests/test_dedup_similarity.py), and is the driver oracle
-# again since the r10 rotation re-promoted the slot (VERDICT r9 item 5:
-# strongest un-gated integer-exact candidates back into the window).
+# The driver oracle of simhash_near_dups (integer-exact).
 SIMHASH_ORACLE_SQL = f"""
     WITH {duck_simhash32_cte(_SH, f"documents WHERE len({_D_TOKS}) >= 3")},
     banded AS (
@@ -359,18 +353,14 @@ SIMHASH_ORACLE_SQL = f"""
     SIMHASH_ORACLE_SQL,
     doc="D2 SimHash near-duplicate pairs (Charikar 2002 / MMDS): 32-bit "
     "majority-vote fingerprints over word 3-shingles, byte-band LSH "
-    "(pigeonhole-exact recall at hamming<=3), bit_count(xor) verify. "
-    "Driver-gated r3/r4, in-test-gated r5-r9, re-promoted r10 "
-    "(displaced slot: text_features -> in-test oracle).",
+    "(pigeonhole-exact recall at hamming<=3), bit_count(xor) verify.",
 )
 def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup search: the 32-bit fingerprint is split into 4
     byte bands; two docs within hamming distance k of each other agree on
     at least one whole band (pigeonhole), so the band equi-join finds
     EVERY such pair — exact recall, collision-bounded cost, never n².
-    Verification is bit_count(xor) per candidate.  Driver-gated in
-    r3/r4, rotated to the in-test DuckDB oracle r5-r9, driver-gated
-    again since r10 (the oracle never changed; `near_dup_groups`'s
+    Verification is bit_count(xor) per candidate (`near_dup_groups`'s
     gated plan composes these same pairs)."""
     from classic_fcd_spark.operators.dedup import simhash_hamming_pairs
     from classic_fcd_spark.session import (
@@ -380,11 +370,10 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # fingerprints are majority votes over the same word 3-shingles the
-    # rest of the dedup family uses — read the shared persisted table;
-    # r15: the (doc_id, simhash) fingerprint table itself is the stored
-    # per-corpus silver shared with near_dup_groups / simhash_docs;
-    # r16: the rep election is a silver too — it ran TWICE per
-    # invocation here (once per band-join side)
+    # rest of the dedup family uses; the (doc_id, simhash) table is the
+    # per-corpus silver shared with near_dup_groups / simhash_docs, and
+    # the rep election is a silver too — inline it ran TWICE per
+    # invocation (once per band-join side)
     sh = shingle_table(spark, sf_dir)
     return simhash_hamming_pairs(
         sh,
@@ -401,9 +390,9 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "near_dup_groups",
-    # r14: the oracle's transitive closure now runs over DISTINCT
-    # fingerprints (one rep per simhash value), mirroring the Spark
-    # side's star-collapsed edges — the doc-level recursion accumulated
+    # the oracle's transitive closure runs over DISTINCT fingerprints
+    # (one rep per simhash value), mirroring the Spark side's
+    # star-collapsed edges — a doc-level recursion accumulates
     # node×component-size reach rows, which on the sf10 clone corpus
     # (~26M doc pairs) ground for >1 h without converging.  Labeling is
     # identical: band collision and hamming depend only on the simhash
@@ -448,7 +437,7 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Spark side is iterative min-label propagation (shuffle per round, "
     "rounds = diameter, lineage truncated via localCheckpoint); the "
     "oracle is a recursive transitive-closure CTE — an independent "
-    "algorithm arriving at the same labeling (r14: closure over distinct "
+    "algorithm arriving at the same labeling (closure over distinct "
     "fingerprints, expanded to members — see the oracle comment).",
 )
 def near_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,12 +450,13 @@ def near_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sh = shingle_table(spark, sf_dir)
-    # star-aware labeling (r15 opt 2): CC runs on the rep-rep graph only,
-    # members take label(rep) by one broadcast join — same components,
-    # same min-id keepers as CC over the full collapsed edge union (see
-    # simhash_component_labels' proof), but the iterative loop's input is
-    # invariant to clique sizes; r15: reads the shared fingerprint
-    # silver; r16: and the shared rep-election silver
+    # star-aware labeling: CC runs on the rep-rep graph only, members
+    # take label(rep) by one broadcast join — same components, same
+    # min-id keepers as CC over the full collapsed edge union (see
+    # simhash_component_labels' proof), but the CC input is invariant to
+    # clique sizes.  It reads the fingerprint and rep-election silvers,
+    # and the memo key makes the rep-graph labels a corpus silver: a warm
+    # call runs no job until its collect
     return simhash_component_labels(
         sh,
         "doc_id",
@@ -482,8 +472,7 @@ def near_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Incremental dedup: new batch probed against the stored corpus signature
-# index — promoted to the driver gate in r5 (the simhash_near_dups slot;
-# near_dup_groups still gates that banding).  The split is data-derived
+# index, driver-gated.  The split is data-derived
 # and engine-identical: index = doc_id < max(doc_id) div 2, new = rest —
 # the monotone-id ingest shape (yesterday's corpus vs today's batch).
 # ---------------------------------------------------------------------------
@@ -537,13 +526,16 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         collapse_pays_off,
         incremental_near_dups,
     )
-    from classic_fcd_spark.session import scoped_persist, shingle_stats, shingle_table
-
-    from classic_fcd_spark.session import session_memo
+    from classic_fcd_spark.session import (
+        session_memo,
+        session_silver,
+        shingle_stats,
+        shingle_table,
+    )
 
     docs = load_tables(spark, sf_dir)["documents"]
     # the split point is a pure corpus statistic — memoized per corpus
-    # generation (r15), not re-collected per invocation
+    # generation, not re-collected per invocation
     split = session_memo(
         spark,
         f"incdedup:split|{sf_dir}",
@@ -554,14 +546,13 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingle_table(spark, sf_dir).select("doc_id", "shingles")
     index_docs = sh.filter(F.col("doc_id") < split)
     new_docs = sh.filter(F.col("doc_id") >= split)
-    # r15 duplicate-mass dispatch, same corpus-level cached stats as
+    # duplicate-mass dispatch, same corpus-level cached stats as
     # minhash_lsh_near_dups (a whole-corpus bound necessarily bounds each
-    # side of the split): low mass -> the pre-collapse direct probe
-    # (r13's, driver-green throughout); high mass -> the r14 per-side
-    # collapse below.  Identical pair set either way.
+    # side of the split): low mass -> the direct probe; high mass -> the
+    # per-side collapse below.  Identical pair set either way.
     n_docs, n_distinct, max_m = shingle_stats(spark, sf_dir)
     if not collapse_pays_off(n_docs, n_distinct, max_m):
-        # r15: both sides slice the per-corpus STORED band table —
+        # both sides slice the per-corpus STORED band table —
         # banding is per-doc, so filter(doc_id < split) of the stored
         # table IS banded_signatures(index_docs) (and likewise the new
         # side), without re-deriving the signatures per invocation.
@@ -578,17 +569,22 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "shingles",
             new_banded=banded_all.filter(F.col("doc_id") >= split),
         )
-    # r14 duplicate collapse, same as minhash_lsh_near_dups but per SIDE:
+    # duplicate collapse, same as minhash_lsh_near_dups but per SIDE:
     # probe distinct-new against distinct-index, expand (new member ×
     # index member) after.  A new group byte-equal to an index group
     # verifies once at jaccard 1.0 and expands to m_new × m_idx pairs —
     # exactly what the uncollapsed probe emits, without dragging every
-    # copy's shingles through the verify shuffle.
-    g_new = scoped_persist(
-        collapse_by_shingles(new_docs, "doc_id", "shingles"), "incdedup:gnew"
+    # copy's shingles through the verify shuffle.  Both sides' groups
+    # are corpus silvers.
+    g_new = session_silver(
+        spark,
+        f"incdedup:gnew|{sf_dir}",
+        lambda: collapse_by_shingles(new_docs, "doc_id", "shingles"),
     )
-    g_idx = scoped_persist(
-        collapse_by_shingles(index_docs, "doc_id", "shingles"), "incdedup:gidx"
+    g_idx = session_silver(
+        spark,
+        f"incdedup:gidx|{sf_dir}",
+        lambda: collapse_by_shingles(index_docs, "doc_id", "shingles"),
     )
     reps_new = g_new.select(F.col("rid").alias("doc_id"), "shingles")
     reps_idx = g_idx.select(F.col("rid").alias("doc_id"), "shingles")
@@ -608,10 +604,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Span-level ExactSubstr dedup — driver-gated r6–r10 (the
-# ngram_jaccard_pairs slot, per the r5 brief); rotated OUT in r11
-# (slot -> repetition_signals, its windowed-count pattern kin).  The
-# same DuckDB oracle that drove its green r6-r10 driver rows is now the
+# Span-level ExactSubstr dedup — unregistered; its DuckDB oracle is the
 # in-test gate (tests/test_spans.py TestDuplicatedSpansOracle), and the
 # workload keeps its bench slot via bench._extra_workloads.
 # ---------------------------------------------------------------------------

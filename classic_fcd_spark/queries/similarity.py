@@ -160,7 +160,7 @@ def ann_lsh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 8-table bucket assignment IS the stored hash-table index a
     # production ANN service materializes at ingest — persisted once per
     # (session, corpus), and read by both the query and the probe side
-    from classic_fcd_spark.session import session_memo
+    from classic_fcd_spark.session import session_silver
 
     def _build_tagged():
         par = spark.sparkContext.defaultParallelism
@@ -170,10 +170,9 @@ def ann_lsh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "vec_id", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket")
             )
-            .persist()
         )
 
-    tagged = session_memo(spark, f"ann_lsh:tagged|{sf_dir}", _build_tagged)
+    tagged = session_silver(spark, f"ann_lsh:tagged|{sf_dir}", _build_tagged)
     qb = tagged.filter(F.col("vec_id") < _N_QUERIES).select(
         "t", "bucket", F.col("vec_id").alias("qid")
     )
@@ -258,7 +257,7 @@ def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A zero vector is in no pair: its cosine is 0/0, NaN in the kernel
     and NULL in DuckDB, and neither passes the threshold (SCALE.md)."""
-    from classic_fcd_spark.session import embedding_stats, scoped_persist
+    from classic_fcd_spark.session import embedding_stats, session_silver
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     _, n_distinct, max_m = embedding_stats(spark, sf_dir)
@@ -266,12 +265,13 @@ def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return blocked_cosine_pairs(
             emb.select("vec_id", "embedding"), n_distinct, _PAIR_BANDS, _PAIR_THRESHOLD
         )
-    groups = scoped_persist(
-        emb.groupBy("embedding").agg(
+    groups = session_silver(
+        spark,
+        f"embpairs:groups|{sf_dir}",
+        lambda: emb.groupBy("embedding").agg(
             F.min("vec_id").alias("rid"),
             F.sort_array(F.collect_list("vec_id")).alias("members"),
         ),
-        "embpairs:groups",
     )
     reps = groups.select(F.col("rid").alias("vec_id"), "embedding")
     # the rep self-pairs (i == j) carry each group's self-cosine, the
@@ -351,14 +351,14 @@ def embedding_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # band table + norm table are the stored per-corpus index of this
     # workload (session-persisted once, not re-persisted per call)
-    from classic_fcd_spark.session import session_memo
+    from classic_fcd_spark.session import session_silver
 
-    tagged = session_memo(
+    tagged = session_silver(
         spark,
         f"embtopk:tagged|{sf_dir}",
-        lambda: emb.select("vec_id", F.explode(bands).alias("bd"))
-        .select("vec_id", F.col("bd.b").alias("b"), F.col("bd.v").alias("v"))
-        .persist(),
+        lambda: emb.select("vec_id", F.explode(bands).alias("bd")).select(
+            "vec_id", F.col("bd.b").alias("b"), F.col("bd.v").alias("v")
+        ),
     )
     # i<j unordered candidates with the per-task group bound (engaged
     # only when a band bucket exceeds the cap), then both orientations
@@ -373,14 +373,14 @@ def embedding_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = und.unionByName(
         und.select(F.col("j").alias("i"), F.col("i").alias("j"))
     )
-    normed = session_memo(
+    normed = session_silver(
         spark,
         f"embtopk:normed|{sf_dir}",
         lambda: emb.select(
             "vec_id",
             "embedding",
             F.expr(dot_sql("embedding", "embedding")).alias("n2"),
-        ).persist(),
+        ),
     )
     pa = normed.select(
         F.col("vec_id").alias("i"), F.col("embedding").alias("ea"), F.col("n2").alias("na2")
@@ -554,7 +554,7 @@ def ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cell assignment IS the stored IVF inverted-list index —
     # persisted once per (session, corpus); the probe join reads it on
     # both sides
-    from classic_fcd_spark.session import session_memo
+    from classic_fcd_spark.session import session_silver
 
     def _build_assigned():
         withn = emb.repartition(
@@ -569,10 +569,9 @@ def ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "embedding", enc.alias("enc"))
             .groupBy("vec_id", "embedding")
             .agg((F.max("enc") % 100).cast("int").alias("cell"))
-            .persist()
         )
 
-    assigned = session_memo(spark, f"ann_ivf:assigned|{sf_dir}", _build_assigned)
+    assigned = session_silver(spark, f"ann_ivf:assigned|{sf_dir}", _build_assigned)
     q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"), "cell"
     )
@@ -687,11 +686,9 @@ def ann_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 8-byte PQ codes ARE the stored compressed index (the whole
     # point of PQ is scanning codes instead of raw vectors) — encoded
     # once per (session, corpus)
-    from classic_fcd_spark.session import session_memo
+    from classic_fcd_spark.session import session_silver
 
-    codes = session_memo(
-        spark, f"ann_pq:codes|{sf_dir}", lambda: pq_encode(emb, books).persist()
-    )
+    codes = session_silver(spark, f"ann_pq:codes|{sf_dir}", lambda: pq_encode(emb, books))
 
     def _lit_arr(vals):
         return "array(" + ", ".join(repr(float(x)) for x in vals) + ")"

@@ -395,25 +395,16 @@ def _trigram_model_for(spark: SparkSession, sf_dir: str, docs: DataFrame):
     from classic_fcd_spark.operators.lm import fit_trigram_prob_model
     from classic_fcd_spark.session import session_memo
 
-    def _fit():
-        # per-corpus persist scope: a second corpus fit in the same
-        # session (bench warm-up at sf0.001, then sf0.1) must not
-        # unpersist the first corpus's memoized count tables
-        model = fit_trigram_prob_model(
+    # the per-corpus persist scope makes each count table a session
+    # silver of its own, so eviction unpersists them with the corpus
+    return session_memo(
+        spark,
+        f"trigram_model|{sf_dir}",
+        lambda: fit_trigram_prob_model(
             docs.filter(F.col("source") == "src0"),
             persist_scope=f"trigram_prob:{sf_dir}",
-        )
-        for df in (
-            model.uni_model,
-            model.pair_model,
-            model.pctx_model,
-            model.tri_model,
-            model.tctx_model,
-        ):
-            df.persist()
-        return model
-
-    return session_memo(spark, f"trigram_model|{sf_dir}", _fit)
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------

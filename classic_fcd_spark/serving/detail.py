@@ -748,13 +748,10 @@ def get_total_supply(spark: SparkSession, inp: str) -> str:
     """totalSupply.ts:6-16 — the denom's issuance as a string; a
     currency alias ('luna') resolves to its denom and divides by 1e6
     (macro units)."""
-    from classic_fcd_spark.sources.fixtures import gen_issuances
+    from classic_fcd_spark.sources.fixtures import ISSUANCES
 
     denom = _resolve_denom(inp)
-    rows = (
-        gen_issuances(spark).filter(F.col("denom") == denom).collect()
-    )
-    supply = Decimal(int(rows[0]["issuance"])) if rows else Decimal(0)
+    supply = Decimal(ISSUANCES.get(denom, 0))
     return _money(supply / 1_000_000) if inp != denom else _money(supply)
 
 
@@ -769,11 +766,10 @@ def get_circulating_supply(spark: SparkSession, inp: str) -> str:
 
     from classic_fcd_spark.queries.fcd import _fixture_files_dir
     from classic_fcd_spark.sources.files import read_vesting_json
-    from classic_fcd_spark.sources.fixtures import gen_issuances
+    from classic_fcd_spark.sources.fixtures import ISSUANCES
 
     denom = _resolve_denom(inp)
-    rows = gen_issuances(spark).filter(F.col("denom") == denom).collect()
-    supply = Decimal(int(rows[0]["issuance"])) if rows else Decimal(0)
+    supply = Decimal(ISSUANCES.get(denom, 0))
     path = _os.path.join(_fixture_files_dir(spark), "vesting.json")
     unvested = (
         read_vesting_json(spark, path)

@@ -370,19 +370,17 @@ def get_dashboard_general_info(spark: SparkSession) -> dict:
     taxRate + per-denom taxCaps (the engine's F13 constants —
     pipeline/medallion.py's tax math), per-denom issuances, and the
     stakingPool ratio/bonded/notBonded from the newest general-info
-    snapshot.  Every piece is a dim-bounded or 1-row collect."""
+    snapshot.  The issuances are the fixture's constant dict, read in
+    Python; every other piece is a dim-bounded or 1-row collect."""
     from classic_fcd_spark.pipeline.medallion import (
         DEFAULT_TAX_CAP,
         TAX_CAPS,
         TAX_RATE_E6,
     )
-    from classic_fcd_spark.sources.fixtures import gen_general_info, gen_issuances
+    from classic_fcd_spark.sources.fixtures import ISSUANCES, gen_general_info
 
     prices = {d: _money(p) for d, p in _latest_prices(spark)[0].items()}
-    issuances = {
-        r["denom"]: _money(int(r["issuance"]))
-        for r in gen_issuances(spark).collect()
-    }
+    issuances = {d: _money(a) for d, a in sorted(ISSUANCES.items())}
     gi = (
         gen_general_info(spark)
         .orderBy(F.col("datetime").desc())

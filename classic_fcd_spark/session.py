@@ -141,8 +141,10 @@ TABLES = (
 
 
 # The engine's one cache (see session_memo for the contract): every
-# memoized table, silver, statistic, bronze fixture, open extract and
-# scoped persist, keyed (session UUID, key), oldest use first.
+# memoized table, silver, statistic, bronze fixture and open extract,
+# keyed (session UUID, key), oldest use first.  A persisted DataFrame is
+# always a value of its own, never inside a tuple or a model object, so
+# eviction can unpersist it.
 # perfbench/layers.py counts entries through len() of _SHINGLE_CACHE,
 # _SHINGLE_STATS and sources.fixtures._BRONZE_CACHE, so those names stay
 # bound to this dict.
@@ -165,10 +167,10 @@ def _evict(drop) -> None:
 
 def _lookup(spark, key, build, fresh: bool = False):
     """The registry lookup behind session_memo.  The engine's own users
-    (tables, bronze fixtures, extracts, stamped pages, scoped persists)
-    call it directly with tuple keys ``(kind, ...)``, so a tracer that
-    wraps session_memo sees silver calls only.  ``fresh`` drops the
-    entry first, so ``build`` always runs."""
+    (tables, bronze fixtures, extracts, stamped pages) call it directly
+    with tuple keys ``(kind, ...)``, so a tracer that wraps session_memo
+    sees silver calls only.  ``fresh`` drops the entry first, so
+    ``build`` always runs (an extract reopened on request)."""
     k = (spark._jsparkSession.sessionUUID(), key)
     if fresh:
         _evict(k.__eq__)
@@ -186,8 +188,8 @@ def session_memo(spark, key: str | None, build):
     This is the engine's only cache.  It holds plan-decision state
     (scalar probe statistics, tiny collected codebooks, loaded model
     handles), persisted silvers, and, through the same store, loaded
-    tables, bronze fixtures, open serving extracts and scoped persists.
-    Query results are never memoized.
+    tables, bronze fixtures and open serving extracts.  Query results are
+    never memoized.
 
     - Key: ``(spark._jsparkSession.sessionUUID(), key)``.  The UUID is
       distinct for every ``newSession()`` (temp views and runtime conf
@@ -203,11 +205,10 @@ def session_memo(spark, key: str | None, build):
     - ``key=None`` returns ``build()`` unmemoized, so a caller without
       a corpus identity needs no second code path.
     - Eviction, rule 1: a miss drops every entry of other sessions.
-    - Eviction, rule 2: owners drop their own entries.  scoped_persist
-      replaces its scope's previous generation, an extract write drops
-      the relations under its directory, and stamped pages keep at most
-      32 scopes by dropping the least recently used one (a hit moves its
-      entry to the back, so the store is in recency order).
+    - Eviction, rule 2: owners drop their own entries.  An extract write
+      drops the relations under its directory, and stamped pages keep at
+      most 32 scopes by dropping the least recently used one (a hit
+      moves its entry to the back, so the store is in recency order).
     - Every dropped persisted DataFrame is unpersisted.
     """
     if key is None:
@@ -215,12 +216,14 @@ def session_memo(spark, key: str | None, build):
     return _lookup(spark, key, build)
 
 
-def scoped_persist(df, scope: str):
-    """Persist ``df``, unpersisting what the same ``scope`` persisted on
-    the previous call.  A long-lived session thus holds at most one live
-    generation per query scope instead of accumulating persisted
-    intermediates in executor storage memory."""
-    return _lookup(df.sparkSession, ("scoped", scope), df.persist, fresh=True)
+def session_silver(spark, key: str | None, build):
+    """``build()`` persisted once per (session, ``key``): the silver form
+    of session_memo.  Persisting is lazy, so the first action over the
+    result fills the cache and no job runs here.  ``key=None`` returns
+    the plain lazy plan, unpersisted: a caller without a corpus identity
+    has nothing to reuse, and an unkeyed persist would outlive its
+    caller."""
+    return session_memo(spark, key, build if key is None else lambda: build().persist())
 
 
 def shingle_table(spark, sf_dir: str):
@@ -242,10 +245,9 @@ def shingle_table(spark, sf_dir: str):
             .filter(F.size(ws_tokens("text")) >= 3)
             .select("doc_id", word_shingles("text").alias("shingles"))
             .withColumn("n", F.size("shingles"))
-            .persist()
         )
 
-    return session_memo(spark, f"shingle_table|{sf_dir}", build)
+    return session_silver(spark, f"shingle_table|{sf_dir}", build)
 
 
 def shingle_stats(spark, sf_dir: str) -> tuple[int, int, int]:
@@ -340,9 +342,9 @@ def banded_minhash_table(spark, sf_dir: str):
         from classic_fcd_spark.operators.dedup import banded_signatures
 
         sh = shingle_table(spark, sf_dir).select("doc_id", "shingles")
-        return banded_signatures(sh, "doc_id", "shingles").persist()
+        return banded_signatures(sh, "doc_id", "shingles")
 
-    return session_memo(spark, f"banded_minhash|{sf_dir}", build)
+    return session_silver(spark, f"banded_minhash|{sf_dir}", build)
 
 
 def simhash_silver(spark, sf_dir: str):
@@ -356,9 +358,9 @@ def simhash_silver(spark, sf_dir: str):
         from classic_fcd_spark.operators.dedup import simhash32_table
 
         sh = shingle_table(spark, sf_dir)
-        return simhash32_table(sh, "doc_id", F.col("shingles")).persist()
+        return simhash32_table(sh, "doc_id", F.col("shingles"))
 
-    return session_memo(spark, f"simhash_silver|{sf_dir}", build)
+    return session_silver(spark, f"simhash_silver|{sf_dir}", build)
 
 
 def simhash_grp_table(spark, sf_dir: str):
@@ -372,13 +374,11 @@ def simhash_grp_table(spark, sf_dir: str):
 
     def build():
         sh = simhash_silver(spark, sf_dir)
-        return (
-            sh.groupBy("simhash")
-            .agg(F.min("doc_id").alias("rep"), F.count("*").alias("m"))
-            .persist()
+        return sh.groupBy("simhash").agg(
+            F.min("doc_id").alias("rep"), F.count("*").alias("m")
         )
 
-    return session_memo(spark, f"simhash_grp|{sf_dir}", build)
+    return session_silver(spark, f"simhash_grp|{sf_dir}", build)
 
 
 def bm25_postings_table(spark, sf_dir: str):
@@ -393,9 +393,9 @@ def bm25_postings_table(spark, sf_dir: str):
         from classic_fcd_spark.operators.bm25 import bm25_postings, with_df
 
         docs = load_tables(spark, sf_dir)["documents"]
-        return with_df(bm25_postings(docs)).persist()
+        return with_df(bm25_postings(docs))
 
-    return session_memo(spark, f"bm25_postings|{sf_dir}", build)
+    return session_silver(spark, f"bm25_postings|{sf_dir}", build)
 
 
 def bm25_corpus_stats(spark, sf_dir: str) -> tuple[int, float]:

@@ -15,6 +15,10 @@ honest corpora keep the pre-collapse direct plan.  Gates:
    -> direct) they must emit the exact pair set the collapse
    formulation computes.  Both directions, so neither branch can rot
    unexercised.
+4. The collapse arms against their DuckDB oracles on a 5-copy clone
+   corpus (the gate corpora hold no text more than twice), called twice
+   in one session: cold == warm == oracle, the warm call reading the
+   memoized corpus silvers.
 """
 
 from __future__ import annotations
@@ -190,3 +194,66 @@ class TestBranchEquivalence:
             "dup_of",
         )
         assert got == want and len(got) > 0
+
+
+_SF_COPIES = 5
+_SF_BASE = 100  # sf0.001 doc ids 0..99: four near-dup pairs among them
+
+
+@pytest.fixture(scope="module")
+def sf_clone_dir(tmp_path_factory):
+    """5 copies of sf0.001 documents 0..99 under disjoint ids: every
+    group has 5 members on both sides of incremental_dedup's max/2
+    split, and the base near-dup pairs expand to 5 x 5 cross-group
+    pairs.  Natural dispatch needs ~33k intra-group pairs before the
+    collapse pays off, and the DuckDB oracles take ~110 s per query on
+    such a corpus, so the test lowers COLLAPSE_DUP_MASS instead (the
+    collapse is exact on any corpus; the threshold only picks the
+    cheaper plan)."""
+    src = pq.read_table(os.path.join(SF_SMALL, "documents.parquet"))
+    src = src.filter(pa.compute.less(src["doc_id"], _SF_BASE))
+    parts = []
+    for c in range(_SF_COPIES):
+        cols = src.to_pydict()
+        cols["doc_id"] = [int(x) + c * 10_000_000 for x in cols["doc_id"]]
+        parts.append(pa.table(cols, schema=src.schema))
+    d = str(tmp_path_factory.mktemp("sf_clones"))
+    pq.write_table(pa.concat_tables(parts), os.path.join(d, "documents.parquet"))
+    return d
+
+
+class TestCollapseArmOracle:
+    @pytest.mark.parametrize(
+        "name,silver",
+        [("minhash_lsh_near_dups", "minhash:groups"), ("incremental_dedup", "incdedup:gnew")],
+    )
+    def test_cold_equals_warm_equals_oracle(
+        self, spark, monkeypatch, sf_clone_dir, name, silver
+    ):
+        import duckdb
+
+        from classic_fcd_spark import queries
+        from classic_fcd_spark.operators import dedup
+        from classic_fcd_spark.queries import dedup as qd
+        from classic_fcd_spark.session import _SESSION_MEMO, shingle_stats
+
+        monkeypatch.setattr(dedup, "COLLAPSE_DUP_MASS", 0)
+        assert dedup.collapse_pays_off(*shingle_stats(spark, sf_clone_dir))
+        fn = getattr(qd, name)
+        cold = sorted(tuple(r) for r in fn(spark, sf_clone_dir).collect())
+        key = (spark._jsparkSession.sessionUUID(), f"{silver}|{sf_clone_dir}")
+        assert key in _SESSION_MEMO
+        warm = sorted(tuple(r) for r in fn(spark, sf_clone_dir).collect())
+        assert warm == cold
+        assert len(set(cold)) == len(cold), "duplicate output rows"
+        con = duckdb.connect()
+        con.sql(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{os.path.join(sf_clone_dir, 'documents.parquet')}')"
+        )
+        want = sorted(map(tuple, con.sql(queries.oracle_sql_map(sf_clone_dir)[name]).fetchall()))
+        assert cold == want
+        # intra-group pairs (equal doc_id mod the copy stride) and
+        # cross-group ones both occur
+        kinds = {(a - b) % 10_000_000 == 0 for a, b, *_ in cold}
+        assert kinds == {True, False}

@@ -1,5 +1,6 @@
 """embedding_similar_pairs against EMBEDDING_SIMILAR_PAIRS_ORACLE_SQL on
-both dispatch arms: the 5-copy clone corpus (the collapse arm), blocks
+both dispatch arms: the 5-copy clone corpus (the collapse arm, cold and
+warm), blocks
 split into many tiles, and corpora holding a zero vector once and
 twice.  Plus the query's warm job budget.
 """
@@ -83,7 +84,9 @@ class TestEmbeddingPairsOracle:
     # the duplicate-free arm at the default TILE is checked against the
     # same oracle by tests/test_text_queries.py
     def test_collapse_arm(self, spark, clone_dir):
-        _check(spark, clone_dir, max_m=5)
+        cold = _check(spark, clone_dir, max_m=5)
+        # the warm call reads the memoized groups silver
+        assert sorted(_check(spark, clone_dir, max_m=5)) == sorted(cold)
 
     @pytest.mark.parametrize("corpus", ["small", "clones"])
     def test_many_tiles(self, spark, monkeypatch, clone_dir, corpus):

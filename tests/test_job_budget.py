@@ -6,7 +6,9 @@ submission, stage scheduling, task launch), not executor CPU, so the
 number of jobs a warm call launches is the cost this gate holds.  Each
 query or request runs once cold (filling its session silvers and memos),
 then once more inside a job group; the group's job ids are the warm
-call's jobs, plan-time probes included.
+call's jobs, plan-time probes included.  Building a query's DataFrame
+warm, before any collect, runs no job at all: plan-time work is the one
+kind of job a collect's own plan cannot overlap or adapt.
 
 Raising an entry needs the same review as `scripts/plan_audit.py`'s
 `ALLOW`: say in the change's notes which job was added and why it pays.
@@ -25,10 +27,13 @@ from tests.conftest import SF_SMALL
 # postings silver); every other entry is its measured count.
 WARM_JOB_BUDGETS = {
     "scd2_order_history": ("classic_fcd_spark.queries.analytics", 2),
-    "near_dup_groups": ("classic_fcd_spark.queries.dedup", 10),
+    "near_dup_groups": ("classic_fcd_spark.queries.dedup", 4),
     "embedding_similar_pairs": ("classic_fcd_spark.queries.similarity", 2),
     "hybrid_rrf_search": ("classic_fcd_spark.queries.text", 5),
     "bm25_search": ("classic_fcd_spark.queries.text", 3),
+    "minhash_lsh_near_dups": ("classic_fcd_spark.queries.dedup", 6),
+    "incremental_dedup": ("classic_fcd_spark.queries.dedup", 8),
+    "semantic_dedup_q": ("classic_fcd_spark.queries.similarity", 5),
 }
 
 
@@ -41,7 +46,7 @@ WARM_ROUTE_BUDGETS = {
     "account_page": 1,
     "hot_walk": 1,
     "tx_list": 2,  # the page's top-k exchange, then the semi-join collect
-    "dashboard": 4,  # price aggregate (2), issuances, newest snapshot
+    "dashboard": 3,  # price aggregate (2), newest snapshot
     "governance": 3,  # one shuffle, the validator-dim broadcast, collect
     "staking": 1,
     "market": 2,  # the one price aggregate: its exchange and collect
@@ -62,12 +67,27 @@ def _warm_jobs(spark, call, name: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _query(name: str):
+    module, _budget = WARM_JOB_BUDGETS[name]
+    return getattr(importlib.import_module(module), name)
+
+
 @pytest.mark.parametrize("name", sorted(WARM_JOB_BUDGETS))
 def test_warm_call_within_budget(spark, name):
-    module, budget = WARM_JOB_BUDGETS[name]
-    fn = getattr(importlib.import_module(module), name)
+    fn, budget = _query(name), WARM_JOB_BUDGETS[name][1]
     jobs = _warm_jobs(spark, lambda: fn(spark, SF_SMALL).collect(), name)
     assert 0 < jobs <= budget, f"{name}: {jobs} warm jobs, budget {budget}"
+
+
+@pytest.mark.parametrize("name", sorted(WARM_JOB_BUDGETS))
+def test_warm_plan_runs_no_job(spark, name):
+    """Building the DataFrame of a warm query, without collecting it,
+    launches no Spark job: probes are memoized and every corpus
+    intermediate is a session silver."""
+    fn = _query(name)
+    fn(spark, SF_SMALL).collect()
+    jobs = _warm_jobs(spark, lambda: fn(spark, SF_SMALL), f"plan:{name}")
+    assert jobs == 0, f"{name}: building the warm plan ran {jobs} jobs"
 
 
 @pytest.fixture(scope="module")

@@ -211,7 +211,7 @@ def _ref_trigram_prob(docs, model_docs, buckets=256, lams=(0.2, 0.3, 0.5)):
 def _prob_scores(docs, model_docs) -> dict:
     from classic_fcd_spark.operators.lm import fit_trigram_prob_model, score_trigram_prob
 
-    model = fit_trigram_prob_model(model_docs, persist_scope="test_lm")
+    model = fit_trigram_prob_model(model_docs)
     return {
         r["doc_id"]: (r["n_tokens"], r["sum_p_e9"])
         for r in score_trigram_prob(docs, model).collect()

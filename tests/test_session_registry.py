@@ -1,9 +1,10 @@
 """The session registry (session.session_memo and its private lookup):
-one store for every memoized table, silver, bronze fixture, open extract,
-stamped page and scoped persist, keyed on the session UUID.
+one store for every memoized table, silver, bronze fixture, open extract
+and stamped page, keyed on the session UUID.
 
 - a `newSession()` gets its own `load_tables` temp views and entries;
-- `scoped_persist` unpersists the scope's previous generation;
+- a keyed `session_silver` is persisted once per session and unpersisted
+  when a new session evicts it; a key-less one is a plain lazy plan;
 - an extract write drops only the open relations under its directory;
 - stamped pages keep at most `_STAMPED_CAP` scopes and evict (and
   unpersist) the least recently used one;
@@ -64,16 +65,34 @@ def test_new_session_gets_its_own_tables_and_entries(spark):
     assert "orders" in _temp_views(spark)
 
 
-def test_scoped_persist_unpersists_previous_generation(spark):
-    from classic_fcd_spark.session import scoped_persist
+def test_keyed_silver_persists_once_until_a_new_session_evicts_it(spark):
+    from classic_fcd_spark.session import session_silver
 
-    first = scoped_persist(spark.range(7), "test:scoped")
-    assert _cached(first)
-    second = scoped_persist(spark.range(11), "test:scoped")
-    assert _cached(second)
-    assert not _cached(first)
-    assert _keys_of(spark).count(("scoped", "test:scoped")) == 1
-    second.unpersist()
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(7)
+
+    silver = session_silver(spark, "test:silver", build)
+    assert _cached(silver)
+    assert session_silver(spark, "test:silver", build) is silver
+    assert len(builds) == 1
+    assert _keys_of(spark).count("test:silver") == 1
+    other = spark.newSession()
+    session_silver(other, "test:silver", lambda: other.range(11)).unpersist()
+    # the other session's miss dropped (and unpersisted) this one's
+    assert "test:silver" not in _keys_of(spark)
+    assert not _cached(silver)
+
+
+def test_keyless_silver_is_an_unpersisted_plan(spark):
+    from classic_fcd_spark import session
+
+    before = len(session._SESSION_MEMO)
+    plan = session.session_silver(spark, None, lambda: spark.range(5))
+    assert not _cached(plan)
+    assert len(session._SESSION_MEMO) == before
 
 
 def test_extract_write_drops_only_its_prefix(spark, tmp_path):
