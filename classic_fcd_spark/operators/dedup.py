@@ -58,13 +58,16 @@ def word_shingles(text, n: int = 3) -> Column:
 
 
 def duck_word_shingles(text_expr: str = "text", n: int = 3) -> str:
-    """DuckDB expression computing the same distinct word n-grams."""
-    toks = f"regexp_split_to_array(trim({text_expr}), ' +')"
+    """DuckDB expression computing the same distinct word n-grams.  The
+    split is bound once, as the parameter of a lambda over a one-element
+    list: spliced into each `toks[i+j]` it would re-split the document
+    for every index."""
     joined = " || ' ' || ".join(f"toks[i+{j}]" for j in range(n))
     return (
-        f"CASE WHEN len({toks}) >= {n} THEN list_distinct("
-        f"[{joined} for i in range(1, len({toks}) - {n - 1} + 1)]"
-        f") ELSE [] END".replace("toks[", f"{toks}[")
+        f"list_transform([regexp_split_to_array(trim({text_expr}), ' +')], "
+        f"toks -> CASE WHEN len(toks) >= {n} THEN list_distinct("
+        f"[{joined} for i in range(1, len(toks) - {n - 1} + 1)]"
+        f") ELSE [] END)[1]"
     )
 
 

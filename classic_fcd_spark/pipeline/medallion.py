@@ -58,16 +58,22 @@ def success(txs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # silver account_tx — F4 address explode (src/collector/block/accountTx.ts:5-58).
 # ---------------------------------------------------------------------------
+def tx_accounts() -> F.Column:
+    """A tx's accounts: every terra address anywhere in its msg
+    payloads, distinct.  to_json serialization makes the regex walk
+    exactly as exhaustive as the reference's recursive JSON walk — same
+    operator family as SURVEY F4.  The block ingest collects this array
+    to learn which account-extract buckets a batch touches."""
+    return extract_addresses(F.to_json("msgs"))
+
+
 def account_tx_silver(txs: DataFrame) -> DataFrame:
-    """One row per (account, tx): every terra address anywhere in the msg
-    payloads, distinct per tx (D5).  to_json serialization makes the
-    regex walk exactly as exhaustive as the reference's recursive JSON
-    walk — same operator family as SURVEY F4."""
+    """One row per (account, tx) of `tx_accounts` (D5)."""
     return txs.select(
         "hash",
         "height",
         "timestamp",
-        F.explode(extract_addresses(F.to_json("msgs"))).alias("account"),
+        F.explode(tx_accounts()).alias("account"),
     )
 
 

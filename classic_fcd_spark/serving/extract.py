@@ -126,12 +126,13 @@ def _latest_per_key(
 
 
 def merge_tx_lookup_extract(
-    txs: DataFrame, out_dir: str, num_buckets: int = 16
+    txs: DataFrame, out_dir: str, num_buckets: int = 16, touched: list | None = None
 ) -> list[int]:
     """Upsert a batch of txs into the tx-by-hash extract (key: hash);
     returns the touched bucket ids.  Intra-batch versions of one hash:
     highest height wins (last write, as the reference's ON CONFLICT DO
-    UPDATE)."""
+    UPDATE).  `touched`: the batch's bucket ids when the caller knows
+    them (`_bucket_py` of its hashes), see `merge_upsert`."""
     ver = [F.col("height").desc()] if "height" in txs.columns else []
     touched = merge_upsert(
         txs.sparkSession,
@@ -140,17 +141,20 @@ def merge_tx_lookup_extract(
         ["hash"],
         _bucket_expr("hash", num_buckets),
         TX_BY_HASH,
+        touched,
     )
     _invalidate_open(out_dir)
     return sorted(touched)
 
 
 def merge_account_page_extract(
-    account_tx: DataFrame, out_dir: str, num_buckets: int = 16
+    account_tx: DataFrame, out_dir: str, num_buckets: int = 16,
+    touched: list | None = None,
 ) -> list[int]:
     """Upsert a batch of (account, tx) rows into the account-page
     extract, preserving the page's keyset sort order inside each
-    bucket; returns the touched bucket ids."""
+    bucket; returns the touched bucket ids (`touched` as in
+    `merge_tx_lookup_extract`, from the batch's accounts)."""
     keys = ["account", "hash"]
     touched = merge_upsert(
         account_tx.sparkSession,
@@ -159,6 +163,7 @@ def merge_account_page_extract(
         keys,
         _bucket_expr("account", num_buckets),
         ACCOUNT_TX,
+        touched,
     )
     _invalidate_open(out_dir)
     return sorted(touched)

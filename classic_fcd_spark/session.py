@@ -156,7 +156,9 @@ _MISSING = object()
 def _evict(drop) -> None:
     """Remove every entry whose full key satisfies ``drop``, unpersisting
     the persisted DataFrames among them."""
-    for k in [k for k in _SESSION_MEMO if drop(k)]:
+    # over a snapshot: another thread (an ingest batch's concurrent
+    # sinks) may insert or pop while this one scans
+    for k in [k for k in list(_SESSION_MEMO) if drop(k)]:
         old = _SESSION_MEMO.pop(k, None)
         if getattr(old, "is_cached", False):
             try:

@@ -296,8 +296,10 @@ def gen_prices(spark: SparkSession, n_minutes: int = FIXTURE_N_PRICE_MINUTES) ->
     price row by design — the reference prices everything *in* Luna/USD and
     converts uluna itself via the uusd price (F9 in SURVEY §2.8)."""
     m = F.col("id")
-    rows = spark.range(0, n_minutes).crossJoin(
-        spark.createDataFrame([(d,) for d in DENOMS if d != "uluna"], ["denom"])
+    # the denoms as a JVM literal, not a Python-fed relation: a
+    # createDataFrame scan starts the Python worker daemon (~2.5 s cold)
+    rows = spark.range(0, n_minutes).select(
+        "id", F.explode(F.array(*[F.lit(d) for d in DENOMS if d != "uluna"])).alias("denom")
     )
     # positive deterministic walk: 1 + ((m*seed) % 100)/100
     seed = F.when(F.col("denom") == "ukrw", 17).when(F.col("denom") == "usdr", 29).otherwise(41)
@@ -331,8 +333,16 @@ ISSUANCES = {
 
 @bronze_table
 def gen_issuances(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(d, a) for d, a in sorted(ISSUANCES.items())], ["denom", "issuance"]
+    # a JVM literal, as gen_prices' denoms
+    return spark.range(1).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(d).alias("denom"), F.lit(a).cast("long").alias("issuance"))
+                    for d, a in sorted(ISSUANCES.items())
+                ]
+            )
+        )
     )
 
 

@@ -48,6 +48,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_promote_manifest.json"
 OLD_SUFFIX = "__old"
@@ -212,12 +213,19 @@ def read_table(
 
 
 def read_partitions(
-    spark: SparkSession, table_dir: str, values: list, part_col: str
+    spark: SparkSession,
+    table_dir: str,
+    values: list,
+    part_col: str,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """The MERGE's read side: ONLY the touched partitions.  The isin
     filter is on the partition column, so it resolves to PartitionFilters
-    on the scan; untouched partitions contribute zero files to the read."""
-    return spark.read.parquet(table_dir).filter(F.col(part_col).isin(values))
+    on the scan; untouched partitions contribute zero files to the read.
+    A known `schema` (the table's rows are the updates' shape) skips the
+    Spark job that infers it from a parquet footer."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(table_dir).filter(F.col(part_col).isin(values))
 
 
 def replace_partitions(
@@ -232,6 +240,16 @@ def replace_partitions(
     tmp = table_dir.rstrip("/") + "__tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     layout.writer(df).parquet(tmp)
+    # promoting only some of the staged partitions would drop the rest's
+    # rows; a caller's partition list can be a superset, never a subset
+    prefix = f"{layout.part_col}="
+    staged = {d[len(prefix):] for d in os.listdir(tmp) if d.startswith(prefix)}
+    missing = staged - {str(v) for v in values}
+    if missing:
+        raise ValueError(
+            f"{table_dir}: staged partitions {sorted(missing)} are not in "
+            f"the partitions to replace"
+        )
     promote_partitions(tmp, table_dir, layout.part_col, values)
 
 
@@ -242,6 +260,7 @@ def merge_upsert(
     keys: list[str],
     partition_expr: F.Column | None = None,
     layout: Layout = DAYS,
+    touched: list | None = None,
 ) -> list:
     """Idempotent, PARTITION-SCOPED MERGE-by-key of `updates` into the
     table at `out_dir` (S9: the reference's INSERT … ON CONFLICT
@@ -254,20 +273,29 @@ def merge_upsert(
     one data write per batch plus O(partitions) metadata moves, the
     shape of a Delta MERGE commit.  Untouched partitions are never
     read, written or moved, so a batch costs O(batch + touched
-    partitions), not O(table)."""
+    partitions), not O(table).
+
+    `touched`, when the caller already knows the partition values its
+    updates can land in (the block ingest derives them from one key
+    collect per batch), skips the collect; it may name partitions no
+    update lands in (they are rewritten unchanged), but a missing one
+    makes `replace_partitions` raise before anything is promoted."""
     part = layout.part_col
     if partition_expr is None:
         partition_expr = F.substring(keys[0], 1, 10)  # minute -> day prefix
-    updates = updates.withColumn(part, partition_expr).cache()
+    updates = updates.withColumn(part, partition_expr)
+    if touched is None:
+        updates = updates.cache()
     try:
-        # a set over the collected column (batch-sized, one job), not
-        # distinct(), whose shuffle is a second job under AQE
-        touched = list({r[0] for r in updates.select(part).collect()})
+        if touched is None:
+            # a set over the collected column (batch-sized, one job), not
+            # distinct(), whose shuffle is a second job under AQE
+            touched = list({r[0] for r in updates.select(part).collect()})
         if not touched:
             return []
         merged = updates
         if stored_partitions(out_dir, part):
-            existing = read_partitions(spark, out_dir, touched, part)
+            existing = read_partitions(spark, out_dir, touched, part, updates.schema)
             cond = [existing[k] == updates[k] for k in keys]
             merged = existing.join(updates, cond, "left_anti").unionByName(updates)
         replace_partitions(merged, out_dir, touched, layout)

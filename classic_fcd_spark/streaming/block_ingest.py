@@ -45,21 +45,35 @@ bundle feed covers empty blocks (a block with zero txs still writes
 its entity and rewards) and makes the transaction the reference's full
 seven-sink write set.
 
+How a batch runs: one collect over the cached batch returns every key
+set the sinks need (heights and tx counts, minutes and days, the
+extract buckets, the touched proposal ids), so no sink collects its
+own.  Then each sink runs on its own driver thread.  The two rollups
+are the only sinks that read what another sink writes, so each runs in
+the thread of the append it reads, right after it: the tx rollup after
+bronze (3), the reward rollup after blockreward (1).
+
 Exactly-once argument, sink by sink, under foreachBatch's contract
 (a failed batch is replayed with the SAME batch_id and rows):
-- (1)(2)(3) replay overwrites the same `ingest_batch=<id>` directory —
-  no duplicates, no loss;
-- (4)(5) replace-by-key MERGE — replay converges (and the two-phase
+- (1)(2)(3)(4) replay overwrites the same `ingest_batch=<id>`
+  directory — no duplicates, no loss;
+- (5)(6)(7) replace-by-key MERGE — replay converges (and the two-phase
   promotion in sources/promote.py makes the swap itself crash-safe);
-- (6) is a deterministic function of bronze restricted to the touched
-  minutes: whether the crash happened before or after the bronze
-  write, the replay recomputes from post-write bronze and overwrites
-  by key — the same convergence the reference gets from recomputing
-  its minute aggregates inside the block transaction (collectReward /
-  collectNetwork fire AFTER the tx inserts in the same txn).
-The crash-injection test (tests/test_block_ingest.py) kills the sink
-after each individual stage and proves every sink converges to the
-uninterrupted run's state on restart.
+- (8)(9) are deterministic functions of bronze restricted to the
+  touched minutes: the replay recomputes from post-write bronze and
+  overwrites by key — the same convergence the reference gets from
+  recomputing its minute aggregates inside the block transaction
+  (collectReward / collectNetwork fire AFTER the tx inserts in the
+  same txn).
+So the order of the sinks carries none of the guarantee: the
+replayable source plus idempotent sinks give exactly-once, as in
+Structured Streaming.  Only the data order matters, and it holds: a
+rollup starts after its bronze write succeeded.  A failure anywhere
+waits for every running sink before it fails the batch, so no write of
+a failed attempt races its replay.
+The crash-injection tests (tests/test_block_ingest.py) fail one sink
+mid-batch, its concurrent siblings included, and prove every sink
+converges to the uninterrupted run's state on restart.
 
 Scale notes (100 TB): per-batch cost is ∝ batch + touched partitions
 for every sink — bronze/silver appends are batch-sized writes; the
@@ -75,18 +89,25 @@ asserted in the sustained bench's combined stage.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from classic_fcd_spark.pipeline.medallion import (
     LOGS_SCHEMA,
     _minute,
     account_tx_silver,
     minute_rewards_silver,
+    tx_accounts,
     tx_volume_minute_silver,
 )
 from classic_fcd_spark.serving.extract import (
+    _bucket_py,
     merge_account_page_extract,
     merge_tx_lookup_extract,
 )
@@ -177,8 +198,8 @@ class GovDims:
         deposit totals), computed ONCE per run and persisted: the dims
         are a per-run snapshot (fixed broadcast inputs to the stream),
         so the payload bytes are identical every batch — recomputing
-        the tally per micro-batch would be pure fixed overhead
-        (~1.2 s/batch measured).  The reference refetches LCD per save
+        the tally per micro-batch would be pure fixed overhead.  The
+        reference refetches LCD per save
         because chain state moves under it; the engine analogue of that
         freshness is restarting the stream with new dims (or wiring a
         throttled dim refresh — streaming/dim_refresh.py)."""
@@ -237,36 +258,117 @@ def refresh_proposal_payload(gov: GovDims, touched: DataFrame) -> DataFrame:
     return gov.payload_base().join(F.broadcast(touched), "proposal_id")
 
 
+def _proposal_id_strs() -> F.Column:
+    """A tx's proposal_id attribute values, one per log → event →
+    attribute that carries one, kept only when the RAW value is a bare
+    digit string.  The reference gates on parseInt(v, 10) !== NaN but
+    then REFRESHES by the raw attr string via lcd.getProposal, so any
+    value that isn't already a bare digit string ('12abc', '0x1A', and
+    whitespace-padded ' 7 ' alike) passes the gate yet fails the
+    raw-URL fetch and is never stored.  Filtering the UNTRIMMED value
+    matches that end-to-end behavior: only /^[0-9]+$/ survives."""
+    logs = F.from_json("logs_json", LOGS_SCHEMA)
+    events = F.flatten(
+        F.transform(logs, lambda log: F.coalesce(log["events"], F.array()))
+    )
+    attrs = F.flatten(
+        F.transform(events, lambda ev: F.coalesce(ev["attributes"], F.array()))
+    )
+    return F.transform(
+        F.filter(
+            attrs,
+            lambda a: (a["key"] == "proposal_id") & a["value"].rlike(r"^[0-9]+$"),
+        ),
+        lambda a: a["value"],
+    )
+
+
 def detect_proposal_ids(txs: DataFrame) -> DataFrame:
-    """detectAndUpdateProposal's scan (collectProposal.ts:11-41): walk
-    every log → event → attribute of the batch's txs, keep attributes
-    with key='proposal_id' whose RAW value is a bare digit string
-    ('pid-3', '12abc', and ' 7 ' are all skipped, '12' kept — see the
-    parseInt-vs-raw-fetch note below), one row per
-    (proposal_id, height).  Batch-sized work: explode over the batch
-    only."""
-    logs = txs.select(
-        "height", F.from_json("logs_json", LOGS_SCHEMA).alias("logs")
-    ).filter(F.col("logs").isNotNull())
-    attr = (
-        logs.select("height", F.explode("logs").alias("log"))
-        .select("height", F.explode("log.events").alias("ev"))
-        .select("height", F.explode("ev.attributes").alias("a"))
-        .filter(F.col("a.key") == "proposal_id")
-        # The reference gates on parseInt(v, 10) !== NaN but then
-        # REFRESHES by the RAW attr string via lcd.getProposal, so any
-        # value that isn't already a bare digit string ('12abc',
-        # '0x1A', and whitespace-padded ' 7 ' alike) passes the gate
-        # yet fails the raw-URL fetch and is never stored.  Match that
-        # end-to-end behavior by filtering the UNTRIMMED value: only
-        # /^[0-9]+$/ survives — parseInt's trim is irrelevant because
-        # the fetch doesn't trim.
-        .select("height", F.col("a.value").alias("pid_str"))
-        .filter(F.col("pid_str").rlike(r"^[0-9]+$"))
+    """detectAndUpdateProposal's scan (collectProposal.ts:11-41): one
+    row per (proposal_id, height) for every proposal_id attribute of
+    the batch's txs that `_proposal_id_strs` keeps.  Batch-sized work:
+    an explode over the batch only."""
+    return txs.select(
+        "height", F.explode(_proposal_id_strs()).alias("pid_str")
+    ).select(F.col("pid_str").cast("long").alias("proposal_id"), "height")
+
+
+def _long_map(pairs: dict) -> F.Column:
+    """A bigint -> bigint map literal: one expression, evaluated in the
+    JVM, so a lookup by key needs no join and no Python-fed relation."""
+    return F.map_from_arrays(
+        F.lit(np.array(list(pairs), dtype=np.int64)),
+        F.lit(np.array(list(pairs.values()), dtype=np.int64)),
     )
-    return attr.select(
-        F.col("pid_str").cast("long").alias("proposal_id"), "height"
+
+
+class BatchKeys(NamedTuple):
+    """Every key set the sinks of one batch need, from one collect."""
+
+    n_txs: dict  # tx height -> its tx count
+    tx_minutes: list  # the minutes of the batch's txs
+    block_minutes: dict  # bundle block height -> its minute
+    hash_buckets: list  # tx-by-hash extract buckets
+    account_buckets: list  # account-page extract buckets
+    proposal_ids: list  # touched proposal ids, as partition values
+
+
+def _batch_keys(
+    batch: DataFrame, bundled: bool, num_buckets: int, proposals: bool
+) -> BatchKeys:
+    """The batch's key sets, from one projection of the cached batch
+    (batch-sized rows, no shuffle).  The account and proposal arrays
+    are the same expressions account_tx_silver and detect_proposal_ids
+    explode, so each derived set equals what its sink writes."""
+    cols = [
+        F.col(KIND_COL) if bundled else F.lit("tx").alias(KIND_COL),
+        "height",
+        _minute("timestamp").alias("m"),
+        "hash",
+        tx_accounts().alias("accts"),
+    ]
+    if proposals:
+        cols.append(_proposal_id_strs().alias("pids"))
+    n_txs: dict = {}
+    tx_minutes, block_minutes = set(), {}
+    hashes, accounts, pids = set(), set(), set()
+    for r in batch.select(*cols).collect():
+        if r[KIND_COL] == "block":
+            block_minutes[r["height"]] = r["m"]
+            continue
+        n_txs[r["height"]] = n_txs.get(r["height"], 0) + 1
+        tx_minutes.add(r["m"])
+        if r["hash"] is not None:
+            hashes.add(r["hash"])
+        accounts.update(r["accts"] or ())
+        if proposals:
+            pids.update(r["pids"] or ())
+    return BatchKeys(
+        n_txs,
+        sorted(tx_minutes),
+        block_minutes,
+        sorted({_bucket_py(h, num_buckets) for h in hashes}),
+        sorted({_bucket_py(a, num_buckets) for a in accounts}),
+        # the partition value is the id cast back to a string ('007' -> '7')
+        sorted({str(int(p)) for p in pids}),
     )
+
+
+def _run_sinks(spark: SparkSession, sinks: list) -> None:
+    """Run independent sinks concurrently, one driver thread each, so
+    their Spark jobs share the cluster instead of queueing one by one.
+    Each thread starts with the caller's local properties (job group,
+    description, SQL execution ids).  Every sink finishes before the
+    first failure is raised, so no write of a failed attempt outlives
+    it into the replay."""
+    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+        # one wrap per sink: each wrap clones the properties once, and
+        # threads sharing a clone would share every property a sink sets
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(sink)) for sink in sinks
+        ]
+    for f in futures:
+        f.result()
 
 
 def ingest_block_batch(
@@ -277,138 +379,164 @@ def ingest_block_batch(
     num_buckets: int = 16,
     proposals_dim: "DataFrame | GovDims | None" = None,
 ) -> None:
-    """The per-batch transaction body: every sink, in the reference's
-    write order (blockreward first, block entity, tx rows, serving
-    indexes, proposal refresh, minute rollups last — block.ts:152-176).
+    """The per-batch transaction body: one key collect over the cached
+    batch, then every sink on its own driver thread, each rollup right
+    after the append it reads (module docstring).
     proposals_dim: the proposal dim alone, or a GovDims bundle — with
     the full bundle the refresh stores the recomputed voteSummary +
     deposit totals, as saveProposalDetails does."""
     bundled = KIND_COL in batch_df.columns
-    if bundled:
-        txs = batch_df.filter(F.col(KIND_COL) == "tx").drop(
-            KIND_COL, "proposer", "reward_events"
-        )
-        blks = batch_df.filter(F.col(KIND_COL) == "block").select(
-            "chain_id", "height", "timestamp", "proposer", "reward_events"
-        )
-    else:
-        txs, blks = batch_df, None
-    txs = txs.cache()
+    batch = batch_df.cache()
     try:
-        # 1) blockreward bronze (bundle feed): the getBlockReward write
-        # (block.ts:152-154), day-partitioned for the rollup prune
-        if blks is not None:
-            blks = blks.cache()
-            _append_batch(
-                blks, os.path.join(out_dir, REWARDS), batch_id, day_partition=True
+        # the first action: it fills the cache before any sink thread
+        # reads the batch
+        keys = _batch_keys(batch, bundled, num_buckets, proposals_dim is not None)
+        if bundled:
+            txs = batch.filter(F.col(KIND_COL) == "tx").drop(
+                KIND_COL, "proposer", "reward_events"
             )
-        # 2) block entities (generateBlockEntity): from the bundle's
-        # block rows when present (covers zero-tx blocks), else derived
-        # from tx heights (a block's txs arrive in one feed file)
-        tx_counts = txs.groupBy("height").agg(F.count("*").alias("n_txs"))
-        if blks is not None:
-            blocks = (
-                blks.select("height", "timestamp", "proposer")
-                .join(tx_counts, "height", "left")
-                .na.fill({"n_txs": 0})
+            blks = batch.filter(F.col(KIND_COL) == "block").select(
+                "chain_id", "height", "timestamp", "proposer", "reward_events"
+            )
+            # block entities from the bundle's block rows (covers
+            # zero-tx blocks); the tx counts come from the key collect
+            blocks = blks.select(
+                "height",
+                "timestamp",
+                "proposer",
+                F.coalesce(
+                    F.try_element_at(_long_map(keys.n_txs), F.col("height")),
+                    F.lit(0).cast("long"),
+                ).alias("n_txs"),
             )
         else:
+            txs, blks = batch, None
+            # derived from tx heights (a block's txs arrive in one file)
             blocks = txs.groupBy("height").agg(
                 F.min("timestamp").alias("timestamp"),
                 F.count("*").alias("n_txs"),
             )
-        _append_batch(blocks, os.path.join(out_dir, BLOCKS), batch_id)
-        # 3) bronze txs (day-partitioned inside the batch dir so the
-        # rollup recompute and every time-ranged silver job prune)
-        _append_batch(
-            txs, os.path.join(out_dir, BRONZE), batch_id, day_partition=True
-        )
-        # 4) account_tx silver (F4 address explode, per batch)
-        at = account_tx_silver(txs).cache()
-        try:
-            _append_batch(at, os.path.join(out_dir, SILVER), batch_id)
-            # 5) + 6) both serving extracts (idempotent keyed MERGE)
-            ext = os.path.join(out_dir, EXTRACT)
-            merge_tx_lookup_extract(txs, ext, num_buckets)
-            merge_account_page_extract(at, ext, num_buckets)
-        finally:
-            at.unpersist()
-        # 7) proposals touched by this batch's tx logs
-        # (detectAndUpdateProposal): refresh from the dim — the LCD
-        # stand-in, as lcd.getProposal(id) is in the reference — and
-        # MERGE by proposal_id.  Work ∝ batch logs + |touched ids|.
-        # last_seen_height merges by MAX against the stored row: the
-        # file stream orders batches by mtime, not height, so a
-        # replace-by-key write would let an early-height batch that
-        # happens to process last clobber a higher watermark (max is
-        # monotone + idempotent — order- and replay-independent).
-        if proposals_dim is not None:
-            gov = (
-                proposals_dim
-                if isinstance(proposals_dim, GovDims)
-                else GovDims(proposals_dim)
+        at = account_tx_silver(txs)
+        ext = os.path.join(out_dir, EXTRACT)
+
+        # wave 2 rides in the thread of the append it reads: a rollup
+        # recomputes from the bronze table written just before it
+        def txs_then_rollup() -> None:
+            _append_batch(
+                txs, os.path.join(out_dir, BRONZE), batch_id, day_partition=True
             )
-            touched_p = detect_proposal_ids(txs).groupBy("proposal_id").agg(
-                F.max("height").alias("last_seen_height")
+            if keys.tx_minutes:
+                _merge_tx_rollup(spark, out_dir, keys.tx_minutes, txs.schema)
+
+        def rewards_then_rollup() -> None:
+            _append_batch(
+                blks, os.path.join(out_dir, REWARDS), batch_id, day_partition=True
             )
-            ppath = os.path.join(out_dir, PROPOSALS)
-            if os.path.isdir(ppath):
-                prev = read_proposals(spark, out_dir).select(
-                    "proposal_id",
-                    F.col("last_seen_height").alias("stored_height"),
-                )
-                touched_p = (
-                    touched_p.join(F.broadcast(prev), "proposal_id", "left")
-                    .select(
-                        "proposal_id",
-                        F.greatest(
-                            "last_seen_height",
-                            F.coalesce("stored_height", F.lit(0)),
-                        ).alias("last_seen_height"),
-                    )
-                )
-            merge_upsert(
-                spark,
-                refresh_proposal_payload(gov, touched_p),
-                os.path.join(out_dir, PROPOSALS),
-                ["proposal_id"],
-                partition_expr=F.col("proposal_id").cast("string"),
-            )
-        # 8) minute tx-volume rollup: recompute the touched minutes
-        # FROM BRONZE (deterministic + convergent under replay), merge
-        # by key
-        minutes = [
-            r[0]
-            for r in txs.select(_minute("timestamp").alias("m"))
-            .distinct()
-            .collect()
+            _merge_reward_rollup(spark, keys.block_minutes, out_dir, blks.schema)
+
+        sinks = [
+            lambda: _append_batch(blocks, os.path.join(out_dir, BLOCKS), batch_id),
+            txs_then_rollup,
+            lambda: _append_batch(at, os.path.join(out_dir, SILVER), batch_id),
+            lambda: merge_tx_lookup_extract(
+                txs, ext, num_buckets, touched=keys.hash_buckets
+            ),
+            lambda: merge_account_page_extract(
+                at, ext, num_buckets, touched=keys.account_buckets
+            ),
         ]
-        if minutes:
-            roll = tx_volume_minute_silver(
-                rollup_scoped_bronze(spark, out_dir, minutes)
+        if blks is not None:
+            sinks.append(rewards_then_rollup)
+        if proposals_dim is not None:
+            sinks.append(
+                lambda: _merge_proposals(
+                    spark, txs, proposals_dim, out_dir, keys.proposal_ids
+                )
             )
-            merge_upsert(spark, roll, os.path.join(out_dir, ROLLUP), ["minute", "denom"])
-        # 9) minute reward rollup (bundle feed): collectReward's
-        # recompute with the one-block-shift attribution
-        if blks is not None:
-            _merge_reward_rollup(spark, blks, out_dir)
+        _run_sinks(spark, sinks)
     finally:
-        # unpersist BOTH caches on every exit path — a sink raising
-        # after blks.cache() must not leak cached blocks across
+        # a sink raising must not leak the cached batch across
         # crash/replay cycles
-        txs.unpersist()
-        if blks is not None:
-            blks.unpersist()
+        batch.unpersist()
+
+
+def _merge_proposals(
+    spark: SparkSession,
+    txs: DataFrame,
+    proposals_dim: "DataFrame | GovDims",
+    out_dir: str,
+    touched: list,
+) -> None:
+    """Proposals touched by the batch's tx logs (detectAndUpdateProposal):
+    refresh from the dim — the LCD stand-in, as lcd.getProposal(id) is
+    in the reference — and MERGE by proposal_id.  Work ∝ batch logs +
+    |touched ids|.  last_seen_height merges by MAX against the stored
+    row: the file stream orders batches by mtime, not height, so a
+    replace-by-key write would let an early-height batch that happens
+    to process last clobber a higher watermark (max is monotone +
+    idempotent — order- and replay-independent)."""
+    gov = (
+        proposals_dim
+        if isinstance(proposals_dim, GovDims)
+        else GovDims(proposals_dim)
+    )
+    touched_p = detect_proposal_ids(txs).groupBy("proposal_id").agg(
+        F.max("height").alias("last_seen_height")
+    )
+    ppath = os.path.join(out_dir, PROPOSALS)
+    if os.path.isdir(ppath):
+        prev = read_proposals(spark, out_dir).select(
+            "proposal_id",
+            F.col("last_seen_height").alias("stored_height"),
+        )
+        touched_p = (
+            touched_p.join(F.broadcast(prev), "proposal_id", "left")
+            .select(
+                "proposal_id",
+                F.greatest(
+                    "last_seen_height",
+                    F.coalesce("stored_height", F.lit(0)),
+                ).alias("last_seen_height"),
+            )
+        )
+    merge_upsert(
+        spark,
+        refresh_proposal_payload(gov, touched_p),
+        ppath,
+        ["proposal_id"],
+        partition_expr=F.col("proposal_id").cast("string"),
+        touched=touched,
+    )
+
+
+def _merge_tx_rollup(
+    spark: SparkSession, out_dir: str, minutes: list, schema: StructType
+) -> None:
+    """The minute tx-volume rollup: recompute the touched minutes FROM
+    BRONZE (deterministic + convergent under replay), merge by key.
+    `schema`: the batch txs' (bronze's rows)."""
+    roll = tx_volume_minute_silver(
+        rollup_scoped_bronze(spark, out_dir, minutes, schema)
+    )
+    merge_upsert(
+        spark,
+        roll,
+        os.path.join(out_dir, ROLLUP),
+        ["minute", "denom"],
+        touched=sorted({m[:10] for m in minutes}),
+    )
 
 
 def _merge_reward_rollup(
-    spark: SparkSession, batch_blocks: DataFrame, out_dir: str
+    spark: SparkSession, block_minutes: dict, out_dir: str, schema: StructType
 ) -> None:
     """Recompute and MERGE the reward-minute rows this batch of blocks
     changes, under the reference's one-block-shift attribution
     (reward.ts:88-121: block h's rewards count toward the minute of
     block h-1 — getRewards drops each window's first block and appends
-    the block right after it).
+    the block right after it).  `block_minutes`: the batch's block
+    heights and their own minutes; `schema`: the batch blocks'
+    (blockreward bronze's rows).
 
     The touched minutes M = {minute(ts(h-1)) : h in batch} — the
     minutes this batch's rewards land in — UNION {minute(ts(h)) : h in
@@ -417,61 +545,57 @@ def _merge_reward_rollup(
     late; recomputing the batch's OWN minutes re-attributes those
     successors (exact and idempotent — a minute recompute is a pure
     function of bronze, and totals only grow as blocks land).
-    1. look up ts(h-1) for the batch heights in blockreward bronze
-       (height isin-list — parquet row-group stats prune; batch-sized);
+    1. look up ts(h-1) in blockreward bronze for the predecessors that
+       are not in the batch (height isin-list — parquet row-group stats
+       prune; at most batch-sized);
     2. re-read the rows of M's minutes (day_pt partition prune + minute
        row-group prune) — these are the h-1 side of every pair in M;
-    3. fetch their successors by height (isin-list, row-group prune),
-       join successor rewards onto predecessor timestamps, aggregate
-       with minute_rewards_silver, MERGE by (minute, denom, rtype).
+    3. fetch their successors by height (isin-list, row-group prune)
+       and give each successor's rewards its predecessor's timestamp
+       through a literal height map, aggregate with
+       minute_rewards_silver, MERGE by (minute, denom, rtype).
     Every read is bounded by the batch or the touched minutes — never
     O(bronze) — and the result is exact even across batch/day/stall
-    boundaries because step 3 keys on height, not time proximity."""
-    bronze = read_rewards_bronze(spark, out_dir, raw=True)
-    # one collect serves both the batch heights and its own minutes
-    own = batch_blocks.select(
-        "height", _minute("timestamp").alias("m")
-    ).distinct().collect()
-    heights = sorted({r["height"] for r in own})
-    if not heights:
+    boundaries because steps 1 and 3 key on height, not on time
+    proximity (after a chain stall a neighbour can sit days away)."""
+    if not block_minutes:
         return
-    prev_h = [h - 1 for h in heights]
-    # 1) minutes whose totals change
-    prev_minutes = [
-        r[0]
-        for r in bronze.filter(F.col("height").isin(prev_h))
-        .select(_minute("timestamp").alias("m"))
-        .distinct()
-        .collect()
-    ]
-    minutes = sorted(set(prev_minutes) | {r["m"] for r in own})
-    if not minutes:
-        return
+    bronze = read_rewards_bronze(spark, out_dir, raw=True, schema=schema)
+    # 1) minutes whose totals change; an in-batch predecessor's minute
+    # is already one of the batch's own
+    minutes = set(block_minutes.values())
+    outside = [h - 1 for h in block_minutes if h - 1 not in block_minutes]
+    if outside:
+        minutes.update(
+            r[0]
+            for r in bronze.filter(F.col("height").isin(outside))
+            .select(_minute("timestamp"))
+            .collect()
+        )
     # 2) the predecessor side: all rows whose OWN minute is in M —
     # collected once (bounded by |M| x blocks-per-minute) so the
     # successor list and the attribution timestamps come from the SAME
-    # read instead of two more jobs
-    prev_rows = reward_scoped_bronze(spark, out_dir, minutes).select(
-        "height", "timestamp"
-    ).collect()
-    succ_h = [r["height"] + 1 for r in prev_rows]
+    # read
+    minutes = sorted(minutes)
+    prev_ts = {
+        r[0] + 1: r[1]
+        for r in reward_scoped_bronze(spark, out_dir, minutes, schema)
+        .select("height", F.unix_micros("timestamp"))
+        .collect()
+    }
     # 3) successors carry the rewards; predecessors the attribution ts
-    succ = bronze.filter(F.col("height").isin(succ_h)).select(
-        "height", "reward_events"
+    shifted = bronze.filter(F.col("height").isin(list(prev_ts))).select(
+        F.timestamp_micros(
+            F.try_element_at(_long_map(prev_ts), F.col("height"))
+        ).alias("timestamp"),
+        "reward_events",
     )
-    prev_ts = spark.createDataFrame(
-        [(r["height"] + 1, r["timestamp"]) for r in prev_rows],
-        "height bigint, prev_ts timestamp",
-    )
-    shifted = succ.join(F.broadcast(prev_ts), "height").select(
-        F.col("prev_ts").alias("timestamp"), "reward_events"
-    )
-    roll = minute_rewards_silver(shifted)
     merge_upsert(
         spark,
-        roll,
+        minute_rewards_silver(shifted),
         os.path.join(out_dir, REWARD_ROLLUP),
         ["minute", "denom", "rtype"],
+        touched=sorted({m[:10] for m in minutes}),
     )
 
 
@@ -505,33 +629,44 @@ def run_block_ingest_available_now(
     drain(file_stream(spark, txs_dir, max_files_per_trigger), sink, checkpoint_dir)
 
 
-def reward_scoped_bronze(
-    spark: SparkSession, out_dir: str, minutes: list[str]
-) -> DataFrame:
-    """Blockreward bronze restricted to the touched minutes — the same
-    PartitionFilters day prune as rollup_scoped_bronze (plan-asserted
-    in tests), so the reward recompute reads O(touched days) however
-    large the reward history grows."""
-    bronze = read_rewards_bronze(spark, out_dir, raw=True)
+def _touched_minutes(bronze: DataFrame, minutes: list[str]) -> DataFrame:
+    """A day-partitioned bronze table restricted to the touched minutes:
+    the day literals hit the day_pt partition column — a real
+    PartitionFilters prune (plan-asserted in tests), so the recompute
+    reads only the touched days' files however large bronze grows — and
+    the minute predicate prunes row groups within the day."""
     days = sorted({m[:10] for m in minutes})
     return bronze.filter(
         F.col(DAY_COL).isin(days) & _minute("timestamp").isin(minutes)
+    )
+
+
+def _read(spark: SparkSession, path: str, schema: StructType | None) -> DataFrame:
+    """A parquet table read; with a known `schema` (a bronze table holds
+    rows of the batch's shape) no Spark job infers it from a footer."""
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+
+def reward_scoped_bronze(
+    spark: SparkSession,
+    out_dir: str,
+    minutes: list[str],
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Blockreward bronze restricted to the touched minutes."""
+    return _touched_minutes(
+        read_rewards_bronze(spark, out_dir, raw=True, schema=schema), minutes
     )
 
 
 def rollup_scoped_bronze(
-    spark: SparkSession, out_dir: str, minutes: list[str]
+    spark: SparkSession,
+    out_dir: str,
+    minutes: list[str],
+    schema: StructType | None = None,
 ) -> DataFrame:
-    """Bronze restricted to the touched minutes: the day literals hit
-    the day_pt partition column — a real PartitionFilters prune
-    (plan-asserted in tests), so the recompute reads only the touched
-    days' files however large bronze grows — and the minute predicate
-    prunes row groups within the day."""
-    days = sorted({m[:10] for m in minutes})
-    bronze = spark.read.parquet(os.path.join(out_dir, BRONZE))
-    return bronze.filter(
-        F.col(DAY_COL).isin(days) & _minute("timestamp").isin(minutes)
-    )
+    """Bronze restricted to the touched minutes."""
+    return _touched_minutes(_read(spark, os.path.join(out_dir, BRONZE), schema), minutes)
 
 
 def read_bronze(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -554,11 +689,14 @@ def read_blocks(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_rewards_bronze(
-    spark: SparkSession, out_dir: str, raw: bool = False
+    spark: SparkSession,
+    out_dir: str,
+    raw: bool = False,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """The blockreward bronze table; raw=True keeps the day_pt column
     (the rollup recompute filters on it for the partition prune)."""
-    df = spark.read.parquet(os.path.join(out_dir, REWARDS))
+    df = _read(spark, os.path.join(out_dir, REWARDS), schema)
     return df.drop(BATCH_COL) if raw else df.drop(BATCH_COL, DAY_COL)
 
 

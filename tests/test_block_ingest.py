@@ -473,14 +473,25 @@ class TestBundleIngest:
         assert after["reward_rollup"] == want
         assert after["reward_rollup"] != before["reward_rollup"]
 
-    @pytest.mark.parametrize("stage", ["_merge_reward_rollup", "detect_proposal_ids"])
+    @pytest.mark.parametrize(
+        "stage",
+        [
+            "_merge_reward_rollup",
+            "detect_proposal_ids",
+            "merge_account_page_extract",
+            "refresh_proposal_payload",
+        ],
+    )
     def test_crash_at_new_sinks_converges_on_restart(
         self, spark, tmp_path, bundle_control, stage
     ):
-        """Kill the transaction at the two r10 sinks (proposal
-        detection; the reward-rollup merge) mid-batch-3, restart from
-        the same checkpoint, and require byte-equal convergence with
-        the uninterrupted run across ALL NINE sinks."""
+        """Kill the transaction mid-batch-3 at a bundle sink (proposal
+        detection or refresh, the reward-rollup merge, the account-page
+        merge), restart from the same checkpoint, and require byte-equal
+        convergence with the uninterrupted run across ALL NINE sinks.
+        The account-page merge and the proposal refresh run in the first
+        sink wave, so their siblings in that wave complete while they
+        fail."""
         from pyspark.errors.exceptions.captured import StreamingQueryException
 
         out = str(tmp_path / "out")

@@ -1,5 +1,6 @@
-"""Warm Spark-job budgets per query at sf0.001 and per serving route
-family: reviewed tables, not numbers a test edit may raise in passing.
+"""Warm Spark-job budgets per query at sf0.001, per serving route
+family and per block-ingest micro-batch: reviewed tables, not numbers a
+test edit may raise in passing.
 
 A warm call on this engine costs mostly fixed per-job overhead (job
 submission, stage scheduling, task launch), not executor CPU, so the
@@ -138,3 +139,109 @@ def test_warm_route_within_budget(spark, extract, family):
     budget = WARM_ROUTE_BUDGETS[family]
     jobs = _warm_jobs(spark, _route_call(spark, family, extract), family)
     assert 0 < jobs <= budget, f"{family}: {jobs} warm jobs, budget {budget}"
+
+
+# One block-ingest micro-batch (streaming/block_ingest.py) on a small
+# bundle feed, with the full GovDims bundle: the first batch also builds
+# the proposal payload (about 20 of its jobs); the next one merges into
+# stored partitions.  Counted by job group, so the count also proves the
+# sink threads inherit the caller's group: every job the batch launched
+# is in it.  Each entry is its measured count.
+INGEST_BATCH_BUDGETS = {"first": 39, "next": 37}
+INGEST_BLOCKS = 60
+
+
+@pytest.fixture(scope="module")
+def ingest_batches(spark, tmp_path_factory):
+    """Two bundle batches ingested through `ingest_block_batch`, each in
+    its own job group: {batch: (group jobs, all jobs launched)}, plus
+    the updates each `merge_upsert` call received, by table."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    import classic_fcd_spark.streaming.block_ingest as bi
+    from classic_fcd_spark.sources import fixtures as fx
+
+    base = str(tmp_path_factory.mktemp("ingest_budget"))
+    n = INGEST_BLOCKS
+    feed = bi.build_block_bundle_feed(fx.gen_txs(spark, n=n), fx.gen_blocks(spark, n=n))
+    halves = {
+        "first": feed.filter(F.col("height") <= n // 2),
+        "next": feed.filter(F.col("height") > n // 2),
+    }
+    gov = bi.GovDims(
+        proposals=fx.gen_proposals(spark),
+        votes=fx.gen_votes(spark),
+        delegations=fx.gen_delegations(spark),
+        validators=fx.gen_validators(spark),
+        deposits=fx.gen_deposits(spark),
+    )
+    # fill the persisted fixture dims first, so the count does not
+    # depend on whether an earlier test already did
+    for dim in (gov.proposals, gov.votes, gov.delegations, gov.validators, gov.deposits):
+        dim.count()
+    merged: dict = {}
+    orig = bi.merge_upsert
+
+    def capture(spark_, updates, out_dir, *a, **k):
+        merged.setdefault(os.path.basename(out_dir), []).append(updates)
+        return orig(spark_, updates, out_dir, *a, **k)
+
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    jobs = {}
+    bi.merge_upsert = capture
+    try:
+        for batch_id, (name, df) in enumerate(halves.items()):
+            path = os.path.join(base, "feed", name)
+            df.write.parquet(path)
+            batch = spark.read.parquet(path)
+            group = f"test_job_budget:ingest:{name}"
+            lo = int(dag.nextJobId())
+            sc.setJobGroup(group, f"ingest {name}")
+            try:
+                bi.ingest_block_batch(
+                    spark, batch, batch_id, os.path.join(base, "out"), proposals_dim=gov
+                )
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            launched = int(dag.nextJobId()) - lo
+            jobs[name] = (len(sc.statusTracker().getJobIdsForGroup(group)), launched)
+    finally:
+        bi.merge_upsert = orig
+    return {"jobs": jobs, "merged": merged}
+
+
+@pytest.mark.parametrize("batch", sorted(INGEST_BATCH_BUDGETS))
+def test_ingest_batch_within_budget(ingest_batches, batch):
+    budget = INGEST_BATCH_BUDGETS[batch]
+    in_group, launched = ingest_batches["jobs"][batch]
+    assert in_group == launched, (
+        f"{batch}: {launched - in_group} of {launched} jobs ran outside the "
+        "batch's job group"
+    )
+    assert 0 < in_group <= budget, f"{batch} batch: {in_group} jobs, budget {budget}"
+
+
+def _scans_python_rdd(df) -> bool:
+    return "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_reward_rollup_reads_no_python_fed_relation(ingest_batches):
+    """The reward attribution's predecessor timestamps are a JVM
+    literal: a Python-fed relation would start the Python worker daemon
+    inside the batch (~2.5 s the first time in a session)."""
+    updates = ingest_batches["merged"]["minute_rewards"]
+    assert len(updates) == 2
+    assert not any(_scans_python_rdd(u) for u in updates)
+
+
+def test_price_fixtures_read_no_python_fed_relation(spark):
+    """The market and dashboard routes' fixture inputs are JVM literals,
+    so no serving request starts the Python worker daemon."""
+    from classic_fcd_spark.sources.fixtures import gen_issuances, gen_prices
+
+    assert not _scans_python_rdd(gen_prices(spark))
+    assert not _scans_python_rdd(gen_issuances(spark))

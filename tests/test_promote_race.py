@@ -103,3 +103,29 @@ class TestSwapRace:
         monkeypatch.setattr(promote.os, "rename", failing_rename)
         with pytest.raises(PermissionError):
             promote._promote_one(tmp, table, "day", "d1")
+
+
+class TestReplaceGuard:
+    def test_staged_partition_outside_values_raises_before_promoting(
+        self, spark, tmp_path
+    ):
+        """A caller-supplied partition list may be a superset of what a
+        commit stages, never a subset: promoting only part of the
+        staging would drop the other partitions' new rows.  The check
+        reads the staging directory (no Spark job) and raises before any
+        live partition moves."""
+        table = str(tmp_path / "table")
+        cols = ["v", promote.PARTITION_COL]
+        old = spark.createDataFrame([(1, "2021-01-01"), (2, "2021-01-02")], cols)
+        promote.replace_partitions(old, table, ["2021-01-01", "2021-01-02"], promote.DAYS)
+        new = spark.createDataFrame([(10, "2021-01-01"), (20, "2021-01-02")], cols)
+        with pytest.raises(ValueError, match="2021-01-02"):
+            promote.replace_partitions(new, table, ["2021-01-01"], promote.DAYS)
+        got = spark.read.parquet(table).select(*cols).collect()
+        assert sorted(tuple(r) for r in got) == [(1, "2021-01-01"), (2, "2021-01-02")]
+        # a superset commits: the absent partition is skipped
+        promote.replace_partitions(
+            new, table, ["2021-01-01", "2021-01-02", "2021-01-03"], promote.DAYS
+        )
+        got = spark.read.parquet(table).select(*cols).collect()
+        assert sorted(tuple(r) for r in got) == [(10, "2021-01-01"), (20, "2021-01-02")]

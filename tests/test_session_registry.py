@@ -156,3 +156,50 @@ def test_none_key_builds_every_call(spark):
     assert len(session._SESSION_MEMO) == before
     assert session.session_memo(spark, "test:none-key", build) == 3
     assert session.session_memo(spark, "test:none-key", build) == 3
+
+
+def test_evict_is_safe_while_other_threads_insert_and_pop():
+    """An ingest batch's sink threads evict open extracts while other
+    threads insert and pop registry entries: `_evict` must scan a
+    snapshot, not the live dict (which raises "dictionary changed size
+    during iteration" under a concurrent insert)."""
+    import sys
+    import threading
+
+    from classic_fcd_spark import session
+
+    tag = "evict-race-test"
+    store = session._SESSION_MEMO
+    errors: list[BaseException] = []
+
+    def evicter(t: int) -> None:
+        try:
+            for _ in range(40):
+                session._evict(lambda k: k[0] == tag and k[1] % 4 == t)
+        except BaseException as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    def writer(t: int) -> None:
+        try:
+            for i in range(4000):
+                store[(tag, 4000 * t + i)] = i
+                store.pop((tag, 4000 * t + i - 7), None)
+        except BaseException as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    for i in range(2000):
+        store[(tag, -i - 1)] = i
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=evicter, args=(t,)) for t in range(3)]
+        threads += [threading.Thread(target=writer, args=(t,)) for t in range(3)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+    finally:
+        sys.setswitchinterval(interval)
+        session._evict(lambda k: k[0] == tag)
+    assert not errors, errors[0]
+    assert not [k for k in store if k[0] == tag]

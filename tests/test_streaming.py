@@ -298,10 +298,25 @@ class TestMergeUpsertProperty:
         the day-prefix layout of the rollups and the md5-bucket layout
         of the serving extracts (bucket column + in-bucket sort order);
         either way each touched partition holds one data file."""
+        self._check(spark, workdir, layout, "collected")
+
+    @pytest.mark.parametrize("touched", ["exact", "superset"])
+    @pytest.mark.parametrize("layout", ["day_prefix", "kb_bucket"])
+    def test_caller_touched_sets_match_dict_reference(
+        self, spark, workdir, layout, touched
+    ):
+        """The same property when the caller supplies the touched
+        partitions instead of the merge collecting them: exactly the
+        batch's, or those plus partitions the batch does not reach
+        (stored or absent), as the block ingest's key collect may."""
+        self._check(spark, workdir, layout, touched)
+
+    @staticmethod
+    def _check(spark, workdir, layout: str, touched: str) -> None:
         import itertools
         import random
 
-        from classic_fcd_spark.serving.extract import _bucket_expr
+        from classic_fcd_spark.serving.extract import _bucket_expr, _bucket_py
         from classic_fcd_spark.sources.promote import Layout
 
         if layout == "kb_bucket":
@@ -309,8 +324,18 @@ class TestMergeUpsertProperty:
                 "partition_expr": _bucket_expr("minute", 3),
                 "layout": Layout("kb", ("minute", "event_type DESC")),
             }
+
+            def part_of(m):
+                return _bucket_py(m, 3)
+
+            extra = [0, 1, 2, 7]
         else:
             kw = {}
+
+            def part_of(m):
+                return m[:10]
+
+            extra = ["2021-01-01", "2021-01-02", "2021-01-09"]
 
         rng = random.Random(11)
         minutes = [f"2021-01-0{d} 00:0{m}:00" for d in (1, 2) for m in (1, 2)]
@@ -327,7 +352,13 @@ class TestMergeUpsertProperty:
             df = spark.createDataFrame(
                 batch, ["minute", "event_type", "n_events", "sum_value"]
             )
-            merge_upsert(spark, df, out, ["minute", "event_type"], **kw)
+            parts = sorted({part_of(m) for m, _t in keys})
+            if touched == "exact":
+                kw["touched"] = parts
+            elif touched == "superset":
+                kw["touched"] = sorted(set(parts) | set(extra))
+            got_parts = merge_upsert(spark, df, out, ["minute", "event_type"], **kw)
+            assert sorted(got_parts) == sorted(kw.get("touched", parts))
             if rng.random() < 0.4:  # replay the same batch (restart)
                 merge_upsert(spark, df, out, ["minute", "event_type"], **kw)
         got = {
