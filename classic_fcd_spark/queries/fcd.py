@@ -61,33 +61,28 @@ from classic_fcd_spark.sources.fixtures import (
 )
 
 # ---------------------------------------------------------------------------
-# r15: session-persisted fixture SILVERS.  The bronzes (gen_txs /
-# gen_blocks) were already persisted per session, but each query call
-# re-derived its silver from them — the account_tx regex JSON walk ran
-# at three call sites per bench pass, the minute-rewards rollup at four.
-# In the streamed deployment these silvers are exactly what the ingest
-# stores (serving/endpoints.bronze_sources: "pass the streamed one to
-# skip re-deriving the regex address walk the ingest already paid for");
-# the fixture path now matches that shape.  Fixtures are deterministic
-# per session, so a static memo key is the correct generation key.
+# Session-persisted fixture SILVERS over the persisted bronzes (gen_txs /
+# gen_blocks): without them every query call re-derives its silver, and
+# the account_tx regex JSON walk and the minute-rewards rollup each have
+# several consumers per pass (the queries here and the serving
+# endpoints).  In the streamed deployment these silvers are exactly what
+# the ingest stores (serving/endpoints.bronze_sources); the fixture path
+# matches that shape.  Fixtures are deterministic per session, so a
+# static key is the correct generation key.
 # ---------------------------------------------------------------------------
 def _account_tx_silver_cached(spark: SparkSession) -> DataFrame:
-    from classic_fcd_spark.session import session_memo
+    from classic_fcd_spark.session import session_silver
 
-    return session_memo(
-        spark,
-        "fcd:account_tx_silver",
-        lambda: account_tx_silver(gen_txs(spark)).persist(),
+    return session_silver(
+        spark, "fcd:account_tx_silver", lambda: account_tx_silver(gen_txs(spark))
     )
 
 
 def _minute_rewards_silver_cached(spark: SparkSession) -> DataFrame:
-    from classic_fcd_spark.session import session_memo
+    from classic_fcd_spark.session import session_silver
 
-    return session_memo(
-        spark,
-        "fcd:minute_rewards_silver",
-        lambda: minute_rewards_silver(gen_blocks(spark)).persist(),
+    return session_silver(
+        spark, "fcd:minute_rewards_silver", lambda: minute_rewards_silver(gen_blocks(spark))
     )
 
 
@@ -165,7 +160,7 @@ def fcd_tx_volume_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     "src/collector/block/accountTx.ts:5-58) + D5 per-tx distinct + the "
     "account_tx explode + P9 address-shape validation (the rlike form of "
     "src/lib/constant.ts:7-9's route regexes) run as a cross-engine "
-    "predicate on BOTH sides (r14, VERDICT r13 item 6): every extracted "
+    "predicate on BOTH sides: every extracted "
     "address must clear the anchored bech32-shape regex in Spark AND "
     "DuckDB — regex-semantics parity is now driver-hash-gated, not "
     "unit-only.  Oracle reconstructs the address membership from the "
@@ -290,8 +285,7 @@ def validator_returns_view(blocks: DataFrame, validators: DataFrame) -> DataFram
     "day-grain so the join is tiny; late-day corrections are a MERGE over "
     "the trailing 3-day window (T5).  Also carries the A23 freshness "
     "stamps (MAX(ts) probes, src/collector/dashboard/helpers.ts:16-37 — "
-    "the same collector consults them) as scalar columns; folded r4 so "
-    "sequence_packing could take the freed driver slot.",
+    "the same collector consults them) as scalar columns.",
 )
 def fcd_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     txs = gen_txs(spark)
@@ -355,8 +349,8 @@ _DUCK_DAILY_REWARDS = f"""
     LEFT JOIN avgp ON d.day = avgp.day AND d.denom = avgp.denom
     LEFT JOIN uusd ON d.day = uusd.day
     """,
-    doc="The full price-conversion family in one gated query (folds the "
-    "r2 fcd_rewards_usd + fcd_rewards_luna + fcd_avg_price_daily rows): "
+    doc="The full price-conversion family in one gated query (rewards in "
+    "usd and luna plus the daily average price): "
     "A1-A3 reward CSV decode → daily rollup, A17 daily avg price "
     "(regenerated in the oracle's avgp CTE), J6 rewards x price broadcast "
     "join, F9 getUSDValue (src/collector/block/helper.ts:8-23 — uusd "
@@ -485,10 +479,9 @@ def fcd_minute_fees(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle retained for the in-test DuckDB gate (tests/test_fcd_pipeline.py):
-# r5 rotated the driver slot to interval_joined_events — this query is a
-# thin J6+A6 twin of fcd_rewards_converted (same daily-avg-price join, same
-# usd_value_e6 conversion), which stays driver-gated.
+# Oracle of the in-test DuckDB gate (tests/test_fcd_pipeline.py): this
+# query is a thin J6+A6 twin of fcd_rewards_converted (same daily-avg-price
+# join, same usd_value_e6 conversion), which is driver-gated.
 MARKET_CAP_ORACLE_SQL = f"""
     WITH {_DUCK_AVGP},
     {DUCK_ISSUANCES},
@@ -512,9 +505,8 @@ def fcd_market_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/collector/block/network.ts:94-98 getMarketCap over F9).  The
     issuance dim is a fixture stand-in for the LCD /supply/total
     snapshot; HUGEINT/DECIMAL(38) intermediates — issuance x e6-price
-    overflows int64.  Driver-gated r2-r4 (green all three rounds); since
-    r5 gated by the in-test oracle (MARKET_CAP_ORACLE_SQL) while
-    fcd_rewards_converted keeps the shared J6/F9 pattern driver-green."""
+    overflows int64.  Gated by the in-test oracle (MARKET_CAP_ORACLE_SQL);
+    fcd_rewards_converted keeps the shared J6/F9 pattern driver-gated."""
     avgp = daily_avg_price_e6(gen_prices(spark))
     days = avgp.select("day").distinct()
     base = days.crossJoin(F.broadcast(gen_issuances(spark)))
@@ -678,9 +670,9 @@ def fcd_tx_list_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# P7's driver slot rotated r13 to fcd_account_txs_enriched (the salted
-# enrichment workload, VERDICT r12 item 1).  This is the IDENTICAL SQL
-# that drove fcd_tx_by_hash's green r2-r12 driver rows; the in-test gate
+# P7 is not a driver slot (fcd_account_txs_enriched, the salted
+# enrichment workload, holds it).  This is the SQL of the former
+# fcd_tx_by_hash driver row; the in-test gate
 # is tests/test_fcd_pipeline.py::TestTxByHashOracle, and the point-lookup
 # pattern stays exercised by the serving extract (lookup_tx plan asserts)
 # and benched via bench.py extras.
@@ -736,7 +728,7 @@ def fcd_account_txs_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fact = gen_account_tx_page(spark)
     dim = gen_accounts_dim(spark)
-    # r15: fixtures are deterministic per session, so the MG hot-key
+    # fixtures are deterministic per session, so the MG hot-key
     # detection verdict is memoized under a static key (the same
     # contract as the _account_tx_silver_cached family above)
     return enrich_account_txs(fact, dim, memo_key="fcd:account_tx_page").select(
@@ -773,9 +765,8 @@ def fcd_block_txs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r9 slot rotation: fcd_validator_annual_return left the driver window
-# (slot -> approx_top_tokens); the daily-return input (A13) stays
-# driver-gated via fcd_validator_returns, and the annualization
+# fcd_validator_annual_return is not a driver slot: the daily-return input
+# (A13) is driver-gated via fcd_validator_returns, and the annualization
 # arithmetic keeps this oracle as an in-test gate
 # (tests/test_fcd_pipeline.py TestValidatorAnnualReturnOracle).
 VALIDATOR_ANNUAL_RETURN_ORACLE_SQL = f"""
@@ -867,7 +858,7 @@ _MINUTE_PREV = f"strftime(date_trunc('minute', {_TS_PREV}), '%Y-%m-%d %H:%M:%S')
     "minute of block h-1, realized as a height self-join (h = prev+1) — "
     "no unpartitioned lag window.  Chain block 1 is never attributed; "
     "the oracle shifts the arithmetic by one height.  Also the A1-A3 "
-    "gate (the r2 fcd_minute_rewards row folded in): the plan runs the "
+    "gate (the unshifted minute rewards): the plan runs the "
     "same '123ukrw,4uluna' CSV decode (F3 split_denom_and_amount) and "
     "minute/denom/rtype rollup, only shifted.",
 )
@@ -885,9 +876,9 @@ _RANGE_MS = N * BLOCK_SPACING_S * 1000
 _YEAR_MS = 365 * 24 * 3600 * 1000
 
 
-# fcd_avg_staking_daily left the driver window in r8 (slot rotated to
-# ccnet_perplexity per the r7 brief); its daily integer-floor-average
-# pattern stays driver-gated via pricing_summary / fcd_dashboard and the
+# fcd_avg_staking_daily is not a driver slot; its daily
+# integer-floor-average pattern is driver-gated via pricing_summary /
+# fcd_dashboard and the
 # full query keeps this exact oracle as an in-test gate
 # (tests/test_fcd_pipeline.py::TestAvgStakingDailyOracle).
 AVG_STAKING_DAILY_ORACLE_SQL = f"""
@@ -923,8 +914,8 @@ def _airdrop_annual_return(spark: SparkSession) -> DataFrame:
     """A15 airdrop annual average return: SUM(airdrop/avg_staking) * 365
     / COUNT(*) with the avg_staking != 0 guard
     (src/service/dashboard/getStakingReturn.ts:46-55).  One scalar row
-    (airdrop_annual_e12); folded into the fcd_total_staking_return gate
-    since r4 — the two A15/A16 annualize shapes share one driver row."""
+    (airdrop_annual_e12); gated inside fcd_total_staking_return — the
+    two A15/A16 annualize shapes share one driver row."""
     gi = gen_general_info(spark).withColumn(
         "m", (F.col("datetime").cast("long") - 1609459200) / 60
     )
@@ -1003,8 +994,7 @@ _DUCK_AIRDROP = f"""
     "365d/range.  Whole-fixture range; floor-division sequence is "
     "identical on both engines (HUGEINT / DECIMAL(38) intermediates).  "
     "Also carries the A15 airdrop annual return as a second column "
-    "(same annualize shape — folded to keep the 50-row gate open for "
-    "the r4 training-pipeline promotions).",
+    "(same annualize shape, so one gated row covers both).",
 )
 def fcd_total_staking_return(spark: SparkSession, sf_dir: str) -> DataFrame:
     mr = _minute_rewards_silver_cached(spark).filter(F.col("rtype") == "rewards")
@@ -1133,10 +1123,9 @@ def fcd_last_hour_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r10 rotation: fcd_staking_view left the driver window (slot ->
-# fcd_undelegation_schedule, the W10 query it shares the
-# broadcast-dim-join shape with); this oracle — green in every driver
-# round r2-r9 — now holds the in-test gate
+# fcd_staking_view is not a driver slot (fcd_undelegation_schedule, the
+# W10 query it shares the broadcast-dim-join shape with, holds it); this
+# oracle holds the in-test gate
 # (tests/test_fcd_pipeline.py::TestStakingViewOracle).
 STAKING_VIEW_ORACLE_SQL = f"""
     WITH {DUCK_DELEGATIONS},
@@ -1161,8 +1150,8 @@ def fcd_staking_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7 validators ⟕ myDelegations (src/service/staking/
     getStaking.ts:74-90): the reference's in-memory keyBy+map join is a
     left join of the validator dim with the caller's delegations
-    grouped by validator.  Driver-gated r2-r9; since the r10 rotation
-    gated by STAKING_VIEW_ORACLE_SQL in-test and benched via extras
+    grouped by validator.  Gated by STAKING_VIEW_ORACLE_SQL in-test and
+    benched via extras
     (the shape stays driver-gated via fcd_undelegation_schedule's
     broadcast dim join and fcd_vote_tally's delegation aggregate)."""
     mine = (
@@ -1226,9 +1215,9 @@ def _freshness_probes(spark: SparkSession) -> DataFrame:
     """A23 MAX(ts) freshness probes (src/collector/dashboard/
     helpers.ts:16-37 getLatestDateOf*): one aggregate per table; on a
     date-partitioned table this reads only the newest partition's footer
-    statistics.  One (max_block_ts, max_price_ts) row — folded into the
-    fcd_dashboard gate since r4 (the reference's dashboard collector is
-    the consumer of these probes)."""
+    statistics.  One (max_block_ts, max_price_ts) row, gated inside
+    fcd_dashboard (the reference's dashboard collector is the consumer
+    of these probes)."""
     blocks_max = gen_blocks(spark).agg(
         F.date_format(F.max("timestamp"), "yyyy-MM-dd HH:mm:ss").alias("max_block_ts")
     )
@@ -1397,9 +1386,9 @@ def fcd_consensus_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# W2/W3 cumulative series + A21 delegator weights.  Oracle retained for
-# the in-test DuckDB gate (tests/test_fcd_pipeline.py): r6 rotated the
-# driver slot to bm25_search — the W2/W3 cumulative-window pattern is a
+# W2/W3 cumulative series + A21 delegator weights.  Oracle of the in-test
+# DuckDB gate (tests/test_fcd_pipeline.py): the W2/W3 cumulative-window
+# pattern is a
 # twin of account_growth's (W1, still driver-gated), and the per-denom
 # partition adds no new machinery.
 # ---------------------------------------------------------------------------
@@ -1425,8 +1414,8 @@ def fcd_cumulative_rewards(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/service/dashboard/getBlockRewards.ts:5-27,
     getTransactionVol.ts:5-36): the reference's in-JS running sums as a
     denom-partitioned Window — distributes per key instead of
-    single-threading the series.  Driver-gated r2-r5 (green throughout);
-    since r6 gated by the in-test oracle (CUMULATIVE_REWARDS_ORACLE_SQL)."""
+    single-threading the series.  Gated by the in-test oracle
+    (CUMULATIVE_REWARDS_ORACLE_SQL)."""
     from classic_fcd_spark.operators.windows import cumulative
 
     daily = (
@@ -1440,9 +1429,9 @@ def fcd_cumulative_rewards(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("cumulative_reward", F.col("cumulative_reward").cast("long"))
 
 
-# Oracle retained for the in-test DuckDB gate (tests/test_fcd_pipeline.py):
-# r5 (late) rotated the driver slot to semantic_dedup — A21's share-of-total
-# arithmetic is a thin twin of A22 (`fcd_richlist`, still driver-gated), and
+# Oracle of the in-test DuckDB gate (tests/test_fcd_pipeline.py): A21's
+# share-of-total arithmetic is a thin twin of A22 (`fcd_richlist`,
+# driver-gated), and
 # the W11 ranking contract stays driver-gated there too.
 DELEGATOR_WEIGHTS_ORACLE_SQL = f"""
     WITH {DUCK_DELEGATIONS},
@@ -1463,10 +1452,9 @@ def fcd_delegator_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A21 delegator weights (src/service/staking/getDelegators.ts:18-48):
     weight = shares / total via an unpartitioned window over the
     per-validator delegator set (bounded by delegator count), ranked desc
-    — W11 ordering contract.  Driver-gated r2-r5 (green throughout);
-    now gated by the in-test oracle (DELEGATOR_WEIGHTS_ORACLE_SQL) while
-    `fcd_richlist` keeps the shared share-of-total + ranking pattern
-    driver-green."""
+    — W11 ordering contract.  Gated by the in-test oracle
+    (DELEGATOR_WEIGHTS_ORACLE_SQL); `fcd_richlist` keeps the shared
+    share-of-total + ranking pattern driver-gated."""
     from pyspark.sql import Window
 
     mine = (
@@ -1493,9 +1481,9 @@ def fcd_delegator_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # L3: in-memory page/limit contract (votes page).
 # ---------------------------------------------------------------------------
-# Oracle retained for the in-test DuckDB gate (tests/test_fcd_pipeline.py):
-# r5 (late) rotated the driver slot to dsir_select — the L3 offset/limit
-# contract is a thin twin of the driver-gated page contracts (L1
+# Oracle of the in-test DuckDB gate (tests/test_fcd_pipeline.py): the L3
+# offset/limit contract is a thin twin of the driver-gated page contracts
+# (L1
 # `keyset_page_orders`, L5 `fcd_price_buckets_15m`'s LIMIT-50).
 VOTES_PAGE_ORACLE_SQL = f"""
     WITH {DUCK_VOTES}
@@ -1511,9 +1499,9 @@ def fcd_votes_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/service/governance/getVotes.ts:70-79, getDeposits.ts:119-137):
     the reference slices an in-memory array; here ORDER BY + OFFSET +
     LIMIT push into the plan (LimitPushDown) — page 2 of proposal 1's
-    votes, newest first.  Driver-gated r2-r5 (green throughout); now
-    gated by the in-test oracle (VOTES_PAGE_ORACLE_SQL) while L1/L5 keep
-    the paging contracts driver-green."""
+    votes, newest first.  Gated by the in-test oracle
+    (VOTES_PAGE_ORACLE_SQL); L1/L5 keep the paging contracts
+    driver-gated."""
     return (
         gen_votes(spark)
         .filter(F.col("proposal_id") == 1)

@@ -720,20 +720,21 @@ def get_rich_list(
     import os as _os
 
     from classic_fcd_spark.queries.fcd import _fixture_files_dir
-    from classic_fcd_spark.sources.files import read_richlist_csv
+    from classic_fcd_spark.sources.files import read_richlist_lines
 
     path = _os.path.join(_fixture_files_dir(spark), f"tracking-{denom}.csv")
     if not _os.path.exists(path):
         return []
-    rows = (
-        read_richlist_csv(spark, path, denom)
-        # the page never reads the share-of-total column: selecting past
-        # it lets the optimizer drop its sum-over-() window and exchange
-        .select("account", "amount")
-        .orderBy(F.col("amount").desc(), "account")
-        .limit(page * limit)
-        .collect()
-    )
+    # the file's relation is held open as a view: re-reading it per
+    # request re-lists the file, and a DataFrame plan costs a py4j round
+    # trip per call; the page never reads the share-of-total column
+    key = ("richlist", path)
+    session._lookup_view(spark, key, lambda: read_richlist_lines(spark, path))
+    rows = spark.sql(
+        f"SELECT account, amount FROM {session.view_name(key)}"
+        " ORDER BY amount DESC, account LIMIT :n",
+        args={"n": page * limit},
+    ).collect()
     return [
         {"account": r["account"], "amount": _money(int(r["amount"]))}
         for r in rows[(page - 1) * limit : page * limit]

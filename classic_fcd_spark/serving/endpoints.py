@@ -22,16 +22,29 @@ the distributed plan from the query layer:
 - get_denom_swap_rate   ← GET /v1/market/swaprate/:base
   (src/service/market/getSwapRate.ts:19-40 + helper.ts:42-60 getSwapRate)
 
-One plan per request.  A warm request on this engine costs mostly fixed
-per-job overhead (job submission, stage scheduling, task launch), not
-executor CPU, so a wrapper whose response is one relation answers with
-one collected plan: the existence check, the page and its total ride in
-that plan, not in extra collects.  The driver only reorders or sums rows
-it has already collected, and only dim-bounded ones (the 20-validator
-dim, one row per denom); the unbounded work (vote dedupe, delegation
-rollup, price bucketing) stays in the distributed plan.  Each bench
-route family's warm job count is a reviewed budget
-(tests/test_job_budget.py, WARM_ROUTE_BUDGETS).  Money strings are
+One bound SQL text per request.  A warm request on this engine costs
+fixed per-job overhead (job submission, stage scheduling, task launch)
+and driver time to build its plan, not executor CPU.  Built as a chain
+of DataFrame calls, a plan costs one py4j round trip per method and
+column (120-270 per route) and an eager re-analysis per call; so each
+route is one ``spark.sql(text, args=...)`` over temp views registered
+once per session (the persisted fixture dims, the open extracts, the
+rich-list file: `gen.view`, `session._lookup_view`), and every request value
+is a named parameter, never spliced into the text.  The existence
+check, the page and its total ride in that one text.  Nested subqueries,
+not WITH: on Spark 4.1 a CTE holding a window that is then joined and
+ordered fails at collect over these cached views.  Views are never
+dropped, and ``spark.sql``'s DataFrame keyword arguments are not used:
+their cleanup drops the view, which uncaches the persisted relation.
+
+The dims are generated into one partition (sources/fixtures.py), so a
+group-by, window, sort or sort-merge join over them needs no exchange,
+and since every exchange or broadcast is its own job under adaptive
+execution, governance, dashboard and market answer in one job.  The
+driver only reorders or sums rows it has already collected, and only
+dim-bounded ones (the 20-validator dim, one row per denom).  Each bench
+route family's warm job and py4j round-trip counts are reviewed budgets
+(tests/test_job_budget.py).  Money strings are
 decimal(38,10)-scale (the engine's DECIMAL_T policy, SURVEY §1.3); the
 reference's BigNumber default precision differs in trailing digits only.
 """
@@ -41,7 +54,7 @@ from __future__ import annotations
 import contextlib
 from decimal import ROUND_DOWN, Decimal
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from classic_fcd_spark.sources.fixtures import (
@@ -83,45 +96,49 @@ def _account_info(row, addr_field: str) -> dict:
 
 def _proposal_page(
     spark: SparkSession,
-    proposal_id: int,
-    rows: DataFrame,
+    rows: str,
     addr_col: str,
     id_col: str,
     page: int,
     limit: int,
+    args: dict,
 ) -> tuple[int, list]:
-    """(totalCnt, page rows) of one proposal's `rows` (votes or
-    deposits) in one collect: the total is `count(*) over ()`, the page
-    is newest `id_col` first with its `addr_col` account enriched from
-    the validator dim, and a marker row from the proposals table is the
-    existence check.  Raises KeyError for an unknown proposal.  A page
-    past the end carries no total, so only then a second job counts."""
-    paged = (
-        rows.withColumn("total_cnt", F.count("*").over(Window.partitionBy()))
-        .join(
-            F.broadcast(
-                gen_validators(spark).select(
-                    "account_address", "operator_address", "moniker"
-                )
-            ),
-            F.col(addr_col) == F.col("account_address"),
-            "left",
-        )
-        .orderBy(F.col(id_col).desc())
-        .offset((page - 1) * limit)
-        .limit(limit)
+    """(totalCnt, page rows) of one proposal's `rows` (the SQL of its
+    votes or deposits, bound by `args`, with a `proposal_id` column) in
+    one collect.  The proposal's row from the proposals table is the
+    existence check; the page, newest `id_col` first with its `addr_col`
+    account enriched from the validator dim, is left-joined to it.  The
+    filtered set's first row rides along with every page, so its
+    `count(*) over ()` total reaches the driver even for a page past the
+    end; a known proposal with no rows comes back as one all-NULL row.
+    Raises KeyError for an unknown proposal.
+
+    The MERGE hints keep both joins off the broadcast path: over the
+    single-partition dims a sort-merge join needs no exchange, while a
+    broadcast would be a second job."""
+    skip = (page - 1) * limit
+    got = spark.sql(
+        f"""
+        SELECT /*+ MERGE(f, a) */ f.*, a.operator_address, a.moniker
+        FROM (SELECT proposal_id FROM {gen_proposals.view(spark)}
+              WHERE proposal_id = :proposal_id) p
+        LEFT JOIN (
+            SELECT * FROM (
+                SELECT *, count(*) OVER () AS total_cnt,
+                       row_number() OVER (ORDER BY {id_col} DESC) AS rn
+                FROM ({rows}))
+            WHERE rn = 1 OR (rn > :skip AND rn <= :skip + :limit)
+        ) f ON f.proposal_id = p.proposal_id
+        LEFT JOIN {gen_validators.view(spark)} a ON f.{addr_col} = a.account_address
+        """,
+        args={**args, "skip": skip, "limit": limit},
+    ).collect()
+    if not got:
+        raise KeyError(f"Proposal not found: {args['proposal_id']}")
+    page_rows = sorted(
+        (r for r in got if r["rn"] is not None and r["rn"] > skip), key=lambda r: r["rn"]
     )
-    found = (
-        gen_proposals(spark)
-        .filter(F.col("proposal_id") == proposal_id)
-        .select(F.lit(True).alias("found"))
-    )
-    got = paged.unionByName(found, allowMissingColumns=True).collect()
-    if not any(r["found"] for r in got):
-        raise KeyError(f"Proposal not found: {proposal_id}")
-    page_rows = [r for r in got if not r["found"]]
-    total_cnt = page_rows[0]["total_cnt"] if page_rows else rows.count()
-    return total_cnt, page_rows
+    return got[0]["total_cnt"] or 0, page_rows
 
 
 def get_proposal_votes(
@@ -140,21 +157,15 @@ def get_proposal_votes(
     'Yes' page even if an earlier vote was 'Yes'), (4) totalCnt counts
     the FILTERED set, (5) drop/take paging.  Raises KeyError for an
     unknown proposal (the reference's APIError NOT_FOUND)."""
-    latest = (
-        gen_votes(spark)
-        .filter(F.col("proposal_id") == proposal_id)
-        # the page and its total need the whole deduped set in one
-        # partition: one shuffle puts it there, and the dedupe, the
-        # count and the page then run with no further exchange
-        .repartition(1, "voter")
-        .groupBy("voter")
-        .agg(F.max_by(F.struct("vote_id", "option"), "vote_id").alias("v"))
-        .select("voter", "v.vote_id", "v.option")
-    )
-    if option is not None:
-        latest = latest.filter(F.col("option") == option)
+    latest = f"""
+        SELECT proposal_id, voter, v.vote_id AS vote_id, v.option AS option
+        FROM (SELECT proposal_id, voter, max_by(struct(vote_id, option), vote_id) AS v
+              FROM {gen_votes.view(spark)} WHERE proposal_id = :proposal_id
+              GROUP BY proposal_id, voter)
+        WHERE :option IS NULL OR v.option = :option"""
     total_cnt, page_rows = _proposal_page(
-        spark, proposal_id, latest, "voter", "vote_id", page, limit
+        spark, latest, "voter", "vote_id", page, limit,
+        {"proposal_id": proposal_id, "option": option},
     )
     return {
         "totalCnt": total_cnt,
@@ -174,9 +185,9 @@ def get_proposal_deposits(
     first (the reference reverses the stored order before paging);
     deposit amounts keep the Coin[] shape; depositor enriched like the
     votes page.  Raises KeyError for an unknown proposal."""
-    deps = gen_deposits(spark).filter(F.col("proposal_id") == proposal_id)
+    deps = f"SELECT * FROM {gen_deposits.view(spark)} WHERE proposal_id = :proposal_id"
     total_cnt, page_rows = _proposal_page(
-        spark, proposal_id, deps, "depositor", "deposit_id", page, limit
+        spark, deps, "depositor", "deposit_id", page, limit, {"proposal_id": proposal_id}
     )
     return {
         "totalCnt": total_cnt,
@@ -289,27 +300,32 @@ def _assemble_staking_view(rows, my_undelegations: list[dict]) -> dict:
 _DAY_CUT_S = (FIXTURE_NOW_EPOCH // 86400) * 86400 - 60
 
 
-def _latest_prices(spark: SparkSession) -> tuple[dict, dict]:
-    """(newest price per denom, newest at or before the one-day cut) —
-    the getActiveOraclePrices / getOnedayBefore pair from one aggregate
-    over the minute table, |denoms| rows collected.  A denom with no
-    price at or before the cut is absent from the second dict."""
-    cut = F.col("datetime") <= F.timestamp_seconds(F.lit(_DAY_CUT_S))
-    rows = (
-        gen_prices(spark)
-        .groupBy("denom")
-        .agg(
-            F.max_by("price", "datetime").alias("now"),
-            F.max_by(
-                F.when(cut, F.col("price")), F.when(cut, F.col("datetime"))
-            ).alias("before"),
-        )
-        .collect()
-    )
+def _latest_prices_sql(spark: SparkSession) -> str:
+    """(denom, now, before) per denom, bound by `cut`: the
+    getActiveOraclePrices / getOnedayBefore pair as one aggregate over
+    the minute table.  `before` is NULL for a denom with no price at or
+    before the cut."""
+    at_cut = "datetime <= timestamp_seconds(:cut)"
+    return f"""
+        SELECT denom, max_by(price, datetime) AS now,
+               max_by(CASE WHEN {at_cut} THEN price END,
+                      CASE WHEN {at_cut} THEN datetime END) AS before
+        FROM {gen_prices.view(spark)} GROUP BY denom"""
+
+
+def _price_dicts(rows) -> tuple[dict, dict]:
     return (
         {r["denom"]: float(r["now"]) for r in rows},
         {r["denom"]: float(r["before"]) for r in rows if r["before"] is not None},
     )
+
+
+def _latest_prices(spark: SparkSession) -> tuple[dict, dict]:
+    """(newest price per denom, newest at or before the one-day cut),
+    |denoms| rows collected.  A denom with no price at or before the cut
+    is absent from the second dict."""
+    rows = spark.sql(_latest_prices_sql(spark), args={"cut": _DAY_CUT_S}).collect()
+    return _price_dicts(rows)
 
 
 def get_market_price(
@@ -371,7 +387,7 @@ def get_dashboard_general_info(spark: SparkSession) -> dict:
     pipeline/medallion.py's tax math), per-denom issuances, and the
     stakingPool ratio/bonded/notBonded from the newest general-info
     snapshot.  The issuances are the fixture's constant dict, read in
-    Python; every other piece is a dim-bounded or 1-row collect."""
+    Python; the prices and the snapshot are one collect."""
     from classic_fcd_spark.pipeline.medallion import (
         DEFAULT_TAX_CAP,
         TAX_CAPS,
@@ -379,14 +395,22 @@ def get_dashboard_general_info(spark: SparkSession) -> dict:
     )
     from classic_fcd_spark.sources.fixtures import ISSUANCES, gen_general_info
 
-    prices = {d: _money(p) for d, p in _latest_prices(spark)[0].items()}
+    # the price aggregate and the newest snapshot in one text: both are
+    # single-partition plans, so their union runs as one job
+    rows = spark.sql(
+        f"""
+        SELECT denom, now, before, NULL AS bonded_tokens, NULL AS staking_ratio_e6
+        FROM ({_latest_prices_sql(spark)})
+        UNION ALL
+        SELECT NULL, NULL, NULL, bonded_tokens, staking_ratio_e6
+        FROM (SELECT * FROM {gen_general_info.view(spark)} ORDER BY datetime DESC LIMIT 1)
+        """,
+        args={"cut": _DAY_CUT_S},
+    ).collect()
+    gi = next(r for r in rows if r["denom"] is None)
+    now = _price_dicts([r for r in rows if r["denom"] is not None])[0]
+    prices = {d: _money(p) for d, p in now.items()}
     issuances = {d: _money(a) for d, a in sorted(ISSUANCES.items())}
-    gi = (
-        gen_general_info(spark)
-        .orderBy(F.col("datetime").desc())
-        .limit(1)
-        .collect()[0]
-    )
     bonded = int(gi["bonded_tokens"])
     ratio = Decimal(int(gi["staking_ratio_e6"])) / Decimal(1_000_000)
     # not-bonded backed out of ratio = bonded / (bonded + notBonded)
@@ -565,12 +589,12 @@ def _day_ms(day: str) -> int:
 
 def _account_tx(spark: SparkSession):
     """The account_tx silver (the to_json + regex address walk — the
-    serving layer's most expensive derivation), materialized ONCE per
-    session via the bronze cache: _dashboard_days and
-    _new_accounts_by_day both consume it, and without sharing each
-    account endpoint would run the walk twice per request."""
+    serving layer's most expensive derivation): on fixture sources the
+    one session silver the fcd queries read too, so _dashboard_days and
+    _new_accounts_by_day share it and each account endpoint runs the
+    walk at most once per session."""
     from classic_fcd_spark.pipeline.medallion import account_tx_silver
-    from classic_fcd_spark.sources.fixtures import bronze_table, gen_txs
+    from classic_fcd_spark.queries.fcd import _account_tx_silver_cached
 
     # the seam bypasses the session cache: an overridden source is a
     # stored table (already materialized by the ingest), and caching it
@@ -579,14 +603,7 @@ def _account_tx(spark: SparkSession):
         return _overrides()["account_tx"]
     if "txs" in _overrides():
         return account_tx_silver(_overrides()["txs"])
-
-    @bronze_table
-    def _account_tx_bronze(s: SparkSession):
-        return account_tx_silver(gen_txs(s))
-
-    # stable cache key: decorate once at module import would rebuild per
-    # reload; keying off the inner fn name is stable per session
-    return _account_tx_bronze(spark)
+    return _account_tx_silver_cached(spark)
 
 
 def _dashboard_days(spark: SparkSession) -> list:

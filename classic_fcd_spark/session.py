@@ -16,6 +16,7 @@ Design notes (100 TB target):
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import SparkSession
@@ -182,6 +183,29 @@ def _lookup(spark, key, build, fresh: bool = False):
         value = build()
     _SESSION_MEMO[k] = value
     return value
+
+
+def view_name(key) -> str:
+    """The temp view name of the registry entry ``key``: a digest of the
+    key, so two relations (two extracts, one generator at two sizes)
+    never share a view in one session."""
+    return "fcd_" + hashlib.sha1(repr(key).encode()).hexdigest()[:16]
+
+
+def _lookup_view(spark, key, build, fresh: bool = False):
+    """``_lookup`` of an entry that is also the temp view
+    ``view_name(key)``: the view is registered inside the build, so an
+    entry that is dropped and rebuilt re-registers it.  Replacing a view
+    with the same plan keeps a persisted relation cached; dropping one
+    (``DROP VIEW``, or the view cleanup of ``spark.sql``'s DataFrame
+    keyword arguments) uncaches it, so engine views are never dropped."""
+
+    def build_view():
+        df = build()
+        df.createOrReplaceTempView(view_name(key))
+        return df
+
+    return _lookup(spark, key, build_view, fresh)
 
 
 def session_memo(spark, key: str | None, build):

@@ -18,16 +18,16 @@ VESTING_SCHEMA = (
 )
 
 
+def read_richlist_lines(spark: SparkSession, path: str) -> DataFrame:
+    """S6: the (account, amount) lines of one tracking file."""
+    return spark.read.schema(RICHLIST_SCHEMA).option("header", "false").csv(path)
+
+
 def read_richlist_csv(spark: SparkSession, path: str, denom: str) -> DataFrame:
     """S6: account,amount lines → richlist rows with share-of-total (A22)."""
     from classic_fcd_spark.operators.topk import with_share_of_total
 
-    df = (
-        spark.read.schema(RICHLIST_SCHEMA)
-        .option("header", "false")
-        .csv(path)
-        .withColumn("denom", F.lit(denom))
-    )
+    df = read_richlist_lines(spark, path).withColumn("denom", F.lit(denom))
     return with_share_of_total(df, "amount", "percentage")
 
 
